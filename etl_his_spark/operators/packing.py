@@ -7,10 +7,8 @@ Two operators a pre-training data pipeline runs after curation:
   assigned by a DISTRIBUTED prefix sum, and each doc maps to the
   fixed-budget training sequence(s) covering its token span. A naive
   cumulative-sum window would be a single-partition sort at corpus
-  scale; this uses the same two-phase scheme as
-  ``surrogate.dense_ids``: repartitionByRange on the order key →
-  per-partition window cumsum → broadcast per-partition offsets
-  (≤ ``buckets`` rows collected — driver-safe at any data scale).
+  scale; ``running_total`` is ``surrogate.dense_ids``' two-phase
+  scheme (one row per range partition reaches the driver).
 
 - ``mixture_sample`` — per-source deterministic downsampling to target
   fractions: rank docs within each source by md5 order and keep the
@@ -24,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .surrogate import dense_ids
+
 
 def shuffle_key(id_col: Column) -> Column:
     """Deterministic corpus-shuffle order: md5 of the id. Hex compare
@@ -36,74 +36,13 @@ def running_total(
     order_cols: list[Column],
     value_col: Column,
     out_col: str,
-    buckets: int = 64,
+    buckets: int | None = None,
 ) -> DataFrame:
     """Inclusive cumulative sum of ``value_col`` over the global order
-    of ``order_cols``, computed in parallel.
-
-    Phase 1: range-repartition on the order key so partition i holds a
-    contiguous order range; per-partition totals (≤ ``buckets`` rows)
-    are collected and turned into broadcast start offsets. Phase 2:
-    per-partition window cumsum + offset. Equivalent to
-    ``SUM(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`` without
-    the single-partition sort.
-    """
-    # LAZY localCheckpoint, not persist() and not eager: the
-    # ``part_sums`` collect below is already an action, so it is the
-    # materialization — the checkpoint blocks are written as that job
-    # computes, pinning spark_partition_id for the final join (same
-    # guarantee as eager, minus eager's dedicated extra pass over the
-    # input, which BENCH r4 measured at +59% on pack_sequences).
-    # persist() would sit in the CacheManager forever in a long-lived
-    # session (each call caching another copy of the full input)
-    # unless the CALLER remembered to unpersist a frame it never saw.
-    #
-    # Fault-tolerance tradeoff, stated explicitly: localCheckpoint
-    # blocks are NOT replicated and the lineage is truncated — on a
-    # real cluster, losing an executor after materialization fails the
-    # job (Spark resubmits it from the source) where persist() would
-    # transparently recompute the lost blocks. That is the right trade
-    # here: correctness REQUIRES pinned partition ids (a silent
-    # recompute that repartitioned differently would corrupt offsets),
-    # so fail-and-rerun is safer than recompute. See SCALE.md.
-    # Pin the INPUT too — repartitionByRange's bounds come from a
-    # sampling job over the child, so an un-pinned input executes
-    # twice (sampler + shuffle map); the lazy checkpoint makes the
-    # sampling job the materializing pass. See surrogate.dense_ids
-    # for the r9 flagship measurement that found this.
-    df = df.localCheckpoint(eager=False)
-    ranged = (
-        df.repartitionByRange(buckets, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    part_sums = (
-        ranged.groupBy("__pid")
-        .agg(F.sum(value_col).alias("__s"))
-        .orderBy("__pid")
-        .collect()
-    )  # ≤ buckets rows — bounded regardless of input size
-    acc = 0
-    offsets = []
-    for row in part_sums:
-        offsets.append((row["__pid"], acc))
-        acc += row["__s"] or 0
-    offset_df = ranged.sparkSession.createDataFrame(
-        offsets, "__pid int, __offset long"
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        ranged.join(F.broadcast(offset_df), "__pid")
-        .withColumn(
-            out_col,
-            F.sum(value_col).over(w).cast("long") + F.col("__offset"),
-        )
-        .drop("__pid", "__offset")
-    )
+    of ``order_cols``, computed in parallel: ``SUM(v) OVER (ORDER BY
+    ... ROWS UNBOUNDED PRECEDING)`` without the single-partition sort
+    (``surrogate.dense_ids`` with one running sum and no id)."""
+    return dense_ids(df, order_cols, None, buckets, sums={out_col: value_col})
 
 
 def pack_sequences(
@@ -111,7 +50,7 @@ def pack_sequences(
     tokens_col: Column,
     budget: int,
     id_col: str = "doc_id",
-    buckets: int = 64,
+    buckets: int | None = None,
 ) -> DataFrame:
     """Map each doc to its span in fixed-``budget`` training sequences
     under concat-and-chunk packing (documents are concatenated in md5

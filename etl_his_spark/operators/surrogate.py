@@ -8,13 +8,13 @@ glue, not stable identifiers.
 
 Spark-first forms:
 
-- ``dense_ids`` — gap-free 1..N ids via a two-phase scheme: count rows
-  per partition, broadcast the per-partition offsets, add
-  partition-local row_number. This avoids the classic single-partition
-  global window: the only single-point work is summing a few hundred
-  partition counts on the driver. Requires a deterministic order column
-  when reproducibility matters (dims); implemented with a window
-  partitioned by a salt bucket of the order key.
+- ``dense_ids`` — gap-free 1..N ids, and any inclusive running sums,
+  via a two-phase scheme: range-partition on the order key, collect
+  each partition's count and sums, add the partition's start offsets
+  to a partition-local running window. This avoids the classic
+  single-partition global window: the only single-point work is
+  summing one row per partition on the driver. Requires a total order
+  when reproducibility matters.
 - ``unique_ids`` — non-dense but collision-free and fully parallel
   (``monotonically_increasing_id``), the right choice for 100 TB facts
   where density is not semantically required.
@@ -31,76 +31,63 @@ from pyspark.sql import functions as F
 def dense_ids(
     df: DataFrame,
     order_cols: list[Column],
-    id_col: str = "id",
-    buckets: int = 64,
+    id_col: str | None = "id",
+    buckets: int | None = None,
+    sums: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """Gap-free sequential ids 1..N ordered by ``order_cols``.
+    """Gap-free ids 1..N in the global order of ``order_cols``, plus
+    any number of inclusive running sums, from one parallel pass.
 
-    Two-phase: bucket rows by range of the order key is not available
-    without sampling, so we use ntile-free scheme: a row_number within
-    each of ``buckets`` hash buckets plus broadcast bucket offsets.
-    Deterministic given a total order; the per-bucket window shuffles
-    once on the bucket id, and offsets are computed from bucket counts
-    (tiny driver-side aggregation).
+    ``id_col`` is the running count (``None`` adds no id); each
+    ``sums`` entry ``name -> integer value`` adds ``SUM(value) OVER
+    (ORDER BY order_cols ROWS UNBOUNDED PRECEDING)`` as a long.
+    ``order_cols`` must be a total order, or ids among ties depend on
+    the layout.
 
-    For dimension-sized inputs this is overkill but free; for large
-    inputs it is the difference between a single-threaded global window
-    and a parallel one.
+    One range exchange into ``buckets`` partitions (default: the
+    session's ``spark.sql.shuffle.partitions``, which AQE may coalesce;
+    it only merges adjacent ranges, so partition ids stay in order),
+    one pin, one collect of per-partition counts and sums, and one
+    window per partition plus that partition's start offsets. The
+    driver sees one row per partition, whatever the input size.
     """
-    # Global rank must follow order_cols across buckets, so bucket by the
-    # leading order expression's range via ntile is unsafe without a sort.
-    # Strategy: compute row_number within hash buckets of the FULL order
-    # tuple is wrong for global ordering; instead sort-partition by range:
-    # use repartitionByRange on the order columns, then per-partition
-    # row_number + offsets via spark_partition_id counts.
-    # LAZY localCheckpoint, not persist() and not eager: the counts
-    # collect below is already an action, so it materializes the
-    # checkpoint blocks as a side effect — pinning spark_partition_id
-    # for the final join without eager's dedicated extra pass over the
-    # input. Blocks are GC-reclaimed with the frame — a persist() here
-    # would leak a cached copy of the input per call in long-lived
-    # sessions (see packing.running_total for the full rationale,
-    # including the stated non-replicated-blocks fault tradeoff).
-    # Pin the INPUT too: repartitionByRange computes its range bounds
-    # with a sampling job over the child at first-RDD-access time, so
-    # an un-pinned input is TRAVERSED twice before the counts collect
-    # — once for the sampler, once for the shuffle map. With the lazy
-    # checkpoint the sampling job is the pass that materializes the
-    # input blocks and the shuffle reads them. HOWEVER (r10
-    # reconciliation, SCALE.md "his_pipeline_publish, reconciled"):
-    # an interleaved pin/no-pin A/B on the flagship publish measured
-    # NO wall-clock difference — when the input subtree contains
-    # shuffles (the 22-table extraction does), the second traversal
-    # reuses the first's shuffle files and only recomputes the cheap
-    # post-shuffle stages, so Spark's own shuffle-stage reuse already
-    # dedupes the heavy work. The pin is kept as a zero-cost guard
-    # for shuffle-FREE inputs (pure scan+project subtrees genuinely
-    # recompute), not as a measured win; the r9 "+~5s" claim is
-    # retracted as ambient.
-    df = df.localCheckpoint(eager=False)
+    sums = {**({id_col: F.lit(1)} if id_col else {}), **(sums or {})}
+    range_cols = [buckets, *order_cols] if buckets else order_cols
+    # Pin the range-partitioned frame: spark_partition_id must name the
+    # same rows for the collect and for the window. localCheckpoint,
+    # not persist(): the blocks die with the frame instead of leaking a
+    # CacheManager entry, and a lost block fails the job rather than
+    # recomputing under a different layout, which would corrupt the
+    # offsets. Lazy: the collect below is its materializing pass.
     ranged = (
-        df.repartitionByRange(buckets, *order_cols)
+        df.repartitionByRange(*range_cols)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    counts = (
-        ranged.groupBy("__pid").count().orderBy("__pid").collect()
-    )  # ≤ buckets rows — driver-safe at any data scale
-    offsets = {}
-    acc = 0
-    for row in counts:
-        offsets[row["__pid"]] = acc
-        acc += row["count"]
-    offset_df = ranged.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __offset long"
+    names = list(sums)
+    per_part = ranged.groupBy("__pid").agg(
+        *[F.sum(sums[n]).alias(f"__t{i}") for i, n in enumerate(names)]
+    ).collect()  # one row per non-empty partition
+    totals = {r["__pid"]: r for r in per_part}
+    width = max(totals, default=0) + 1
+    w = (
+        Window.partitionBy("__pid")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    out = (
-        ranged.join(F.broadcast(offset_df), "__pid")
-        .withColumn(id_col, F.row_number().over(w).cast("long") + F.col("__offset"))
-        .drop("__pid", "__offset")
-    )
-    return out
+    out = ranged
+    for i, n in enumerate(names):
+        # start offset of partition p = sum of the totals of partitions
+        # < p, as one array literal indexed by __pid (no join, no job)
+        acc, starts = 0, []
+        for pid in range(width):
+            starts.append(f"{acc}L")
+            acc += (totals[pid][f"__t{i}"] or 0) if pid in totals else 0
+        offset = F.expr(f"element_at(array({', '.join(starts)}), __pid + 1)")
+        out = out.withColumn(
+            n, F.sum(sums[n]).over(w).cast("long") + offset
+        )
+    return out.drop("__pid")
 
 
 # dense_ids_small is a single-partition window: correct ONLY for

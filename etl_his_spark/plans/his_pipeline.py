@@ -29,10 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.gender import inferir_sexo
-from ..functions.text import limpiar_nombres, nonempty, primer_nombre
+from ..functions.text import limpiar_nombres, primer_nombre
 from ..operators.dedup import dedup_first_per_key
 from ..operators.surrogate import dense_ids, dense_ids_small, resolve_fk
-from ..operators.unpivot import unpivot_slots
 from ..schemas import PRESTACION_SLOT_COLUMNS
 from ..sources.writers import publish_atomic
 from .his_extract import extract_unpivoted, extract_wide
@@ -40,54 +39,58 @@ from .his_extract import extract_unpivoted, extract_wide
 _N_SLOTS = len(PRESTACION_SLOT_COLUMNS)
 
 
+# The row's non-empty prestacion names in slot order: P3, the
+# ``functions.text.nonempty`` predicate, as SQL text (one JVM parse;
+# the Column-built form costs ~220 py4j commands).
+_NONEMPTY_SLOTS = (
+    "filter(array("
+    + ", ".join(f"prestacion{i}" for i in range(_N_SLOTS))
+    + "), s -> s IS NOT NULL AND trim(s) <> '')"
+)
+
+
 def _with_row_ids(wide: DataFrame) -> DataFrame:
-    """Mint the SERIAL turno id: one sequential id per extraction row.
+    """Mint every SERIAL id of the fact rows in one ordered pass.
 
-    Fan-out duplicates are bit-identical rows (the dead joins project
-    nothing), so any order among duplicates is equivalent; ranking by
-    turno_id makes ids deterministic up to that equivalence.
+    ``turno_uid`` is one sequential id per extraction row, ordered by
+    ``turno_id``. Fan-out duplicates are bit-identical rows (the dead
+    joins project nothing), so they break ties by ``__mid`` and any
+    order among them is equivalent. ``slot_base`` is the number of
+    non-empty slots in all earlier rows: the bridge row of the row's
+    k-th non-empty slot (k from 0) gets id ``slot_base + k + 1``, which
+    is the dense rank over (turno_uid, slot).
 
-    NARROW-PROXY scheme (r14, guide §8 "decide with small rows, move
-    big rows once"): the id decision depends only on ``turno_id``, yet
-    the r13 form ran ``dense_ids`` directly on the 40-column
-    extraction — the full payload was locally checkpointed twice
-    (input pin + ranged pin), range-exchanged through the sampler, and
-    sorted per partition, ~12 s of the 20-30 s publish at sf0.1. Now:
-
-    1. Pin the payload ONCE. The pinned partitions make
-       ``monotonically_increasing_id`` (partition id << 33 | position)
-       a stable per-row address across separate reads of the frame —
-       the §8 "record scan partition + position" device.
-    2. Rank a two-column proxy ``(turno_id, __mid)`` through the same
-       parallel two-phase ``dense_ids`` — the range exchange, both
-       internal pins, and the per-partition sort now carry 16 bytes a
-       row instead of the whole extraction.
-    3. Re-attach by ``__mid`` equi-join. One exchange carries the
-       payload (the unavoidable move; the r13 form paid exactly one
-       too, as the range exchange), SHUFFLE_HASH-hinted so neither
-       side is sorted: the 1:1 build side is (mid, uid) pairs.
-
-    Ordering ties (fan-out duplicates) break by ``__mid`` instead of
-    the window sort's arbitrary order — a different representative of
-    the same equivalence class; every id set per turno_id group is
-    unchanged (tests pin ids 1..N dense with fan-out duplicates
-    distinct).
-
-    The single-point work is unchanged: summing ≤ ``buckets`` counts
-    on the driver. At 100 TB the payload crosses the wire once and
-    every other pass (checkpoint writes, sampling, sort) is
-    proxy-sized.
+    Decide with small rows, move big rows once: the payload is pinned
+    once, so ``monotonically_increasing_id`` (partition id << 33 |
+    position) is a stable per-row address ``__mid`` across the two
+    reads below. The two-phase ``dense_ids`` ranks only the proxy
+    ``(turno_id, __mid, __n)``, and the ids come back by one
+    SHUFFLE_HASH join on ``__mid``, which moves the payload once and
+    sorts neither side. The join is a left join, and a row whose id
+    did not come back raises instead of being dropped.
     """
     wide = wide.localCheckpoint(eager=False)
-    proxy = wide.select("turno_id").withColumn(
-        "__mid", F.monotonically_increasing_id()
+    proxy = wide.selectExpr(
+        "turno_id",
+        "monotonically_increasing_id() AS __mid",
+        f"size({_NONEMPTY_SLOTS}) AS __n",
     )
     idmap = dense_ids(
-        proxy, [F.col("turno_id"), F.col("__mid")], "turno_uid", buckets=64
-    ).select("__mid", "turno_uid")
+        proxy,
+        [F.col("turno_id"), F.col("__mid")],
+        "turno_uid",
+        sums={"__slot_end": F.col("__n")},
+    ).selectExpr("__mid", "turno_uid", "__slot_end - __n AS slot_base")
     return (
         wide.withColumn("__mid", F.monotonically_increasing_id())
-        .join(idmap.hint("SHUFFLE_HASH"), "__mid")
+        .join(idmap.hint("SHUFFLE_HASH"), "__mid", "left")
+        .withColumn(
+            "turno_uid",
+            F.expr(
+                "coalesce(turno_uid, raise_error("
+                "'turno id map lost an extraction row (__mid mismatch)'))"
+            ),
+        )
         .drop("__mid")
     )
 
@@ -143,15 +146,15 @@ def build_turno(wide_ids: DataFrame, paciente: DataFrame) -> DataFrame:
 
 
 def unpivot_wide_slots(wide_ids: DataFrame) -> DataFrame:
-    """U1 over the extraction rows: 11 name columns → (slot, nombre)."""
-    return unpivot_slots(
-        wide_ids,
-        ["turno_uid"],
-        [f"prestacion{i}" for i in range(_N_SLOTS)],
-        slot_name="slot",
-        value_name="prestacion_nombre",
-        drop_null=True,
-    ).filter(nonempty("prestacion_nombre"))  # P3: NULL-or-blank skip
+    """U1 + P3 over the extraction rows: one ``(turno_uid, bridge_id,
+    prestacion_nombre)`` row per non-empty slot."""
+    return wide_ids.selectExpr(
+        "turno_uid",
+        "slot_base",
+        f"posexplode({_NONEMPTY_SLOTS}) AS (pos, prestacion_nombre)",
+    ).selectExpr(
+        "turno_uid", "slot_base + pos + 1 AS bridge_id", "prestacion_nombre"
+    )
 
 
 def build_prestacion(slot_rows: DataFrame) -> DataFrame:
@@ -166,23 +169,19 @@ def build_bridge(slot_rows: DataFrame, prestacion: DataFrame) -> DataFrame:
     """Bridge: one row per (extraction row, non-empty slot).
 
     Slot position is not persisted — the reference's bridge has no
-    position column (PostgresSchemaBuilder.php:103-109) — but it is the
-    deterministic tie-break for the bridge's own serial id.
+    position column (PostgresSchemaBuilder.php:103-109) — but it orders
+    the bridge's serial id, minted with the turno ids
+    (``_with_row_ids``).
     """
     rows = slot_rows.select(
-        "turno_uid", F.trim(F.col("prestacion_nombre")).alias("nombre"), "slot"
+        F.col("bridge_id").alias("id"),
+        F.col("turno_uid").alias("turno_id"),
+        F.trim(F.col("prestacion_nombre")).alias("nombre"),
     )
     resolved = resolve_fk(
         rows, prestacion, ["nombre"], "prestacion_id", dim_id_col="id"
     )
-    # bridge rows are fact-scale × slots — parallel id minting, never a
-    # single-partition window (SURVEY.md §7.3 K1 note)
-    with_ids = dense_ids(
-        resolved, [F.col("turno_uid"), F.col("slot")], "id", buckets=64
-    )
-    return with_ids.select(
-        "id", F.col("turno_uid").alias("turno_id"), "prestacion_id"
-    )
+    return resolved.select("id", "turno_id", "prestacion_id")
 
 
 def run_pipeline(
@@ -190,20 +189,13 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full E/T/(L): returns the 4 outputs; optionally publishes them
     atomically (stage-then-publish) under ``output_root``."""
-    # The 22-table extraction is pinned INSIDE _with_row_ids (once —
-    # the narrow-proxy id mint needs stable partitions for its per-row
-    # address; dense_ids' own input/ranged pins now carry only the
-    # 16-byte proxy, not the extraction — r14, guide §8).
     wide_ids = _with_row_ids(extract_wide(tables))
-    # One pass feeds all four outputs; materialize the id-assigned
-    # extraction rather than recompute the offset map per derivation.
-    # Lazy localCheckpoint, not persist(): blocks die with the frame
-    # instead of leaking a CacheManager entry per call
-    # (packing.running_total has the full rationale, including the
-    # fault tradeoff). Lazy, not eager: the first consuming action
-    # populates the same blocks eager would have — without a
-    # dedicated pass.
-    wide_ids = wide_ids.localCheckpoint(eager=False)
+    # Pin the id-assigned rows: all four outputs read them, and each
+    # would otherwise recompute the id join. Eager, so the pin is full
+    # before the concurrent table writes read it; a lazy pin is filled
+    # by whichever writer reaches it first, and writers on different
+    # executors would each compute the id join.
+    wide_ids = wide_ids.localCheckpoint(eager=True)
     slot_rows = unpivot_wide_slots(wide_ids)
     paciente = build_paciente(wide_ids)
     turno = build_turno(wide_ids, paciente)

@@ -351,8 +351,8 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each quintile rank comes from the PARALLEL dense-id scheme (three
     chained `dense_ids` calls — range repartition + per-partition
-    window + broadcast offsets; the oracle's three global windows are
-    the relational statement of the same total orders), and the score
+    window + partition start offsets; the oracle's three global windows
+    are the relational statement of the same total orders), and the score
     is the even-spread formula ((rank−1)·5) div n, one integer
     division. Monetary rides as exact cents; n is one collected
     scalar (bounded driver traffic)."""

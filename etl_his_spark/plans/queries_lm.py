@@ -413,8 +413,8 @@ def training_curriculum_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality-thresholded training run consumes.
 
     Scale: the global rank comes from ``surrogate.dense_ids`` (range
-    repartition + per-partition row_number + broadcast offsets — the
-    PARALLEL global-order scheme), NOT a single-partition window; the
+    repartition + per-partition row_number + partition start offsets —
+    the PARALLEL global-order scheme), NOT a single-partition window; the
     decile is the even-spread formula ((rank−1)·10) div n, mirrored
     exactly in the oracle (SQL NTILE front-loads remainders —
     different assignment, deliberately not used). n reaches the driver

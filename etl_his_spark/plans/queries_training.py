@@ -363,9 +363,9 @@ def training_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Positions are minted per epoch with the PARALLEL dense-id scheme
     (``surrogate.dense_ids`` keyed on the hash — range repartition +
-    per-partition window + broadcast offsets), so no epoch ever routes
-    the corpus through one task; the epoch fan-out is a 2-row explode
-    on the driver-sized epoch list."""
+    per-partition window + partition start offsets), so no epoch ever
+    routes the corpus through one task; the epoch fan-out is a 2-row
+    explode on the driver-sized epoch list."""
     from ..operators.surrogate import dense_ids
 
     docs = (

@@ -4,8 +4,8 @@ ranking/id-assignment and doc→id-sequence plumbing are the same shape
 regardless of the subword algorithm).
 
 Exact-oracle. Vocab ids are frequency-ranked dense ids minted with the
-PARALLEL scheme (`surrogate.dense_ids` — range repartition + broadcast
-offsets), never a global row_number window; the oracle's plain window
+PARALLEL scheme (`surrogate.dense_ids` — range repartition + partition
+start offsets), never a global row_number window; the oracle's plain window
 is output-identical.
 """
 
@@ -110,7 +110,7 @@ def training_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= MIN_FREQ)
     )
     return dense_ids(
-        cnt, [F.col("n").desc(), F.col("token")], "vocab_id", buckets=32
+        cnt, [F.col("n").desc(), F.col("token")], "vocab_id"
     ).select("token", "n", "vocab_id")
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -226,7 +227,8 @@ def publish_atomic(
     Returns the staging directory that became current. Readers use
     ``resolve_current`` to find it. If any write fails, the pointer is
     never moved — the previous publish stays visible (matches the
-    reference's rollback-on-error, Command.php:213-216).
+    reference's rollback-on-error, Command.php:213-216) — and the
+    failed publish's staging dir is removed.
 
     Publish-schema contract (ADVICE r11): any ``partition_by`` column
     becomes part of the PUBLISHED table's read schema — parquet
@@ -248,19 +250,14 @@ def publish_atomic(
     # task tail leaves executors idle, and the next table's jobs
     # back-fill them — Spark schedules concurrent jobs FIFO, which is
     # exactly that back-fill. 2 in flight is enough to cover tails
-    # without the writes fighting for cores. Shared lazily-pinned
-    # upstreams stay single-copy on local[N] (one block manager; the
-    # second computer hits "block already exists" and reads the stored
-    # copy) and the HIS pipeline materializes its pins at build time
-    # anyway (dense_ids' counts collect); on a multi-executor cluster
-    # two first-consumer jobs CAN duplicate the compute of a
-    # not-yet-materialized pin on different executors — wasted work,
-    # not wrongness (every consumer here is row-order-insensitive);
-    # callers with expensive unmaterialized pins should touch them
-    # with a cheap action first. Failure semantics unchanged — the
-    # first write error cancels the queued writes and propagates
-    # before the pointer swap, so the previous publish stays visible
-    # and the orphaned staging dir is never referenced.
+    # without the writes fighting for cores. A lazy pin shared by two
+    # tables is completed by whichever write reaches it first; on a
+    # multi-executor cluster both first writers can compute its last
+    # stage (wasted work, not wrongness), so callers pin shared
+    # upstreams eagerly, as run_pipeline does. On failure the first
+    # write error cancels the queued writes, the running ones finish,
+    # the staging dir is removed and the error propagates before the
+    # pointer swap, so the previous publish stays visible.
     from concurrent.futures import ThreadPoolExecutor
 
     def _write(name: str) -> None:
@@ -271,15 +268,20 @@ def publish_atomic(
             sort_within=sort_within.get(name),
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [pool.submit(_write, name) for name in tables]
-        try:
-            for f in futures:
-                f.result()
-        except BaseException:
-            for f in futures:
-                f.cancel()  # queued-but-unstarted writes never run
-            raise
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futures = [pool.submit(_write, name) for name in tables]
+            try:
+                for f in futures:
+                    f.result()
+            except BaseException:
+                for f in futures:
+                    f.cancel()  # queued-but-unstarted writes never run
+                raise
+    except BaseException:
+        # the pool's exit waited for the running writes
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     _swap_pointer(
         root, json.dumps({"staging": staging, "tables": paths}), token
     )
@@ -294,8 +296,6 @@ def prune_old_publishes(root: str, keep: int = 2) -> list[str]:
     on the previous publish keep working), so retention is explicit and
     conservative — prune only after downstream consumers have moved on.
     """
-    import shutil
-
     current = resolve_current(root)
     # A staging dir is live if it IS the current publish or if any
     # table in the current manifest still points into it (possible

@@ -12,9 +12,10 @@ pinned frame per consumer.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.audit_scans import (
     install_pin_capture,

@@ -6,15 +6,18 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_bench():
     spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
+        "bench_under_test", os.path.join(ROOT, "bench.py")
     )
     mod = importlib.util.module_from_spec(spec)
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     spec.loader.exec_module(mod)
     return mod
 
@@ -31,13 +34,13 @@ def test_median_and_isolated_reference():
     newest = max(
         int(m)
         for f in __import__("glob").glob(
-            "/root/repo/BENCH_ISOLATED_r*.json"
+            os.path.join(ROOT, "BENCH_ISOLATED_r*.json")
         )
         for m in [__import__("re").search(r"_r(\d+)", f).group(1)]
         if json.load(open(f)).get("queries")
     )
     expect = json.load(
-        open(f"/root/repo/BENCH_ISOLATED_r{newest}.json")
+        open(os.path.join(ROOT, f"BENCH_ISOLATED_r{newest}.json"))
     )["queries"]
     assert ref == {
         k: v for k, v in expect.items() if isinstance(v, (int, float))
@@ -81,7 +84,7 @@ def test_compact_line_fits_tail_budget():
     against the real committed payload so headline growth that would
     overflow the budget fails here first."""
     b = _load_bench()
-    payload = json.load(open("/root/repo/BENCH_LOCAL_r12.json"))
+    payload = json.load(open(os.path.join(ROOT, "BENCH_LOCAL_r12.json")))
     names = list(payload["queries"])
     line = b.compact_line(payload, names)
     assert len(line) <= 1990

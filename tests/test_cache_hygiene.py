@@ -4,7 +4,7 @@ must not leave CacheManager residue behind.
 persist() on a DataFrame registers the plan in the session-wide
 CacheManager and stays there until someone calls unpersist() — in a
 long-lived session every operator call would pin another copy of its
-input. The repo's rule (packing.running_total) is eager
+input. The repo's rule (SCALE.md "localCheckpoint discipline") is a
 localCheckpoint instead, whose blocks are reclaimed with the frame.
 This test calls every formerly-leaking operator and asserts the
 CacheManager is empty afterwards.

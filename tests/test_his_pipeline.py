@@ -7,12 +7,24 @@ publish).
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from etl_his_spark.functions.text import nonempty
+from etl_his_spark.operators.unpivot import unpivot_slots
+from etl_his_spark.plans import his_pipeline
 from etl_his_spark.plans.his_extract import extract_unpivoted, extract_wide
 from etl_his_spark.plans.his_pipeline import run_pipeline
-from etl_his_spark.sources.writers import read_published, resolve_current
+from etl_his_spark.schemas import PRESTACION_SLOT_COLUMNS
+from etl_his_spark.sources.his_synth import his_tables_from_testdata
+from etl_his_spark.sources.writers import (
+    publish_atomic,
+    read_published,
+    resolve_current,
+)
 
 from his_fixtures import his_tables
 
@@ -159,6 +171,81 @@ def test_bridge_counts_and_fks(outputs, tables):
     assert all(r["turno_id"] in turno_ids for r in bridge)
 
 
+@pytest.mark.parametrize("source", ["fixtures", "sf0.001"])
+def test_golden_ids(spark, tables, sf_dir, source):
+    """Turno ids are row_number() over (turno_id, extraction row) and
+    bridge ids are row_number() over (turno id, slot), each checked
+    against a plain single-partition window."""
+    if source != "fixtures":
+        tables = his_tables_from_testdata(spark, sf_dir)
+    # an eagerly pinned extraction with its row address: the mint's own
+    # address is the same monotonically_increasing_id over these rows
+    wide = extract_wide(tables).localCheckpoint().withColumn(
+        "__row", F.monotonically_increasing_id()
+    )
+    wide_ids = his_pipeline._with_row_ids(wide).localCheckpoint()
+
+    turno_w = Window.orderBy("turno_id", "__row")
+    got = wide_ids.select("turno_id", "__row", "turno_uid")
+    want = wide_ids.select(
+        "turno_id", "__row", F.row_number().over(turno_w).cast("long")
+    )
+    assert sorted(got.collect()) == sorted(want.collect())
+
+    slots = unpivot_slots(
+        wide_ids,
+        ["turno_uid"],
+        [f"prestacion{i}" for i in range(len(PRESTACION_SLOT_COLUMNS))],
+        "slot",
+        "prestacion_nombre",
+    ).filter(nonempty("prestacion_nombre"))
+    bridge_w = Window.orderBy("turno_uid", "slot")
+    want_b = slots.select(
+        "turno_uid",
+        F.row_number().over(bridge_w).cast("long"),
+        "prestacion_nombre",
+    )
+    got_b = his_pipeline.unpivot_wide_slots(wide_ids)
+    assert sorted(got_b.collect()) == sorted(want_b.collect())
+    assert got_b.count() > 0
+
+
+def test_lost_id_map_row_raises(tables, monkeypatch):
+    """The ids re-attach by a left join on the row address; a row whose
+    id did not come back fails the job instead of vanishing."""
+    real = his_pipeline.dense_ids
+
+    def truncated(*args, **kwargs):
+        return real(*args, **kwargs).filter(F.col("turno_id") != 3)
+
+    monkeypatch.setattr(his_pipeline, "dense_ids", truncated)
+    wide_ids = his_pipeline._with_row_ids(extract_wide(tables))
+    with pytest.raises(Exception, match="lost an extraction row"):
+        wide_ids.select("turno_uid").collect()
+
+
+def test_failed_publish_removes_its_staging_dir(
+    spark, outputs, tmp_path_factory
+):
+    """One table's write raises inside the 2-worker pool: the error
+    propagates, the previous publish stays current, and only its
+    staging dir is left."""
+    root = str(tmp_path_factory.mktemp("failed_publish"))
+    first = publish_atomic(outputs, root)
+    broken = dict(outputs)
+    broken["prestacion"] = spark.range(4).select(
+        F.when(
+            F.col("id") >= 0, F.raise_error(F.lit("injected write failure"))
+        ).otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        publish_atomic(broken, root)
+    assert resolve_current(root) == first
+    stagings = [d for d in os.listdir(root) if d.startswith("_staging_")]
+    assert stagings == [os.path.basename(first)]
+    assert read_published(spark, root, "prestacion").count() == 4
+
+
 def test_atomic_publish_and_read_back(spark, tables, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("publish"))
     run_pipeline(tables, output_root=root)
@@ -181,8 +268,6 @@ def test_prune_keeps_current_publish(spark, tables, tmp_path_factory):
         run_pipeline(tables, output_root=root)
     current = resolve_current(root)
     removed = prune_old_publishes(root, keep=2)
-    import os
-
     assert current not in removed
     assert os.path.isdir(current)
     remaining = [d for d in os.listdir(root) if d.startswith("_staging_")]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_his_spark.operators.dedup import dedup_first_per_key
@@ -54,6 +56,70 @@ def test_dense_ids_parallel_gap_free_and_ordered(spark, sf_dir):
     # id order must follow o_orderkey order
     by_key = sorted(rows, key=lambda r: r["o_orderkey"])
     assert [r["id"] for r in by_key] == list(range(1, len(rows) + 1))
+
+
+# Session-sized ranges under AQE coalescing: a 1 KB advisory size (and
+# a minimum partition size below it) merges the 32 range partitions of
+# the 500-row shuffle into several, so the start offsets are exercised
+# across coalesced partitions.
+_COALESCING = {
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64b",
+}
+
+
+@pytest.mark.parametrize("buckets", [None, 8, 3])
+def test_dense_ids_running_sums_match_global_window(spark, buckets):
+    """One call yields the id and several running sums; every bucket
+    count (None = the session's shuffle partitions, coalesced by AQE
+    into more than one partition) gives the plain single-partition
+    window's values."""
+    df = spark.range(1, 501).select(
+        "id",
+        (F.col("id") % 7 + 1).alias("v"),
+        F.when(F.col("id") % 3 == 0, 0).otherwise(F.col("id") % 5).alias("u"),
+    )
+    order = [(F.col("id") % 11), F.col("id")]
+    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    want = df.select(
+        "id",
+        F.row_number().over(w).cast("long").alias("rid"),
+        F.sum("v").over(w).cast("long").alias("cv"),
+        F.sum("u").over(w).cast("long").alias("cu"),
+    ).collect()
+    conf = _COALESCING if buckets is None else {}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        if buckets is None:
+            pids = (
+                df.repartitionByRange(*order)
+                .select(F.spark_partition_id().alias("p"))
+                .distinct()
+                .count()
+            )
+            assert 1 < pids < 32  # coalesced, and into several ranges
+        got = dense_ids(
+            df, order, "rid", buckets=buckets,
+            sums={"cv": F.col("v"), "cu": F.col("u")},
+        ).select("id", "rid", "cv", "cu").collect()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert sorted(got) == sorted(want)
+
+
+def test_dense_ids_empty_input(spark):
+    df = spark.range(10).filter(F.col("id") < 0)
+    out = dense_ids(df, [F.col("id")], "rid", sums={"c": F.col("id")})
+    assert out.columns == ["id", "rid", "c"]
+    assert out.collect() == []
 
 
 def test_unique_ids_collision_free(spark, sf_dir):

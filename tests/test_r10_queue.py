@@ -8,12 +8,13 @@ registration day inherits already-proven gates.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_his_spark.plans.queries_r10_queue import R10_QUEUE
 

@@ -12,11 +12,12 @@ and coverage-curve saturation on a duplicated corpus half.
 from __future__ import annotations
 
 import datetime
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

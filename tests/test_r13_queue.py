@@ -9,12 +9,13 @@ discipline, one round later).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_his_spark.plans.queries_r13_queue import R13_QUEUE
 

@@ -19,9 +19,10 @@ Usage: python tools/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # SinglePartition allowed: dim-scale id minting (bounded cardinality,
 # documented at operators/surrogate.dense_ids_small) or single-row

@@ -22,11 +22,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 THRESHOLD = 4  # scans of the SAME table; >= this needs an allowlist row
 

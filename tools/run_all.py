@@ -9,9 +9,12 @@ Usage: python tools/run_all.py [--fast]
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 STEPS_FULL = [
     ("oracle gate (sf0.01)",
@@ -43,7 +46,7 @@ def main() -> int:
     for name, cmd in steps:
         t0 = time.time()
         print(f"--> {name}", flush=True)
-        rc = subprocess.run(cmd, cwd="/root/repo").returncode
+        rc = subprocess.run(cmd, cwd=ROOT).returncode
         print(f"<-- {name}: {'OK' if rc == 0 else f'FAILED ({rc})'} "
               f"[{time.time() - t0:.0f}s]", flush=True)
         if rc != 0:

@@ -21,9 +21,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # training_vocab_build is NOT listed: it builds the vocab and never
-# runs the gated probe join (its BroadcastHashJoin is dense_ids'
-# offsets table) — only the tokenize/OOV consumers route through
-# _maybe_broadcast_vocab.
+# runs the gated probe join — only the tokenize/OOV consumers route
+# through _maybe_broadcast_vocab.
 GATED = ["training_tokenize_docs", "training_oov_rate"]
 
 
