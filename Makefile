@@ -10,7 +10,8 @@ PY ?= python
 verify:
 	$(PY) tools/run_all.py
 
-# Quick iteration loop: oracle gate at sf0.001 + plan audit + pytest -x.
+# Quick iteration loop: plan audit + pytest -x (pytest runs the sf0.001
+# oracle gate as tests/test_oracles.py).
 verify-fast:
 	$(PY) tools/run_all.py --fast
 

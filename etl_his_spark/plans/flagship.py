@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.text import limpiar_nombres, primer_nombre, usuario_nombre_concat
 from ..operators.dedup import dedup_first_per_key
 from ..operators.surrogate import dense_ids_small, resolve_fk
+from ..registry import register
 from ..sources.readers import read_table
 
 
@@ -97,13 +98,6 @@ def fact_ordenes(enriched: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def flagship_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end flagship: enriched → dim (dedup+ids) → fact (FK)."""
-    enriched = enriched_orders(spark, sf_dir)
-    dim = dim_cliente(enriched)
-    return fact_ordenes(enriched, dim)
-
-
 FLAGSHIP_ORACLE_SQL = """
 WITH enriched AS (
     SELECT o.o_orderkey AS orden_id,
@@ -135,3 +129,11 @@ SELECT e.orden_id, d.cliente_id, e.cliente_key, e.fecha, e.estado,
        e.prioridad, e.total
 FROM enriched e LEFT JOIN dim d ON e.cliente_key = d.cliente_key
 """
+
+
+@register("flagship_fact", FLAGSHIP_ORACLE_SQL)
+def flagship_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end flagship: enriched → dim (dedup+ids) → fact (FK)."""
+    enriched = enriched_orders(spark, sf_dir)
+    dim = dim_cliente(enriched)
+    return fact_ordenes(enriched, dim)

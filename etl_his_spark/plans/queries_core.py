@@ -27,19 +27,11 @@ from ..operators.surrogate import dense_ids_small, resolve_fk
 from ..operators.unpivot import unpivot_slots
 from ..registry import register
 from ..sources.readers import read_table
-from .flagship import FLAGSHIP_ORACLE_SQL, flagship_fact
 
 
 def _cents(col: str | F.Column) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * 100).cast("long")
-
-
-# ---------------------------------------------------------------------------
-# Flagship (end-to-end pipeline: J*, F1, F3, P2, D1, K1, K2)
-# ---------------------------------------------------------------------------
-
-register("flagship_fact", FLAGSHIP_ORACLE_SQL)(flagship_fact)
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,11 @@ from ..operators.dedup_approx import (
     seeded_hash60,
     simhash_pairs_blocked,
     simhash_signatures,
+    weighted_jaccard_pairs,
+    weighted_minhash_signatures,
+    word_shingles,
 )
+from ..operators.exact_substring import exact_substring_cut
 from ..operators.similarity import (
     banded_neardup_pairs,
     brute_force_topk,
@@ -1620,4 +1624,881 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(CAST(COALESCE(n_dup_tokens, 0) AS BIGINT) * 1000000"
             "     div n_tokens AS BIGINT)"
         ).alias("dup_cov_micro"),
+    )
+
+
+CUT_ORACLE = """
+    WITH words AS (
+        SELECT doc_id,
+               list_filter(string_split(trim(text), ' '), x -> x <> '') AS w
+        FROM documents WHERE text IS NOT NULL
+    ),
+    toks AS (
+        SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
+               unnest(w) AS token, generate_subscripts(w, 1) AS pos
+        FROM words WHERE len(w) >= 8
+    ),
+    shw AS (
+        SELECT doc_id, n_tokens, pos,
+               CAST('0x' || substr(md5(string_agg(token, ' ') OVER w8),
+                                   1, 15) AS BIGINT) AS fp,
+               count(*) OVER w8 AS wn
+        FROM toks
+        WINDOW w8 AS (PARTITION BY doc_id ORDER BY pos
+                      ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING)
+    ),
+    full8 AS (SELECT doc_id, n_tokens, pos, fp FROM shw WHERE wn = 8),
+    fpc AS (
+        SELECT fp FROM full8 GROUP BY 1 HAVING count(*) >= 2
+    ),
+    spans AS (
+        SELECT f.doc_id, f.pos AS span_start, f.pos + 7 AS span_end
+        FROM full8 f JOIN fpc USING (fp)
+    ),
+    flagged AS (
+        SELECT *,
+               CASE WHEN max(span_end) OVER (
+                        PARTITION BY doc_id ORDER BY span_start
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                    ) IS NULL
+                 OR span_start > max(span_end) OVER (
+                        PARTITION BY doc_id ORDER BY span_start
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               THEN 1 ELSE 0 END AS is_new
+        FROM spans
+    ),
+    islands AS (
+        SELECT *, sum(is_new) OVER (
+                   PARTITION BY doc_id ORDER BY span_start
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS island
+        FROM flagged
+    ),
+    merged AS (
+        SELECT doc_id, island, min(span_start) AS m_start,
+               max(span_end) AS m_end
+        FROM islands GROUP BY 1, 2
+    ),
+    covered AS (
+        SELECT doc_id, unnest(generate_series(m_start, m_end)) AS pos
+        FROM merged
+    ),
+    kept AS (
+        SELECT t.doc_id, t.pos, t.token
+        FROM toks t ANTI JOIN covered c
+          ON c.doc_id = t.doc_id AND c.pos = t.pos
+    ),
+    cleaned AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+               string_agg(token, ' ' ORDER BY pos) AS clean_text
+        FROM kept GROUP BY 1
+    ),
+    sized AS (
+        SELECT doc_id, max(n_tokens) AS n_tokens FROM full8 GROUP BY 1
+    ),
+    long_docs AS (
+        SELECT s.doc_id, s.n_tokens,
+               CAST(s.n_tokens - COALESCE(c.n_kept, 0) AS BIGINT)
+                   AS n_removed,
+               COALESCE(c.clean_text, '') AS clean_text
+        FROM sized s LEFT JOIN cleaned c USING (doc_id)
+    ),
+    short_docs AS (
+        SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
+               CAST(0 AS BIGINT) AS n_removed,
+               array_to_string(w, ' ') AS clean_text
+        FROM words WHERE len(w) < 8
+    )
+    SELECT * FROM long_docs UNION ALL SELECT * FROM short_docs
+"""
+
+
+@register("corpus_exactsubstr_cut", CUT_ORACLE)
+def corpus_exactsubstr_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr CUT over the documents table — the removal half of
+    the registered ``dedup_exact_substring_spans`` detection gate
+    (operators/exact_substring.py has the full plan argument)."""
+    return exact_substring_cut(
+        read_table(spark, sf_dir, "documents"), k=8
+    )
+
+
+WEIGHTED_JACCARD_ORACLE = """
+    WITH words AS (
+        SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents
+    ),
+    shs AS (
+        SELECT doc_id,
+               unnest(list_transform(range(1, len(w) - 1),
+                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle_s
+        FROM words WHERE len(w) >= 3
+    ),
+    sh AS (
+        SELECT DISTINCT doc_id,
+               CAST('0x' || substr(md5(shingle_s), 1, 15) AS BIGINT)
+                   AS shingle
+        FROM shs
+    ),
+    dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
+    wts AS (
+        SELECT shingle, df,
+               CASE WHEN df <= 1 THEN 4 WHEN df <= 3 THEN 3
+                    WHEN df <= 10 THEN 2 ELSE 1 END AS w
+        FROM dfreq
+    ),
+    totals AS (
+        SELECT doc_id, CAST(sum(w) AS BIGINT) AS wt
+        FROM sh JOIN wts USING (shingle) GROUP BY 1
+    ),
+    posting AS (
+        SELECT doc_id, sh.shingle, w
+        FROM sh JOIN wts USING (shingle) WHERE df <= 64
+    ),
+    shared AS (
+        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+               CAST(sum(a.w) AS BIGINT) AS shared_w
+        FROM posting a JOIN posting b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT a_id, b_id, shared_w,
+           CAST(shared_w * 1000000
+                // (ta.wt + tb.wt - shared_w) AS BIGINT) AS wjacc_micro
+    FROM shared
+    JOIN totals ta ON a_id = ta.doc_id
+    JOIN totals tb ON b_id = tb.doc_id
+    WHERE CAST(shared_w * 1000000
+               // (ta.wt + tb.wt - shared_w) AS BIGINT) >= 300000
+"""
+
+
+@register("dedup_weighted_jaccard", WEIGHTED_JACCARD_ORACLE)
+def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact IDF-weighted Jaccard pairs ≥ 0.3 (micro-units) — the
+    boilerplate-downweighting near-dup scorer
+    (operators/dedup_approx.weighted_jaccard_pairs)."""
+    return weighted_jaccard_pairs(
+        read_table(spark, sf_dir, "documents"), threshold_micro=300_000
+    )
+
+
+_WMH_MIN_COLS = ",\n               ".join(
+    f"min(({MINHASH_A[i]} * h30 + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}"
+    for i in range(N_MINHASH)
+)
+
+
+WEIGHTED_MINHASH_ORACLE = f"""
+    WITH words AS (
+        SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents
+    ),
+    shs AS (
+        SELECT doc_id,
+               unnest(list_transform(range(1, len(w) - 1),
+                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle_s
+        FROM words WHERE len(w) >= 3
+    ),
+    sh AS (
+        SELECT DISTINCT doc_id,
+               CAST('0x' || substr(md5(shingle_s), 1, 15) AS BIGINT)
+                   AS shingle
+        FROM shs
+    ),
+    dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
+    wts AS (
+        SELECT shingle,
+               CASE WHEN df <= 1 THEN 4 WHEN df <= 3 THEN 3
+                    WHEN df <= 10 THEN 2 ELSE 1 END AS w
+        FROM dfreq
+    ),
+    variants AS (
+        SELECT doc_id,
+               CAST('0x' || substr(md5(CAST(shingle AS VARCHAR) || ':'
+                    || CAST(r AS VARCHAR)), 1, 15) AS BIGINT)
+                   % {MINHASH_FOLD} AS h30
+        FROM sh JOIN wts USING (shingle),
+             (SELECT unnest([0, 1, 2, 3]) AS r)
+        WHERE r < w
+    )
+    SELECT doc_id,
+               {_WMH_MIN_COLS}
+    FROM variants GROUP BY doc_id
+"""
+
+
+@register("dedup_weighted_minhash_sig", WEIGHTED_MINHASH_ORACLE)
+def dedup_weighted_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IDF-weighted MinHash signatures over documents — the estimator
+    twin of ``dedup_weighted_jaccard``
+    (operators/dedup_approx.weighted_minhash_signatures; exactly
+    unbiased because weights are a global shingle function)."""
+    return weighted_minhash_signatures(
+        read_table(spark, sf_dir, "documents")
+    )
+
+
+# _MINHASH_BAND_UNION over the weighted signatures (``wsig``)
+_WMH_BAND_UNION = "\n        UNION ALL\n        ".join(
+    "SELECT doc_id, {b} AS band, md5({concat}) AS band_sig FROM wsig".format(
+        b=b,
+        concat=" || ',' || ".join(
+            f"mh{b * 4 + j}::VARCHAR" for j in range(4)
+        ),
+    )
+    for b in range(N_MINHASH // 4)
+)
+
+
+WEIGHTED_LSH_ORACLE = f"""
+    WITH words AS (
+        SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents
+    ),
+    shs AS (
+        SELECT doc_id,
+               unnest(list_transform(range(1, len(w) - 1),
+                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle_s
+        FROM words WHERE len(w) >= 3
+    ),
+    sh AS (
+        SELECT DISTINCT doc_id,
+               CAST('0x' || substr(md5(shingle_s), 1, 15) AS BIGINT)
+                   AS shingle
+        FROM shs
+    ),
+    dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
+    wts AS (
+        SELECT shingle,
+               CASE WHEN df <= 1 THEN 4 WHEN df <= 3 THEN 3
+                    WHEN df <= 10 THEN 2 ELSE 1 END AS w
+        FROM dfreq
+    ),
+    variants AS (
+        SELECT doc_id,
+               CAST('0x' || substr(md5(CAST(shingle AS VARCHAR) || ':'
+                    || CAST(r AS VARCHAR)), 1, 15) AS BIGINT)
+                   % {MINHASH_FOLD} AS h30
+        FROM sh JOIN wts USING (shingle),
+             (SELECT unnest([0, 1, 2, 3]) AS r)
+        WHERE r < w
+    ),
+    wsig AS (
+        SELECT doc_id,
+               {_WMH_MIN_COLS}
+        FROM variants GROUP BY doc_id
+    ),
+    bands AS (
+        {_WMH_BAND_UNION}
+    ),
+    cand AS (
+        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.band_sig = b.band_sig
+         AND a.doc_id < b.doc_id
+    )
+    SELECT c.a_id, c.b_id,
+           CAST(({" + ".join(
+               f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
+               for i in range(N_MINHASH)
+           )}) * 1000000 // {N_MINHASH} AS BIGINT) AS est_micro
+    FROM cand c
+    JOIN wsig sa ON sa.doc_id = c.a_id
+    JOIN wsig sb ON sb.doc_id = c.b_id
+"""
+
+
+@register("dedup_weighted_lsh_candidates", WEIGHTED_LSH_ORACLE)
+def dedup_weighted_lsh_candidates(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Banded LSH over the WEIGHTED signatures: same-bucket candidate
+    pairs + integer-micro estimated weighted Jaccard (matching
+    components / 16). The weighted twin of ``dedup_minhash_lsh`` —
+    bucketed, never all-pairs; completes the boilerplate-robust dedup
+    lane's scale path."""
+    sigs = weighted_minhash_signatures(
+        read_table(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=False)
+    sig_arr = sigs.select(
+        "doc_id",
+        F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("sig"),
+    )
+    bands = sig_arr.select(
+        "doc_id",
+        "sig",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.md5(
+                        F.concat_ws(
+                            ",",
+                            *[
+                                F.element_at("sig", b * 4 + j + 1).cast(
+                                    "string"
+                                )
+                                for j in range(4)
+                            ],
+                        )
+                    ).alias("band_sig"),
+                )
+                for b in range(N_MINHASH // 4)
+            ])
+        ).alias("bs"),
+    ).select("doc_id", "sig", F.col("bs.band").alias("band"),
+             F.col("bs.band_sig").alias("band_sig"))
+    a = bands.select(
+        F.col("doc_id").alias("a_id"), F.col("sig").alias("sig_a"),
+        "band", "band_sig",
+    )
+    b = bands.select(
+        F.col("doc_id").alias("b_id"), F.col("sig").alias("sig_b"),
+        "band", "band_sig",
+    )
+    return (
+        a.join(b, ["band", "band_sig"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select(
+            "a_id", "b_id",
+            F.aggregate(
+                F.zip_with(
+                    "sig_a", "sig_b",
+                    lambda x, y: F.when(x == y, 1).otherwise(0),
+                ),
+                F.lit(0),
+                lambda acc, v: acc + v,
+            ).alias("n_match"),
+        )
+        .distinct()
+        .select(
+            "a_id", "b_id",
+            F.expr(
+                f"CAST(n_match * 1000000 div {N_MINHASH} AS BIGINT)"
+            ).alias("est_micro"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_lsh_eval — precision/recall of LSH candidates vs exact Jaccard
+# ---------------------------------------------------------------------------
+LSH_EVAL_THRESHOLD = 0.7
+
+
+LSH_EVAL_ORACLE = f"""
+    WITH {_SHINGLES_CTE},
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+    inter AS (
+        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ),
+    truth AS (
+        SELECT a_id, b_id
+        FROM inter
+        JOIN sizes sa ON a_id = sa.doc_id
+        JOIN sizes sb ON b_id = sb.doc_id
+        WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.7
+    ),
+    based AS (
+        SELECT doc_id, shingle % {MINHASH_FOLD} AS h30 FROM sh
+    ),
+    sig AS (
+        SELECT doc_id, {_MINHASH_MIN_COLS}
+        FROM based GROUP BY doc_id
+    ),
+    bands AS (
+        {_MINHASH_BAND_UNION}
+    ),
+    cand AS (
+        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+        FROM bands a
+        JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
+                     AND a.doc_id < b.doc_id
+    ),
+    tp AS (
+        SELECT count(*) AS n_tp
+        FROM cand c JOIN truth t ON c.a_id = t.a_id AND c.b_id = t.b_id
+    )
+    SELECT (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_candidates,
+           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
+           CAST(n_tp AS BIGINT) AS n_tp,
+           CASE WHEN (SELECT count(*) FROM cand) > 0
+                THEN n_tp * 1000000 // (SELECT count(*) FROM cand)
+                ELSE 0 END AS precision_micro,
+           CASE WHEN (SELECT count(*) FROM truth) > 0
+                THEN n_tp * 1000000 // (SELECT count(*) FROM truth)
+                ELSE 0 END AS recall_micro
+    FROM tp
+"""
+
+
+@register("dedup_lsh_eval", LSH_EVAL_ORACLE)
+def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Precision/recall of the banded MinHash-LSH candidate generator
+    against exact 3-gram Jaccard ≥ 0.7 ground truth — the measurement
+    that justifies a band geometry before committing a full-corpus
+    dedup pass.
+
+    Truth comes from the prefix-filtered exact join at threshold 0.7
+    (PPJoin positional pruning + candidates-only sorted-array verify —
+    the corpus-linear path whose float-ratio compare is the same
+    int/int double arithmetic the registered 0.8 gate already proves
+    hash-exact cross-engine); candidates come from the registered
+    16-hash/4-band LSH. Both are linear-shuffle plans; the eval join
+    runs on pair keys only. (A first draft recomputed the intersection
+    by joining pairs back to shingle ROWS — the exploding verify shape
+    the dedup_approx comments document as an 800M-row blowup at the 4×
+    tranche; reusing the array verify keeps the eval at tranche scale.)
+
+    Scale note: the truth half is definitionally the EXACT-Jaccard
+    lane, which enters the synthetic tranche's vocabulary-saturation
+    regime at the 16× ladder step (α=1.29; SCALE.md "vocabulary
+    saturation" — the r9-attributed, decision-recorded exact-lane
+    behavior). At 100 TB the recall measurement runs on a bounded
+    document SAMPLE by design: this is an eval of the α=0.40
+    banded-LSH production lane, not itself a production pass.
+    """
+    docs = read_table(spark, sf_dir, "documents")
+    # truth and cand each feed TWO consumers (the tp join and their
+    # own count aggregate); un-pinned, Catalyst plans the full
+    # prefix-filtered Jaccard / banded-LSH pipeline once per consumer
+    # — pinning halves the heavy work (r13; pair-list-sized frames,
+    # the bounded-dimension checkpoint policy).
+    truth = jaccard_pairs_prefix(docs, LSH_EVAL_THRESHOLD).select(
+        "a_id", "b_id"
+    ).localCheckpoint(eager=False)
+    cand = minhash_lsh_candidates(docs).select(
+        "a_id", "b_id"
+    ).localCheckpoint(eager=False)
+    tp = cand.join(truth, ["a_id", "b_id"]).agg(
+        F.count(F.lit(1)).cast("long").alias("n_tp")
+    )
+    n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
+    n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
+    return (
+        n_cand.crossJoin(n_truth)
+        .crossJoin(tp)
+        .select(
+            "n_candidates",
+            "n_truth",
+            "n_tp",
+            # Empty candidate/truth sets are a legitimate eval outcome
+            # (a corpus with no near-dups at the threshold): report 0
+            # rather than dividing by zero.
+            F.when(
+                F.col("n_candidates") > 0,
+                F.expr("n_tp * 1000000 div n_candidates"),
+            )
+            .otherwise(F.lit(0).cast("long"))
+            .alias("precision_micro"),
+            F.when(
+                F.col("n_truth") > 0,
+                F.expr("n_tp * 1000000 div n_truth"),
+            )
+            .otherwise(F.lit(0).cast("long"))
+            .alias("recall_micro"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# corpus_ngram_coverage_curve — Heaps-law vocabulary growth by decile
+# ---------------------------------------------------------------------------
+COVERAGE_ORACLE = """
+    WITH bounds AS (
+        SELECT max(doc_id) + 1 AS m FROM documents
+    ),
+    docs AS (
+        SELECT doc_id,
+               LEAST(10, CAST(doc_id * 10 // b.m AS BIGINT) + 1) AS decile,
+               string_split(trim(text), ' ') AS w
+        FROM documents, bounds b
+    ),
+    grams AS (
+        SELECT decile,
+               CAST('0x' || substr(md5(
+                   w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15)
+                   AS BIGINT) AS g
+        FROM docs, unnest(range(1, len(w) - 1)) AS t(i)
+        WHERE len(w) >= 3
+    ),
+    first_seen AS (
+        SELECT g, min(decile) AS decile FROM grams GROUP BY 1
+    ),
+    per_decile AS (
+        SELECT decile, CAST(count(*) AS BIGINT) AS new_trigrams
+        FROM first_seen GROUP BY 1
+    )
+    SELECT decile, new_trigrams,
+           CAST(sum(new_trigrams) OVER (ORDER BY decile) AS BIGINT)
+               AS cum_trigrams
+    FROM per_decile
+"""
+
+
+@register("corpus_ngram_coverage_curve", COVERAGE_ORACLE)
+def corpus_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heaps-law vocabulary-growth curve: distinct word-trigram types
+    first seen in each corpus decile (deterministic doc_id-range
+    deciles), plus the cumulative curve — the saturation diagnostic
+    for "does ingesting more of this source still add information?".
+    A flattening curve is the data-driven stop signal for a crawl.
+
+    Deciles come from the doc_id RANGE (id·10 div (max_id+1)) — one
+    1-row max broadcast, no global row_number window, so the plan has
+    no single-partition stage. first-seen is one groupBy(gram); the
+    10-row cumulative window is on the aggregated result.
+    """
+    from ..operators.dedup_approx import spread_small_input
+
+    docs = read_table(spark, sf_dir, "documents")
+    bounds = docs.agg((F.max("doc_id") + 1).alias("m"))
+    # spread (r14, guide §2.5): the trigram explode + md5 hash is the
+    # whole cost and a single-file corpus scan runs it on ONE core;
+    # the 1-row bounds agg stays on the raw scan. inputFiles-gated,
+    # no-op at cluster scale.
+    grams = (
+        spread_small_input(docs).crossJoin(F.broadcast(bounds))
+        .select(
+            F.least(
+                F.lit(10), F.expr("doc_id * 10 div m") + 1
+            ).alias("decile"),
+            F.explode(word_shingles(F.col("text"))).alias("s"),
+        )
+        .select("decile", seeded_hash60(F.col("s")).alias("g"))
+    )
+    first_seen = grams.groupBy("g").agg(F.min("decile").alias("decile"))
+    per_decile = first_seen.groupBy("decile").agg(
+        F.count(F.lit(1)).cast("long").alias("new_trigrams")
+    )
+    wcum = Window.orderBy("decile").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return per_decile.select(
+        "decile",
+        "new_trigrams",
+        F.sum("new_trigrams").over(wcum).cast("long").alias("cum_trigrams"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# corpus_token_gini — per-source Gini concentration of token counts
+# ---------------------------------------------------------------------------
+GINI_ORACLE = """
+    WITH counts AS (
+        SELECT source, token, CAST(count(*) AS BIGINT) AS c
+        FROM (
+            SELECT source,
+                   unnest(list_filter(string_split(trim(text), ' '),
+                                      x -> x <> '')) AS token
+            FROM documents WHERE text IS NOT NULL
+        )
+        GROUP BY 1, 2
+    ),
+    ranked AS (
+        SELECT source, c,
+               row_number() OVER (
+                   PARTITION BY source ORDER BY c, token) AS i,
+               count(*) OVER (PARTITION BY source) AS n,
+               sum(c) OVER (PARTITION BY source) AS tot
+        FROM counts
+    )
+    SELECT source,
+           CAST(max(n) AS BIGINT) AS vocab,
+           CAST(max(tot) AS BIGINT) AS n_tokens,
+           CAST((1000000 * sum((2 * i - n - 1) * c)) // (max(n) * max(tot))
+                AS BIGINT) AS gini_micro
+    FROM ranked GROUP BY 1
+"""
+
+
+@register("corpus_token_gini", GINI_ORACLE)
+def corpus_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Gini concentration of the token-frequency
+    distribution via the exact rank identity
+    G = Σᵢ (2i − n − 1)·cᵢ / (n·Σc) with counts ranked ascending
+    (ties by token) — all-integer, so hash-exact cross-engine.
+    High Gini = few tokens carry the mass = template/boilerplate
+    source; complements text_zipf_fit's slope.
+
+    Plan: one token-count shuffle, then a rank window over the
+    VOCAB-bounded per-source count table (≤|V| rows at any corpus
+    size — the stats_ks_drift bounded-window argument). int64
+    headroom: the numerator is ≤ 2·n·Σc and carries a 1e6 factor, so
+    vocab·tokens per source must stay ≲ 9e12·1e6/2 — beyond that,
+    publish milli instead (scale note, not reachable at gate scale).
+    """
+    toks = (
+        read_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select(
+            "source",
+            F.explode(
+                F.filter(
+                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
+                )
+            ).alias("token"),
+        )
+    )
+    counts = toks.groupBy("source", "token").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    wr = Window.partitionBy("source").orderBy("c", "token")
+    ws = Window.partitionBy("source")
+    ranked = counts.select(
+        "source",
+        "c",
+        F.row_number().over(wr).cast("long").alias("i"),
+        F.count(F.lit(1)).over(ws).cast("long").alias("n"),
+        F.sum("c").over(ws).cast("long").alias("tot"),
+    )
+    return ranked.groupBy("source").agg(
+        F.max("n").cast("long").alias("vocab"),
+        F.max("tot").cast("long").alias("n_tokens"),
+        F.expr(
+            "CAST((1000000 * sum((2 * i - n - 1) * c))"
+            " div (max(n) * max(tot)) AS BIGINT)"
+        ).alias("gini_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_snapshot_incremental — cross-snapshot corpus merge decision table
+# ---------------------------------------------------------------------------
+
+# Posting-list document-frequency cap for the residual shingle join
+# (r12 verdict item 3): a shingle on more than this many docs (old and
+# residual-new sides combined) is boilerplate by definition here — its
+# |new postings| × |old postings| product would own the stage at scale
+# (the exact hazard the winnow lane's df cap and the LSH lane's bucket
+# cap already guard). Capped shingles are EXCLUDED from the
+# intersection count while per-doc sizes stay full, the same
+# contract-documented asymmetry as weighted_jaccard_pairs
+# (operators/dedup_approx.py df_cap): the threshold gets strictly
+# harder to meet through boilerplate, never easier. Mirrored exactly
+# in the oracle below.
+SNAPSHOT_DF_CAP = 64
+
+
+SNAPSHOT_ORACLE = rf"""
+    WITH oldd AS (
+        SELECT doc_id, source, text FROM documents
+        WHERE text IS NOT NULL AND doc_id % 2 = 0
+    ),
+    newd AS (
+        SELECT doc_id, source, text FROM documents
+        WHERE text IS NOT NULL AND doc_id % 2 = 1
+    ),
+    oldfp AS (
+        SELECT DISTINCT
+            md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
+        FROM oldd
+    ),
+    newfp AS (
+        SELECT doc_id, source,
+            md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
+        FROM newd
+    ),
+    exact AS (
+        SELECT n.doc_id FROM newfp n JOIN oldfp o ON n.fp = o.fp
+    ),
+    resid AS (
+        SELECT d.doc_id, d.text FROM newd d
+        WHERE d.doc_id NOT IN (SELECT doc_id FROM exact)
+    ),
+    shw_old AS (
+        SELECT doc_id, string_split(trim(text), ' ') AS w FROM oldd
+    ),
+    shw_new AS (
+        SELECT doc_id, string_split(trim(text), ' ') AS w FROM resid
+    ),
+    sh_old AS (
+        SELECT DISTINCT doc_id,
+               CAST('0x' || substr(md5(shingle_s), 1, 15) AS BIGINT)
+                   AS shingle
+        FROM (SELECT doc_id,
+                     unnest(list_transform(range(1, len(w) - 1),
+                         i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
+                         AS shingle_s
+              FROM shw_old WHERE len(w) >= 3)
+    ),
+    sh_new AS (
+        SELECT DISTINCT doc_id,
+               CAST('0x' || substr(md5(shingle_s), 1, 15) AS BIGINT)
+                   AS shingle
+        FROM (SELECT doc_id,
+                     unnest(list_transform(range(1, len(w) - 1),
+                         i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
+                         AS shingle_s
+              FROM shw_new WHERE len(w) >= 3)
+    ),
+    sizes_old AS (SELECT doc_id, count(*) AS n FROM sh_old GROUP BY 1),
+    sizes_new AS (SELECT doc_id, count(*) AS n FROM sh_new GROUP BY 1),
+    keep AS (
+        SELECT shingle FROM (
+            SELECT shingle, count(*) AS df
+            FROM (SELECT shingle FROM sh_new
+                  UNION ALL SELECT shingle FROM sh_old)
+            GROUP BY 1
+        ) WHERE df <= {SNAPSHOT_DF_CAP}
+    ),
+    inter AS (
+        SELECT n.doc_id AS n_id, o.doc_id AS o_id, count(*) AS i
+        FROM sh_new n
+        JOIN keep k ON n.shingle = k.shingle
+        JOIN sh_old o ON n.shingle = o.shingle
+        GROUP BY 1, 2
+    ),
+    near AS (
+        SELECT DISTINCT inter.n_id AS doc_id
+        FROM inter
+        JOIN sizes_new sn ON inter.n_id = sn.doc_id
+        JOIN sizes_old so ON inter.o_id = so.doc_id
+        WHERE 1000 * inter.i >= 700 * (sn.n + so.n - inter.i)
+    ),
+    classed AS (
+        SELECT d.source,
+               CASE WHEN e.doc_id IS NOT NULL THEN 'exact_carry'
+                    WHEN nr.doc_id IS NOT NULL THEN 'near_dup'
+                    ELSE 'new' END AS class
+        FROM newd d
+        LEFT JOIN exact e ON d.doc_id = e.doc_id
+        LEFT JOIN near nr ON d.doc_id = nr.doc_id
+    )
+    SELECT source, class, CAST(count(*) AS BIGINT) AS n_docs
+    FROM classed GROUP BY 1, 2
+"""
+
+
+def snapshot_capped_intersection(
+    sh_new: DataFrame, sh_old: DataFrame, df_cap: int = SNAPSHOT_DF_CAP
+) -> DataFrame:
+    """Per-pair shared-shingle counts ``(n_id, o_id, i)`` from the
+    new×old inverted-index join, with posting lists df-capped: a
+    shingle on more than ``df_cap`` docs (both sides combined) is
+    dropped from the pair join entirely, so one hot boilerplate
+    shingle can no longer multiply |new postings| × |old postings|
+    (r12 verdict item 3 — the winnow/LSH cap discipline applied to
+    the residual join). Per-doc sizes are computed OUTSIDE this
+    helper from the full shingle sets, so the Jaccard threshold only
+    gets harder to meet through boilerplate, never easier. Inputs are
+    distinct (doc_id, shingle) frames."""
+    keep = (
+        sh_new.select("shingle")
+        .union(sh_old.select("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= df_cap)
+        .select("shingle")
+    )
+    return (
+        sh_new.select(F.col("doc_id").alias("n_id"), "shingle")
+        .join(keep, "shingle")
+        .join(
+            sh_old.select(F.col("doc_id").alias("o_id"), "shingle"),
+            "shingle",
+        )
+        .groupBy("n_id", "o_id")
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+
+
+@register("dedup_snapshot_incremental", SNAPSHOT_ORACLE)
+def dedup_snapshot_incremental(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Cross-snapshot corpus merge: classify every new-batch doc
+    (doc_id odd) against the prior snapshot (doc_id even) as
+    ``exact_carry`` (normalized fingerprint already present — the
+    sorted-merge-able join every snapshot refresh starts with),
+    ``near_dup`` (verified 3-gram Jaccard ≥ 0.7 via the new×old
+    inverted-index join over df-capped posting lists — shingles on
+    more than ``SNAPSHOT_DF_CAP`` docs are dropped from the pair join
+    while per-doc sizes stay full, so postings work is
+    new-batch-sized AND hot-key-bounded, never corpus²), or ``new``.
+    Output: the per-(source, class) decision table an incremental
+    ingest publishes.
+
+    Integer Jaccard test (1000·i ≥ 700·(nₐ+n_b−i)) — no division
+    crosses the engine boundary; shingles are 60-bit md5 longs (the
+    shingle_rows discipline).
+    """
+    from ..functions.text import normalized_text
+
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    oldd = docs.filter(F.col("doc_id") % 2 == 0)
+    newd = docs.filter(F.col("doc_id") % 2 == 1)
+    oldfp = (
+        oldd.select(F.md5(normalized_text("text")).alias("fp"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    newfp = newd.select(
+        "doc_id", "source", F.md5(normalized_text("text")).alias("fp")
+    )
+    exact_ids = newfp.join(oldfp, "fp").select("doc_id")
+    exact_ids = exact_ids.localCheckpoint(eager=False)
+    resid = newd.join(exact_ids, "doc_id", "left_anti").select(
+        "doc_id", "text"
+    )
+
+    def _sh(df: DataFrame) -> DataFrame:
+        return (
+            df.select(
+                "doc_id",
+                F.explode(word_shingles("text")).alias("shingle_s"),
+            )
+            .select(
+                "doc_id", seeded_hash60(F.col("shingle_s")).alias("shingle")
+            )
+            .distinct()
+        )
+
+    # spread (r14, guide §2.5): both shingle explodes ran single-task —
+    # oldd is a 1-split file scan and resid inherits that partitioning
+    # through the broadcast anti join — so the md5 fan-out serialized.
+    # One consumer chain each before the pins (the coverage-curve
+    # profile); inputFiles-gated no-op at cluster scale.
+    from ..operators.dedup_approx import spread_small_input
+
+    sh_old = _sh(spread_small_input(oldd)).localCheckpoint(eager=False)
+    sh_new = _sh(spread_small_input(resid)).localCheckpoint(eager=False)
+    sizes_old = sh_old.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_o")
+    )
+    sizes_new = sh_new.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_n")
+    )
+    inter = snapshot_capped_intersection(sh_new, sh_old)
+    near_ids = (
+        inter.join(
+            sizes_new.withColumnRenamed("doc_id", "n_id"), "n_id"
+        )
+        .join(sizes_old.withColumnRenamed("doc_id", "o_id"), "o_id")
+        .filter(
+            1000 * F.col("i") >= 700 * (F.col("n_n") + F.col("n_o") - F.col("i"))
+        )
+        .select(F.col("n_id").alias("doc_id"))
+        .distinct()
+    )
+    classed = (
+        newd.select("doc_id", "source")
+        .join(
+            exact_ids.withColumn("is_exact", F.lit(1)), "doc_id", "left"
+        )
+        .join(
+            near_ids.withColumn("is_near", F.lit(1)), "doc_id", "left"
+        )
+        .select(
+            "source",
+            F.when(F.col("is_exact") == 1, F.lit("exact_carry"))
+            .when(F.col("is_near") == 1, F.lit("near_dup"))
+            .otherwise(F.lit("new"))
+            .alias("class"),
+        )
+    )
+    return classed.groupBy("source", "class").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
     )

@@ -7,7 +7,7 @@ the merged outputs hash-compare exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_delete, merge_upsert, scd2_from_events
@@ -398,4 +398,278 @@ def fact_scd2_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .select("o_orderkey", "o_custkey", "probe_date", "prior_priority")
+    )
+
+
+# ---------------------------------------------------------------------------
+# lakehouse_compaction_plan — manifest bin-packing into target groups
+# ---------------------------------------------------------------------------
+COMPACT_TARGET = 8_000_000  # proxy bytes per compaction group
+
+
+COMPACT_ORACLE = f"""
+    WITH manifest AS (
+        SELECT strftime(o_orderdate, '%Y-%m') AS part,
+               o_orderkey % 16 AS file_id,
+               CAST(sum(CAST(round(o_totalprice) AS BIGINT))
+                    + 100 * count(*) AS BIGINT) AS file_bytes
+        FROM orders GROUP BY 1, 2
+    ),
+    planned AS (
+        SELECT part, file_id, file_bytes,
+               (sum(file_bytes) OVER (
+                    PARTITION BY part
+                    ORDER BY file_bytes DESC, file_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                - file_bytes) // {COMPACT_TARGET} AS grp
+        FROM manifest
+    )
+    SELECT part, CAST(grp AS BIGINT) AS grp,
+           CAST(count(*) AS BIGINT) AS n_files,
+           CAST(sum(file_bytes) AS BIGINT) AS group_bytes
+    FROM planned GROUP BY 1, 2
+"""
+
+
+@register("lakehouse_compaction_plan", COMPACT_ORACLE)
+def lakehouse_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Small-file compaction planning: simulate a file manifest (one
+    "file" per (month partition, write bucket), sized by a byte
+    proxy), then bin files into compaction groups by exclusive
+    running-size div target — file i starts a new group when the
+    bytes before it cross a group boundary (first-fit by cumulative
+    sum, largest files first for stable packing).
+
+    The plan's window runs over the MANIFEST — files-per-partition is
+    bounded by the writer's bucket count at any data size — so
+    planning a 100 TB compaction reads/sorts kilobytes of metadata,
+    never data. All integer arithmetic (exclusive cumsum, `div`).
+    """
+    orders = read_table(spark, sf_dir, "orders")
+    manifest = orders.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM").alias("part"),
+        (F.col("o_orderkey") % 16).alias("file_id"),
+    ).agg(
+        (
+            F.sum(F.round("o_totalprice").cast("long"))
+            + 100 * F.count(F.lit(1))
+        )
+        .cast("long")
+        .alias("file_bytes")
+    )
+    wcum = (
+        Window.partitionBy("part")
+        .orderBy(F.desc("file_bytes"), F.asc("file_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    planned = manifest.withColumn(
+        "cum", F.sum("file_bytes").over(wcum)
+    ).withColumn(
+        "grp",
+        F.expr(f"(cum - file_bytes) div {COMPACT_TARGET}").cast("long"),
+    )
+    return planned.groupBy("part", "grp").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files"),
+        F.sum("file_bytes").cast("long").alias("group_bytes"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# lakehouse_vacuum_plan — snapshot-retention vacuum over a versioned manifest
+# ---------------------------------------------------------------------------
+VACUUM_CURRENT_SNAP = 8
+
+
+VACUUM_RETENTION = 3  # snapshots newer than CUR - R are in grace
+
+
+VACUUM_ORACLE = f"""
+    WITH manifest AS (
+        SELECT strftime(o_orderdate, '%Y-%m') AS part,
+               o_orderkey % 16 AS file_id,
+               CAST(sum(CAST(round(o_totalprice) AS BIGINT))
+                    + 100 * count(*) AS BIGINT) AS base_bytes
+        FROM orders GROUP BY 1, 2
+    ),
+    versions AS (
+        SELECT part, file_id, v,
+               file_id % 3 AS max_v,
+               (file_id % 6) + v AS created_snap,
+               base_bytes // (v + 1) AS bytes
+        FROM manifest, unnest(range(0, (file_id % 3) + 1)) AS t(v)
+    ),
+    classed AS (
+        SELECT part, bytes,
+               CASE WHEN v = max_v THEN 'live'
+                    WHEN (file_id % 6) + v + 1
+                         > {VACUUM_CURRENT_SNAP - VACUUM_RETENTION}
+                         THEN 'retain_grace'
+                    ELSE 'delete' END AS action
+        FROM versions
+    )
+    SELECT part, action,
+           CAST(count(*) AS BIGINT) AS n_files,
+           CAST(sum(bytes) AS BIGINT) AS total_bytes
+    FROM classed GROUP BY 1, 2
+"""
+
+
+@register("lakehouse_vacuum_plan", VACUUM_ORACLE)
+def lakehouse_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vacuum planning over a VERSIONED file manifest: each simulated
+    file (one per month-partition × write bucket, the compaction
+    gate's manifest) carries 1-3 versions created at successive
+    snapshots; only the latest version is live, and a superseded
+    version may be deleted once its SUCCESSOR's snapshot has aged past
+    retention (current {VACUUM_CURRENT_SNAP}, retention
+    {VACUUM_RETENTION}) — before that it stays in grace so readers
+    pinned to an old snapshot keep working. Output: per (partition,
+    action) version counts and reclaimable bytes — the report a
+    VACUUM dry-run prints.
+
+    Like compaction planning, everything runs on the MANIFEST: the
+    window-free version classification is a pure projection and the
+    rollup is partition-bounded — planning a 100 TB vacuum reads
+    kilobytes of metadata, never data.
+    """
+    orders = read_table(spark, sf_dir, "orders")
+    manifest = orders.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM").alias("part"),
+        (F.col("o_orderkey") % 16).alias("file_id"),
+    ).agg(
+        (
+            F.sum(F.round("o_totalprice").cast("long"))
+            + 100 * F.count(F.lit(1))
+        )
+        .cast("long")
+        .alias("base_bytes")
+    )
+    versions = manifest.select(
+        "part",
+        "file_id",
+        "base_bytes",
+        F.explode(
+            F.sequence(F.lit(0), (F.col("file_id") % 3).cast("int"))
+        ).alias("v"),
+    ).select(
+        "part",
+        F.expr("base_bytes div (v + 1)").alias("bytes"),
+        F.when(F.col("v") == F.col("file_id") % 3, F.lit("live"))
+        .when(
+            (F.col("file_id") % 6) + F.col("v") + 1
+            > VACUUM_CURRENT_SNAP - VACUUM_RETENTION,
+            F.lit("retain_grace"),
+        )
+        .otherwise(F.lit("delete"))
+        .alias("action"),
+    )
+    return versions.groupBy("part", "action").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files"),
+        F.sum("bytes").cast("long").alias("total_bytes"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# lakehouse_skipping_stats — manifest range-overlap clustering quality
+# ---------------------------------------------------------------------------
+SKIP_ORACLE = """
+    WITH manifest AS (
+        SELECT CAST(ts AS DATE) AS day,
+               CAST(user_id % 16 AS BIGINT) AS bucket,
+               CAST(min(event_id) AS BIGINT) AS mn,
+               CAST(max(event_id) AS BIGINT) AS mx
+        FROM events GROUP BY 1, 2
+    ),
+    ov AS (
+        SELECT a.day,
+               CAST(count(*) AS BIGINT) AS n_overlapping
+        FROM manifest a JOIN manifest b
+          ON a.day = b.day AND a.bucket < b.bucket
+         AND a.mn <= b.mx AND b.mn <= a.mx
+        GROUP BY 1
+    ),
+    files AS (
+        SELECT day, CAST(count(*) AS BIGINT) AS n_files FROM manifest
+        GROUP BY 1
+    )
+    SELECT f.day, f.n_files,
+           CAST(f.n_files * (f.n_files - 1) // 2 AS BIGINT) AS n_pairs,
+           CAST(coalesce(o.n_overlapping, 0) AS BIGINT) AS n_overlapping,
+           CAST((1000000 * (f.n_files * (f.n_files - 1) // 2
+                            - coalesce(o.n_overlapping, 0)))
+                // greatest(f.n_files * (f.n_files - 1) // 2, 1)
+                AS BIGINT) AS skipping_quality_micro
+    FROM files f LEFT JOIN ov o ON o.day = f.day
+"""
+
+
+@register("lakehouse_skipping_stats", SKIP_ORACLE)
+def lakehouse_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Data-clustering quality from the file manifest (the
+    streaming_manifest_agree lane's stats, read back for layout
+    decisions): per day-partition, how many of the
+    files×(files−1)/2 pairs have OVERLAPPING [min, max] event_id
+    ranges — an overlapping pair means a range query on event_id
+    cannot skip either file. skipping_quality = fraction of
+    non-overlapping pairs in micro (user-bucketed layout scores ~0 on
+    interleaved ids — exactly the signal that says "z-order this
+    table", the lakehouse_zorder gate's before picture).
+
+    The overlap self-join runs WITHIN day over the manifest — ≤ 16
+    files per partition by the writer's bucket count at any data
+    size — so the audit is manifest-priced.
+    """
+    ev = read_table(spark, sf_dir, "events")
+    manifest = ev.groupBy(
+        F.to_date("ts").alias("day"),
+        # dividend-sign %, NOT pmod: DuckDB's % takes the dividend's
+        # sign, and the oracle buckets with user_id % 16 — the two
+        # diverge for negative ids (ADVICE r12 low). Same convention
+        # on both sides keeps the gate exact for ANY id domain.
+        (F.col("user_id") % F.lit(16)).cast("long").alias("bucket"),
+    ).agg(
+        F.min("event_id").cast("long").alias("mn"),
+        F.max("event_id").cast("long").alias("mx"),
+    )
+    manifest = manifest.localCheckpoint(eager=False)
+    a = manifest.select(
+        "day", F.col("bucket").alias("b_a"),
+        F.col("mn").alias("mn_a"), F.col("mx").alias("mx_a"),
+    )
+    b = manifest.select(
+        "day", F.col("bucket").alias("b_b"),
+        F.col("mn").alias("mn_b"), F.col("mx").alias("mx_b"),
+    )
+    ov = (
+        a.join(b, "day")
+        .filter(
+            (F.col("b_a") < F.col("b_b"))
+            & (F.col("mn_a") <= F.col("mx_b"))
+            & (F.col("mn_b") <= F.col("mx_a"))
+        )
+        .groupBy("day")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_overlapping"))
+    )
+    files = manifest.groupBy("day").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files")
+    )
+    return (
+        files.join(ov, "day", "left")
+        .select(
+            "day",
+            "n_files",
+            F.expr("CAST(n_files * (n_files - 1) div 2 AS BIGINT)").alias(
+                "n_pairs"
+            ),
+            F.coalesce("n_overlapping", F.lit(0))
+            .cast("long")
+            .alias("n_overlapping"),
+        )
+        .withColumn(
+            "skipping_quality_micro",
+            F.expr(
+                "CAST((1000000 * (n_pairs - n_overlapping))"
+                " div greatest(n_pairs, 1) AS BIGINT)"
+            ),
+        )
     )

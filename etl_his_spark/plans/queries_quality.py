@@ -492,3 +492,108 @@ def table_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(column_name, n_nulls, n_distinct, min_val, max_val)",
         "n_rows",
     ).select("column_name", "n_rows", "n_nulls", "n_distinct", "min_val", "max_val")
+
+
+# ---------------------------------------------------------------------------
+# stats_theil_sen_trend — exact integer median-of-slopes per priority
+# ---------------------------------------------------------------------------
+
+# Offset that makes every slope numerator positive so floor == trunc
+# in both engines. int64 bound: |1e6·Δcount| must stay < OFFSET·gap,
+# i.e. monthly count deltas < 1e6 at gate scale (holds by orders of
+# magnitude on the fixture); an extreme-scale deployment publishes
+# milli instead (the corpus_token_gini headroom note).
+TS_OFFSET = 10**12
+
+
+TS_ORACLE = f"""
+    WITH monthly AS (
+        SELECT o_orderpriority AS grp,
+               year(o_orderdate) * 12 + month(o_orderdate) AS m,
+               CAST(count(*) AS BIGINT) AS c
+        FROM orders GROUP BY 1, 2
+    ),
+    slopes AS (
+        SELECT a.grp, a.m AS m_i, b.m AS m_j,
+               (1000000 * (b.c - a.c) + {TS_OFFSET} * (b.m - a.m))
+                   // (b.m - a.m) AS slope_off
+        FROM monthly a JOIN monthly b
+          ON a.grp = b.grp AND a.m < b.m
+    ),
+    ranked AS (
+        SELECT grp, slope_off,
+               row_number() OVER (PARTITION BY grp
+                   ORDER BY slope_off, m_i, m_j) AS rk,
+               count(*) OVER (PARTITION BY grp) AS n
+        FROM slopes
+    )
+    SELECT grp AS o_orderpriority,
+           CAST(max(n) AS BIGINT) AS n_pairs,
+           CAST(max(CASE WHEN rk = (n + 1) // 2
+                    THEN slope_off END) - {TS_OFFSET} AS BIGINT)
+               AS median_slope_micro
+    FROM ranked GROUP BY 1
+"""
+
+
+@register("stats_theil_sen_trend", TS_ORACLE)
+def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Theil–Sen robust trend of monthly order volume per priority:
+    the exact MEDIAN of all pairwise slopes (Δcount/Δmonth) — the
+    estimator that shrugs off outlier months where least squares
+    does not. All-integer: each slope is floor(1e6·Δc/Δm) computed as
+    (1e6·Δc + OFFSET·Δm) div Δm − OFFSET, whose numerator is positive
+    by construction so Spark's truncating div and DuckDB's flooring
+    // agree; the median is an exact rank pick (lower median,
+    deterministic (slope, m_i, m_j) tie-break), never an average.
+
+    Scale shape: pairwise slopes live on the MONTH domain — ≤
+    months²/2 rows per group at any corpus size (the stats_ks_drift
+    bounded-domain argument); the rank window partitions by group.
+    """
+    orders = read_table(spark, sf_dir, "orders")
+    monthly = orders.groupBy(
+        F.col("o_orderpriority").alias("grp"),
+        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("m"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    a = monthly.select(
+        "grp", F.col("m").alias("m_i"), F.col("c").alias("c_i")
+    )
+    b = monthly.select(
+        "grp", F.col("m").alias("m_j"), F.col("c").alias("c_j")
+    )
+    slopes = (
+        a.join(b, "grp")
+        .filter(F.col("m_i") < F.col("m_j"))
+        .select(
+            "grp",
+            "m_i",
+            "m_j",
+            F.expr(
+                f"(1000000 * (c_j - c_i) + {TS_OFFSET}L * (m_j - m_i))"
+                " div (m_j - m_i)"
+            ).alias("slope_off"),
+        )
+    )
+    wr = Window.partitionBy("grp").orderBy("slope_off", "m_i", "m_j")
+    wn = Window.partitionBy("grp")
+    ranked = slopes.select(
+        "grp",
+        "slope_off",
+        F.row_number().over(wr).alias("rk"),
+        F.count(F.lit(1)).over(wn).alias("n"),
+    )
+    return ranked.groupBy(F.col("grp").alias("o_orderpriority")).agg(
+        F.max("n").cast("long").alias("n_pairs"),
+        (
+            F.max(
+                F.when(
+                    F.col("rk") == F.expr("(n + 1) div 2"),
+                    F.col("slope_off"),
+                )
+            )
+            - F.lit(TS_OFFSET)
+        )
+        .cast("long")
+        .alias("median_slope_micro"),
+    )

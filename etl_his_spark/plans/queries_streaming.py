@@ -27,13 +27,21 @@ import os
 import shutil
 import tempfile
 from contextlib import contextmanager
-from datetime import timedelta
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import hll_registers
 from ..registry import register
 from ..sources.readers import read_events_raw, read_table
+from .queries_events2 import (
+    BOTTOMK_ORACLE,
+    HLL_ORACLE,
+    _bottomk_daily,
+    _bottomk_project,
+    _bottomk_quantiles,
+)
 
 # Per-process replay dirs: the file streaming source needs a DIRECTORY
 # of parquet files (several files → several micro-batches → real
@@ -88,9 +96,13 @@ def _normalize_replay_order(out: str) -> None:
         idx = next(
             i for i in range(md.num_columns) if md.schema.column(i).name == "ts"
         )
+        # A part written from an empty input has no row groups.
         return min(
-            md.row_group(g).column(idx).statistics.min
-            for g in range(md.num_row_groups)
+            (
+                md.row_group(g).column(idx).statistics.min
+                for g in range(md.num_row_groups)
+            ),
+            default=0,
         )
 
     base = _time.time()
@@ -127,6 +139,17 @@ def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
         atexit.register(shutil.rmtree, out, ignore_errors=True)
         _REPLAY_DIRS[sf_dir] = out
     return _REPLAY_DIRS[sf_dir]
+
+
+def _emission_horizon(spark: SparkSession, sf_dir: str) -> datetime | None:
+    """Latest event time minus 3 hours: the append-mode lanes keep only
+    rows that end before it. ``None`` on empty ``events``, so the
+    ``F.lit(None)`` comparison drops every row, as the oracle's null
+    comparison does."""
+    max_ts = (
+        read_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
+    )
+    return None if max_ts is None else max_ts - timedelta(hours=3)
 
 
 @contextmanager
@@ -234,10 +257,7 @@ def streaming_attribution_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    max_ts = (
-        read_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    )
-    horizon = max_ts - timedelta(hours=3)
+    horizon = _emission_horizon(spark, sf_dir)
     return (
         spark.table(name)
         .filter(F.col("session_end") < F.lit(horizon))
@@ -306,10 +326,7 @@ def streaming_sessionize_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    max_ts = (
-        read_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    )
-    horizon = max_ts - timedelta(hours=3)
+    horizon = _emission_horizon(spark, sf_dir)
     return (
         spark.table(name)
         .filter(F.col("session_end") < F.lit(horizon))
@@ -502,10 +519,7 @@ def streaming_window_counts_agree(spark: SparkSession, sf_dir: str) -> DataFrame
             .start()
         )
         q.awaitTermination()
-    max_ts = (
-        read_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    )
-    horizon = max_ts - timedelta(hours=3)
+    horizon = _emission_horizon(spark, sf_dir)
     return (
         spark.table(name)
         .filter(
@@ -588,10 +602,7 @@ def streaming_join_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    max_ts = (
-        read_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    )
-    horizon = max_ts - timedelta(hours=3)
+    horizon = _emission_horizon(spark, sf_dir)
     return (
         spark.table(name)
         .filter((F.col("l_ts") < F.lit(horizon)) & (F.col("r_ts") < F.lit(horizon)))
@@ -699,4 +710,194 @@ def streaming_cdc_apply_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return read_published(spark, root, STATE_TABLE).select(
         "user_id", "last_ts_us", "last_event_type", "last_value_cents"
+    )
+
+
+@register("streaming_hll_users_agree", HLL_ORACLE)
+def streaming_hll_users_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-type HLL registers from a REAL Structured Streaming
+    aggregation (complete-mode availableNow replay): the register max
+    is monotone, so state is bounded and no watermark is needed, and
+    the streamed registers are BIT-IDENTICAL to batch — which is why
+    this streaming lane can carry the same exact DuckDB oracle as the
+    batch gate (``HLL_ORACLE``). Would be the eighth live streaming
+    lane under the gate."""
+    from ..streaming.events import stream_events
+
+    replay = _events_replay_dir(spark, sf_dir)
+    name = _fresh_sink(spark, "stream_hll_gate")
+    with _stream_run_conf(spark):
+        q = (
+            hll_registers(
+                stream_events(spark, replay).withColumn(
+                    "uid", F.col("user_id").cast("string")
+                ),
+                "uid",
+                group_cols=["event_type"],
+            )
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.table(name).select("event_type", "bucket", "register")
+
+
+# ---------------------------------------------------------------------------
+# streaming_bottomk_agree — the bottom-k sketch as a live foreachBatch
+# monoid rollup (the tenth streaming lane)
+# ---------------------------------------------------------------------------
+@register("streaming_bottomk_agree", BOTTOMK_ORACLE)
+def streaming_bottomk_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(type, day) bottom-k partials maintained by a REAL
+    Structured Streaming run: each micro-batch computes its own
+    bottom-k partial and foreachBatch folds it into the persisted
+    store (store ← bottom-k(store ∪ partial)) — the continuous form
+    of the lakehouse rollup the batch gate reads. The final store is
+    merged-at-read into quantiles and hash-checked against the SAME
+    DuckDB oracle as ``sketch_bottomk_quantiles``: stream-of-merges ≡
+    one batch pass, because bottom-k is a commutative idempotent
+    monoid (the per-key min-value dedup before the rank makes an
+    at-least-once batch replay a no-op — the CDC lane's idempotence
+    argument).
+
+    No watermark and no state store: the persisted partial table IS
+    the state, k rows per (type, day) at any corpus size. Each
+    foreachBatch merge ranks store ∪ partial — both sides bounded by
+    k·(types×days touched) — so per-batch work is sketch-sized, not
+    data-sized.
+
+    STREAM-EFFECTFUL: building this DataFrame runs the stream to
+    completion (that is the point of the gate)."""
+    from ..streaming.events import stream_events
+
+    replay = _events_replay_dir(spark, sf_dir)
+    root = tempfile.mkdtemp(prefix="bottomk_rollup_gate_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    state = {"path": None, "v": 0}
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        partial = _bottomk_daily(_bottomk_project(batch))
+        if state["path"] is not None:
+            prev = spark.read.parquet(state["path"])
+            partial = _bottomk_daily(prev.unionByName(partial))
+        state["v"] += 1
+        out = os.path.join(root, f"store_v{state['v']}")
+        partial.write.mode("overwrite").parquet(out)
+        state["path"] = out
+
+    with _stream_run_conf(spark):
+        q = (
+            stream_events(spark, replay)
+            .writeStream.foreachBatch(_apply)
+            .option(
+                "checkpointLocation", os.path.join(root, "_ckpt")
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    daily = spark.read.parquet(state["path"])
+    return _bottomk_quantiles(daily)
+
+
+# ---------------------------------------------------------------------------
+# streaming_manifest_agree — foreachBatch-maintained file manifest
+# ---------------------------------------------------------------------------
+MANIFEST_ORACLE = """
+    SELECT CAST(ts AS DATE) AS day,
+           CAST(user_id % 16 AS BIGINT) AS bucket,
+           CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(sum(length(coalesce(props, '')) + 16) AS BIGINT)
+               AS bytes_proxy,
+           CAST(min(event_id) AS BIGINT) AS min_event_id,
+           CAST(max(event_id) AS BIGINT) AS max_event_id
+    FROM events GROUP BY 1, 2
+"""
+
+
+def _manifest_partial(ev: DataFrame) -> DataFrame:
+    """Per-(day, bucket) manifest stats of one events frame — the
+    (count, sum, min, max) monoid vector a lakehouse writer records
+    per file for skipping (min/max) and compaction (rows/bytes)."""
+    return ev.groupBy(
+        F.to_date("ts").alias("day"),
+        # dividend-sign %, NOT pmod: DuckDB's % takes the dividend's
+        # sign, and the oracle buckets with user_id % 16 — the two
+        # diverge for negative ids (ADVICE r12 low). Same convention
+        # on both sides keeps the gate exact for ANY id domain.
+        (F.col("user_id") % F.lit(16)).cast("long").alias("bucket"),
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum(F.length(F.coalesce("props", F.lit(""))) + F.lit(16))
+        .cast("long")
+        .alias("bytes_proxy"),
+        F.min("event_id").cast("long").alias("min_event_id"),
+        F.max("event_id").cast("long").alias("max_event_id"),
+    )
+
+
+def _manifest_merge(store: DataFrame) -> DataFrame:
+    """Fold a union of manifest partials back into one row per
+    (day, bucket): sums add, min/max re-extremize — the commutative
+    merge the monoid vector supports."""
+    return store.groupBy("day", "bucket").agg(
+        F.sum("n_rows").cast("long").alias("n_rows"),
+        F.sum("bytes_proxy").cast("long").alias("bytes_proxy"),
+        F.min("min_event_id").cast("long").alias("min_event_id"),
+        F.max("max_event_id").cast("long").alias("max_event_id"),
+    )
+
+
+@register("streaming_manifest_agree", MANIFEST_ORACLE)
+def streaming_manifest_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A lakehouse FILE MANIFEST maintained by a REAL Structured
+    Streaming run: each micro-batch computes its own per-(day, bucket)
+    stats partial and foreachBatch folds it into the persisted store
+    (store ← merge(store ∪ partial)) — the continuous bookkeeping
+    every incremental lakehouse write keeps so compaction and
+    file-skipping never re-scan data. The final store is hash-checked
+    against the plain batch GROUP BY under the same oracle.
+
+    Algebra contrast with the bottom-k lane (documented, not hidden):
+    (sum, sum, min, max) is a COMMUTATIVE monoid — micro-batch layout
+    cannot change the result — but NOT idempotent (a replayed batch
+    would double the sums), so replay protection comes from the
+    checkpoint offsets log (exactly-once within an availableNow run),
+    not from the algebra itself. Per-batch merge work is
+    manifest-sized (days × 16 rows), never data-sized.
+
+    STREAM-EFFECTFUL: building this DataFrame runs the stream to
+    completion (that is the point of the gate)."""
+    from ..streaming.events import stream_events
+
+    replay = _events_replay_dir(spark, sf_dir)
+    root = tempfile.mkdtemp(prefix="manifest_rollup_gate_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    state = {"path": None, "v": 0}
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        partial = _manifest_partial(batch)
+        if state["path"] is not None:
+            prev = spark.read.parquet(state["path"])
+            partial = _manifest_merge(prev.unionByName(partial))
+        state["v"] += 1
+        out = os.path.join(root, f"store_v{state['v']}")
+        partial.write.mode("overwrite").parquet(out)
+        state["path"] = out
+
+    with _stream_run_conf(spark):
+        q = (
+            stream_events(spark, replay)
+            .writeStream.foreachBatch(_apply)
+            .option("checkpointLocation", os.path.join(root, "_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.read.parquet(state["path"]).select(
+        "day", "bucket", "n_rows", "bytes_proxy",
+        "min_event_id", "max_event_id",
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import _STOPWORDS_EN
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -850,4 +851,637 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("cms_estimate"), F.asc("token"))
         .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_zipf_fit — per-source Zipf slope via integer log2-bucket OLS
+# ---------------------------------------------------------------------------
+ZIPF_ORACLE = """
+    WITH toks AS (
+        SELECT source, unnest(list_filter(
+                   string_split(trim(text), ' '), x -> x <> '')) AS token
+        FROM documents WHERE text IS NOT NULL
+    ),
+    freqs AS (
+        SELECT source, token, CAST(count(*) AS BIGINT) AS f
+        FROM toks GROUP BY 1, 2
+    ),
+    ranked AS (
+        SELECT source, f, row_number() OVER (
+                   PARTITION BY source ORDER BY f DESC, token) AS r
+        FROM freqs
+    ),
+    pts AS (
+        SELECT source,
+               CAST(length(bin(r)) AS BIGINT) AS x,
+               CAST(length(bin(f)) AS BIGINT) AS y
+        FROM ranked
+    ),
+    sums AS (
+        SELECT source, CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+               CAST(sum(x * y) AS BIGINT) AS sxy,
+               CAST(sum(x * x) AS BIGINT) AS sxx
+        FROM pts GROUP BY 1
+    )
+    SELECT source, n AS n_types,
+           (n * sxy - sx * sy) * 1000000 // (n * sxx - sx * sx)
+               AS zipf_slope_micro
+    FROM sums
+    WHERE n * sxx - sx * sx > 0
+"""
+
+
+@register("text_zipf_fit", ZIPF_ORACLE)
+def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Zipf slope: integer least-squares of log2(freq) on
+    log2(rank) over the token frequency table, in micro-units. Natural
+    text sits near slope −1; template/boilerplate-heavy sources
+    flatten or steepen the curve, so the slope is a cheap
+    distribution-shape quality signal for source triage.
+
+    log2 buckets come from ``length(bin(x))`` — bit-length as the
+    cross-engine-exact integer log2 (the HLL rank trick) — so the OLS
+    runs entirely on int64 sums and one integer division; no float
+    enters either engine. One groupBy(source, token) + one per-source
+    rank window; everything after is 20 rows.
+    """
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    toks = docs.select(
+        "source",
+        F.explode(
+            F.filter(
+                F.split(F.trim("text"), " "), lambda x: x != ""
+            )
+        ).alias("token"),
+    )
+    freqs = toks.groupBy("source", "token").agg(
+        F.count(F.lit(1)).cast("long").alias("f")
+    )
+    wr = Window.partitionBy("source").orderBy(
+        F.col("f").desc(), F.col("token")
+    )
+    pts = freqs.withColumn("r", F.row_number().over(wr)).select(
+        "source",
+        F.length(F.bin("r")).cast("long").alias("x"),
+        F.length(F.bin("f")).cast("long").alias("y"),
+    )
+    sums = pts.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("x").cast("long").alias("sx"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+    )
+    return sums.filter(
+        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx") > 0
+    ).select(
+        "source",
+        F.col("n").alias("n_types"),
+        F.expr(
+            "(n * sxy - sx * sy) * 1000000 div (n * sxx - sx * sx)"
+        ).alias("zipf_slope_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_readability_scores — per-source integer Flesch-style readability
+# ---------------------------------------------------------------------------
+READABILITY_ORACLE = r"""
+    WITH scored AS (
+        SELECT source,
+               206835000
+               - (1015000 * w) // s
+               - (84600000 * syl) // w AS fre_micro
+        FROM (
+            SELECT source,
+                   CAST(len(list_filter(string_split(trim(text), ' '),
+                                        x -> x <> '')) AS BIGINT) AS w,
+                   CAST(len(regexp_extract_all(text, '[aeiou]+'))
+                        AS BIGINT) AS syl,
+                   greatest(CAST(1 AS BIGINT),
+                            CAST(len(regexp_extract_all(text, '[.!?]+'))
+                                 AS BIGINT)) AS s
+            FROM documents WHERE text IS NOT NULL
+        )
+        WHERE w > 0
+    )
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(fre_micro) AS BIGINT) AS sum_fre_micro,
+           CAST(sum(CASE WHEN fre_micro >= 60000000 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_easy,
+           CAST(sum(CASE WHEN fre_micro >= 30000000
+                          AND fre_micro < 60000000 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_medium,
+           CAST(sum(CASE WHEN fre_micro >= 0
+                          AND fre_micro < 30000000 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_hard,
+           CAST(sum(CASE WHEN fre_micro < 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_very_hard
+    FROM scored GROUP BY 1
+"""
+
+
+@register("text_readability_scores", READABILITY_ORACLE)
+def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Flesch-reading-ease readability in integer
+    micro-units: 206.835 − 1.015·(words/sentences) − 84.6·(syll/words),
+    with vowel-group runs as the syllable proxy and [.!?]+ runs as
+    sentence breaks (min 1).
+
+    Both divisions are integer `div` with POSITIVE operands, so
+    truncation is identical in both engines; the per-source report
+    publishes the SUM of doc scores (exact integer), not the average —
+    dividing a possibly-negative sum would hit the trunc-vs-floor
+    divergence between Spark's `div` and a SQL engine's `//`.
+    Map-only scoring + one hash-agg: linear at any corpus size.
+    """
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    w = F.size(
+        F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
+    ).cast("long")
+    syl = F.expr("size(regexp_extract_all(text, '[aeiou]+', 0))").cast(
+        "long"
+    )
+    s = F.greatest(
+        F.lit(1).cast("long"),
+        F.expr("size(regexp_extract_all(text, '[.!?]+', 0))").cast("long"),
+    )
+    scored = (
+        docs.select("source", w.alias("w"), syl.alias("syl"), s.alias("s"))
+        .filter(F.col("w") > 0)
+        .select(
+            "source",
+            (
+                F.lit(206835000).cast("long")
+                - F.expr("(1015000 * w) div s")
+                - F.expr("(84600000 * syl) div w")
+            ).alias("fre_micro"),
+        )
+    )
+    f = F.col("fre_micro")
+    return scored.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("fre_micro").cast("long").alias("sum_fre_micro"),
+        F.sum(F.when(f >= 60000000, 1).otherwise(0))
+        .cast("long")
+        .alias("n_easy"),
+        F.sum(F.when((f >= 30000000) & (f < 60000000), 1).otherwise(0))
+        .cast("long")
+        .alias("n_medium"),
+        F.sum(F.when((f >= 0) & (f < 30000000), 1).otherwise(0))
+        .cast("long")
+        .alias("n_hard"),
+        F.sum(F.when(f < 0, 1).otherwise(0)).cast("long").alias(
+            "n_very_hard"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_keyword_rake — RAKE-style keyword extraction per source
+# ---------------------------------------------------------------------------
+RAKE_MAX_PHRASE = 4
+
+
+RAKE_TOP = 10
+
+
+_STOPLIST_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS_EN)
+
+
+RAKE_ORACLE = f"""
+    WITH toks AS (
+        SELECT doc_id, source, i, lower(w[i]) AS t
+        FROM (SELECT doc_id, source, w,
+                     unnest(range(1, len(w) + 1)) AS i
+              FROM (SELECT doc_id, source,
+                           string_split(trim(text), ' ') AS w
+                    FROM documents WHERE text IS NOT NULL))
+        WHERE w[i] <> ''
+    ),
+    marked AS (
+        SELECT *, CASE WHEN t IN ({_STOPLIST_SQL}) THEN 1 ELSE 0 END
+                      AS is_stop
+        FROM toks
+    ),
+    grp AS (
+        SELECT *, SUM(is_stop) OVER (
+                      PARTITION BY doc_id ORDER BY i
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                  ) AS g
+        FROM marked
+    ),
+    phr AS (
+        SELECT doc_id, source, g,
+               string_agg(t, ' ' ORDER BY i) AS phrase,
+               CAST(count(*) AS BIGINT) AS plen
+        FROM grp WHERE is_stop = 0
+        GROUP BY 1, 2, 3
+        HAVING count(*) <= {RAKE_MAX_PHRASE}
+    ),
+    pw AS (
+        SELECT source, phrase, plen,
+               unnest(string_split(phrase, ' ')) AS word
+        FROM phr
+    ),
+    ws AS (
+        SELECT source, word, CAST(count(*) AS BIGINT) AS freq,
+               CAST(sum(plen) AS BIGINT) AS deg
+        FROM pw GROUP BY 1, 2
+    ),
+    occ AS (
+        SELECT source, phrase, CAST(count(*) AS BIGINT) AS n_occ
+        FROM phr GROUP BY 1, 2
+    ),
+    scsum AS (
+        SELECT p.source, p.phrase,
+               SUM((1000000 * w.deg) // w.freq) AS ssum
+        FROM pw p JOIN ws w ON w.source = p.source AND w.word = p.word
+        GROUP BY 1, 2
+    ),
+    fin AS (
+        SELECT o.source, o.phrase, o.n_occ,
+               CAST(s.ssum // o.n_occ AS BIGINT) AS score_micro
+        FROM occ o
+        JOIN scsum s ON s.source = o.source AND s.phrase = o.phrase
+    )
+    SELECT source, phrase, n_occ, score_micro,
+           CAST(rk AS BIGINT) AS rank
+    FROM (SELECT *, row_number() OVER (
+              PARTITION BY source
+              ORDER BY score_micro DESC, phrase) AS rk
+          FROM fin)
+    WHERE rk <= {RAKE_TOP}
+"""
+
+
+@register("text_keyword_rake", RAKE_ORACLE)
+def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAKE-style keyword extraction per source: candidate phrases
+    are maximal stopword-delimited runs of ≤ {RAKE_MAX_PHRASE} words
+    (stopword list = functions.text._STOPWORDS_EN, shared with the
+    langid heuristics); each word's degree (Σ length of phrases it
+    occurs in) and frequency are aggregated per source over phrase
+    occurrences; a phrase scores Σ floor(1e6·deg(w)/freq(w)) over its
+    word positions (per-occurrence sums divide back exactly by the
+    occurrence count — every occurrence of a phrase contributes the
+    identical word-score sum); top-{RAKE_TOP} phrases per source by
+    (score, phrase). All-integer scoring — hash-exact cross-engine.
+
+    Plan: the phrase-grouping window runs per document (doc-bounded);
+    word stats and the final rank window run over source-partitioned
+    vocab/phrase dimensions (≪ corpus at any size). No pair joins.
+    """
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    toks = (
+        docs.select(
+            "doc_id",
+            "source",
+            F.posexplode(F.split(F.trim("text"), " ")).alias("pos", "w"),
+        )
+        .filter(F.col("w") != "")
+        .select(
+            "doc_id",
+            "source",
+            (F.col("pos") + 1).alias("i"),
+            F.lower("w").alias("t"),
+        )
+    )
+    marked = toks.withColumn(
+        "is_stop",
+        F.when(F.col("t").isin(_STOPWORDS_EN), F.lit(1)).otherwise(
+            F.lit(0)
+        ),
+    )
+    wg = (
+        Window.partitionBy("doc_id")
+        .orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    grp = marked.withColumn("g", F.sum("is_stop").over(wg))
+    phr = (
+        grp.filter(F.col("is_stop") == 0)
+        .groupBy("doc_id", "source", "g")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("i", "t"))
+                    ),
+                    lambda x: x["t"],
+                ),
+                " ",
+            ).alias("phrase"),
+            F.count(F.lit(1)).cast("long").alias("plen"),
+        )
+        .filter(F.col("plen") <= RAKE_MAX_PHRASE)
+        .localCheckpoint(eager=False)
+    )
+    pw = phr.select(
+        "source", "phrase", "plen", F.explode(F.split("phrase", " ")).alias("word")
+    )
+    ws = pw.groupBy("source", "word").agg(
+        F.count(F.lit(1)).cast("long").alias("freq"),
+        F.sum("plen").cast("long").alias("deg"),
+    )
+    occ = phr.groupBy("source", "phrase").agg(
+        F.count(F.lit(1)).cast("long").alias("n_occ")
+    )
+    scsum = (
+        pw.join(ws, ["source", "word"])
+        .groupBy("source", "phrase")
+        .agg(F.sum(F.expr("(1000000 * deg) div freq")).alias("ssum"))
+    )
+    fin = occ.join(scsum, ["source", "phrase"]).select(
+        "source",
+        "phrase",
+        "n_occ",
+        F.expr("CAST(ssum div n_occ AS BIGINT)").alias("score_micro"),
+    )
+    wr = Window.partitionBy("source").orderBy(
+        F.desc("score_micro"), F.asc("phrase")
+    )
+    return (
+        fin.withColumn("rank", F.row_number().over(wr).cast("long"))
+        .filter(F.col("rank") <= RAKE_TOP)
+        .select("source", "phrase", "n_occ", "score_micro", "rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_vocab_drift — snapshot-to-snapshot vocabulary drift report
+# ---------------------------------------------------------------------------
+DRIFT_MIN_COUNT = 5
+
+
+DRIFT_TOP = 10
+
+
+DRIFT_ORACLE = f"""
+    WITH toks AS (
+        SELECT doc_id,
+               unnest(list_filter(string_split(trim(text), ' '),
+                                  x -> x <> '')) AS token
+        FROM documents WHERE text IS NOT NULL
+    ),
+    oldc AS (
+        SELECT token, CAST(count(*) AS BIGINT) AS c_old FROM toks
+        WHERE doc_id % 2 = 0 GROUP BY 1
+    ),
+    newc AS (
+        SELECT token, CAST(count(*) AS BIGINT) AS c_new FROM toks
+        WHERE doc_id % 2 = 1 GROUP BY 1
+    ),
+    tot AS (
+        SELECT CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS tot_old,
+               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS tot_new
+        FROM toks
+    ),
+    joined AS (
+        SELECT coalesce(o.token, n.token) AS token,
+               coalesce(o.c_old, 0) AS c_old,
+               coalesce(n.c_new, 0) AS c_new,
+               (1000000000 * coalesce(o.c_old, 0)) // t.tot_old
+                   AS rate_old_ppb,
+               (1000000000 * coalesce(n.c_new, 0)) // t.tot_new
+                   AS rate_new_ppb
+        FROM oldc o FULL OUTER JOIN newc n ON o.token = n.token
+        CROSS JOIN tot t
+    ),
+    classed AS (
+        SELECT token, c_old, c_new,
+               CASE WHEN c_old >= {DRIFT_MIN_COUNT}
+                         AND c_new >= {DRIFT_MIN_COUNT} THEN 'drifted'
+                    WHEN c_old = 0 AND c_new >= {DRIFT_MIN_COUNT}
+                         THEN 'new'
+                    WHEN c_new = 0 AND c_old >= {DRIFT_MIN_COUNT}
+                         THEN 'dropped'
+                    ELSE NULL END AS category,
+               CASE WHEN c_old >= {DRIFT_MIN_COUNT}
+                         AND c_new >= {DRIFT_MIN_COUNT}
+                    THEN (1000000 * greatest(rate_old_ppb, rate_new_ppb))
+                         // greatest(least(rate_old_ppb, rate_new_ppb), 1)
+                    WHEN c_old = 0 THEN 1000000 * rate_new_ppb
+                    ELSE 1000000 * rate_old_ppb END AS score
+        FROM joined
+    )
+    SELECT category, token,
+           CAST(c_old AS BIGINT) AS c_old,
+           CAST(c_new AS BIGINT) AS c_new,
+           CAST(score AS BIGINT) AS score,
+           CAST(rk AS BIGINT) AS rank
+    FROM (SELECT *, row_number() OVER (
+              PARTITION BY category ORDER BY score DESC, token) AS rk
+          FROM classed WHERE category IS NOT NULL)
+    WHERE rk <= {DRIFT_TOP}
+"""
+
+
+@register("text_vocab_drift", DRIFT_ORACLE)
+def text_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary drift between corpus snapshots (doc_id parity as
+    the old/new split, the dedup_snapshot_incremental convention):
+    per category the top-{DRIFT_TOP} tokens — ``drifted`` (present in
+    both halves at ≥ {DRIFT_MIN_COUNT}, ranked by the max/min ratio
+    of ppb-normalized rates, integer cross-division — no float
+    ratio), ``new`` and ``dropped`` (ranked by their one-sided
+    rate). The report a tokenizer-refresh / distribution-shift
+    review reads before retraining.
+
+    The token-count dims are vocab-bounded; the two corpus totals
+    are a 1-row aggregate broadcast (the quality_unigram_likelihood
+    idiom); the rank window partitions by category over the
+    vocab-bounded classed dim.
+    """
+    toks = (
+        read_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select(
+            "doc_id",
+            F.explode(
+                F.filter(
+                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
+                )
+            ).alias("token"),
+        )
+    )
+    toks = toks.localCheckpoint(eager=False)
+    oldc = (
+        toks.filter(F.col("doc_id") % 2 == 0)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_old"))
+    )
+    newc = (
+        toks.filter(F.col("doc_id") % 2 == 1)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_new"))
+    )
+    tot = toks.agg(
+        F.sum(F.when(F.col("doc_id") % 2 == 0, 1).otherwise(0))
+        .cast("long")
+        .alias("tot_old"),
+        F.sum(F.when(F.col("doc_id") % 2 == 1, 1).otherwise(0))
+        .cast("long")
+        .alias("tot_new"),
+    )
+    joined = (
+        oldc.join(newc, "token", "full_outer")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "token",
+            F.coalesce("c_old", F.lit(0)).alias("c_old"),
+            F.coalesce("c_new", F.lit(0)).alias("c_new"),
+            F.expr(
+                "(1000000000 * coalesce(c_old, 0)) div tot_old"
+            ).alias("rate_old_ppb"),
+            F.expr(
+                "(1000000000 * coalesce(c_new, 0)) div tot_new"
+            ).alias("rate_new_ppb"),
+        )
+    )
+    both = (F.col("c_old") >= DRIFT_MIN_COUNT) & (
+        F.col("c_new") >= DRIFT_MIN_COUNT
+    )
+    classed = joined.select(
+        "token",
+        "c_old",
+        "c_new",
+        F.when(both, F.lit("drifted"))
+        .when(
+            (F.col("c_old") == 0) & (F.col("c_new") >= DRIFT_MIN_COUNT),
+            F.lit("new"),
+        )
+        .when(
+            (F.col("c_new") == 0) & (F.col("c_old") >= DRIFT_MIN_COUNT),
+            F.lit("dropped"),
+        )
+        .alias("category"),
+        F.when(
+            both,
+            F.expr(
+                "(1000000 * greatest(rate_old_ppb, rate_new_ppb))"
+                " div greatest(least(rate_old_ppb, rate_new_ppb), 1)"
+            ),
+        )
+        .when(F.col("c_old") == 0, 1000000 * F.col("rate_new_ppb"))
+        .otherwise(1000000 * F.col("rate_old_ppb"))
+        .alias("score"),
+    ).filter(F.col("category").isNotNull())
+    wr = Window.partitionBy("category").orderBy(
+        F.desc("score"), F.asc("token")
+    )
+    return (
+        classed.withColumn("rank", F.row_number().over(wr).cast("long"))
+        .filter(F.col("rank") <= DRIFT_TOP)
+        .select(
+            "category", "token", "c_old", "c_new",
+            F.col("score").cast("long").alias("score"), "rank",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_encoding_anomalies — mojibake / control-character corpus QA
+# ---------------------------------------------------------------------------
+ENC_ORACLE = r"""
+    WITH scored AS (
+        SELECT source,
+               CAST(len(regexp_extract_all(text, '\x{FFFD}')) AS BIGINT)
+                   AS n_replacement,
+               CAST(len(regexp_extract_all(text,
+                        '[\x01-\x08\x0b\x0c\x0e-\x1f]')) AS BIGINT)
+                   AS n_control,
+               CAST(len(regexp_extract_all(text,
+                        '[\x{00C2}-\x{00C3}][\x{0080}-\x{00BF}]'))
+                   AS BIGINT) AS n_mojibake_pairs,
+               CAST(length(text) AS BIGINT) AS n_chars
+        FROM documents WHERE text IS NOT NULL
+    )
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN n_replacement + n_control
+                         + n_mojibake_pairs > 0
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_flagged,
+           CAST(sum(n_replacement) AS BIGINT) AS n_replacement,
+           CAST(sum(n_control) AS BIGINT) AS n_control,
+           CAST(sum(n_mojibake_pairs) AS BIGINT) AS n_mojibake_pairs,
+           CAST((1000000 * sum(n_replacement + n_control
+                               + n_mojibake_pairs))
+                // greatest(sum(n_chars), 1) AS BIGINT)
+               AS anomaly_rate_micro
+    FROM scored GROUP BY 1
+"""
+
+
+@register("text_encoding_anomalies", ENC_ORACLE)
+def text_encoding_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Encoding-anomaly corpus QA per source: U+FFFD replacement
+    characters (a decoder already gave up), C0 control characters
+    (excluding tab/newlines — binary junk in "text"), and the
+    classic UTF-8-read-as-Latin-1 mojibake signature (Â/Ã followed by
+    a continuation-range codepoint). Per source: doc counts, flagged
+    docs, per-class totals, and the anomaly rate per character in
+    micro — the signal that says a source's extraction pipeline is
+    broken before its text poisons a training mix.
+
+    Map-only regexp counting + one hash-agg; linear at any corpus
+    size. Regex classes are pure codepoint ranges — engine-identical.
+    """
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()
+    )
+    n_repl = F.expr(
+        "size(regexp_extract_all(text, '\\ufffd', 0))"
+    ).cast("long")
+    # \uXXXX (not \xNN): Spark SQL string literals unescape \u to the
+    # literal codepoint, while an unrecognized \x silently drops the
+    # backslash and turns the class into garbage (caught by the
+    # sf0.001 oracle run on authoring day).
+    n_ctrl = F.expr(
+        "size(regexp_extract_all(text,"
+        " '[\\u0001-\\u0008\\u000b\\u000c\\u000e-\\u001f]', 0))"
+    ).cast("long")
+    n_moji = F.expr(
+        "size(regexp_extract_all(text,"
+        " '[\\u00c2-\\u00c3][\\u0080-\\u00bf]', 0))"
+    ).cast("long")
+    scored = docs.select(
+        "source",
+        n_repl.alias("n_replacement"),
+        n_ctrl.alias("n_control"),
+        n_moji.alias("n_mojibake_pairs"),
+        F.length("text").cast("long").alias("n_chars"),
+    )
+    return scored.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(
+            F.when(
+                F.col("n_replacement")
+                + F.col("n_control")
+                + F.col("n_mojibake_pairs")
+                > 0,
+                1,
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_docs_flagged"),
+        F.sum("n_replacement").cast("long").alias("n_replacement"),
+        F.sum("n_control").cast("long").alias("n_control"),
+        F.sum("n_mojibake_pairs").cast("long").alias("n_mojibake_pairs"),
+        F.expr(
+            "CAST((1000000 * sum(n_replacement + n_control"
+            " + n_mojibake_pairs)) div greatest(sum(n_chars), 1)"
+            " AS BIGINT)"
+        ).alias("anomaly_rate_micro"),
     )

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import token_count
+from ..functions.text import token_count, word_token_count
 from ..operators.packing import mixture_sample, pack_sequences
 from ..registry import register
 from ..sources.readers import read_table
@@ -771,4 +771,72 @@ def training_span_mask_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(sum(m_end - m_start + 1) * 1000000"
             "     div max(n_tokens) AS BIGINT)"
         ).alias("mask_ratio_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# training_tokenizer_fertility — regex-vs-whitespace token fertility
+# ---------------------------------------------------------------------------
+FERTILITY_ORACLE = r"""
+    WITH d AS (
+        SELECT lang, source,
+               CAST(length(text) AS BIGINT) AS nc,
+               CAST(len(string_split_regex(trim(text), '\s+'))
+                    AS BIGINT) AS ws,
+               CAST(len(list_filter(
+                        string_split_regex(trim(text), '[^A-Za-z0-9]+'),
+                        x -> x <> ''))
+                    + length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
+                    AS BIGINT) AS re_t
+        FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
+    )
+    SELECT lang, source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(ws) AS BIGINT) AS ws_tokens,
+           CAST(sum(re_t) AS BIGINT) AS re_tokens,
+           CAST((1000000 * sum(re_t)) // sum(ws) AS BIGINT)
+               AS fertility_micro,
+           CAST((1000000 * sum(nc)) // greatest(sum(re_t), 1) AS BIGINT)
+               AS chars_per_token_micro
+    FROM d GROUP BY 1, 2
+"""
+
+
+@register("training_tokenizer_fertility", FERTILITY_ORACLE)
+def training_tokenizer_fertility(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Tokenizer fertility per (lang, source): the repo's BPE-ish
+    regex token count (functions.text.word_token_count — alphanumeric
+    runs + punctuation characters, the cheap subword proxy) against
+    the whitespace-word baseline (token_count), with chars-per-token.
+    Fertility (tokens per word) is THE corpus-balance signal a
+    multilingual tokenizer decision reads: a language whose fertility
+    runs high gets fewer effective tokens per byte budget.
+
+    Map-only scoring + one hash-agg; sums cross the engine boundary
+    and the two ratios are integer div over positive sums — linear at
+    any corpus size.
+    """
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.trim("text") != "")
+    )
+    d = docs.select(
+        "lang",
+        "source",
+        F.length("text").cast("long").alias("nc"),
+        token_count("text").cast("long").alias("ws"),
+        word_token_count("text").cast("long").alias("re_t"),
+    )
+    return d.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("ws").cast("long").alias("ws_tokens"),
+        F.sum("re_t").cast("long").alias("re_tokens"),
+        F.expr("CAST((1000000 * sum(re_t)) div sum(ws) AS BIGINT)").alias(
+            "fertility_micro"
+        ),
+        F.expr(
+            "CAST((1000000 * sum(nc)) div greatest(sum(re_t), 1)"
+            " AS BIGINT)"
+        ).alias("chars_per_token_micro"),
     )

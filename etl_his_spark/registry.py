@@ -37,6 +37,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 # Import for side effect: each module registers its queries.
+from .plans import flagship  # noqa: E402,F401
 from .plans import queries_core  # noqa: E402,F401
 from .plans import queries_his_analog  # noqa: E402,F401
 from .plans import queries_text  # noqa: E402,F401
@@ -64,73 +65,18 @@ from .plans import queries_streaming  # noqa: E402,F401
 from .plans import queries_lm  # noqa: E402,F401
 from .plans import queries_retrieval  # noqa: E402,F401
 from .plans import queries_graph  # noqa: E402,F401
-from .plans import queries_r10_queue  # noqa: E402,F401
-from .plans import queries_r11_queue  # noqa: E402,F401
-from .plans import queries_r12_queue  # noqa: E402,F401
-from .plans import queries_r13_queue  # noqa: E402,F401
-from .plans import queries_r14_queue  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------
 # Verification-window ordering.
 #
-# The external correctness harness checks queries in dict order and, in
-# round 1, capped at the first 50 of 99 — leaving the whole TPC-H suite,
-# gender inference, merge/SCD2, sampling and more with no hard signal.
-# Rotate per round: queries that were fixed or changed this round, plus
-# those never yet hard-verified, come FIRST; queries already proven
-# green under the harness rotate to the back (their pytest + local
-# oracle checks still run every round). ``_reorder`` deliberately skips
-# missing names (benign circular-import window); the drift guard that
-# asserts every _CHECK_FIRST name exists lives in
-# tests/test_registry_order.py.
+# The external correctness harness checks the first 50 queries in dict
+# order: positions 1-50 of _CHECK_FIRST are its window, and positions
+# 51-67 lead the next one. Everything after keeps registration order;
+# tests/test_oracles.py checks every oracle whatever its position.
 # ---------------------------------------------------------------------------
 
 _CHECK_FIRST = [
-    # --- Round 14 window (50 slots).
-    # Layout:
-    #   1-7   queries whose CODE changed this round (changed-first
-    #         rule): curation_lm_report + source_overlap_matrix
-    #         (single-pass per-source aggregation rewrites — guide
-    #         §2.3), corpus_ngram_coverage_curve +
-    #         curation_contamination_attribution +
-    #         dedup_snapshot_incremental (spread_small_input on the
-    #         single-split explodes), graph_triangle_counts +
-    #         graph_jaccard_neighbors (machinery factored verbatim to
-    #         operators.graph for the planted hot-node skew tests —
-    #         plan-identical, but the changed-first rule makes the
-    #         driver prove it).
-    #   8-17  the ten r14-queue gates registered THIS round (written
-    #         and tri-scale-proven in r12; tests/test_r14_queue.py runs
-    #         the driver-style comparison over all ten every pytest
-    #         run).
-    #   18-40 twenty-three of the forty r8-last queries, machinery-first
-    #         (streaming join/enrich replays, BPE encode, semantic-cell
-    #         + perceptual-hash dedup, the netpbm decoder, the HIS
-    #         flagship, SCD2 + MERGE-delete, stratified/deterministic
-    #         sampling, the sketch pair, TF-IDF, sessionize/window
-    #         events, simhash pairs, rule violations, repetition,
-    #         pivot, p95, window dists, incremental keys). After this
-    #         block no registered query's
-    #         driver row is older than round 9 except the seventeen
-    #         queued below.
-    #   41-50 the ten permanent family sentinels — RESTORED exactly as
-    #         the r13 window promised after their documented one-round
-    #         exception (r13 header), closing the r13 verdict's
-    #         accepted-risk item 4.
-    #   51-67 the seventeen remaining r8-last queries — written r15
-    #         leaders (the retire-the-queue discipline): the five
-    #         r1-era expression queries, tokenizer trio, mixture
-    #         sample, the three SQL-analog joins, the four TPC-H
-    #         machinery picks, plus agg_collect_sorted and
-    #         explode_wordcount_topk (slid out when
-    #         curation_contamination_attribution's and
-    #         dedup_snapshot_incremental's spreads took the sixth and
-    #         seventh changed-first slots — the
-    #         fuzzy_name_match/window_running_sum precedent;
-    #         sorted-collect_list stays exercised in-window by the
-    #         triangle adjacency build and split-explode-count by
-    #         text_tfidf_topk).
-    # Positions 1-7: r14 code-changed queries (changed-first rule).
+    # 1-7: code changed.
     "curation_lm_report",
     "source_overlap_matrix",
     "corpus_ngram_coverage_curve",
@@ -138,7 +84,7 @@ _CHECK_FIRST = [
     "dedup_snapshot_incremental",
     "graph_triangle_counts",
     "graph_jaccard_neighbors",
-    # Positions 8-17: the ten r14-queue gates registered this round.
+    # 8-17: newest gates.
     "lakehouse_vacuum_plan",
     "stats_theil_sen_trend",
     "embedding_binary_recall",
@@ -149,7 +95,7 @@ _CHECK_FIRST = [
     "text_vocab_drift",
     "events_bot_detection",
     "text_encoding_anomalies",
-    # Positions 18-40: twenty-three r8-last queries, machinery-first.
+    # 18-40: longest-unverified, machinery-first.
     "streaming_join_agree",
     "streaming_enrich_agree",
     "training_bpe_encode",
@@ -173,8 +119,7 @@ _CHECK_FIRST = [
     "stats_p95_group",
     "window_dist_functions",
     "incremental_new_keys",
-    # Positions 41-50: the ten permanent family sentinels (pinned —
-    # do not rotate out; restored per the r13 promise).
+    # 41-50: permanent family sentinels; never rotate out.
     "his_extraction_shape",
     "his_unpivot_slots",
     "tpch_q1_full",
@@ -185,8 +130,7 @@ _CHECK_FIRST = [
     "text_simhash",
     "merge_upsert_orders",
     "json_extract_stats",
-    # Positions 51-67: the seventeen remaining r8-last queries —
-    # written r15 leaders.
+    # 51-67: leaders of the next window.
     "agg_collect_sorted",
     "explode_wordcount_topk",
     "filter_nonempty",
@@ -204,991 +148,12 @@ _CHECK_FIRST = [
     "tpch_q17_small_qty",
     "tpch_q20_promo_shippers",
     "tpch_q21_waiting",
-    # Positions 67+: everything else keeps registration order; all
-    # were driver-green in r9-r13 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R13_WINDOW_HISTORY = [
-    # --- Round 13 window (50 slots) — executes the queue the r12
-    # window wrote down, exactly as the r12 verdict ordered (item 1):
-    # clear the whole r7-stale cohort, then the ten r13-queue gates.
-    # Layout:
-    #   1     dedup_snapshot_incremental — its residual shingle join
-    #         gained the posting-list df cap this round (r12 verdict
-    #         item 3; SNAPSHOT_DF_CAP in queries_r12_queue.py,
-    #         mirrored in the oracle, planted hot-shingle test) — the
-    #         changed-first rule puts it at position 1 even though its
-    #         r12 row was green, exactly as fuzzy_name_match's r10
-    #         redesign did.
-    #   2-40  the thirty-nine r7-last queries the r12 window queued at
-    #         positions 51-89 (the verdict's item-1 cohort; its joint
-    #         15-query spot-check of exactly these found zero drift).
-    #         After this block no registered query's driver row is
-    #         older than round 8.
-    #   41-50 the ten r13-queue gates registered THIS round (written
-    #         and tri-scale-proven in r12; tests/test_r13_queue.py
-    #         runs the driver-style comparison over all ten every
-    #         pytest run). streaming_manifest_agree additionally
-    #         carries this round's dividend-sign % bucketing fix
-    #         (ADVICE r12 low) — registered-new puts it in-window
-    #         anyway.
-    #   51    bench_embedding_neardup_numpy slides out to make room
-    #         for position 1 (the fuzzy_name_match/window_running_sum
-    #         precedent): it holds the weakest slot claim — its
-    #         rows-only row was refreshed in r12 (position 31), its
-    #         code is untouched, and its semantics stay pinned by the
-    #         hash-exact twin embedding_neardup (sentinel-tier, green
-    #         r12) plus the pytest pair-set equality test.
-    # The ten family sentinels sit OUT of this window — the second
-    # documented one-round exception to the pin rule (the first was
-    # r7, same reason: a stale-cohort clearing round needs the slots).
-    # All ten were driver-green in r12 (CORRECTNESS_r12 positions
-    # 41-50), none of their code paths change this round, and pytest
-    # + the local DuckDB gate still hard-check them every round; they
-    # return at positions 41-50 of the r14 window.
-    # Position 1: changed-first (snapshot df cap).
-    "dedup_snapshot_incremental",
-    # Positions 2-40: the thirty-nine r7-last queries, machinery-first
-    # (same order the r12 window queued them).
-    "ann_topk_ivf",
-    "basket_brand_affinity",
-    "bloom_prefilter_join",
-    "contrastive_triplets",
-    "corpus_dedup_keeper_quality",
-    "curation_boilerplate_prefixes",
-    "curation_lm_report",
-    "curation_source_report",
-    "customer_rfm_segments",
-    "dataset_split_assign",
-    "date_parts",
-    "dedup_containment_pairs",
-    "dedup_repeated_spans",
-    "embedding_jl_projection",
-    "embedding_kmeans_assign",
-    "embedding_kmeans_update",
-    "embedding_label_separation",
-    "embedding_quantize_int8",
-    "embedding_standardize",
-    "events_churn_training_set",
-    "events_dau_wau_stickiness",
-    "events_decayed_revenue",
-    "events_markov_transitions",
-    "fk_resolution",
-    "incremental_agg_refresh",
-    "inference_length_batches",
-    "json_schema_parse",
-    "orders_seasonal_naive",
-    "quality_novel_ngrams",
-    "quality_unigram_likelihood",
-    "schema_evolution_read",
-    "source_overlap_matrix",
-    "split_leakage_check",
-    "stats_key_skew",
-    "stats_winsorized",
-    "table_analyze_stats",
-    "table_diff_changelog",
-    "text_script_detect",
-    "training_epoch_shuffle",
-    # Positions 41-50: the ten r13-queue gates registered this round.
-    "retrieval_rerank_eval",
-    "ann_index_maintenance",
-    "multimodal_riff_walk",
-    "curation_contamination_attribution",
-    "events_cusum_changepoint",
-    "graph_jaccard_neighbors",
-    "text_keyword_rake",
-    "training_tokenizer_fertility",
-    "embedding_matryoshka_eval",
-    "streaming_manifest_agree",
-    # Position 51: slid out (r12-fresh rows-only row; see header).
-    "bench_embedding_neardup_numpy",
-    # Positions 52+: everything else keeps registration order; all
-    # were driver-green in r8-r12 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R12_WINDOW_HISTORY = [
-    # --- Round 12 window (50 slots) — executes the queue the r11
-    # window wrote down, exactly as the r11 verdict ordered (items 1-2).
-    # Layout:
-    #   1-17  the seventeen queued r12 leaders: the r6-last queries the
-    #         r11 window parked at positions 51-67 (registry history).
-    #         After this block no registered query's driver row is
-    #         older than round 7.
-    #   18-27 the ten r12-queue gates registered THIS round (written
-    #         and tri-scale-proven in r11; tests/test_r12_queue.py runs
-    #         the driver-style comparison over all ten every pytest
-    #         run). sketch_bottomk_quantiles / streaming_bottomk_agree
-    #         carry the r12 deterministic groupBy-min dedup mirrored in
-    #         their shared oracle (ADVICE r11 low) — new-gates-first
-    #         puts the whole block up front anyway.
-    #   28-30 queries whose CODE changed this round (changed-first
-    #         rule): ann_topk_bruteforce (brute_force_topk's baseline
-    #         guard cap clamped to a fixed constant — ADVICE r11 low),
-    #         embedding_gram_matrix (gram_matrix_exact dim guard — r11
-    #         verdict item 7), surrogate_dense_ids (dense_ids_small
-    #         pre-shuffle size check — ADVICE r11 low).
-    #   31    bench_embedding_neardup_numpy — the registry's single
-    #         rows-only lane (documented BLAS summation-order decision)
-    #         and the OLDEST driver row of all (r3); refreshed under
-    #         its weaker rows-only check.
-    #   32-40 nine of the remaining r7-last queries, machinery-first
-    #         (heaviest graph lane, two streaming lanes, SCD2 as-of,
-    #         curation filter, drift stats, corrupt-JSONL ingest,
-    #         multimodal WAV stats, PQ codes). The remaining
-    #         thirty-nine r7-last queries queue at positions 51+ as
-    #         written r13 leaders.
-    #   41-50 the ten permanent family sentinels (pinned).
-    # Positions 1-17: the seventeen queued r6-last leaders.
-    "corpus_dedup_report",
-    "doc_chunk_overlap",
-    "events_attribution",
-    "events_attribution_last",
-    "events_funnel_ordered",
-    "events_hopping_window",
-    "events_retention_cohorts",
-    "events_topk_per_window",
-    "stats_correlation",
-    "stats_histogram",
-    "stats_outliers_mad",
-    "streaming_attribution_agree",
-    "streaming_dedup_agree",
-    "training_curriculum_deciles",
-    "training_oov_rate",
-    "training_temperature_mixture",
-    "training_tokenize_docs",
-    # Positions 18-27: the ten r12-queue gates registered this round.
-    "sketch_bottomk_quantiles",
-    "text_readability_scores",
-    "corpus_token_gini",
-    "events_path_mining",
-    "graph_kcore",
-    "lakehouse_compaction_plan",
-    "ann_knn_graph",
-    "dedup_snapshot_incremental",
-    "retrieval_mrr_eval",
-    "streaming_bottomk_agree",
-    # Positions 28-30: r12 code-changed queries (changed-first rule).
-    "ann_topk_bruteforce",
-    "embedding_gram_matrix",
-    "surrogate_dense_ids",
-    # Position 31: oldest driver row (r3, rows-only by decision).
-    "bench_embedding_neardup_numpy",
-    # Positions 32-40: nine r7-last queries, machinery-first.
-    "graph_triangle_counts",
-    "streaming_sessionize_agree",
-    "streaming_window_counts_agree",
-    "fact_scd2_asof_join",
-    "curation_gopher_filter",
-    "stats_ks_drift",
-    "jsonl_ingest_corrupt",
-    "multimodal_wav_stats",
-    "embedding_pq_codes",
-    # Positions 41-50: the ten permanent family sentinels (pinned —
-    # do not rotate out).
-    "his_extraction_shape",
-    "his_unpivot_slots",
-    "tpch_q1_full",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_neardup",
-    "text_simhash",
-    "merge_upsert_orders",
-    "json_extract_stats",
-    # Positions 51-89: the thirty-nine remaining r7-last queries —
-    # written r13 leaders (same retire-the-queue discipline as the
-    # r11→r12 positions 51-67), machinery-first.
-    "ann_topk_ivf",
-    "basket_brand_affinity",
-    "bloom_prefilter_join",
-    "contrastive_triplets",
-    "corpus_dedup_keeper_quality",
-    "curation_boilerplate_prefixes",
-    "curation_lm_report",
-    "curation_source_report",
-    "customer_rfm_segments",
-    "dataset_split_assign",
-    "date_parts",
-    "dedup_containment_pairs",
-    "dedup_repeated_spans",
-    "embedding_jl_projection",
-    "embedding_kmeans_assign",
-    "embedding_kmeans_update",
-    "embedding_label_separation",
-    "embedding_quantize_int8",
-    "embedding_standardize",
-    "events_churn_training_set",
-    "events_dau_wau_stickiness",
-    "events_decayed_revenue",
-    "events_markov_transitions",
-    "fk_resolution",
-    "incremental_agg_refresh",
-    "inference_length_batches",
-    "json_schema_parse",
-    "orders_seasonal_naive",
-    "quality_novel_ngrams",
-    "quality_unigram_likelihood",
-    "schema_evolution_read",
-    "source_overlap_matrix",
-    "split_leakage_check",
-    "stats_key_skew",
-    "stats_winsorized",
-    "table_analyze_stats",
-    "table_diff_changelog",
-    "text_script_detect",
-    "training_epoch_shuffle",
-    # Positions 90+: everything else keeps registration order; all
-    # were driver-green in r8-r11 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R11_WINDOW_HISTORY = [
-    # --- Round 11 window (50 slots) — executes the queue the r10
-    # window wrote down, exactly as the r10 verdict ordered (items 1-2).
-    # Layout:
-    #   1-8   the eight queued r11 leaders: the five sentinel-subsumed
-    #         r5-last queries + window_running_sum (slid out when
-    #         fuzzy_name_match's redesign took r10 position 1), then
-    #         streaming_cdc_apply_agree (registered r10 after the
-    #         window froze — never driver-checked) and
-    #         multimodal_features (oracle upgraded rows-only →
-    #         hash-exact after the freeze). After this round no
-    #         registered query lacks a driver row under its CURRENT
-    #         oracle, and no hash-oracle row is older than r6.
-    #   9-18  the ten r11-queue gates registered THIS round (written
-    #         and tri-scale-proven in r10; tests/test_r11_queue.py
-    #         runs the driver-style comparison over all ten every
-    #         pytest run). events_quantile_daily_rollup carries the
-    #         r11 integer-div ceil-rank fix and
-    #         curation_diversity_prune the r11 cell-size guard (both
-    #         ADVICE r10 lows) — changed-queries-first puts the whole
-    #         block up front anyway.
-    #   19    quality_trigram_backoff — its n_total gained an
-    #         empty-train coalesce this round (ADVICE r10 low);
-    #         changed-queries-first rule, despite its green r10 row.
-    #   20-40 twenty-one of the thirty-eight r6-last queries,
-    #         machinery-first (F4 gender lookup, as-of/range joins,
-    #         graph lanes, LSH scale guards, ANN variants, BM25,
-    #         curation, lakehouse, multimodal, sketches, skew/bucket
-    #         joins, BPE, streaming state, weighted sampling). The
-    #         seventeen remaining r6-last queries queue at positions
-    #         51+ as written r12 leaders.
-    #   41-50 the ten permanent family sentinels (pinned).
-    "proj_alias_concat",
-    "string_clean",
-    "join_inner_broadcast",
-    "unpivot_measures",
-    "dedup_distinct_name",
-    "window_running_sum",
-    "streaming_cdc_apply_agree",
-    "multimodal_features",
-    # Positions 9-18: the ten r11-queue gates registered this round.
-    "sketch_kmv_set_ops",
-    "events_quantile_daily_rollup",
-    "ann_recall_eval",
-    "dedup_lsh_eval",
-    "retrieval_margin_bitext",
-    "curation_diversity_prune",
-    "corpus_ngram_coverage_curve",
-    "text_zipf_fit",
-    "graph_label_propagation",
-    "sketch_bloom_membership",
-    # Position 19: code changed this round (ADVICE r10 coalesce).
-    "quality_trigram_backoff",
-    # Positions 20-40: twenty-one r6-last queries, machinery-first.
-    "gender_inference",
-    "events_asof_join",
-    "events_range_join",
-    "graph_pagerank_trade",
-    "dedup_components",
-    "dedup_lsh_giant_buckets",
-    "corpus_dedup_collapse_guarded",
-    "ann_topk_multiprobe",
-    "ann_topk_pq_adc",
-    "retrieval_bm25_topk",
-    "curation_pii_redact",
-    "curation_contamination",
-    "lakehouse_zorder",
-    "multimodal_frame_sample",
-    "sketch_count_min",
-    "skew_salted_pricing",
-    "bucketed_join_colocated",
-    "training_bpe_merges",
-    "training_vocab_build",
-    "streaming_stateful_totals_agree",
-    "sample_weighted_quality",
-    # Positions 41-50: the ten permanent family sentinels (pinned —
-    # do not rotate out).
-    "his_extraction_shape",
-    "his_unpivot_slots",
-    "tpch_q1_full",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_neardup",
-    "text_simhash",
-    "merge_upsert_orders",
-    "json_extract_stats",
-    # Positions 51-67: the seventeen remaining r6-last queries —
-    # written r12 leaders (same retire-the-queue discipline as the
-    # r10→r11 positions 51-57).
-    "corpus_dedup_report",
-    "doc_chunk_overlap",
-    "events_attribution",
-    "events_attribution_last",
-    "events_funnel_ordered",
-    "events_hopping_window",
-    "events_retention_cohorts",
-    "events_topk_per_window",
-    "stats_correlation",
-    "stats_histogram",
-    "stats_outliers_mad",
-    "streaming_attribution_agree",
-    "streaming_dedup_agree",
-    "training_curriculum_deciles",
-    "training_oov_rate",
-    "training_temperature_mixture",
-    "training_tokenize_docs",
-    # Positions 68+: everything else keeps registration order; all
-    # were driver-green in r7-r10 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R10_WINDOW_HISTORY = [
-    # --- Round 10 window (50 slots) — executes the queue the r9 window
-    # wrote down, exactly as the r9 verdict ordered (item 1).
-    # Layout:
-    #   1-10  the ten r9 additions (registered after the r9 window
-    #         froze; tri-scale green on registration day; re-verified
-    #         by the r9 judge at sf0.01) — never driver-checked.
-    #         inference_prefix_cache_hits additionally carries an r10
-    #         oracle alignment (empty-token filter, ADVICE r9 low).
-    #   11-20 the ten r10-queue gates registered THIS round (written
-    #         and tri-scale-proven in r9, tests/test_r10_queue.py runs
-    #         the driver-style comparison over all ten every pytest
-    #         run). quality_trigram_backoff's short-doc guard is the
-    #         one r10 code change in the set (ADVICE r9 medium).
-    #   21-40 twenty of the twenty-five r5-last queries queued at r9
-    #         positions 61-85, machinery-first. The five left queued
-    #         as r11 leaders are each subsumed in-window by a pinned
-    #         sentinel exercising the same machinery:
-    #         proj_alias_concat + string_clean (his_extraction_shape's
-    #         aliased projection + limpiarNombres lane),
-    #         join_inner_broadcast (his_extraction_shape's broadcast
-    #         catalogs), unpivot_measures (his_unpivot_slots),
-    #         dedup_distinct_name (dedup_exact's hash-groupBy lane).
-    #   41-50 the ten permanent family sentinels (pinned). text_simhash
-    #         doubles as the hard check on this round's lane-overflow
-    #         guard in simhash_signatures (ADVICE r9 low).
-    # Position 1: fuzzy_name_match was REDESIGNED this round (verify
-    # once per distinct name + the distinct-name-dim pin from the
-    # fixed scan audit) — the rotation rule puts changed queries
-    # first, so its new code gets a driver row even though its r9 row
-    # was green. To keep the window at 50 with the ten sentinels
-    # intact, window_running_sum (its machinery adjacent to the
-    # in-window window_range_frame) slides to the r11-leader queue.
-    "fuzzy_name_match",
-    # Positions 2-11: the ten r9 additions.
-    "text_lexical_diversity",
-    "inference_prefix_cache_hits",
-    "curation_blocklist_filter",
-    "training_upsample_repeat",
-    "training_span_mask_spec",
-    "dedup_translated_semantic",
-    "retrieval_prf_expansion",
-    "sketch_cms_heavy_hitters",
-    "corpus_chunk_dedup",
-    "dedup_exact_substring_spans",
-    # Positions 11-20: the ten r10-queue gates registered this round.
-    "corpus_exactsubstr_cut",
-    "sketch_hll_user_registers",
-    "dedup_weighted_jaccard",
-    "dedup_weighted_minhash_sig",
-    "streaming_hll_users_agree",
-    "events_hll_daily_rollup",
-    "dedup_weighted_lsh_candidates",
-    "quality_trigram_backoff",
-    "events_cms_daily_rollup",
-    "retrieval_hard_negatives",
-    # Positions 21-40: twenty r5-last queries, machinery-first.
-    "agg_pricing_summary",
-    "ann_label_purity",
-    "corpus_dedup_collapse",
-    "cube_agg",
-    "dedup_first_per_key",
-    "join_anti_new_keys",
-    "join_full_outer",
-    "join_left_fanout",
-    "join_self_roles",
-    "join_semi_existing",
-    "rollup_agg",
-    "set_operations",
-    "sort_global_desc",
-    "text_langid_eval",
-    "text_quality",
-    "topk_customers",
-    "window_lag_lead",
-    "window_range_frame",
-    "window_rank_dense",
-    # Positions 41-50: the ten permanent family sentinels (pinned —
-    # do not rotate out).
-    "his_extraction_shape",
-    "his_unpivot_slots",
-    "tpch_q1_full",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_neardup",
-    "text_simhash",
-    "merge_upsert_orders",
-    "json_extract_stats",
-    # Positions 51-55: the five sentinel-subsumed r5-last queries —
-    # written r11 leaders (direct driver rows next round, same
-    # retire-the-subsumption-argument discipline as r8 positions
-    # 10-14).
-    "proj_alias_concat",
-    "string_clean",
-    "join_inner_broadcast",
-    "unpivot_measures",
-    "dedup_distinct_name",
-    # Slid out of the 50-slot window when fuzzy_name_match's r10
-    # redesign took position 1 (changed-queries-first rule); its
-    # running-sum machinery stays exercised in-window by
-    # window_range_frame's range-frame sums. r9-green driver row.
-    "window_running_sum",
-    # Position 56: added in r10 after this window froze (r9 verdict
-    # item 6 — the ninth live streaming lane: foreachBatch MERGE into
-    # the manifest lakehouse); tri-scale green on registration day,
-    # restart-recovery pinned by pytest. r11 leader after the five
-    # above, which have waited longer.
-    "streaming_cdc_apply_agree",
-    # Position 57: oracle upgraded rows-only → hash-exact in r10 after
-    # the window froze (analytic byte-histogram oracle + integer-micro
-    # encoding — r9 verdict item 7); rides the next window like
-    # multimodal_frame_sample's r5→r6 upgrade did. The OTHER rows-only
-    # lane (bench_embedding_neardup_numpy) stays rows-only by
-    # documented decision: its BLAS pairwise summation differs from
-    # the sequential fold in final bits, any fixed-precision rounding
-    # can flip at a boundary, and its semantics are already pinned by
-    # the hash-exact twin embedding_neardup plus a pytest pair-set
-    # equality test.
-    "multimodal_features",
-    # Positions 58+: everything else keeps registration order; all
-    # were driver-green in r6-r9 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R9_WINDOW_HISTORY = [
-    # --- Round 9 window (50 slots), kept for the audit trail —
-    # executes the queue the r8 window wrote down (registry history
-    # positions 51-74) exactly as the r8 verdict ordered (item 1),
-    # with the round's code-changed/new queries leading per the
-    # standing new-machinery-first rule.
-    # Layout:
-    #   1-3   queries whose code changed or was added THIS round:
-    #         fuzzy_name_match (length-band blocking replaced by
-    #         lossless q-gram-count banding — the one measured
-    #         super-linear query in SCALE_AUDIT, r8 verdict item 2),
-    #         ann_topk_ivfpq (NEW — IVF nprobe cell ranking composed
-    #         with in-cell PQ-ADC scoring, r8 verdict item 3), and
-    #         text_collocations_pmi (top-50 ordering moved from the
-    #         rounded double to an exact cross-multiplied BIGINT
-    #         surrogate, r8 ADVICE low item — it also sits in the
-    #         queued ten, so it rides up front).
-    #   4-12  the remaining nine r8 additions (queued positions 51-60
-    #         last round; never driver-checked; all tri-scale green on
-    #         registration day and 5 re-verified by the r8 judge).
-    #   13-26 the fourteen r4-last TPC-H queries (queued positions
-    #         61-74 last round) — after this round no hash-oracle
-    #         query's driver row is older than round 5.
-    #   27-40 fourteen of the thirty-nine r5-last queries, chosen
-    #         machinery-first: the two real-decoder multimodal lanes,
-    #         the corpus composition pipeline, the atomic-publish
-    #         round trip, the two LSH scale guards, the two ANN
-    #         baselines, the two winnowing lanes, sequence packing,
-    #         the HIS bridge, exact median, grouping sets. The
-    #         twenty-five remaining r5-last queries are queued at
-    #         positions 51+ as written r10 leaders.
-    #   41-50 the ten permanent family sentinels (pinned).
-    # Positions 1-3: r9 code-changed/new.
-    "fuzzy_name_match",
-    "ann_topk_ivfpq",
-    "text_collocations_pmi",
-    # Positions 4-12: the remaining nine r8 additions.
-    "retrieval_hybrid_rrf",
-    "quality_bigram_likelihood",
-    "events_rate_anomaly",
-    "corpus_line_dedup",
-    "events_gapfill_locf",
-    "events_interval_coverage",
-    "retrieval_phrase_match",
-    "training_skipgram_pairs",
-    "training_negative_sampling",
-    # Positions 13-26: the fourteen r4-last TPC-H queries.
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "tpch_q11_important",
-    "tpch_q12_shipmode",
-    "tpch_q14_promo",
-    "tpch_q15_top_supplier",
-    "tpch_q16_partsupp",
-    "tpch_q18_large_volume",
-    "tpch_q19_disjunctive",
-    "tpch_q22_dormant",
-    # Positions 27-40: fourteen machinery-distinct r5-last queries.
-    "multimodal_wav_decode",
-    "multimodal_y4m_frames",
-    "corpus_pipeline",
-    "publish_roundtrip",
-    "dedup_lsh_capped",
-    "dedup_lsh_incremental",
-    "ann_topk_bruteforce",
-    "ann_topk_bucketed",
-    "doc_winnow_fingerprints",
-    "overlap_pairs_winnow",
-    "training_pack_sequences",
-    "his_bridge_derivation",
-    "median_disc",
-    "grouping_sets_explicit",
-    # Positions 41-50: the ten permanent family sentinels (pinned —
-    # do not rotate out).
-    "his_extraction_shape",
-    "his_unpivot_slots",
-    "tpch_q1_full",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_neardup",
-    "text_simhash",
-    "merge_upsert_orders",
-    "json_extract_stats",
-    # Positions 51-60: the ten r9 additions (registered after this
-    # round's window froze; tri-scale green on registration day) —
-    # the r10 window's leaders under the standing new-machinery-first
-    # rule, exactly as the r8 additions led this round's window.
-    "text_lexical_diversity",
-    "inference_prefix_cache_hits",
-    "curation_blocklist_filter",
-    "training_upsample_repeat",
-    "training_span_mask_spec",
-    "dedup_translated_semantic",
-    "retrieval_prf_expansion",
-    "sketch_cms_heavy_hitters",
-    "corpus_chunk_dedup",
-    "dedup_exact_substring_spans",
-    # Positions 61-85: the remainder of the written r10 queue — the
-    # twenty-five r5-last queries, in family groups.
-    "agg_pricing_summary",
-    "ann_label_purity",
-    "corpus_dedup_collapse",
-    "cube_agg",
-    "dedup_distinct_name",
-    "dedup_first_per_key",
-    "join_anti_new_keys",
-    "join_full_outer",
-    "join_inner_broadcast",
-    "join_left_fanout",
-    "join_self_roles",
-    "join_semi_existing",
-    "proj_alias_concat",
-    "rollup_agg",
-    "set_operations",
-    "sort_global_desc",
-    "string_clean",
-    "text_langid_eval",
-    "text_quality",
-    "topk_customers",
-    "unpivot_measures",
-    "window_lag_lead",
-    "window_range_frame",
-    "window_rank_dense",
-    "window_running_sum",
-    # Positions 76+: everything else keeps registration order; all
-    # were driver-green in r6/r7/r8 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R8_WINDOW_HISTORY = [
-    # --- Round 8 window (50 slots) — closes the driver-verification
-    # ledger per the r7 verdict (item 1): after this round no
-    # hash-oracle query's last driver CORRECTNESS row is older than
-    # round 4, and every query that has NEVER had a driver row gets
-    # one. Layout:
-    #   1-5   the five r7-new queries (never driver-checked; the r7
-    #         ADVICE flagged their absence from this list) — also the
-    #         only queries whose code changed this round
-    #         (dedup_semantic_cells' threshold now rounds before
-    #         comparing in both engines; streaming_join_agree picked
-    #         up the replay-harness tuning pass).
-    #   6-9   the four written r8 leaders from the r7 queue
-    #         (training_mixture_sample was the eighth r3-displaced
-    #         query; the other three are the r6-displaced subsumption
-    #         cases).
-    #   10-14 the five r1-last expression queries — the oldest rows in
-    #         the whole ledger (driver-checked only in round 1; their
-    #         subsumption-by-sentinel argument retires here in favor
-    #         of direct rows).
-    #   15    flagship_fact (r7 verdict item 7: the HIS
-    #         reference-parity path rides the window alongside its new
-    #         committed sf0.1 wall-time in BENCH_LOCAL).
-    #   16-40 twenty-five of the thirty-nine r4-last queries: all
-    #         twenty-one non-TPC-H ones, plus the four TPC-H queries
-    #         with the most distinctive plan machinery (q21 multi
-    #         exists/anti, q17 correlated avg, q13 outer-join
-    #         distribution, q20 nested semi). The fourteen remaining
-    #         r4-last TPC-H queries are static single-plan SQL
-    #         analogs guarded by the pinned tpch_q1_full sentinel and
-    #         the local DuckDB gate; they queue as r9 leaders at
-    #         positions 51+ so next round starts from a written list.
-    #   41-50 the ten permanent family sentinels, restored after their
-    #         documented one-round r7 exception.
-    # Positions 1-5: the five r7-new queries.
-    "training_bpe_encode",
-    "dedup_semantic_cells",
-    "multimodal_image_dedup",
-    "streaming_join_agree",
-    "streaming_enrich_agree",
-    # Positions 6-9: the written r8-leader queue from r7.
-    "training_mixture_sample",
-    "posexplode_positions",
-    "sample_deterministic",
-    "text_word_tokens",
-    # Positions 10-14: the r1-last expression queries (oldest ledger
-    # rows — last driver row round 1).
-    "filter_nonempty",
-    "first_token",
-    "text_tokens",
-    "text_langid",
-    "doc_fingerprint",
-    # Position 15: the HIS flagship (reference-parity path).
-    "flagship_fact",
-    # Positions 16-36: every non-TPC-H r4-last query.
-    "dedup_simhash_pairs",
-    "quality_rule_violations",
-    "events_window_agg",
-    "events_sessionize",
-    "pivot_status",
-    "multimodal_netpbm_decode",
-    "sql_q3_shipping_priority",
-    "sql_q5_national_revenue",
-    "sql_q10_returned_items",
-    "sketch_approx_distinct",
-    "sketch_approx_quantiles",
-    "explode_wordcount_topk",
-    "agg_collect_sorted",
-    "incremental_new_keys",
-    "text_tfidf_topk",
-    "sample_stratified",
-    "stats_p95_group",
-    "window_dist_functions",
-    "merge_delete_orders",
-    "scd2_customer_priority",
-    "curation_repetition",
-    # Positions 37-40: the four most machinery-distinct r4-last TPC-H
-    # queries.
-    "tpch_q21_waiting",
-    "tpch_q17_small_qty",
-    "tpch_q13_custdist",
-    "tpch_q20_promo_shippers",
-    # Positions 41-50: the ten permanent family sentinels (pinned —
-    # do not rotate out).
-    "his_extraction_shape",
-    "his_unpivot_slots",
-    "tpch_q1_full",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_neardup",
-    "text_simhash",
-    "merge_upsert_orders",
-    "json_extract_stats",
-    # Positions 51-53 (outside the 50-slot window — FIRST r9 leaders,
-    # per the new-machinery-first rule the r7 ADVICE reaffirmed): the
-    # three r8 additions, each hash-exact in the local gate at
-    # sf0.001 AND sf0.01 on registration day. They lead the r9 window
-    # ahead of everything else.
-    "retrieval_hybrid_rrf",
-    "quality_bigram_likelihood",
-    "events_rate_anomaly",
-    # Positions 54-56 (r9 leaders, second wave of r8 additions —
-    # same registration-day discipline: hash-exact in the local gate
-    # at sf0.001 AND sf0.01): C4-style line dedup with reassembly,
-    # time-spine LOCF gap fill, interval-union coverage.
-    "corpus_line_dedup",
-    "events_gapfill_locf",
-    "events_interval_coverage",
-    # Positions 57-60 (r9 leaders, third wave of r8 additions —
-    # same registration-day discipline: hash-exact in the local gate
-    # at sf0.001/0.01/0.1): PMI collocation mining, positional-index
-    # phrase match, skip-gram context pairs, negative-sampling table.
-    "text_collocations_pmi",
-    "retrieval_phrase_match",
-    "training_skipgram_pairs",
-    "training_negative_sampling",
-    # Positions 61-74 (r9 leaders, final block): the fourteen
-    # r4-last TPC-H queries that did not fit this window.
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "tpch_q11_important",
-    "tpch_q12_shipmode",
-    "tpch_q14_promo",
-    "tpch_q15_top_supplier",
-    "tpch_q16_partsupp",
-    "tpch_q18_large_volume",
-    "tpch_q19_disjunctive",
-    "tpch_q22_dormant",
-    # Positions 68+: everything else keeps registration order; all
-    # were driver-green in r5/r6/r7 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R7_WINDOW_HISTORY = [
-    # --- Round 7 window (50 slots), kept for the audit trail — the
-    # consolidation rotation the r6 verdict ordered (items 1 and 7):
-    # positions 1-43 are ALL 43
-    # queries that have never had a driver CORRECTNESS row (every one
-    # r6-new, every one green in the full local oracle gate), ordered
-    # new-machinery-first per the verdict's priority list; positions
-    # 44-50 are seven of the eight r3-displaced queries waiting since
-    # the r6 rotation. That fills the window exactly, so NO family
-    # sentinels ride this round — a deliberate one-round exception to
-    # the pin-the-sentinels rule: all ten sentinels were driver-green
-    # in r6 (CORRECTNESS_r06), none of their code paths changed in r7
-    # (consolidation round, no new query machinery), and the local
-    # 189-query gate plus pytest still hard-check them every round.
-    # Sentinels return at positions 41-50 in the r8 window.
-    #
-    # Positions 1-8: the verdict's named new-machinery lanes — IVF
-    # ANN, degree-oriented triangle counting, the two streaming gates
-    # that missed the r6 window, corpus n-gram novelty, exact 2-sample
-    # KS, SCD2 as-of temporal join, PERMISSIVE JSONL ingestion.
-    "ann_topk_ivf",
-    "graph_triangle_counts",
-    "streaming_sessionize_agree",
-    "streaming_window_counts_agree",
-    "quality_novel_ngrams",
-    "stats_ks_drift",
-    "fact_scd2_asof_join",
-    "jsonl_ingest_corrupt",
-    # Positions 9-43: the remaining 35 never-driver-checked queries,
-    # grouped by family (lakehouse/CDC, embedding/vector, LM quality,
-    # events/stats, misc layout).
-    "table_diff_changelog",
-    "schema_evolution_read",
-    "incremental_agg_refresh",
-    "table_analyze_stats",
-    "bloom_prefilter_join",
-    "embedding_kmeans_assign",
-    "embedding_kmeans_update",
-    "embedding_gram_matrix",
-    "embedding_standardize",
-    "embedding_pq_codes",
-    "embedding_jl_projection",
-    "embedding_label_separation",
-    "split_leakage_check",
-    "corpus_dedup_keeper_quality",
-    "dedup_containment_pairs",
-    "source_overlap_matrix",
-    "quality_unigram_likelihood",
-    "curation_lm_report",
-    "curation_gopher_filter",
-    "curation_boilerplate_prefixes",
-    "text_script_detect",
-    "stats_winsorized",
-    "stats_key_skew",
-    "customer_rfm_segments",
-    "basket_brand_affinity",
-    "events_decayed_revenue",
-    "events_markov_transitions",
-    "events_churn_training_set",
-    "events_dau_wau_stickiness",
-    "orders_seasonal_naive",
-    "dataset_split_assign",
-    "inference_length_batches",
-    "contrastive_triplets",
-    "training_epoch_shuffle",
-    "multimodal_wav_stats",
-    # Positions 44-50: seven of the eight r3-displaced queries (r6
-    # verdict item 7 — direct driver rows instead of two rounds of
-    # machinery-subsumption arguments).
-    "curation_source_report",
-    "date_parts",
-    "dedup_repeated_spans",
-    "embedding_quantize_int8",
-    "fk_resolution",
-    "json_schema_parse",
-    "surrogate_dense_ids",
-    # Positions 51-54 (outside the 50-slot window — r8 leaders):
-    # training_mixture_sample (the eighth displaced query; weakest
-    # slot claim because its strict superset training_temperature_
-    # mixture was driver-green in r6) and the three r6-displaced
-    # subsumption cases, so r8's window starts from a written-down
-    # queue instead of an archaeology pass.
-    "training_mixture_sample",
-    "posexplode_positions",
-    "sample_deterministic",
-    "text_word_tokens",
-    # Positions 55+: everything else keeps registration order; all
-    # were driver-green in r5/r6 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
-]
-
-_R6_WINDOW_HISTORY = [
-    # --- Round 6 window (50 slots), kept for the audit trail. ---
-    # Positions 1-9: the 8 round-5 queries that have NEVER had a
-    # driver CORRECTNESS row (added after the r5 window was fixed;
-    # r5 verdict item 1 makes them lead this window), plus
-    # multimodal_frame_sample, whose oracle was upgraded from
-    # rows-only to hash-exact in r5 after the window froze.
-    "dedup_lsh_giant_buckets",
-    "ann_topk_multiprobe",
-    "events_attribution",
-    "events_attribution_last",
-    "stats_outliers_mad",
-    "sample_weighted_quality",
-    "corpus_dedup_report",
-    "training_oov_rate",
-    "multimodal_frame_sample",
-    # Positions 10-11: queries ADDED or whose code paths CHANGED in
-    # round 6. streaming_attribution_agree is the first REAL
-    # Structured Streaming execution under the hash gate (r5 verdict
-    # item 7); corpus_dedup_collapse_guarded consumes the
-    # minhash_lsh_guarded_edges UNION->distinct fix. (The
-    # spread_small_input partition-probe fix feeds every dedup-family
-    # query — dedup_minhash_lsh / dedup_ngram_jaccard sentinels below
-    # hard-verify it in-window; the graph.py convergence-cadence
-    # change is hard-verified through dedup_components below; the
-    # vocab de-broadcast through training_tokenize_docs /
-    # training_oov_rate in-window.)
-    "streaming_attribution_agree",
-    "corpus_dedup_collapse_guarded",
-    # (also new in r6) hash-bucketed external tables + the
-    # zero-exchange co-located join; takes posexplode_positions' slot
-    # — posexplode with positions is exercised in-window by
-    # training_tokenize_docs' _tokens.
-    "bucketed_join_colocated",
-    # Positions 13-40: the 26 remaining queries whose last driver row
-    # is round 3 plus two r6 additions in subsumed slots (noted inline)
-    # — rotated in so that, unioned with the r5 window (all r5-green)
-    # and r4 window, no hash-oracle query's last driver check is older
-    # than two rounds. Two r3-last queries stay OUT by design:
-    # bench_embedding_neardup_numpy and multimodal_features are
-    # rows-only (no SQL oracle — the driver row would only prove "it
-    # runs", which pytest pair-equality tests already prove more
-    # strongly); their slots go to the window additions above. The
-    # five r1-last expression queries keep their documented
-    # subsumption by in-window sentinels (see COVERAGE.md).
-    # Positions 13-19: the highest-driver-risk queries of that round's
-    # SECOND wave (new machinery first under the hard signal: two new
-    # streaming lanes — stateful dropDuplicates and
-    # applyInPandasWithState — the BPE driver-loop operator, the two
-    # float-discipline-heavy rankers, integer-div PageRank, and the
-    # dense-ids-over-doubles curriculum). Their 7 slots came from
-    # r3-last queries whose machinery an in-window query subsumed
-    # (each named below at its displacement; an eighth r3-last query,
-    # training_mixture_sample, was swapped for its strict superset
-    # training_temperature_mixture further down — 8 displaced total).
-    "streaming_dedup_agree",
-    "streaming_stateful_totals_agree",
-    "training_bpe_merges",
-    "retrieval_bm25_topk",
-    "ann_topk_pq_adc",
-    "graph_pagerank_trade",
-    "training_curriculum_deciles",
-    # (quality_novel_ngrams stays an r7 leader: its md5-shingle
-    # counting machinery is the pinned dedup sentinels' lane.)
-    "curation_contamination",
-    "curation_pii_redact",
-    # curation_source_report displaced: its flag machinery is the
-    # in-window contamination+PII queries; the roll-up groupBy adds no
-    # new lane. r7 leader.
-    # date_parts displaced: calendar expressions ⊂ flagship_fact's
-    # date dimension (in-window). r7 leader.
-    "dedup_components",
-    # dedup_repeated_spans displaced: explode + grouped count + HAVING
-    # is a strict subset of quality_novel_ngrams' corpus n-gram
-    # counting (in-window above). r7 leader.
-    # embedding_quantize_int8 displaced: the fixed-point/half-up
-    # rounding device now rides ann_topk_pq_adc (in-window). r7 leader.
-    "events_asof_join",
-    "events_funnel_ordered",
-    "events_hopping_window",
-    "events_range_join",
-    "events_retention_cohorts",
-    "events_topk_per_window",
-    # fk_resolution and surrogate_dense_ids displaced: flagship_fact
-    # (in-window) runs the same dim-id minting + FK join end-to-end,
-    # and training_curriculum_deciles (in-window) drives the parallel
-    # dense_ids scheme directly. r7 leaders.
-    "flagship_fact",
-    "fuzzy_name_match",
-    "gender_inference",
-    # json_schema_parse displaced: the json family's sentinel
-    # json_extract_stats stays pinned below. r7 leader.
-    "lakehouse_zorder",
-    # sample_deterministic's md5-mod-Bernoulli device is exercised
-    # in-window by sample_weighted_quality (position 6); its slot goes
-    # to the new count-min sketch gate.
-    "sketch_count_min",
-    "skew_salted_pricing",
-    "stats_correlation",
-    "stats_histogram",
-    # text_word_tokens' split-explode-count is a strict subset of the
-    # new chunking gate's tokenization; the chunk query takes the slot.
-    "doc_chunk_overlap",
-    # training_mixture_sample's slot goes to its strict superset: the
-    # temperature mixture runs the same md5-rank keep rule PLUS the
-    # integer-sqrt quota math.
-    "training_temperature_mixture",
-    "training_tokenize_docs",
-    "training_vocab_build",
-    # Positions 41-50: permanent sentinels — one high-value query per
-    # operator family, pinned inside the window every round so a
-    # regression in a rotated-out family is still caught by the hard
-    # signal (advisor round-2 recommendation). Do not rotate these out.
-    "his_extraction_shape",
-    "his_unpivot_slots",
-    "tpch_q1_full",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "embedding_neardup",
-    "text_simhash",
-    "merge_upsert_orders",
-    "json_extract_stats",
-    # Positions 51+: everything else keeps registration order; all
-    # were driver-green in r4/r5 and remain covered by pytest + the
-    # local DuckDB oracle gate (tools/check_correctness.py) every
-    # round.
 ]
 
 
 def _reorder() -> None:
-    # Lenient on missing names: when a test imports a queries_* module
-    # directly, that module's import recursively triggers this one
-    # while its own registrations are still pending (benign circular
-    # import) — those queries simply keep registration order.
-    # ``ordered_queries`` re-applies the ordering at call time, so the
-    # harness surface (__spark_entry__.queries) is deterministic
-    # regardless of import interleaving.
+    # Missing names are skipped; tests/test_registry_order.py fails on
+    # them instead.
     ordered = {n: QUERIES[n] for n in _CHECK_FIRST if n in QUERIES}
     ordered.update((n, f) for n, f in QUERIES.items() if n not in ordered)
     QUERIES.clear()

@@ -21,3 +21,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    """DuckDB connection with one view per sf0.001 table, for oracles."""
+    import duckdb
+
+    from tools.check_correctness import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS"
+            f" SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con

@@ -1,52 +1,21 @@
-"""The r10 gate queue runs the REAL oracle comparison today.
+"""Oracle parity for ten dedup, rollup, LM and retrieval queries.
 
-Same canonicalized comparison as tools/check_correctness.py (both
-sides through pandas, sorted column names, order-insensitive
-stringified multisets) over every queue entry at sf0.001 — so r10's
-registration day inherits already-proven gates.
+These keep their original test ids. The check is
+``test_oracles.check_oracle_parity``; ``test_oracles`` leaves these
+names out of its own parametrization so each query runs once.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from etl_his_spark.plans.queries_r10_queue import R10_QUEUE
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from test_oracles import KEPT_TEST_IDS, check_oracle_parity
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
-@pytest.mark.parametrize("name", sorted(R10_QUEUE))
+@pytest.mark.parametrize("name", KEPT_TEST_IDS["test_r10_queue"])
 def test_r10_queue_matches_oracle(spark, sf_dir, duck, name):
-    from tools.check_correctness import pdf_to_multiset
-
-    fn, oracle = R10_QUEUE[name]
-    sdf = fn(spark, sf_dir)
-    spdf = sdf.toPandas()
-    dpdf = duck.execute(oracle).fetch_df()
-    assert sorted(spdf.columns) == sorted(dpdf.columns)
-    assert len(spdf) == len(dpdf)
-    assert pdf_to_multiset(spdf) == pdf_to_multiset(dpdf)
-    assert len(spdf) > 0, "queue gate must produce rows on the fixture"
+    check_oracle_parity(spark, sf_dir, duck, name)
 
 
 def test_trigram_backoff_short_training_docs(spark, tmp_path):
@@ -58,7 +27,7 @@ def test_trigram_backoff_short_training_docs(spark, tmp_path):
     docs."""
     from tools.check_correctness import pdf_to_multiset
 
-    from etl_his_spark.plans.queries_r10_queue import (
+    from etl_his_spark.plans.queries_lm import (
         TRIGRAM_BACKOFF_ORACLE,
         quality_trigram_backoff,
     )

@@ -1,6 +1,6 @@
-"""Property/invariant tests for the r11 gate queue.
+"""Property/invariant tests for seven sketch, corpus, graph and text queries.
 
-The queue's oracle tests prove cross-engine equality; these pin the
+``test_oracles`` proves cross-engine equality; these pin the
 ALGORITHMIC contracts on adversarial synthetic fixtures the sf
 fixtures don't exercise (the r9 CDC-locality / ExactSubstr-conservation
 discipline): estimator accuracy, the Bloom no-false-negative
@@ -15,21 +15,17 @@ import datetime
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from etl_his_spark.plans.queries_r11_queue import (
-    corpus_ngram_coverage_curve,
-    curation_diversity_prune,
+from etl_his_spark.plans.queries_curation import curation_diversity_prune
+from etl_his_spark.plans.queries_dedup import corpus_ngram_coverage_curve
+from etl_his_spark.plans.queries_events2 import (
     events_quantile_daily_rollup,
-    graph_label_propagation,
     sketch_bloom_membership,
     sketch_kmv_set_ops,
-    text_zipf_fit,
 )
+from etl_his_spark.plans.queries_graph import graph_label_propagation
+from etl_his_spark.plans.queries_text2 import text_zipf_fit
 
 
 def _write_events(spark, path, rows):

@@ -1,53 +1,20 @@
-"""The r12 gate queue runs the REAL oracle comparison today.
+"""Oracle parity for ten dedup, graph, sketch and text queries.
 
-Same canonicalized comparison as tools/check_correctness.py (both
-sides through pandas, sorted column names, order-insensitive
-stringified multisets) over every queue entry at sf0.001 — so r12's
-registration day inherits already-proven gates (the r10/r11-queue
-discipline, one round later).
+These keep their original test ids. The check is
+``test_oracles.check_oracle_parity``; ``test_oracles`` leaves these
+names out of its own parametrization so each query runs once.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from etl_his_spark.plans.queries_r12_queue import R12_QUEUE
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from test_oracles import KEPT_TEST_IDS, check_oracle_parity
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
-@pytest.mark.parametrize("name", sorted(R12_QUEUE))
+@pytest.mark.parametrize("name", KEPT_TEST_IDS["test_r12_queue"])
 def test_r12_queue_matches_oracle(spark, sf_dir, duck, name):
-    from tools.check_correctness import pdf_to_multiset
-
-    fn, oracle = R12_QUEUE[name]
-    sdf = fn(spark, sf_dir)
-    spdf = sdf.toPandas()
-    dpdf = duck.execute(oracle).fetch_df()
-    assert sorted(spdf.columns) == sorted(dpdf.columns)
-    assert len(spdf) == len(dpdf)
-    assert pdf_to_multiset(spdf) == pdf_to_multiset(dpdf)
-    assert len(spdf) > 0, "queue gate must produce rows on the fixture"
+    check_oracle_parity(spark, sf_dir, duck, name)
 
 
 def test_snapshot_df_cap_bounds_hot_shingle_pairs(spark):
@@ -56,7 +23,7 @@ def test_snapshot_df_cap_bounds_hot_shingle_pairs(spark):
     pairs to the residual intersection join — without the cap it
     alone would produce |new| x |old| = 80x80 pair rows. A rare
     shingle shared by one (new, old) pair still meets."""
-    from etl_his_spark.plans.queries_r12_queue import (
+    from etl_his_spark.plans.queries_dedup import (
         snapshot_capped_intersection,
     )
 

@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import shutil
 
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from etl_his_spark.registry import ORACLES, QUERIES
 from etl_his_spark.sources.readers import read_events_raw, read_table
 from etl_his_spark.streaming.events import (
     dedup_stream,
@@ -16,6 +19,7 @@ from etl_his_spark.streaming.events import (
     stream_events,
     windowed_counts,
 )
+from tools.check_correctness import TABLES, compare_frames
 
 
 @pytest.fixture(scope="module")
@@ -500,3 +504,33 @@ def test_cdc_apply_restart_recovery(spark, sf_dir, tmp_path_factory):
     )
     expected = {tuple(r) for r in latest_per_key(whole).collect()}
     assert final == expected
+
+
+STREAMING_LANES = sorted(
+    n for n in QUERIES if n.startswith("streaming_") and n.endswith("_agree")
+)
+
+
+@pytest.fixture(scope="module")
+def empty_dir(sf_dir, tmp_path_factory):
+    # schema-identical copies of every table, with no rows
+    out = tmp_path_factory.mktemp("empty_tables")
+    for t in TABLES:
+        table = pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, 0)
+        pq.write_table(table, out / f"{t}.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("name", STREAMING_LANES)
+def test_streaming_lane_on_empty_tables_matches_oracle(spark, empty_dir, name):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS"
+            f" SELECT * FROM read_parquet('{empty_dir}/{t}.parquet')"
+        )
+    spdf = QUERIES[name](spark, empty_dir).toPandas()
+    dpdf = con.execute(ORACLES[name]).fetch_df()
+    problems = compare_frames(spdf, dpdf)
+    assert not problems, "\n".join(problems)
+    assert len(spdf) == 0

@@ -161,8 +161,7 @@ CROSS_JOIN_ALLOW = {
     # broadcast of the 1-row training-token-total N feeding the
     # unigram backoff arm — the quality_bigram_likelihood idiom (r10)
     "quality_trigram_backoff",
-    # r11 queue registrations (idioms verified against the executed
-    # plans at sf0.001 before registration — queue module docstring):
+    # idioms verified against the executed plans at sf0.001:
     # fixed query-panel broadcast over the corpus — the
     # ann_topk_bruteforce shape:
     "ann_recall_eval",
@@ -238,19 +237,18 @@ def main() -> int:
             violations.append(f"{name}: cartesian/nested-loop join present")
 
     # The HIS pipeline's 4 outputs are not registry queries (they are
-    # produced by run_pipeline), so audit them explicitly: same
-    # scale-posture rules as every gate query. dense-id minting on the
-    # two dims is the documented SinglePartition window
-    # (surrogate.dense_ids_small), same allowance as flagship_fact.
+    # produced by run_pipeline), so audit them explicitly with the same
+    # scale-posture rules. Each output's lineage holds exactly one
+    # dim-scale SinglePartition window (surrogate.dense_ids_small):
+    # paciente and prestacion mint their own ids, turno inherits
+    # paciente's through its FK join, and the bridge inherits
+    # prestacion's through resolve_fk. Fact ids are minted
+    # exchange-parallel (surrogate.dense_ids), so a second serial stage
+    # in any output is a regression.
     from etl_his_spark.plans.his_pipeline import run_pipeline
     from etl_his_spark.sources.his_synth import his_tables_from_testdata
 
-    # The dim outputs mint ids with the documented dim-scale
-    # SinglePartition window (dense_ids_small); turno inherits
-    # paciente's window through its dim join lineage — only the
-    # BRIDGE (the largest output, parallel two-phase ids) must be
-    # exchange-parallel throughout.
-    his_allow_single = {"paciente", "prestacion", "turno"}
+    his_max_single = 1
     try:
         _pin_plans.clear()
         outputs = run_pipeline(his_tables_from_testdata(spark, sf_dir))
@@ -265,11 +263,12 @@ def main() -> int:
         for name, df in outputs.items():
             plan = df._jdf.queryExecution().executedPlan().toString()
             qname = f"his_pipeline.{name}"
-            if (
-                "Exchange SinglePartition" in plan
-                and name not in his_allow_single
-            ):
-                violations.append(f"{qname}: Exchange SinglePartition")
+            n_single = plan.count("Exchange SinglePartition")
+            if n_single > his_max_single:
+                violations.append(
+                    f"{qname}: {n_single} Exchange SinglePartition"
+                    f" (at most {his_max_single})"
+                )
             if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
                 violations.append(f"{qname}: cartesian/nested-loop join present")
     except Exception as e:  # noqa: BLE001

@@ -83,6 +83,27 @@ def pdf_to_multiset(pdf):
     )
 
 
+def compare_frames(spdf, dpdf) -> list[str]:
+    """The driver's comparison of a Spark result with its oracle's:
+    sorted column names, then row count, then the value multiset.
+    Returns what differs, empty when the two agree."""
+    if sorted(spdf.columns) != sorted(dpdf.columns):
+        return [f"cols spark={sorted(spdf.columns)} duck={sorted(dpdf.columns)}"]
+    if len(spdf) != len(dpdf):
+        return [f"rowcount spark={len(spdf)} duck={len(dpdf)}"]
+    sm = pdf_to_multiset(spdf)
+    dm = pdf_to_multiset(dpdf)
+    if sm == dm:
+        return []
+    diff_s = sm - dm
+    diff_d = dm - sm
+    return (
+        [f"value mismatch; spark-only={len(diff_s)} duck-only={len(diff_d)}"]
+        + [f"  spark: {r}" for r in list(diff_s)[:3]]
+        + [f"  duck:  {r}" for r in list(diff_d)[:3]]
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -111,9 +132,7 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = [f.name for f in sdf.schema.fields]
-            spdf = sdf.toPandas()
+            spdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
@@ -123,37 +142,16 @@ def main() -> int:
             continue
         try:
             dpdf = con.execute(oracles[name]).fetch_df()
-            dcols = list(dpdf.columns)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {e}")
             failures.append(name)
             continue
-        ok = True
-        if sorted(scols) != sorted(dcols):
-            print(f"FAIL {name}: cols spark={sorted(scols)} duck={sorted(dcols)}")
-            ok = False
-        if len(spdf) != len(dpdf):
-            print(f"FAIL {name}: rowcount spark={len(spdf)} duck={len(dpdf)}")
-            ok = False
-        if ok:
-            sm = pdf_to_multiset(spdf)
-            dm = pdf_to_multiset(dpdf)
-            if sm != dm:
-                diff_s = sm - dm
-                diff_d = dm - sm
-                print(
-                    f"FAIL {name}: value mismatch; spark-only={len(diff_s)} "
-                    f"duck-only={len(diff_d)}"
-                )
-                for r in list(diff_s)[:3]:
-                    print("  spark:", r)
-                for r in list(diff_d)[:3]:
-                    print("  duck: ", r)
-                ok = False
-        if ok:
-            print(f"OK   {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
-        else:
+        problems = compare_frames(spdf, dpdf)
+        if problems:
+            print(f"FAIL {name}: " + "\n".join(problems))
             failures.append(name)
+        else:
+            print(f"OK   {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

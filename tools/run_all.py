@@ -4,7 +4,7 @@ The full pre-commit / pre-round pipeline in one command. Exits nonzero
 if any stage fails.
 
 Usage: python tools/run_all.py [--fast]
-  --fast: gate at sf0.001 and skip bench (quick iteration loop)
+  --fast: plan audit + pytest -x only (quick iteration loop)
 """
 
 from __future__ import annotations
@@ -31,9 +31,9 @@ STEPS_FULL = [
      [sys.executable, "bench.py"]),
 ]
 
+# No sf0.001 oracle gate here: pytest's tests/test_oracles.py runs the
+# same comparison over every query at that scale.
 STEPS_FAST = [
-    ("oracle gate (sf0.001)",
-     [sys.executable, "tools/check_correctness.py", "/root/testdata/sf0.001"]),
     ("plan audit",
      [sys.executable, "tools/audit_plans.py"]),
     ("pytest",
