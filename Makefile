@@ -10,8 +10,8 @@ PY ?= python
 verify:
 	$(PY) tools/run_all.py
 
-# Quick iteration loop: plan audit + pytest -x (pytest runs the sf0.001
-# oracle gate as tests/test_oracles.py).
+# Quick iteration loop: plan audit + scan-amplification audit + pytest -x
+# (pytest runs the sf0.001 oracle gate as tests/test_oracles.py).
 verify-fast:
 	$(PY) tools/run_all.py --fast
 

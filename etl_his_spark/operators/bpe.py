@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pin import pin
+
 END_WORD = "</w>"
 
 
@@ -146,7 +148,7 @@ def _train(
     """Shared k-iteration training loop: returns (merge list, word
     table with all k merges applied — lazily; a merges-only caller
     never executes the final apply_merge)."""
-    words = word_symbol_table(docs).localCheckpoint(eager=True)
+    words = pin(word_symbol_table(docs), eager=True)
     out: list[tuple[int, str, str, int]] = []
     for step in range(1, k + 1):
         best = (

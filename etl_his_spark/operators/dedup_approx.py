@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
+from .pin import pin
 
 N_MINHASH = 16
 BAND_SIZE = 4
@@ -203,7 +204,7 @@ def jaccard_pairs(
     # because the three consumers' stages launch concurrently and a
     # lazy checkpoint lets each race-recompute the shingle pipeline
     # (see jaccard_pairs_prefix for the measurement).
-    sh = shingle_rows(docs, id_col, text_col).localCheckpoint(eager=True)
+    sh = pin(shingle_rows(docs, id_col, text_col), eager=True)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -259,7 +260,7 @@ def jaccard_pairs_prefix(
     # lands (measured 4× slower than eager at sf0.1), so the one-pass
     # eager materialization is the cheapest correct option. persist()
     # would leak a CacheManager entry per call (see jaccard_pairs).
-    sh = shingle_rows(docs, id_col, text_col).localCheckpoint(eager=True)
+    sh = pin(shingle_rows(docs, id_col, text_col), eager=True)
     # Document frequency via a count window over the shingle partition:
     # ONE shuffle of sh keyed on shingle, where a groupBy(shingle) +
     # join-back would shuffle sh twice (once to aggregate, once as the
@@ -627,7 +628,7 @@ def minhash_lsh_guarded_edges(
         _banded_sig_rows(docs, id_col, text_col)
         .withColumn("n_bucket", F.count(F.lit(1)).over(w))
         .withColumn("keeper", F.min(id_col).over(w))
-        .localCheckpoint(eager=True)
+        .transform(pin, eager=True)
     )
     small = sized.filter(F.col("n_bucket") <= cap)
     a = small.select(
@@ -810,7 +811,7 @@ def simhash_pairs(
     and is the registered default). Do not use at scale.
     """
     # Eager localCheckpoint, not persist() — see jaccard_pairs.
-    sig = simhash_signatures(docs, id_col, text_col).localCheckpoint(eager=True)
+    sig = pin(simhash_signatures(docs, id_col, text_col), eager=True)
     a = sig.select(F.col(id_col).alias("a_id"), F.col("simhash").alias("sig_a"))
     b = sig.select(F.col(id_col).alias("b_id"), F.col("simhash").alias("sig_b"))
     return (
@@ -853,9 +854,7 @@ def simhash_pairs_blocked(
     # first consumer's job materializes it). At corpus scale the
     # signature table is the 8-bytes-per-doc artifact Manku's design
     # persists anyway — executor-local blocks, no driver traffic.
-    sig = simhash_signatures(docs, id_col, text_col).localCheckpoint(
-        eager=False
-    )
+    sig = pin(simhash_signatures(docs, id_col, text_col))
     return hamming_pairs_blocked(
         sig, max_hamming, bits=SIMHASH_BITS, id_col=id_col, sig_col="simhash"
     )
@@ -983,8 +982,8 @@ def weighted_jaccard_pairs(
     integer micro-units. Weighted sums are BIGINTs of small-int
     weights — no floats anywhere.
     """
-    sh = shingle_rows(docs, id_col, text_col).localCheckpoint(eager=False)
-    weights = shingle_idf_weights(sh).localCheckpoint(eager=False)
+    sh = pin(shingle_rows(docs, id_col, text_col))
+    weights = pin(shingle_idf_weights(sh))
     shw = sh.join(weights, "shingle")
     totals = shw.groupBy(id_col).agg(
         F.sum("w").cast("long").alias("w_total")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup_approx import seeded_hash60
+from .pin import pin
 
 
 def tokenize_positions(docs: DataFrame, k: int) -> DataFrame:
@@ -162,7 +163,7 @@ def exact_substring_cut(docs: DataFrame, k: int = 8) -> DataFrame:
     and are removed with a left-anti join on (doc_id, pos) — keyed,
     linear, skew-free (position keys are unique per doc).
     """
-    sh = shingle_fingerprints(docs, k).localCheckpoint(eager=False)
+    sh = pin(shingle_fingerprints(docs, k))
     islands = duplicated_islands(sh, k)
     covered = islands.select(
         "doc_id",

@@ -41,6 +41,8 @@ import itertools
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .pin import pin
+
 # Observation names must be unique among concurrently-live listeners:
 # two in-flight observations sharing a name could cross-fill. The loop
 # below consumes each observation before creating the next, but a
@@ -74,7 +76,7 @@ def connected_components(
     # materializes the blocks inline; eager's dedicated construction
     # pass measured ~30% slower for the full query despite round 0
     # referencing bidir from two stages.
-    bidir = bidir.localCheckpoint(eager=False)
+    bidir = pin(bidir)
 
     # Iterate ONLY over edge endpoints: a vertex with no edges is its
     # own component and can never change, so it skips the loop and
@@ -126,7 +128,7 @@ def connected_components(
         # Lazy: the convergence action just below is the round's ONLY
         # job and materializes the checkpoint blocks — eager would run
         # a dedicated extra job per round for the same blocks.
-        halved = halved.localCheckpoint(eager=False)
+        halved = pin(halved)
         # Convergence is FREE, not probed: the changed-count rides the
         # round's materializing action as an Observation metric
         # (CollectMetrics — accumulator-style, collected in-flight
@@ -189,7 +191,7 @@ def triangle_node_counts(e: DataFrame) -> DataFrame:
     """
     # e feeds deg + the orientation join + (via o) three more joins:
     # one materialization (lazy — first consumer is the cheap deg agg)
-    e = e.localCheckpoint(eager=False)
+    e = pin(e)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -205,13 +207,13 @@ def triangle_node_counts(e: DataFrame) -> DataFrame:
     o = ed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     # adj feeds BOTH endpoint joins below: pin it so the collect_list
     # agg runs once, not once per join side (r13: the un-pinned adj
     # was re-aggregated per consumer).
     adj = o.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     a_src = adj.select("src", F.col("nbrs").alias("src_nbrs"))
     a_dst = adj.select(
         F.col("src").alias("dst"), F.col("nbrs").alias("dst_nbrs")
@@ -274,7 +276,7 @@ def bottomk_neighbor_topk(
         .withColumn("rk", F.row_number().over(wsk))
         .filter(F.col("rk") <= k)
         .select("s", "h")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     cand = (
         sk.select(F.col("s").alias("s_a"), "h")
@@ -313,7 +315,7 @@ def bottomk_neighbor_topk(
         # est feeds BOTH symmetrization arms below: pin it so the
         # candidate joins + per-pair array merge run once, not once
         # per direction (r13; pair-count-sized rows of 4 longs).
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     sym = est.select(
         F.col("s_a").alias("s"), F.col("s_b").alias("neighbor"),

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import to_double_array
 from .clustering import _sq_dist
+from .pin import pin
 
 PQ_M = 4   # subspaces
 PQ_K = 4   # codebook entries per subspace
@@ -186,7 +187,7 @@ def ivfpq_topk(
     # Materialize the (cell, codes) index before the probe join — the
     # pq_adc_topk measurement (cold 2.4 s → 0.8 s) applies doubly here
     # because the projection now folds n_cells + m·k distance argmins.
-    cand = v.select(*cols).localCheckpoint(eager=False)
+    cand = pin(v.select(*cols))
 
     # --- query side: cell ranking + ADC lookup columns, map-side -------
     qcell_cands = F.array_sort(
@@ -286,7 +287,7 @@ def pq_adc_topk(
     # re-deriving the 16-fold encode projection under the join.
     # Measured with the two-phase top-k below: cold 2.4 s → 0.8 s at
     # sf0.1 (warm runs converge ~0.6 s either way).
-    cand = cand.localCheckpoint(eager=False)
+    cand = pin(cand)
     # The query-side lookup table rides as COLUMNS of the query frame,
     # computed before the join (|q|·M·K folds total); the joined
     # projection selects among plain columns.

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .pin import pin
+
 
 def dense_ids(
     df: DataFrame,
@@ -62,7 +64,7 @@ def dense_ids(
     ranged = (
         df.repartitionByRange(*range_cols)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     names = list(sums)
     per_part = ranged.groupBy("__pid").agg(

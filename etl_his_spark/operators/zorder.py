@@ -25,7 +25,7 @@ oracle runs the LITERAL same expression — parity by construction.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ZBITS = 8  # bins per dimension; 2 dims × 8 bits = 16-bit z-values

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text, quality_score, token_count
 from ..operators.dedup_approx import jaccard_pairs_prefix
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -119,7 +120,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint computes the score→filter→exact-dedup chain
     # once instead of once per consumer (cache-hygiene-safe: blocks
     # die with the frame).
-    survivors = filtered.join(exact_kept, "doc_id").localCheckpoint(eager=True)
+    survivors = pin(filtered.join(exact_kept, "doc_id"), eager=True)
     # Spread the CPU-heavy shingle fan-out explicitly when the
     # checkpoint came out narrow (AQE coalesces the small join output
     # at test scale; at cluster scale it is already ≥ target wide and

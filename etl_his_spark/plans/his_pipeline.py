@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.gender import inferir_sexo
 from ..functions.text import limpiar_nombres, primer_nombre
 from ..operators.dedup import dedup_first_per_key
+from ..operators.pin import pin
 from ..operators.surrogate import dense_ids, dense_ids_small, resolve_fk
 from ..schemas import PRESTACION_SLOT_COLUMNS
 from ..sources.writers import publish_atomic
@@ -69,7 +70,7 @@ def _with_row_ids(wide: DataFrame) -> DataFrame:
     sorts neither side. The join is a left join, and a row whose id
     did not come back raises instead of being dropped.
     """
-    wide = wide.localCheckpoint(eager=False)
+    wide = pin(wide)
     proxy = wide.selectExpr(
         "turno_id",
         "monotonically_increasing_id() AS __mid",
@@ -195,7 +196,7 @@ def run_pipeline(
     # before the concurrent table writes read it; a lazy pin is filled
     # by whichever writer reaches it first, and writers on different
     # executors would each compute the id join.
-    wide_ids = wide_ids.localCheckpoint(eager=True)
+    wide_ids = pin(wide_ids, eager=True)
     slot_rows = unpivot_wide_slots(wide_ids)
     paciente = build_paciente(wide_ids)
     turno = build_turno(wide_ids, paciente)

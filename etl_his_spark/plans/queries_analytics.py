@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -365,7 +366,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long")
         .alias("monetary_cents"),
-    ).localCheckpoint(eager=False)  # customer-dim-sized; the count()
+    ).transform(pin)  # customer-dim-sized; the count()
     # action below materializes the blocks, and the three chained
     # dense_ids passes then reuse them instead of re-running the
     # orders scan + aggregation (r13)
@@ -449,7 +450,7 @@ def basket_brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # items feeds brand_n, orders_n, and both self-join sides
-    items = items.localCheckpoint(eager=True)
+    items = pin(items, eager=True)
     brand_n = items.groupBy("p_brand").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )

@@ -19,6 +19,7 @@ from ..operators.curation import (
     repetition_stats,
 )
 from ..operators.dedup_approx import seeded_hash60, word_shingles
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -358,7 +359,7 @@ def curation_diversity_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(64)
             ]
         ).alias("s"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     # Cell-size guard (the simhash lane_packed pattern): n is already
     # on every joined row, so the check is a free per-row expression.
     spread_expr = F.when(
@@ -512,7 +513,7 @@ def curation_contamination_attribution(
         )
         .distinct()
     )
-    grams = grams.localCheckpoint(eager=False)
+    grams = pin(grams)
     bench = (
         grams.filter(F.col("doc_id") % 97 == 0)
         .select(

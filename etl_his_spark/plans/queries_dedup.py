@@ -19,7 +19,6 @@ from ..operators.dedup_approx import (
     MINHASH_P,
     N_MINHASH,
     exact_dedup_groups,
-    jaccard_pairs,
     jaccard_pairs_prefix,
     minhash_lsh_candidates,
     minhash_lsh_candidates_capped,
@@ -34,6 +33,7 @@ from ..operators.dedup_approx import (
     word_shingles,
 )
 from ..operators.exact_substring import exact_substring_cut
+from ..operators.pin import pin
 from ..operators.similarity import (
     banded_neardup_pairs,
     brute_force_topk,
@@ -1128,7 +1128,7 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         assigned.join(v, "vec_id")
         .select("vec_id", "cluster_id", "e", norm(F.col("e")).alias("nrm"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = cells.select(
         F.col("cluster_id").alias("cell"),
@@ -1420,7 +1420,7 @@ def corpus_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("fp")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     fpc = chunks.groupBy("fp").agg(
         F.count(F.lit(1)).cast("long").alias("n_occ")
@@ -1567,7 +1567,7 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "n_tokens", (F.col("pos0") + 1).alias("pos"), "fp"
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     dup_fps = (
         sh.groupBy("fp")
@@ -1917,7 +1917,7 @@ def dedup_weighted_lsh_candidates(
     lane's scale path."""
     sigs = weighted_minhash_signatures(
         read_table(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     sig_arr = sigs.select(
         "doc_id",
         F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("sig"),
@@ -2066,10 +2066,10 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bounded-dimension checkpoint policy).
     truth = jaccard_pairs_prefix(docs, LSH_EVAL_THRESHOLD).select(
         "a_id", "b_id"
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cand = minhash_lsh_candidates(docs).select(
         "a_id", "b_id"
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     tp = cand.join(truth, ["a_id", "b_id"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_tp")
     )
@@ -2433,13 +2433,13 @@ def dedup_snapshot_incremental(
     oldfp = (
         oldd.select(F.md5(normalized_text("text")).alias("fp"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     newfp = newd.select(
         "doc_id", "source", F.md5(normalized_text("text")).alias("fp")
     )
     exact_ids = newfp.join(oldfp, "fp").select("doc_id")
-    exact_ids = exact_ids.localCheckpoint(eager=False)
+    exact_ids = pin(exact_ids)
     resid = newd.join(exact_ids, "doc_id", "left_anti").select(
         "doc_id", "text"
     )
@@ -2463,8 +2463,8 @@ def dedup_snapshot_incremental(
     # profile); inputFiles-gated no-op at cluster scale.
     from ..operators.dedup_approx import spread_small_input
 
-    sh_old = _sh(spread_small_input(oldd)).localCheckpoint(eager=False)
-    sh_new = _sh(spread_small_input(resid)).localCheckpoint(eager=False)
+    sh_old = pin(_sh(spread_small_input(oldd)))
+    sh_new = pin(_sh(spread_small_input(resid)))
     sizes_old = sh_old.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_o")
     )

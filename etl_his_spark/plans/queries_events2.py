@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup_approx import seeded_hash60
+from ..operators.pin import pin
 from ..operators.sketches import hll_registers
 from ..registry import register
 from ..sources.readers import read_table
@@ -562,7 +563,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("d"), "user_id"
     ).distinct()
     # user_days feeds dau, the day dim, and the range join probe
-    user_days = user_days.localCheckpoint(eager=True)
+    user_days = pin(user_days, eager=True)
     days = user_days.select("d").distinct()
     dau = user_days.groupBy("d").agg(
         F.count(F.lit(1)).cast("long").alias("dau")
@@ -1235,14 +1236,8 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (distinct tokens — Heaps-law sublinear), so pin them lazily per
     # the checkpoint policy: documents scans drop from 5 to 2 (one
     # pass per corpus side).
-    atoks = (
-        docs.filter(side < 10).select(tok).distinct()
-        .localCheckpoint(eager=False)
-    )
-    btoks = (
-        docs.filter(side >= 10).select(tok).distinct()
-        .localCheckpoint(eager=False)
-    )
+    atoks = pin(docs.filter(side < 10).select(tok).distinct())
+    btoks = pin(docs.filter(side >= 10).select(tok).distinct())
     hashes = F.array(
         *[
             seeded_hash60(F.col("token"), F.lit(i)) % BLOOM_BITS

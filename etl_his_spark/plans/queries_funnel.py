@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -64,14 +65,14 @@ def events_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id").agg(F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     c = (
         e.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id").agg(F.min("ts").alias("t_click"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     p = (
         e.filter(F.col("event_type") == "purchase")

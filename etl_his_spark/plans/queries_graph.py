@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -107,21 +108,21 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize-on-first-use costs nothing extra and skips eager's
     # blocking pass; no-checkpoint race-recomputes the join per
     # consumer (the spiky tail).
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges)
     # outw feeds the rank init AND the ew join of EVERY iteration —
     # un-pinned it re-aggregated the edge list once per consumer (3
     # subtrees in the r12 physical plan). Node-dim-sized: pinning is
     # O(nodes) storage at any scale.
     outw = edges.groupBy("src").agg(
         F.sum("w").cast("long").alias("wout")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     ranks = outw.select(
         F.col("src").alias("node"), F.lit(PR_UNIT).cast("long").alias("r")
     )
     # ew feeds one join per iteration: pin it so the edges⋈outw join
     # runs once, not once per unrolled iteration. Edge-sized — the
     # same O(|E|) storage class as the edges pin above.
-    ew = edges.join(outw, "src").localCheckpoint(eager=False)
+    ew = pin(edges.join(outw, "src"))
     for _ in range(PR_ITERS):
         contrib = (
             ew.join(ranks, ew.src == ranks.node)
@@ -326,7 +327,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # edges feeds both rounds: pin it once so neither recomputes the
     # base join (the graph_pagerank_trade lazy-checkpoint rationale).
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges)
 
     def argmax_label(votes: DataFrame) -> DataFrame:
         # argmax by (votes DESC, label ASC) as min(struct(-votes,
@@ -447,7 +448,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base feeds BOTH arms of the symmetric edge union: pin it so the
     # lineitem⋈orders distinct runs once, not once per arm (measured
     # at registration: 4 li/orders scans → 1 with the pin).
-    base = base.localCheckpoint(eager=False)
+    base = pin(base)
     edges = base.select(
         F.col("s_node").alias("src"), F.col("c_node").alias("dst")
     ).unionAll(
@@ -469,12 +470,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # keep feeds both endpoint joins of the next round AND (via
         # edges) the stats row: pin it so the degree agg runs once.
-        keep = keep.localCheckpoint(eager=False)
+        keep = pin(keep)
         edges = (
             edges.join(keep.withColumnRenamed("node", "src"), "src")
             .join(keep.withColumnRenamed("node", "dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         stats.append(
             edges.agg(
@@ -626,7 +627,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # Machinery factored to operators.graph.bottomk_neighbor_topk (r14,
     # verbatim move — the r13 array-math merge stage and est/sk pins

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_delete, merge_upsert, scd2_from_events
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -631,7 +632,7 @@ def lakehouse_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").cast("long").alias("mn"),
         F.max("event_id").cast("long").alias("mx"),
     )
-    manifest = manifest.localCheckpoint(eager=False)
+    manifest = pin(manifest)
     a = manifest.select(
         "day", F.col("bucket").alias("b_a"),
         F.col("mn").alias("mn_a"), F.col("mx").alias("mx_a"),

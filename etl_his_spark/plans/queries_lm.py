@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup_approx import seeded_hash60
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -79,7 +80,7 @@ def _token_counts(docs: DataFrame):
     cnt = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = cnt.agg(
         F.sum("c").cast("long").alias("big_n"),
@@ -425,9 +426,7 @@ def training_curriculum_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes it, so dense_ids and the decile agg reuse the
     # blocks instead of re-running the whole unigram pipeline
     # (review finding: the un-checkpointed form computed it twice).
-    scored = quality_unigram_likelihood(spark, sf_dir).localCheckpoint(
-        eager=False
-    )
+    scored = pin(quality_unigram_likelihood(spark, sf_dir))
     n = scored.count()
     ranked = dense_ids(
         scored, [F.col("mean_token_prob"), F.col("doc_id")], id_col="rnk"
@@ -538,7 +537,7 @@ def curation_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         _tokens(docs, keys=("source",))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # cnt feeds tot AND the tok_src join: pin the vocab dim so the
     # stok re-aggregation runs once, not per consumer (the same
@@ -546,7 +545,7 @@ def curation_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         stok.groupBy("token")
         .agg(F.sum("k").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = cnt.agg(
         F.sum("c").cast("long").alias("big_n"),
@@ -568,7 +567,7 @@ def curation_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bigram_rows(docs, keys=("source",))
         .groupBy("source", "bg")
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bcnt = sbg.groupBy("bg").agg(F.sum("k").alias("c"))
     bg_src = (
@@ -888,12 +887,12 @@ def quality_bigram_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("cu"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = uni.agg(F.count(F.lit(1)).cast("long").alias("vocab_v"))
     bcnt = big_prev.groupBy("bg").agg(
         F.count(F.lit(1)).cast("long").alias("cb")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     return (
         big_prev.join(bcnt, "bg")
         .join(uni, F.col("prev") == F.col("token"))
@@ -1147,7 +1146,7 @@ def quality_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = (
         tr_toks.groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # coalesce: sum() is NULL on an empty train split (tr_toks count
     # returned 0), which would silently nullify every backoff score
@@ -1179,7 +1178,7 @@ def quality_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             out
         ).agg(F.count(F.lit(1)).cast("long").alias("c"))
 
-    c2 = gram_counts(2, "h2").localCheckpoint(eager=False)
+    c2 = pin(gram_counts(2, "h2"))
     c3 = gram_counts(3, "h3")
 
     inst = held.select(

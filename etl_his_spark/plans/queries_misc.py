@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -233,7 +234,7 @@ def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded-dimension checkpoint policy applies: distinct names ≪
     # keys by the operator's premise).
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    base = names.repartition(n_parts, "p_name").localCheckpoint(eager=False)
+    base = pin(names.repartition(n_parts, "p_name"))
 
     # 64-bit bag-of-bigrams bitmap, ONE per string (pre-explode): the
     # XOR+popcount prefilter below gates the ~5 µs Levenshtein with a

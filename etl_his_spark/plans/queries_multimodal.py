@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import attach_fake_media, decode_media, frame_sample
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -418,7 +419,7 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the hash table feeds both sides of the pigeonhole self-join and
     # the final degree join — materialize the decode once
-    ah = perceptual_ahash(media).localCheckpoint(eager=False)
+    ah = pin(perceptual_ahash(media))
     pairs = hamming_pairs_blocked(
         ah, max_hamming=1, bits=64, id_col="media_id", sig_col="ahash"
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup_approx import seeded_hash60, shingle_rows
+from ..operators.pin import pin
 from ..operators.similarity import brute_force_topk, ivf_topk
 from ..registry import register
 from ..sources.readers import read_table
@@ -112,7 +113,7 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = (
         toks.groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("dl"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = dl.agg(
         F.count(F.lit(1)).cast("long").alias("d_docs"),
@@ -122,7 +123,7 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.filter(F.col("token").isin(BM25_TERMS))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     df = tf.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("df"))
     avgdl = F.col("n_toks").cast("double") / F.col("d_docs")
@@ -220,7 +221,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup_approx import shingle_rows
 
     d = read_table(spark, sf_dir, "documents")
-    sh = shingle_rows(d).localCheckpoint(eager=True)
+    sh = pin(shingle_rows(d), eager=True)
     # df AND |doc| as count windows on the one checkpointed frame (the
     # jaccard_pairs_prefix single-shuffle discipline: a groupBy +
     # join-back per statistic would shuffle sh twice more); |doc| is
@@ -973,7 +974,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = (
         toks.groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("dl"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = dl.agg(
         F.count(F.lit(1)).cast("long").alias("d_docs"),
@@ -983,7 +984,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.filter(F.col("token").isin(BM25_TERMS))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     dfr = tf.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("df"))
     avgdl = F.col("n_toks").cast("double") / F.col("d_docs")
@@ -1137,7 +1138,7 @@ def retrieval_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # toks feeds both the scoring and expansion subtrees — one
     # materialization (lazy; the TakeOrdered feedback job is the
     # first consumer)
-    toks = toks.localCheckpoint(eager=False)
+    toks = pin(toks)
     qtf = (
         toks.filter(F.col("token").isin(BM25_TERMS))
         .groupBy("doc_id")
@@ -1236,7 +1237,7 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         shingle_rows(docs)
         .join(src_map, "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     keep = (
         sh.groupBy("shingle")
@@ -1439,7 +1440,7 @@ def retrieval_margin_bitext(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = (
         vi.filter(F.col("vec_id") < BITEXT_QUERIES)
         .select(F.col("vec_id").alias("query_id"), F.col("q").alias("qa"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     cs = vi.filter(F.col("vec_id") >= BITEXT_QUERIES).select(
         F.col("vec_id").alias("cand_id"), F.col("q").alias("qb")
@@ -1685,7 +1686,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup_approx import shingle_rows
 
     docs = read_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs).localCheckpoint(eager=True)
+    sh = pin(shingle_rows(docs), eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
     b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
@@ -1708,7 +1709,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a_id") < F.col("b_id"))
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("i"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     verified = (
         inter.join(
@@ -1730,7 +1731,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id")
         # verified feeds BOTH symmetrization arms of truth: pin it so
         # the size joins run once, not once per direction (r13).
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     truth = (
         verified.select(
@@ -1742,7 +1743,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("a_id").alias("target_id"),
             )
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     queries = truth.select("query_id").distinct()
     # The retrieval score of (query, cand) — shared-distinct-shingle
@@ -1916,7 +1917,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension is vocab-bounded.
     """
     docs = read_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs).localCheckpoint(eager=True)
+    sh = pin(shingle_rows(docs), eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
     b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
@@ -1931,7 +1932,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a_id") < F.col("b_id"))
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("i"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     verified = (
         inter.join(
@@ -1953,7 +1954,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id")
         # verified feeds BOTH symmetrization arms of truth: pin it so
         # the size joins run once, not once per direction (r13).
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     truth = (
         verified.select(
@@ -1966,7 +1967,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("a_id").alias("target_id"),
             )
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     queries = truth.select("query_id").distinct()
     # Stage-1 score of (query, cand) — shared-distinct-shingle count —
@@ -1994,7 +1995,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank1", F.row_number().over(w1))
         .filter(F.col("rank1") <= RERANK_STAGE1_TOP)
         .select("query_id", "cand_id", "rank1")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # distinct-token postings + document frequency (vocab-bounded dim)
     tok = (
@@ -2009,7 +2010,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", seeded_hash60(F.col("t")).alias("tok"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     dfreq = tok.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -2312,7 +2313,7 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice("b_q", 1, MATRYOSHKA_PREFIX),
             ).alias("dot_pre"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wf = Window.partitionBy("vec_id").orderBy(F.desc("dot_full"), F.asc("nb"))
     wp = Window.partitionBy("vec_id").orderBy(F.desc("dot_pre"), F.asc("nb"))
@@ -2499,7 +2500,7 @@ def embedding_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("ham"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wf = Window.partitionBy("vec_id").orderBy(F.desc("dot_full"), F.asc("nb"))
     wh = Window.partitionBy("vec_id").orderBy(F.asc("ham"), F.asc("nb"))

@@ -18,6 +18,7 @@ from ..functions.text import (
     quality_score,
     token_count,
 )
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -267,7 +268,7 @@ def overlap_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fps feeds the rarity window and both join sides — materialize
     # once (eager: concurrent consumer stages, see jaccard_pairs_prefix)
-    fps = fps.localCheckpoint(eager=True)
+    fps = pin(fps, eager=True)
     from pyspark.sql import Window
 
     wfp = Window.partitionBy("fp")
@@ -354,7 +355,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", F.explode(winnow_select("hs")).alias("fp"))
         .groupBy("source", "fp")
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rare = (
         spf.groupBy("fp")

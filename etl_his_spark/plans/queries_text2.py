@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import _STOPWORDS_EN
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -355,7 +356,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ucnt = (
         uni.groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     utot = ucnt.agg(F.sum("c").cast("long").alias("n_uni"))
     bg = (
@@ -374,7 +375,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcnt = (
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     btot = bcnt.agg(F.sum("c_ab").cast("long").alias("n_bg"))
     ua = ucnt.select(F.col("tok").alias("w1"), F.col("c").alias("c_a"))
@@ -467,7 +468,7 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(word_tokens("text")).alias("p", "tok"),
         )
         .filter(F.col("tok").isin(sorted(set(firsts) | set(seconds))))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     lhs = pos.filter(F.col("tok").isin(firsts)).select(
         "doc_id", F.col("p").alias("pa"), F.col("tok").alias("ta")
@@ -838,7 +839,7 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vocab-bounded, so one lazy materialization (repo idiom for
         # shared count dimensions, SCALE.md) beats recomputing the
         # corpus explode twice.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     counters = count_min_build_weighted(tf, "token", "tf", depth=3, width=512)
     est = count_min_probe(tf, counters, "token", depth=3, width=512)
@@ -1184,7 +1185,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("plen"),
         )
         .filter(F.col("plen") <= RAKE_MAX_PHRASE)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     pw = phr.select(
         "source", "phrase", "plen", F.explode(F.split("phrase", " ")).alias("word")
@@ -1316,7 +1317,7 @@ def text_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("token"),
         )
     )
-    toks = toks.localCheckpoint(eager=False)
+    toks = pin(toks)
     oldc = (
         toks.filter(F.col("doc_id") % 2 == 0)
         .groupBy("token")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import token_count, word_token_count
 from ..operators.packing import mixture_sample, pack_sequences
+from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
 
@@ -529,7 +530,7 @@ def training_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok", "c",
         F.round(F.sqrt(F.sqrt(c.cast("double") * c * c)) * 1000000)
         .cast("long").alias("w_micro"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     tot = wq.agg(F.sum("w_micro").cast("long").alias("t"))
     w = Window.orderBy("tok")
     return (

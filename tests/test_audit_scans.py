@@ -1,28 +1,21 @@
 """Known-positive tests for the scan-amplification audit.
 
 The r8 audit passed VACUOUSLY for two independent reasons (a regex
-that matched nothing in this Spark's explain format, and a
-localCheckpoint no-op that patched only the facade class Spark 4's
-classic subclass overrides). Lesson recorded in SCALE.md: a
-verification gate that can pass vacuously needs a known-positive case
-in its own test — these pin that the audit's counting machinery
-actually sees scans, sees THROUGH pins, and does not over-count a
-pinned frame per consumer.
+that matched nothing in this Spark's explain format, and a pin capture
+that never fired for the classic DataFrame class Spark 4 uses). Lesson
+recorded in SCALE.md: a verification gate that can pass vacuously
+needs a known-positive case in its own test — these pin that the
+audit's counting machinery actually sees scans, sees THROUGH pins
+(recorded by ``operators.pin.observe_pins``, only inside its block),
+and does not over-count a pinned frame per consumer.
 """
 
 from __future__ import annotations
 
-import os
-import sys
+import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.audit_scans import (
-    install_pin_capture,
-    production_scan_counts,
-)
-
-install_pin_capture()
+from etl_his_spark.operators.pin import observe_pins, pin
+from tools.audit_scans import production_scan_counts
 
 
 def test_counts_plain_scan(spark, sf_dir):
@@ -45,11 +38,10 @@ def test_sees_through_pins_and_counts_builds_once(spark, sf_dir):
             s.read.parquet(f"{d}/documents.parquet")
             .groupBy("source")
             .count()
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
-        # Three consumers of the pinned frame: without interception
-        # at the classic class this counts 0; with the r8 no-op
-        # semantics it would count 3.
+        # Three consumers of the pinned frame: without the pin hook
+        # this counts 0; with the r8 no-op semantics it would count 3.
         a = base.selectExpr("source", "count AS c1")
         b = base.selectExpr("source", "count AS c2")
         c = base.selectExpr("source", "count AS c3")
@@ -95,14 +87,24 @@ def test_plan_audit_pin_capture_sees_hidden_posture(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from tools.audit_plans import _install_pin_capture, _pin_plans
+    from tools.audit_plans import build_recording_pins
 
-    _install_pin_capture()
-    _pin_plans.clear()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pinned = docs.withColumn(
+    numbered = docs.withColumn(
         "rn", F.row_number().over(Window.orderBy("doc_id"))
-    ).localCheckpoint(eager=False)
-    pinned.select("doc_id", "rn").limit(1)
-    joined = "\n".join(_pin_plans)
-    assert "Exchange SinglePartition" in joined
+    )
+    _, pin_plans = build_recording_pins(pin, numbered)
+    assert "Exchange SinglePartition" in "\n".join(pin_plans)
+
+
+def test_pins_after_the_block_are_not_observed(spark):
+    """A pin is observed inside ``observe_pins`` and not after the block
+    exits, whether it exits normally or by an exception."""
+    seen, df = [], spark.range(3)
+    with observe_pins(seen.append):
+        pin(df)
+    with pytest.raises(RuntimeError), observe_pins(seen.append):
+        pin(df)
+        raise RuntimeError("build failed")
+    pin(df)
+    assert len(seen) == 2

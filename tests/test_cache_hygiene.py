@@ -7,13 +7,16 @@ long-lived session every operator call would pin another copy of its
 input. The repo's rule (SCALE.md "localCheckpoint discipline") is a
 localCheckpoint instead, whose blocks are reclaimed with the frame.
 This test calls every formerly-leaking operator and asserts the
-CacheManager is empty afterwards.
+CacheManager is empty afterwards. The last test fails on any engine
+localCheckpoint that bypasses ``operators/pin.pin``, the audits' hook.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import ast
+from pathlib import Path
 
+import etl_his_spark
 from etl_his_spark.operators.dedup_approx import (
     jaccard_pairs,
     jaccard_pairs_prefix,
@@ -46,3 +49,17 @@ def test_his_pipeline_leaves_no_cache(spark):
     for df in outputs.values():
         df.count()
     assert _cache_empty(spark)
+
+
+def test_every_engine_pin_goes_through_pin():
+    pkg = Path(etl_his_spark.__file__).parent
+    direct = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "pin.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+    assert direct == [], f"pin through operators.pin.pin: {direct}"

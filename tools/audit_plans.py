@@ -24,6 +24,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_his_spark.operators.pin import observe_pins  # noqa: E402
+
 # SinglePartition allowed: dim-scale id minting (bounded cardinality,
 # documented at operators/surrogate.dense_ids_small) or single-row
 # final aggregates (tiny by construction after partial agg).
@@ -174,40 +176,22 @@ CROSS_JOIN_ALLOW = {
 }
 
 
-# Physical plans of every localCheckpoint'ed subtree, captured at pin
-# time: a pin replaces its lineage with a LogicalRDD, so posture
-# violations INSIDE the pinned subtree (which executes in production!)
-# would otherwise never be audited — the same hide-behind-the-pin hole
-# the r10 scan-audit fix closed (tools/audit_scans.py docstring).
-_pin_plans: list[str] = []
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _install_pin_capture() -> None:
-    from pyspark.sql import DataFrame
+def build_recording_pins(build, *args):
+    """Return ``build(*args)`` and the executed plan of every frame it
+    pinned, in pin order.
 
-    def _patch(cls):
-        orig = cls.__dict__.get("localCheckpoint")
-        if orig is None or getattr(orig, "_plan_audit_patch", False):
-            return
-
-        def patched(self, eager=True):
-            _pin_plans.append(
-                self._jdf.queryExecution().executedPlan().toString()
-            )
-            return orig(self, eager)
-
-        patched._plan_audit_patch = True  # type: ignore[attr-defined]
-        cls.localCheckpoint = patched  # type: ignore[method-assign]
-
-    _patch(DataFrame)
-    try:
-        from pyspark.sql.classic.dataframe import (
-            DataFrame as ClassicDataFrame,
-        )
-
-        _patch(ClassicDataFrame)
-    except ImportError:
-        pass
+    A pin replaces its lineage with a LogicalRDD, so posture violations
+    INSIDE the pinned subtree (which executes in production!) would
+    otherwise never be audited — the same hide-behind-the-pin hole the
+    r10 scan-audit fix closed (audit_scans.production_scan_counts).
+    """
+    plans: list[str] = []
+    with observe_pins(lambda df: plans.append(_executed_plan(df))):
+        return build(*args), plans
 
 
 def main() -> int:
@@ -215,20 +199,17 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from etl_his_spark.session import get_spark
 
-    _install_pin_capture()
     spark = get_spark("audit_plans", cpus=8)
     violations: list[str] = []
 
     for name, fn in entrymod.queries().items():
-        _pin_plans.clear()
         try:
-            plan = (
-                fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-            )
+            df, pin_plans = build_recording_pins(fn, spark, sf_dir)
+            plan = _executed_plan(df)
         except Exception as e:  # noqa: BLE001
             violations.append(f"{name}: plan build failed: {e}")
             continue
-        plan = "\n".join([plan, *_pin_plans])
+        plan = "\n".join([plan, *pin_plans])
         if "Exchange SinglePartition" in plan and name not in SINGLE_PARTITION_ALLOW:
             violations.append(f"{name}: Exchange SinglePartition (serial stage)")
         if (
@@ -250,18 +231,19 @@ def main() -> int:
 
     his_max_single = 1
     try:
-        _pin_plans.clear()
-        outputs = run_pipeline(his_tables_from_testdata(spark, sf_dir))
+        outputs, pin_plans = build_recording_pins(
+            run_pipeline, his_tables_from_testdata(spark, sf_dir)
+        )
         # Pinned subtrees are shared across outputs — audit them once.
         # SinglePartition inside the pins is the documented dim-scale
         # dense-id minting (dense_ids_small); cartesians are not.
-        pinned = "\n".join(_pin_plans)
+        pinned = "\n".join(pin_plans)
         if "CartesianProduct" in pinned or "BroadcastNestedLoopJoin" in pinned:
             violations.append(
                 "his_pipeline.pinned_subtrees: cartesian/nested-loop join"
             )
         for name, df in outputs.items():
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = _executed_plan(df)
             qname = f"his_pipeline.{name}"
             n_single = plan.count("Exchange SinglePartition")
             if n_single > his_max_single:

@@ -29,6 +29,8 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_his_spark.operators.pin import observe_pins  # noqa: E402
+
 THRESHOLD = 4  # scans of the SAME table; >= this needs an allowlist row
 
 # name -> (table, max allowed scans, reason)
@@ -121,9 +123,6 @@ ALLOW = {
 # DOTALL), so each Location line yields its first path's table name.
 SCAN_RE = r"Location: .*?/(\w+)\.parquet"
 
-# Plans captured at localCheckpoint call time by install_pin_capture().
-_checkpoint_plans: list[str] = []
-
 
 def _explain_text(df) -> str:
     buf = io.StringIO()
@@ -132,59 +131,26 @@ def _explain_text(df) -> str:
     return buf.getvalue()
 
 
-def install_pin_capture() -> None:
-    """Patch localCheckpoint to record each pinned subtree's plan.
-
-    Counting PRODUCTION scans means: the final plan's parquet scans
-    PLUS each localCheckpoint's build subtree counted ONCE. The r8
-    approach no-op'd localCheckpoint so checkpointed subtrees stayed
-    visible — but that counts a pinned frame once per CONSUMER
-    (dedup_components' pair build showed 89 "scans" that production
-    runs exactly once), conflating logical fan-out with physical
-    reads. Intercepting the call instead records the subtree plan at
-    pin time (one read in production) and then lets the real
-    checkpoint proceed, so the final plan shows LogicalRDD and
-    nothing is double-counted.
-
-    Spark 4 note: pyspark.sql.DataFrame is a facade; the classic
-    implementation subclass OVERRIDES localCheckpoint, so the
-    subclass must be patched too — patching only the facade silently
-    re-hides every checkpointed subtree (caught in r10: a query whose
-    whole lineage sits behind one pin showed ZERO scans).
-    """
-    from pyspark.sql import DataFrame
-
-    def _patch(cls):
-        orig = cls.__dict__.get("localCheckpoint")
-        if orig is None or getattr(orig, "_scan_audit_patch", False):
-            return  # nothing to wrap, or already wrapped (idempotent)
-
-        def patched(self, eager=True):
-            _checkpoint_plans.append(_explain_text(self))
-            return orig(self, eager)
-
-        patched._scan_audit_patch = True  # type: ignore[attr-defined]
-        cls.localCheckpoint = patched  # type: ignore[method-assign]
-
-    _patch(DataFrame)
-    try:
-        from pyspark.sql.classic.dataframe import (
-            DataFrame as ClassicDataFrame,
-        )
-
-        _patch(ClassicDataFrame)
-    except ImportError:  # older pyspark: single class, already patched
-        pass
-
-
 def production_scan_counts(fn, spark, sf_dir: str) -> Counter:
     """Per-table production scan counts for one (spark, sf_dir) query
-    fn — final plan + each pin's build subtree once.
-    install_pin_capture() must have been called first."""
-    _checkpoint_plans.clear()
-    df = fn(spark, sf_dir)
+    fn: the final plan's parquet scans PLUS each pin's build subtree
+    counted ONCE.
+
+    The r8 approach no-op'd localCheckpoint so pinned subtrees stayed
+    visible — but that counts a pinned frame once per CONSUMER
+    (dedup_components' pair build showed 89 "scans" that production
+    runs exactly once). ``observe_pins`` instead records each pinned
+    frame's plan at pin time (one read in production) and the real
+    pin proceeds. A pin that bypasses ``operators.pin.pin`` would hide
+    its subtree (caught in r10: a query whose whole lineage sat behind
+    one unobserved pin showed ZERO scans); tests/test_cache_hygiene.py
+    fails on any such pin in the engine.
+    """
+    pin_plans: list[str] = []
+    with observe_pins(lambda df: pin_plans.append(_explain_text(df))):
+        df = fn(spark, sf_dir)
     tables = re.findall(SCAN_RE, _explain_text(df))
-    for plan in _checkpoint_plans:
+    for plan in pin_plans:
         tables += re.findall(SCAN_RE, plan)
     return Counter(tables)
 
@@ -194,7 +160,6 @@ def main() -> int:
     from etl_his_spark.registry import QUERIES
     from etl_his_spark.session import get_spark
 
-    install_pin_capture()
     spark = get_spark("audit_scans", cpus=8)
     violations = []
     checked = 0

@@ -6,15 +6,15 @@ named query (built against the given sf dir, default sf0.1) to
 committed beside the code (the judge reads these files, not a live
 Spark).
 
-Pinned subtrees (r13 verdict item 3): a ``localCheckpoint`` truncates
-the logical plan at the pin — the final frame scans an ``ExistingRDD``
-and the work BEHIND the pin becomes invisible to ``explain``, which
-made the r13 rerank/mrr before/after dumps structurally identical even
-though a whole posting join was removed. This tool now monkeypatches
-``DataFrame.localCheckpoint`` for the duration of each query build,
-records every pre-pin parent frame, and appends each pinned subtree's
-own formatted plan (in build order, innermost pins first) after the
-final plan — so join-removal claims behind pins stay plan-auditable.
+Pinned subtrees (r13 verdict item 3): a pin hides the work behind it
+from ``explain`` (the final frame scans an ``ExistingRDD``), which made
+the r13 rerank/mrr before/after dumps identical though a whole posting
+join was removed. So each query is built inside
+``operators.pin.observe_pins``, which records every pinned frame's plan
+as it is pinned; those follow the final plan in build order (innermost
+pins first). A pinned section shows the plan BEFORE execution
+(``isFinalPlan=false``), so a query dumps the same plan alone or inside
+a batch, up to expression, plan and RDD ids.
 
 Usage:
     python tools/dump_plan.py --tag r14 --suffix before [sf_dir] name...
@@ -69,14 +69,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    # Patch the CONCRETE class: under Spark 4 the classic DataFrame
-    # overrides localCheckpoint, so patching the pyspark.sql.DataFrame
-    # base never fires for classic-session frames.
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pre-4.0 layout
-        from pyspark.sql import DataFrame
-
+    from etl_his_spark.operators.pin import observe_pins
     from etl_his_spark.session import get_spark
 
     qs = entrymod.queries()
@@ -91,26 +84,16 @@ def main() -> int:
     )
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump_plan", cpus=8)
-    original_ckpt = DataFrame.localCheckpoint
     for name in args:
-        pinned: list[DataFrame] = []
-
-        def capturing_ckpt(self, eager=True, *a, **kw):
-            pinned.append(self)
-            return original_ckpt(self, eager, *a, **kw)
-
-        DataFrame.localCheckpoint = capturing_ckpt
-        try:
+        pinned: list[str] = []
+        with observe_pins(lambda df: pinned.append(_formatted_plan(df))):
             df = qs[name](spark, sf_dir)
-            sections = [_formatted_plan(df)]
-            for i, parent in enumerate(pinned, 1):
-                sections.append(
-                    f"\n== Pinned subtree #{i} "
-                    "(localCheckpoint parent, build order) ==\n"
-                    + _formatted_plan(parent)
-                )
-        finally:
-            DataFrame.localCheckpoint = original_ckpt
+        sections = [_formatted_plan(df)]
+        for i, parent in enumerate(pinned, 1):
+            sections.append(
+                f"\n== Pinned subtree #{i} "
+                "(localCheckpoint parent, build order) ==\n" + parent
+            )
         plan = "".join(sections)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:

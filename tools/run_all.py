@@ -4,7 +4,7 @@ The full pre-commit / pre-round pipeline in one command. Exits nonzero
 if any stage fails.
 
 Usage: python tools/run_all.py [--fast]
-  --fast: plan audit + pytest -x only (quick iteration loop)
+  --fast: plan and scan audits + pytest -x only (quick iteration loop)
 """
 
 from __future__ import annotations
@@ -36,6 +36,8 @@ STEPS_FULL = [
 STEPS_FAST = [
     ("plan audit",
      [sys.executable, "tools/audit_plans.py"]),
+    ("scan-amplification audit",
+     [sys.executable, "tools/audit_scans.py"]),
     ("pytest",
      [sys.executable, "-m", "pytest", "tests/", "-q", "-x"]),
 ]
