@@ -1674,21 +1674,21 @@ def events_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposure means assignment or logging is broken and every
     downstream metric is untrustworthy.
 
-    One distinct-user aggregation per type (map-side partial), one
-    row per exposure — linear at any event volume.
+    One distinct (type, user) aggregation, then each arm is a
+    ``count_if`` over the distinct users: a single distinct path, so
+    the plan has no ``Expand`` (two ``countDistinct`` arms expand in an
+    order that varies between sessions). One row per exposure — linear
+    at any event volume.
     """
     ev = read_table(spark, sf_dir, "events")
-    arms = ev.groupBy("event_type").agg(
-        F.countDistinct(
-            F.when(F.col("user_id") % 2 == 0, F.col("user_id"))
+    arms = (
+        ev.select("event_type", "user_id")
+        .distinct()
+        .groupBy("event_type")
+        .agg(
+            F.count_if(F.col("user_id") % 2 == 0).cast("long").alias("n_arm0"),
+            F.count_if(F.col("user_id") % 2 == 1).cast("long").alias("n_arm1"),
         )
-        .cast("long")
-        .alias("n_arm0"),
-        F.countDistinct(
-            F.when(F.col("user_id") % 2 == 1, F.col("user_id"))
-        )
-        .cast("long")
-        .alias("n_arm1"),
     )
     chi2 = F.expr(
         "(1000000 * (n_arm0 - n_arm1) * (n_arm0 - n_arm1))"

@@ -1,11 +1,19 @@
 """Driver-verifiable streaming gate queries.
 
 The streaming family (``etl_his_spark.streaming``) is otherwise
-verified only by pytest batch-agreement tests — these queries put at
-least one real Structured Streaming execution under the external
-hash-exact oracle gate: the query fn runs the stream to completion on
-a bounded replay (``availableNow`` trigger → memory sink) and returns
-the sink contents as a plain DataFrame.
+verified only by pytest batch-agreement tests — these queries put
+real Structured Streaming executions under the external hash-exact
+oracle gate: the query fn runs the stream to completion on a bounded
+replay and returns the result as a plain DataFrame.
+
+One run path: every lane starts its stream through
+``streaming.events.run_available_now`` — the memory-sink lanes via
+``_run_lane``, the two foreachBatch rollups via ``_fold_lane``, the
+CDC lane via ``streaming.cdc.run_cdc_apply`` — each inside
+``_stream_run_conf``'s 8-partition scope. The scope belongs to this
+harness, not to the primitive: a checkpointed stream freezes its
+state-partition count at its first run, so the production caller
+(``stream_to_published``) keeps the session's setting.
 
 Determinism design (what makes a *stream* hash-exact against SQL):
 in append mode a session window is emitted only once the watermark
@@ -28,6 +36,7 @@ import shutil
 import tempfile
 from contextlib import contextmanager
 from datetime import datetime, timedelta
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +44,16 @@ from pyspark.sql import functions as F
 from ..operators.sketches import hll_registers
 from ..registry import register
 from ..sources.readers import read_events_raw, read_table
+from ..streaming.curation import fingerprint_dedup_stream
+from ..streaming.events import (
+    attribution_stream,
+    enrich_with_dim,
+    run_available_now,
+    sessionize_stream,
+    stream_events,
+    stream_stream_join,
+    windowed_counts,
+)
 from .queries_events2 import (
     BOTTOMK_ORACLE,
     HLL_ORACLE,
@@ -43,14 +62,16 @@ from .queries_events2 import (
     _bottomk_quantiles,
 )
 
-# Per-process replay dirs: the file streaming source needs a DIRECTORY
-# of parquet files (several files → several micro-batches → real
-# watermark progression), while the fixture tables are single files.
-# One materialization per (process, sf_dir), removed at exit.
-_REPLAY_DIRS: dict[str, str] = {}
+# Per-process replay dirs, one per (table, sf_dir): the file streaming
+# source needs a DIRECTORY of parquet files (several files → several
+# micro-batches → real watermark progression and incremental state
+# updates), while the fixture tables are single files. Removed at exit.
+_REPLAY_DIRS: dict[tuple[str, str], str] = {}
 _RUN_COUNTER = [0]
 # last memory-sink view registered per gate (for drop-before-reuse)
 _LAST_SINK: dict[str, str] = {}
+# spark.sql.shuffle.partitions inside every lane run (_stream_run_conf)
+_STREAM_PARTITIONS = "8"
 
 
 def _fresh_sink(spark: SparkSession, gate: str) -> str:
@@ -61,10 +82,7 @@ def _fresh_sink(spark: SparkSession, gate: str) -> str:
     by a caller-held DataFrame."""
     prev = _LAST_SINK.get(gate)
     if prev:
-        try:
-            spark.catalog.dropTempView(prev)
-        except Exception:
-            pass
+        spark.catalog.dropTempView(prev)
     _RUN_COUNTER[0] += 1
     name = f"{gate}_{os.getpid()}_{_RUN_COUNTER[0]}"
     _LAST_SINK[gate] = name
@@ -112,33 +130,50 @@ def _normalize_replay_order(out: str) -> None:
         os.utime(dst, (base + 2 * i, base + 2 * i))
 
 
-def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _REPLAY_DIRS:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            f"etl_his_spark_replay_{os.getpid()}_{len(_REPLAY_DIRS)}",
-        )
-        # ts stays nanos-long (EVENTS_RAW_SCHEMA contract); 8 files at
-        # maxFilesPerTrigger=4 → ≥2 data batches before the flush.
-        #
-        # The files are RANGE-partitioned on ts and replayed in time
-        # order (_normalize_replay_order). This is what makes the
-        # watermark-sensitive gates robust rather than accidental (r7
-        # advisor): with time-ordered batches the watermark when batch
-        # k runs is max(ts of earlier batches) − 2 h, so for any
-        # qualifying stream-stream pair (p.ts ≥ batch-k lower bound,
-        # v.ts ≥ p.ts − 1 h) the view's join state is provably still
-        # live — for ANY file count and ANY maxFilesPerTrigger, not
-        # just the 8-files×4-per-trigger = 2-data-batch layout the r7
-        # gate happened to run. Same monotone-watermark argument closes
-        # the session/window gates' below-horizon emissions.
+def _write_replay(
+    spark: SparkSession, sf_dir: str, table: str, out: str
+) -> None:
+    """Write ``table`` of ``sf_dir`` to ``out`` as an 8-file replay.
+
+    ``events`` keeps ts nanos-long (EVENTS_RAW_SCHEMA contract); 8
+    files at maxFilesPerTrigger=4 → ≥2 data batches before the flush.
+    Its files are RANGE-partitioned on (ts, event_id) and replayed in
+    time order (``_normalize_replay_order``). This is what makes the
+    watermark-sensitive lanes robust rather than accidental: with
+    time-ordered batches the watermark when batch k runs is
+    max(ts of earlier batches) − 2 h, so for any qualifying
+    stream-stream pair (p.ts ≥ batch-k lower bound, v.ts ≥ p.ts − 1 h)
+    the view's join state is provably still live — for ANY file count
+    and ANY maxFilesPerTrigger, not just the 8-files×4-per-trigger
+    layout the lanes run. Same monotone-watermark argument closes the
+    session/window lanes' below-horizon emissions.
+
+    Any other table (``documents``) carries no event time and is split
+    round-robin into 8 files."""
+    if table == "events":
         read_events_raw(spark, sf_dir).repartitionByRange(
             8, "ts", "event_id"
         ).write.mode("overwrite").parquet(out)
         _normalize_replay_order(out)
+    else:
+        read_table(spark, sf_dir, table).repartition(8).write.mode(
+            "overwrite"
+        ).parquet(out)
+
+
+def _replay_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """This process's replay of ``table`` (``_write_replay``), written
+    once per (table, sf_dir) and removed at exit."""
+    key = (table, sf_dir)
+    if key not in _REPLAY_DIRS:
+        out = os.path.join(
+            tempfile.gettempdir(),
+            f"etl_his_spark_replay_{table}_{os.getpid()}_{len(_REPLAY_DIRS)}",
+        )
+        _write_replay(spark, sf_dir, table, out)
         atexit.register(shutil.rmtree, out, ignore_errors=True)
-        _REPLAY_DIRS[sf_dir] = out
-    return _REPLAY_DIRS[sf_dir]
+        _REPLAY_DIRS[key] = out
+    return _REPLAY_DIRS[key]
 
 
 def _emission_horizon(spark: SparkSession, sf_dir: str) -> datetime | None:
@@ -153,25 +188,71 @@ def _emission_horizon(spark: SparkSession, sf_dir: str) -> datetime | None:
 
 
 @contextmanager
-def _stream_run_conf(spark: SparkSession, partitions: str = "8"):
-    """Scoped micro-batch tuning for the availableNow replay gates.
+def _stream_run_conf(spark: SparkSession):
+    """Scoped micro-batch tuning for the availableNow replay lanes.
 
     Stateful streaming stages plan with the static
     ``spark.sql.shuffle.partitions`` (AQE does not apply inside
     streaming queries), and every state partition costs a state-store
     instance commit per micro-batch — at the default 32 that overhead
-    dominates these second-scale replays (r7 verdict item 3). 8 keeps
-    the replay parallel while quartering per-batch state-store and
-    shuffle-task machinery; results are partitioning-independent. The
-    previous value is restored after the stream completes so batch
-    queries in the same session are untouched."""
+    dominates these second-scale replays. 8 keeps the replay parallel
+    while quartering per-batch state-store and shuffle-task machinery;
+    results are partitioning-independent. The previous value is
+    restored after the stream completes so batch queries in the same
+    session are untouched."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, partitions)
+    spark.conf.set(key, _STREAM_PARTITIONS)
     try:
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def _run_lane(
+    spark: SparkSession, gate: str, stream: DataFrame, mode: str
+) -> DataFrame:
+    """Run ``stream`` to completion into a fresh memory sink for
+    ``gate`` (output mode ``mode``) inside the lanes' partition scope;
+    return the sink's contents."""
+    name = _fresh_sink(spark, gate)
+    with _stream_run_conf(spark):
+        run_available_now(stream, name, mode)
+    return spark.table(name)
+
+
+def _fold_lane(
+    spark: SparkSession,
+    sf_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Fold the events replay into a persisted store through
+    foreachBatch and return the final store.
+
+    Each micro-batch computes ``partial(batch)``; from the second batch
+    on, the store becomes ``merge(store ∪ partial)``, written as a new
+    parquet version. No watermark and no state store: the store IS the
+    state, and the checkpoint's offsets log gives exactly-once batch
+    delivery within the run."""
+    root = tempfile.mkdtemp(prefix="fold_lane_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    stores: list[str] = []
+
+    def fold(batch: DataFrame, batch_id: int) -> None:
+        part = partial(batch)
+        if stores:
+            part = merge(spark.read.parquet(stores[-1]).unionByName(part))
+        out = os.path.join(root, f"store_v{len(stores) + 1}")
+        part.write.mode("overwrite").parquet(out)
+        stores.append(out)
+
+    events = stream_events(spark, _replay_dir(spark, sf_dir, "events"))
+    with _stream_run_conf(spark):
+        run_available_now(
+            events, fold, checkpoint=os.path.join(root, "_ckpt")
+        )
+    return spark.read.parquet(stores[-1])
 
 
 @register(
@@ -239,28 +320,19 @@ def streaming_attribution_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated invocations in one process reuse the replay dir and get a
     fresh memory-sink name.
     """
-    from ..streaming.events import attribution_stream, stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_attrib_gate")
-    with _stream_run_conf(spark):
-        q = (
-            attribution_stream(
-                stream_events(spark, replay), gap_minutes=30,
-                watermark="2 hours",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    sessions = _run_lane(
+        spark,
+        "stream_attrib_gate",
+        attribution_stream(
+            stream_events(spark, _replay_dir(spark, sf_dir, "events")),
+            gap_minutes=30,
+            watermark="2 hours",
+        ),
+        "append",
+    )
     horizon = _emission_horizon(spark, sf_dir)
     return (
-        spark.table(name)
-        .filter(F.col("session_end") < F.lit(horizon))
+        sessions.filter(F.col("session_end") < F.lit(horizon))
         .select(
             "user_id", "session_start", "session_end", "first_touch",
             "n_purchases", "purchase_cents",
@@ -301,35 +373,26 @@ def streaming_attribution_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_sessionize_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization (watermarked ``session_window`` state)
-    hash-checked against batch SQL on the horizon-closed subset — the
-    second live Structured Streaming execution under the gate,
-    covering the UNFILTERED session stream (every closed session, not
-    just converted ones like the attribution gate). Same determinism
-    design: both sides keep only sessions ending strictly below
-    ``max(ts) − 3 h``. Reuses the per-process replay dir.
+    hash-checked against batch SQL on the horizon-closed subset. It
+    covers the UNFILTERED session stream (every closed session, not
+    just the converted ones the attribution lane keeps). Same
+    determinism design: both sides keep only sessions ending strictly
+    below ``max(ts) − 3 h``. Reuses the per-process replay dir.
 
     STREAM-EFFECTFUL: runs the stream to completion on invocation."""
-    from ..streaming.events import sessionize_stream, stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_sess_gate")
-    with _stream_run_conf(spark):
-        q = (
-            sessionize_stream(
-                stream_events(spark, replay), gap_minutes=30,
-                watermark="2 hours",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sessions = _run_lane(
+        spark,
+        "stream_sess_gate",
+        sessionize_stream(
+            stream_events(spark, _replay_dir(spark, sf_dir, "events")),
+            gap_minutes=30,
+            watermark="2 hours",
+        ),
+        "append",
+    )
     horizon = _emission_horizon(spark, sf_dir)
     return (
-        spark.table(name)
-        .filter(F.col("session_end") < F.lit(horizon))
+        sessions.filter(F.col("session_end") < F.lit(horizon))
         .select("user_id", "session_start", "session_end", "n_events")
     )
 
@@ -337,27 +400,6 @@ def streaming_sessionize_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming exact dedup (stateful dropDuplicates under the gate)
 # ---------------------------------------------------------------------------
-
-_DOC_REPLAY_DIRS: dict[str, str] = {}
-
-
-def _docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Multi-file replay copy of ``documents`` for the file streaming
-    source (same rationale as ``_events_replay_dir``: several files →
-    several micro-batches → real incremental state updates)."""
-    if sf_dir not in _DOC_REPLAY_DIRS:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            f"etl_his_spark_docreplay_{os.getpid()}_{len(_DOC_REPLAY_DIRS)}",
-        )
-        read_table(spark, sf_dir, "documents").repartition(8).write.mode(
-            "overwrite"
-        ).parquet(out)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        _DOC_REPLAY_DIRS[sf_dir] = out
-    return _DOC_REPLAY_DIRS[sf_dir]
-
-
 @register(
     "streaming_dedup_agree",
     r"""
@@ -374,47 +416,29 @@ def streaming_dedup_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized-content fingerprint over a multi-file replay, the
     ingestion-time twin of ``dedup_exact``.
 
-    Determinism design: WHICH raw row survives per fingerprint depends
-    on micro-batch arrival order, so the gate emits only columns
-    functionally determined by the fingerprint itself (the md5 and the
-    normalized length) — the surviving SET is deterministic even
-    though the surviving rows are not. The batch oracle is a plain
-    DISTINCT over the same normalization (dedup_exact's md5 CTE).
+    Determinism design: ``fingerprint_dedup_stream`` emits only
+    columns the fingerprint determines (the md5 and the normalized
+    length), so the surviving SET is deterministic though the
+    surviving rows are not. The batch oracle is a plain DISTINCT over
+    the same normalization (dedup_exact's md5 CTE).
 
     State scale: one state row per distinct fingerprint, keyed and
     partitioned by fingerprint hash. On an unbounded 100 TB ingest the
     production form bounds state with
     ``dropDuplicatesWithinWatermark`` (content re-appearing after the
     ingest watermark is a new logical version); the fixture documents
-    carry no event time, so the gate runs the unbounded-state form on
+    carry no event time, so the lane runs the unbounded-state form on
     the bounded replay.
 
     STREAM-EFFECTFUL: runs the stream to completion on invocation."""
-    replay = _docs_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_dedup_gate")
-    schema = read_table(spark, sf_dir, "documents").schema
-    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
-    stream = (
-        spark.readStream.schema(schema)
+    docs = (
+        spark.readStream.schema(read_table(spark, sf_dir, "documents").schema)
         .option("maxFilesPerTrigger", 4)
-        .parquet(replay)
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.md5(norm).alias("fingerprint"),
-            F.length(norm).cast("long").alias("norm_len"),
-        )
-        .dropDuplicates(["fingerprint"])
+        .parquet(_replay_dir(spark, sf_dir, "documents"))
     )
-    with _stream_run_conf(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("fingerprint", "norm_len")
+    return _run_lane(
+        spark, "stream_dedup_gate", fingerprint_dedup_stream(docs), "append"
+    ).select("fingerprint", "norm_len")
 
 
 @register(
@@ -443,25 +467,19 @@ def streaming_stateful_totals_agree(spark: SparkSession, sf_dir: str) -> DataFra
     and the oracle's ROUND agree with no half-way cases.
 
     STREAM-EFFECTFUL: runs the stream to completion on invocation."""
-    from ..streaming.events import stream_events
     from ..streaming.stateful import running_user_totals
 
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_stateful_gate")
-    with _stream_run_conf(spark):
-        q = (
-            running_user_totals(stream_events(spark, replay))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    emitted = _run_lane(
+        spark,
+        "stream_stateful_gate",
+        running_user_totals(
+            stream_events(spark, _replay_dir(spark, sf_dir, "events"))
+        ),
+        "update",
+    )
     final = F.max(F.struct("n_events", "total_cents")).alias("s")
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        emitted.groupBy("user_id")
         .agg(final)
         .select(
             "user_id",
@@ -492,37 +510,28 @@ def streaming_window_counts_agree(spark: SparkSession, sf_dir: str) -> DataFrame
     """Tumbling-window per-type counts from a REAL watermarked
     streaming aggregation (the `windowed_counts` operator on the
     multi-file replay), hash-checked against batch SQL on the
-    horizon-closed windows — the fifth live streaming execution under
-    the gate, covering the watermarked groupBy-window aggregation
-    lane the other four gates don't (session windows, dropDuplicates,
-    applyInPandasWithState).
+    horizon-closed windows: the watermarked groupBy-window aggregation,
+    next to the session-window, dropDuplicates and
+    applyInPandasWithState lanes.
 
     Same determinism design as the session gates: append mode emits a
     window only when the watermark passes it; both sides keep only
     windows ENDING strictly below max(ts) − 3 h (2 h watermark + 1 h
     slack), where emission is guaranteed and micro-batch layout
     cannot change the result. Sums ride integer cents."""
-    from ..streaming.events import stream_events, windowed_counts
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_wincount_gate")
-    with _stream_run_conf(spark):
-        q = (
-            windowed_counts(
-                stream_events(spark, replay), window="1 hour",
-                watermark="2 hours",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    windows = _run_lane(
+        spark,
+        "stream_wincount_gate",
+        windowed_counts(
+            stream_events(spark, _replay_dir(spark, sf_dir, "events")),
+            window="1 hour",
+            watermark="2 hours",
+        ),
+        "append",
+    )
     horizon = _emission_horizon(spark, sf_dir)
     return (
-        spark.table(name)
-        .filter(
+        windows.filter(
             F.col("window_start") + F.expr("INTERVAL 1 HOUR")
             < F.lit(horizon)
         )
@@ -558,10 +567,8 @@ def streaming_window_counts_agree(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def streaming_join_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-bounded stream-stream INNER join from a REAL execution
-    (r7; the sixth live streaming lane under the hash gate — the one
-    the other five don't cover): views ⋈ purchases of the same user
-    within one hour, both sides watermarked so join state is
+    """Time-bounded stream-stream INNER join from a REAL execution:
+    views ⋈ purchases of the same user within one hour, both sides watermarked so join state is
     evictable, run to completion on the multi-file replay
     (availableNow → memory sink) and hash-checked against the plain
     batch join.
@@ -572,40 +579,30 @@ def streaming_join_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     as neither row was watermark-dropped; both sides therefore filter
     to rows strictly below max(ts) − 3 h (2 h watermark + 1 h join
     bound). That state is still live when the partner arrives is
-    guaranteed by the TIME-SORTED replay (r7 advisor — see
-    ``_events_replay_dir``): batches arrive in event-time order, so
-    when the purchase's batch runs the watermark is at most
-    (batch lower bound − 2 h) and any qualifying view
-    (v.ts ≥ p.ts − 1 h) is above the eviction threshold — for any
-    file count and trigger size, not just the r7 2-batch layout.
+    guaranteed by the TIME-SORTED replay (see ``_write_replay``):
+    batches arrive in event-time order, so when the purchase's batch
+    runs the watermark is at most (batch lower bound − 2 h) and any
+    qualifying view (v.ts ≥ p.ts − 1 h) is above the eviction
+    threshold — for any file count and trigger size.
     Scale: the join is keyed on user_id with an event-time residual —
     state per key is bounded by the 1-hour window, the canonical
     clicks⋈impressions shape."""
-    from ..streaming.events import stream_events, stream_stream_join
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_join_gate")
     # ONE streaming source, both join sides derived from it (self-join
     # on disjoint filters): a second stream_events() reader would
     # track offsets and list/scan the replay dir twice per micro-batch
-    # for identical bytes (r7 verdict item 3).
-    ev = stream_events(spark, replay)
+    # for identical bytes.
+    ev = stream_events(spark, _replay_dir(spark, sf_dir, "events"))
     left = ev.filter(F.col("event_type") == "view")
     right = ev.filter(F.col("event_type") == "purchase")
-    with _stream_run_conf(spark):
-        q = (
-            stream_stream_join(left, right, within="1 hour")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    pairs = _run_lane(
+        spark,
+        "stream_join_gate",
+        stream_stream_join(left, right, within="1 hour"),
+        "append",
+    )
     horizon = _emission_horizon(spark, sf_dir)
     return (
-        spark.table(name)
-        .filter((F.col("l_ts") < F.lit(horizon)) & (F.col("r_ts") < F.lit(horizon)))
+        pairs.filter((F.col("l_ts") < F.lit(horizon)) & (F.col("r_ts") < F.lit(horizon)))
         .select(
             F.col("l_key").alias("user_id"),
             F.col("l_event_id").alias("view_event_id"),
@@ -626,9 +623,8 @@ def streaming_join_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_enrich_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static dimension enrichment from a REAL execution (r7;
-    the seventh live streaming lane under the hash gate): the event
-    stream left-joins the bounded customer dimension per micro-batch
+    """Stream-static dimension enrichment from a REAL execution: the
+    event stream left-joins the bounded customer dimension per micro-batch
     (the streaming analog of the batch pipeline's J1-J9 catalog joins,
     SURVEY.md §2.3), run to completion on the multi-file replay and
     hash-checked against the plain batch left join.
@@ -639,29 +635,18 @@ def streaming_enrich_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministically the batch join. Scale: the static side rides
     Catalyst's broadcast decision (never forced — resolve_fk
     rationale); events with no dim match survive with NULLs."""
-    from ..streaming.events import enrich_with_dim, stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_enrich_gate")
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name", "c_nationkey"
     )
-    with _stream_run_conf(spark):
-        q = (
-            enrich_with_dim(stream_events(spark, replay), dim, on="user_id")
-            .select(
-                "event_id", "user_id", "event_type", "c_name", "c_nationkey"
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
-        "event_id", "user_id", "event_type", "c_name", "c_nationkey"
-    )
+    cols = ["event_id", "user_id", "event_type", "c_name", "c_nationkey"]
+    enriched = enrich_with_dim(
+        stream_events(spark, _replay_dir(spark, sf_dir, "events")),
+        dim,
+        on="user_id",
+    ).select(*cols)
+    return _run_lane(
+        spark, "stream_enrich_gate", enriched, "append"
+    ).select(*cols)
 
 
 @register(
@@ -683,8 +668,8 @@ def streaming_enrich_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_cdc_apply_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC apply (r10; the ninth live streaming lane under
-    the hash gate): the event changelog replays through foreachBatch,
+    """Streaming CDC apply: the event changelog replays through
+    foreachBatch,
     each micro-batch MERGE-upserted into the manifest lakehouse via
     an atomic publish (streaming/cdc.py has the exactly-once-by-
     idempotence and cross-batch determinism arguments; restart
@@ -696,12 +681,10 @@ def streaming_cdc_apply_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     No watermark and no state store: the published table is the
     state. The per-batch MERGE is a keyed anti-join (update side is
     one micro-batch's keys — broadcastable at any target size)."""
-    import tempfile
-
     from ..streaming.cdc import STATE_TABLE, run_cdc_apply
     from ..sources.writers import read_published
 
-    replay = _events_replay_dir(spark, sf_dir)
+    replay = _replay_dir(spark, sf_dir, "events")
     root = tempfile.mkdtemp(prefix="cdc_apply_gate_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     with _stream_run_conf(spark):
@@ -720,34 +703,22 @@ def streaming_hll_users_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
     is monotone, so state is bounded and no watermark is needed, and
     the streamed registers are BIT-IDENTICAL to batch — which is why
     this streaming lane can carry the same exact DuckDB oracle as the
-    batch gate (``HLL_ORACLE``). Would be the eighth live streaming
-    lane under the gate."""
-    from ..streaming.events import stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_hll_gate")
-    with _stream_run_conf(spark):
-        q = (
-            hll_registers(
-                stream_events(spark, replay).withColumn(
-                    "uid", F.col("user_id").cast("string")
-                ),
-                "uid",
-                group_cols=["event_type"],
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("event_type", "bucket", "register")
+    batch gate (``HLL_ORACLE``)."""
+    registers = hll_registers(
+        stream_events(spark, _replay_dir(spark, sf_dir, "events")).withColumn(
+            "uid", F.col("user_id").cast("string")
+        ),
+        "uid",
+        group_cols=["event_type"],
+    )
+    return _run_lane(spark, "stream_hll_gate", registers, "complete").select(
+        "event_type", "bucket", "register"
+    )
 
 
 # ---------------------------------------------------------------------------
 # streaming_bottomk_agree — the bottom-k sketch as a live foreachBatch
-# monoid rollup (the tenth streaming lane)
+# monoid rollup
 # ---------------------------------------------------------------------------
 @register("streaming_bottomk_agree", BOTTOMK_ORACLE)
 def streaming_bottomk_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,35 +742,12 @@ def streaming_bottomk_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     STREAM-EFFECTFUL: building this DataFrame runs the stream to
     completion (that is the point of the gate)."""
-    from ..streaming.events import stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="bottomk_rollup_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    state = {"path": None, "v": 0}
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        partial = _bottomk_daily(_bottomk_project(batch))
-        if state["path"] is not None:
-            prev = spark.read.parquet(state["path"])
-            partial = _bottomk_daily(prev.unionByName(partial))
-        state["v"] += 1
-        out = os.path.join(root, f"store_v{state['v']}")
-        partial.write.mode("overwrite").parquet(out)
-        state["path"] = out
-
-    with _stream_run_conf(spark):
-        q = (
-            stream_events(spark, replay)
-            .writeStream.foreachBatch(_apply)
-            .option(
-                "checkpointLocation", os.path.join(root, "_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    daily = spark.read.parquet(state["path"])
+    daily = _fold_lane(
+        spark,
+        sf_dir,
+        lambda batch: _bottomk_daily(_bottomk_project(batch)),
+        _bottomk_daily,
+    )
     return _bottomk_quantiles(daily)
 
 
@@ -826,7 +774,7 @@ def _manifest_partial(ev: DataFrame) -> DataFrame:
         F.to_date("ts").alias("day"),
         # dividend-sign %, NOT pmod: DuckDB's % takes the dividend's
         # sign, and the oracle buckets with user_id % 16 — the two
-        # diverge for negative ids (ADVICE r12 low). Same convention
+        # diverge for negative ids. Same convention
         # on both sides keeps the gate exact for ANY id domain.
         (F.col("user_id") % F.lit(16)).cast("long").alias("bucket"),
     ).agg(
@@ -871,33 +819,8 @@ def streaming_manifest_agree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     STREAM-EFFECTFUL: building this DataFrame runs the stream to
     completion (that is the point of the gate)."""
-    from ..streaming.events import stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="manifest_rollup_gate_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    state = {"path": None, "v": 0}
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        partial = _manifest_partial(batch)
-        if state["path"] is not None:
-            prev = spark.read.parquet(state["path"])
-            partial = _manifest_merge(prev.unionByName(partial))
-        state["v"] += 1
-        out = os.path.join(root, f"store_v{state['v']}")
-        partial.write.mode("overwrite").parquet(out)
-        state["path"] = out
-
-    with _stream_run_conf(spark):
-        q = (
-            stream_events(spark, replay)
-            .writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", os.path.join(root, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(state["path"]).select(
+    store = _fold_lane(spark, sf_dir, _manifest_partial, _manifest_merge)
+    return store.select(
         "day", "bucket", "n_rows", "bytes_proxy",
         "min_event_id", "max_event_id",
     )

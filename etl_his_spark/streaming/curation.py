@@ -72,3 +72,27 @@ def contamination_matches_stream(
         grams.join(F.broadcast(bench_grams), "gram_h")
         .dropDuplicates([id_col, "gram_h"])
     )
+
+
+def fingerprint_dedup_stream(docs: DataFrame) -> DataFrame:
+    """Streaming exact dedup: one ``(fingerprint, norm_len)`` row per
+    distinct normalized text (lower-cased, whitespace runs collapsed,
+    trimmed), kept by stateful ``dropDuplicates`` on the md5
+    fingerprint; null texts are dropped.
+
+    WHICH raw row survives per fingerprint depends on micro-batch
+    arrival order, so only columns the fingerprint determines are
+    emitted: the surviving SET is deterministic even though the
+    surviving rows are not. State is one row per distinct fingerprint;
+    an unbounded ingest bounds it with ``dropDuplicatesWithinWatermark``
+    on an arrival timestamp.
+    """
+    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
+    return (
+        docs.filter(F.col("text").isNotNull())
+        .select(
+            F.md5(norm).alias("fingerprint"),
+            F.length(norm).cast("long").alias("norm_len"),
+        )
+        .dropDuplicates(["fingerprint"])
+    )

@@ -12,11 +12,14 @@ Scale design:
 - Watermarks bound state: windowed aggregation state is dropped once
   the watermark passes the window end; dedup state expires with
   ``dropDuplicatesWithinWatermark``.
-- ``availableNow`` triggers give incremental batch-like runs (used by
-  tests); continuous micro-batches are the default in production.
+- ``availableNow`` triggers give incremental batch-like runs; every
+  stream in the engine is started by ``run_available_now``.
+  Continuous micro-batches are the default in production.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,13 +105,43 @@ def dedup_stream(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+def run_available_now(
+    stream: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> None:
+    """Run ``stream`` over all currently available input and block until
+    it is done — the engine's one way to start a stream.
+
+    ``sink`` is either a memory-table name (results land in
+    ``spark.table(sink)``) or a foreachBatch function
+    ``(batch_df, batch_id)``. ``checkpoint`` is the checkpoint
+    location; without one Spark uses a temporary directory, so a rerun
+    starts from the beginning. A failure inside the stream is raised
+    here. The session's ``spark.sql.shuffle.partitions`` is left alone:
+    a checkpointed stream freezes its state-partition count at its
+    first run, so the caller owns that setting.
+    """
+    writer = stream.writeStream.outputMode(output_mode).trigger(
+        availableNow=True
+    )
+    if isinstance(sink, str):
+        writer = writer.format("memory").queryName(sink)
+    else:
+        writer = writer.foreachBatch(sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    writer.start().awaitTermination()
+
+
 def stream_to_published(
     stream: DataFrame,
     root: str,
     table: str,
     checkpoint: str,
     output_mode: str = "append",
-):
+) -> None:
     """Streaming → atomic-publish integration via foreachBatch.
 
     Each micro-batch appends ONE part under sources.writers' manifest
@@ -122,39 +155,15 @@ def stream_to_published(
     before the checkpoint commit re-delivers the micro-batch), so the
     publish is keyed by ``epoch_id``: the manifest remembers the last
     epoch per table and replayed batches are skipped — making the
-    visible table effectively-once. Returns the started StreamingQuery
-    (caller awaits/stops).
+    visible table effectively-once. Blocks until all available input
+    is published (``run_available_now``).
     """
     from ..sources.writers import publish_append_atomic
 
     def publish_batch(batch_df: DataFrame, epoch_id: int) -> None:
         publish_append_atomic(batch_df, root, table, epoch_id=epoch_id)
 
-    return (
-        stream.writeStream.foreachBatch(publish_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_to_memory(
-    stream: DataFrame, query_name: str, output_mode: str = "append"
-) -> None:
-    """Execute with availableNow into an in-memory table (test/dev path).
-
-    Blocks until all currently-available input is processed; results
-    land in ``SELECT * FROM <query_name>``.
-    """
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, publish_batch, output_mode, checkpoint)
 
 
 def stream_stream_join(

@@ -7,8 +7,10 @@ long-lived session every operator call would pin another copy of its
 input. The repo's rule (SCALE.md "localCheckpoint discipline") is a
 localCheckpoint instead, whose blocks are reclaimed with the frame.
 This test calls every formerly-leaking operator and asserts the
-CacheManager is empty afterwards. The last test fails on any engine
-localCheckpoint that bypasses ``operators/pin.pin``, the audits' hook.
+CacheManager is empty afterwards. The last two tests fail on any engine
+localCheckpoint that bypasses ``operators/pin.pin``, the audits' hook,
+and on any engine ``writeStream`` outside
+``streaming/events.run_available_now``, the one stream run path.
 """
 
 from __future__ import annotations
@@ -63,3 +65,26 @@ def test_every_engine_pin_goes_through_pin():
         and node.func.attr == "localCheckpoint"
     ]
     assert direct == [], f"pin through operators.pin.pin: {direct}"
+
+
+def test_every_engine_stream_runs_through_run_available_now():
+    pkg = Path(etl_his_spark.__file__).parent
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == pkg / "streaming" / "events.py":
+            run = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef)
+                and n.name == "run_available_now"
+            )
+            allowed = {id(node) for node in ast.walk(run)}
+        sites += [
+            f"{path.relative_to(pkg)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "writeStream"
+            and id(node) not in allowed
+        ]
+    assert sites == [], f"run streams through run_available_now: {sites}"

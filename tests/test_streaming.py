@@ -14,7 +14,7 @@ from etl_his_spark.registry import ORACLES, QUERIES
 from etl_his_spark.sources.readers import read_events_raw, read_table
 from etl_his_spark.streaming.events import (
     dedup_stream,
-    run_to_memory,
+    run_available_now,
     sessionize_stream,
     stream_events,
     windowed_counts,
@@ -34,7 +34,7 @@ def events_dir(spark, sf_dir, tmp_path_factory):
 
 def test_windowed_counts_matches_batch(spark, sf_dir, events_dir):
     stream = windowed_counts(stream_events(spark, events_dir))
-    run_to_memory(stream, "win_counts")
+    run_available_now(stream, "win_counts")
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
         for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -77,7 +77,7 @@ def test_windowed_counts_matches_batch(spark, sf_dir, events_dir):
 
 def test_dedup_stream_bounded_state(spark, events_dir):
     stream = dedup_stream(stream_events(spark, events_dir), ["user_id"])
-    run_to_memory(stream, "dedup_users")
+    run_available_now(stream, "dedup_users")
     rows = spark.sql("SELECT user_id FROM dedup_users").collect()
     ids = [r["user_id"] for r in rows]
     # within-watermark dedup on a finite in-order replay: unique users
@@ -87,7 +87,7 @@ def test_dedup_stream_bounded_state(spark, events_dir):
 
 def test_sessionize_stream_counts(spark, sf_dir, events_dir):
     stream = sessionize_stream(stream_events(spark, events_dir), gap_minutes=30)
-    run_to_memory(stream, "sessions")
+    run_available_now(stream, "sessions")
     total = spark.sql("SELECT SUM(n_events) AS n FROM sessions").first()["n"]
     batch = read_table(spark, sf_dir, "events")
     batch_total = batch.count()
@@ -112,7 +112,7 @@ def test_stateful_running_totals_matches_batch(spark, sf_dir, events_dir):
     from etl_his_spark.streaming.stateful import running_user_totals
 
     stream = running_user_totals(stream_events(spark, events_dir))
-    run_to_memory(stream, "running_totals", output_mode="update")
+    run_available_now(stream, "running_totals", output_mode="update")
     # memory sink in update mode appends every emission; the LAST row
     # per user is the lifetime total
     last = spark.sql(
@@ -145,7 +145,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, events_dir):
     purchases = src.filter(F.col("event_type") == "purchase")
     errors = src.filter(F.col("event_type") == "error")
     joined = stream_stream_join(purchases, errors, within="1 hour")
-    run_to_memory(joined, "ss_join")
+    run_available_now(joined, "ss_join")
     got = spark.sql("SELECT count(*) AS c FROM ss_join").first()["c"]
 
     batch = read_table(spark, sf_dir, "events")
@@ -173,18 +173,16 @@ def test_stream_to_published_atomic(spark, sf_dir, events_dir, tmp_path_factory)
     root = str(tmp_path_factory.mktemp("stream_pub"))
     ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
     stream = windowed_counts(stream_events(spark, events_dir))
-    q = stream_to_published(stream, root, "hourly_counts", ckpt)
-    q.awaitTermination()
+    stream_to_published(stream, root, "hourly_counts", ckpt)
     published = read_published(spark, root, "hourly_counts")
     n1 = published.count()
     assert n1 > 0
     # re-running with the same checkpoint and no new input publishes
     # nothing new (exactly-once)
-    q2 = stream_to_published(
+    stream_to_published(
         windowed_counts(stream_events(spark, events_dir)), root,
         "hourly_counts", ckpt,
     )
-    q2.awaitTermination()
     assert read_published(spark, root, "hourly_counts").count() == n1
 
 
@@ -202,7 +200,7 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir, events_dir):
         stream_events(spark, events_dir).select("event_id", "user_id"), dim,
         "user_id",
     )
-    run_to_memory(stream, "enriched")
+    run_available_now(stream, "enriched")
     got = {
         (r.event_id, r.segment)
         for r in spark.sql("SELECT event_id, segment FROM enriched").collect()
@@ -296,7 +294,7 @@ def test_streaming_contamination_agrees_with_batch(spark, tmp_path):
     stream = contamination_matches_stream(
         stream_docs(spark, corpus_dir), bench, n=3
     )
-    run_to_memory(stream, "contam_matches")
+    run_available_now(stream, "contam_matches")
     got = {
         r["doc_id"]: r["n"]
         for r in spark.sql(
@@ -320,7 +318,7 @@ def test_attribution_stream_agrees_with_batch(spark, sf_dir, events_dir):
     stream = attribution_stream(
         stream_events(spark, events_dir), gap_minutes=30
     )
-    run_to_memory(stream, "attrib")
+    run_available_now(stream, "attrib")
     got = spark.sql(
         "SELECT first_touch, count(*) AS n, SUM(purchase_cents) AS cents "
         "FROM attrib GROUP BY 1"
@@ -387,7 +385,7 @@ def test_streaming_attribution_gate_deterministic(spark, sf_dir):
 def test_streaming_dedup_drops_exact_duplicates(spark, tmp_path):
     """Crafted duplicates (case/whitespace variants included) collapse
     to one state row per normalized fingerprint across micro-batches."""
-    import pyspark.sql.functions as F
+    from etl_his_spark.streaming.curation import fingerprint_dedup_stream
 
     rows = [
         (1, "hello world", "en", "a", 11),
@@ -402,22 +400,13 @@ def test_streaming_dedup_drops_exact_duplicates(spark, tmp_path):
     src = str(tmp_path / "docs")
     df.repartition(4).write.parquet(src)
 
-    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     name = f"dedup_test_{id(df)}"
-    q = (
+    docs = (
         spark.readStream.schema(df.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-        .filter(F.col("text").isNotNull())
-        .select(F.md5(norm).alias("fingerprint"), F.length(norm).cast("long").alias("norm_len"))
-        .dropDuplicates(["fingerprint"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    run_available_now(fingerprint_dedup_stream(docs), name)
     got = spark.table(name).collect()
     assert len(got) == 2  # {hello world, different doc}
     assert {r["norm_len"] for r in got} == {11, 13}
@@ -425,7 +414,7 @@ def test_streaming_dedup_drops_exact_duplicates(spark, tmp_path):
 
 def test_gate_replay_dir_is_time_sorted(spark, sf_dir):
     """The gate harness's replay must feed micro-batches in event-time
-    order (r7 advisor): files named chunk-00i with ascending min(ts)
+    order: files named chunk-00i with ascending min(ts)
     AND strictly increasing mtimes — FileStreamSource orders unseen
     files by modification time, so both must agree for the
     monotone-watermark determinism argument to hold at any
@@ -434,9 +423,9 @@ def test_gate_replay_dir_is_time_sorted(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from etl_his_spark.plans.queries_streaming import _events_replay_dir
+    from etl_his_spark.plans.queries_streaming import _replay_dir
 
-    replay = _events_replay_dir(spark, sf_dir)
+    replay = _replay_dir(spark, sf_dir, "events")
     parts = sorted(
         p for p in os.listdir(replay) if p.endswith(".parquet")
     )
@@ -463,11 +452,11 @@ def test_gate_replay_dir_is_time_sorted(spark, sf_dir):
 
 
 def test_cdc_apply_restart_recovery(spark, sf_dir, tmp_path_factory):
-    """r10 CDC-apply lane: a crash AFTER a batch's publish but BEFORE
+    """CDC apply: a crash AFTER a batch's publish but BEFORE
     its checkpoint commit (the at-least-once window) must recover on
     restart to exactly the batch MERGE of the whole changelog —
     the replayed batch re-upserts identical rows (idempotent MERGE)."""
-    from etl_his_spark.plans.queries_streaming import _normalize_replay_order
+    from etl_his_spark.plans.queries_streaming import _write_replay
     from etl_his_spark.sources.writers import read_published
     from etl_his_spark.streaming.cdc import (
         STATE_TABLE,
@@ -478,10 +467,7 @@ def test_cdc_apply_restart_recovery(spark, sf_dir, tmp_path_factory):
 
     base = tmp_path_factory.mktemp("cdc_restart")
     replay = str(base / "replay")
-    read_events_raw(spark, sf_dir).repartitionByRange(
-        8, "ts", "event_id"
-    ).write.parquet(replay)
-    _normalize_replay_order(replay)
+    _write_replay(spark, sf_dir, "events", replay)
     root, ckpt = str(base / "root"), str(base / "ckpt")
 
     with pytest.raises(Exception, match="injected crash"):

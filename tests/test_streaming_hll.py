@@ -1,11 +1,12 @@
-"""Streaming HLL distinct-count (r10-gate machinery).
+"""Streaming HLL distinct-count.
 
 The register aggregate is a pure monotone MAX, so it runs as a
 Structured Streaming aggregation with bounded state (groups × 512
 rows) and NO watermark — late or reordered data folds in
-idempotently. These tests pin the property the r10 gate will hash:
-a real availableNow streaming execution over the multi-file replay
-produces EXACTLY the batch register table, per event_type.
+idempotently. These tests pin the property the
+``streaming_hll_users_agree`` lane's exact oracle relies on: a real
+availableNow streaming execution over the multi-file replay produces
+EXACTLY the batch register table, per event_type.
 """
 
 from __future__ import annotations
@@ -13,38 +14,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_his_spark.operators.sketches import hll_estimate, hll_registers
+from etl_his_spark.registry import QUERIES
 from etl_his_spark.sources.readers import read_table
 
 
 def test_streaming_hll_registers_agree_with_batch(spark, sf_dir):
-    from etl_his_spark.plans.queries_streaming import (
-        _events_replay_dir,
-        _fresh_sink,
-        _stream_run_conf,
-    )
-    from etl_his_spark.streaming.events import stream_events
-
-    replay = _events_replay_dir(spark, sf_dir)
-    name = _fresh_sink(spark, "stream_hll_test")
-    with _stream_run_conf(spark):
-        q = (
-            hll_registers(
-                stream_events(spark, replay).withColumn(
-                    "uid", F.col("user_id").cast("string")
-                ),
-                "uid",
-                group_cols=["event_type"],
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     streamed = {
         (r["event_type"], r["bucket"]): r["register"]
-        for r in spark.table(name).collect()
+        for r in QUERIES["streaming_hll_users_agree"](spark, sf_dir).collect()
     }
     batch = {
         (r["event_type"], r["bucket"]): r["register"]
