@@ -11,7 +11,7 @@ hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -76,13 +76,39 @@ def usuario_nombre_concat(first: Column | str, last: Column | str) -> Column:
 
 def word_tokens(col: Column | str) -> Column:
     """The corpus-wide single-space token array: ``split(trim(text),
-    ' ')`` with empties dropped — ONE definition for every operator
+    ' ')`` with empties dropped — the one definition for every operator
     whose DuckDB oracle mirrors it with ``list_filter(string_split(
-    trim(text), ' '), t -> t <> '')`` (chunking, vocab, splits,
-    sketches). A divergent re-implementation at any call site would
-    silently break that site's oracle."""
+    trim(text), ' '), t -> t <> '')``. Its row helpers are
+    :func:`token_rows` (``(keys..., token)``) and
+    :func:`token_positions` (``(doc_id, pos, token)``, 1-based). A
+    divergent re-implementation at any call site would silently break
+    that site's oracle, so ``tests/test_cache_hygiene.py`` fails on any
+    copy of the expression outside this function.
+
+    Spark and DuckDB agree on every input, NULL, ``''`` and tabs
+    included (``tests/test_functions.py``): ``trim`` strips spaces
+    only, so a tab stays inside its token on both engines."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.trim(c), " "), lambda x: x != F.lit(""))
+
+
+def token_rows(
+    docs: DataFrame, keys: tuple[str, ...] = ("doc_id",)
+) -> DataFrame:
+    """(keys..., token): one row per :func:`word_tokens` token of each
+    non-NULL ``text``; ``keys`` carries per-doc or per-source columns
+    along the explode."""
+    return docs.filter(F.col("text").isNotNull()).select(
+        *keys, F.explode(word_tokens("text")).alias("token")
+    )
+
+
+def token_positions(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, token): :func:`word_tokens` tokens with 1-based
+    positions, the oracles' ``unnest(range(1, len(ts) + 1))``."""
+    return docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.posexplode(word_tokens("text")).alias("pos0", "token")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
 
 
 def token_count(col: Column | str) -> Column:

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from .pin import pin
 
 END_WORD = "</w>"
@@ -53,17 +54,13 @@ def word_symbol_table(
 ) -> DataFrame:
     """(word, n, sym) — distinct-word counts with initial symbol strings.
 
-    Tokenization is the corpus-wide rule (single-space split, empties
-    dropped); characters come from ``regexp_extract_all('(?s).')`` so
-    the oracle's RE2 and Spark's Java regex agree on every character
-    including newlines.
+    Words are :func:`word_tokens` tokens; characters come from
+    ``regexp_extract_all('(?s).')`` so the oracle's RE2 and Spark's
+    Java regex agree on every character including newlines.
     """
-    arr = F.filter(
-        F.split(F.trim(text_col), " "), lambda x: x != F.lit("")
-    )
     words = (
         docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(arr).alias("word"))
+        .select(F.explode(word_tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )

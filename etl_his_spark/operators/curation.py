@@ -28,20 +28,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from .dedup_approx import seeded_hash60, spread_small_input
 
 # ---------------------------------------------------------------------------
 # Word n-grams
 # ---------------------------------------------------------------------------
-
-
-def words(text_col: Column) -> Column:
-    """Non-empty whitespace tokens (split on single space, drop the
-    empty strings multi-space runs produce — same as the tokenization
-    used by the dedup family)."""
-    return F.filter(
-        F.split(F.trim(text_col), " "), lambda x: x != F.lit("")
-    )
 
 
 def word_ngrams(text_col: Column, n: int) -> Column:
@@ -53,7 +45,7 @@ def word_ngrams(text_col: Column, n: int) -> Column:
     backwards when stop < start) — the WHEN guard makes it empty
     instead.
     """
-    ts = words(text_col)
+    ts = word_tokens(text_col)
     idx = F.when(
         F.size(ts) >= n, F.sequence(F.lit(1), F.size(ts) - n + 1)
     ).otherwise(F.array().cast("array<int>"))
@@ -133,7 +125,7 @@ def repetition_stats(
     cost is O(w log w) in the doc's word count, same asymptotics the
     shuffled plan paid — just without moving the grams anywhere.
     """
-    ts = words(F.col(text_col))
+    ts = word_tokens(text_col)
     # The size guard keeps both ratio denominators nonzero (and the
     # oracle filters identically) — a 0-word doc would yield NaN vs
     # NULL drift between engines.

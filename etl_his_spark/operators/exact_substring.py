@@ -32,25 +32,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from .dedup_approx import seeded_hash60
 from .pin import pin
 
 
-def tokenize_positions(docs: DataFrame, k: int) -> DataFrame:
-    """(doc_id, n_tokens, pos, token) for docs with >= k tokens.
-
-    Single-space split of trimmed text (the repo's cross-engine token
-    rule); 1-based positions.
-    """
+def _token_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, w, n_tokens): each non-NULL doc's :func:`word_tokens`
+    array and its length."""
     return (
         docs.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
-        )
+        .select("doc_id", word_tokens("text").alias("w"))
         .withColumn("n_tokens", F.size("w").cast("long"))
+    )
+
+
+def tokenize_positions(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, n_tokens, pos, token) for docs with >= k tokens:
+    :func:`word_tokens` tokens with 1-based positions."""
+    return (
+        _token_arrays(docs)
         .filter(F.col("n_tokens") >= k)
         .select(
             "doc_id",
@@ -71,14 +72,7 @@ def shingle_fingerprints(docs: DataFrame, k: int) -> DataFrame:
     the full plan argument).
     """
     return (
-        docs.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
-        )
-        .withColumn("n_tokens", F.size("w").cast("long"))
+        _token_arrays(docs)
         .filter(F.col("n_tokens") >= k)
         .select(
             "doc_id",
@@ -201,14 +195,7 @@ def exact_substring_cut(docs: DataFrame, k: int = 8) -> DataFrame:
         F.coalesce("clean_text", F.lit("")).alias("clean_text"),
     )
     short = (
-        docs.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
-        )
-        .withColumn("n_tokens", F.size("w").cast("long"))
+        _token_arrays(docs)
         .filter(F.col("n_tokens") < k)
         .select(
             "doc_id",

@@ -13,13 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("long")
 
 
 @register(
@@ -46,7 +43,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("cliente_key"),
         F.col("o_orderkey").alias("orden_id"),
         F.col("o_orderdate").alias("fecha"),
-        (F.sum(_cents("o_totalprice")).over(w).cast("double") / 100).alias(
+        (F.sum(cents("o_totalprice")).over(w).cast("double") / 100).alias(
             "total_acumulado"
         ),
     )
@@ -97,7 +94,7 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank/dense_rank/ntile over per-nation balance ordering."""
     c = read_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(
-        _cents("c_acctbal").desc(), F.col("c_custkey")
+        cents("c_acctbal").desc(), F.col("c_custkey")
     )
     return c.select(
         F.col("c_nationkey").alias("nacion_key"),
@@ -163,7 +160,7 @@ def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = read_table(spark, sf_dir, "lineitem")
     return l.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(_cents("l_extendedprice")).cast("double") / 100).alias("total"),
+        (F.sum(cents("l_extendedprice")).cast("double") / 100).alias("total"),
     )
 
 
@@ -234,7 +231,7 @@ def median_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     also scales (one shuffle + one window pass)."""
     o = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
-        _cents("o_totalprice"), F.col("o_orderkey")
+        cents("o_totalprice"), F.col("o_orderkey")
     )
     wc = Window.partitionBy("o_orderpriority")
     ranked = o.select(
@@ -363,7 +360,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_dt"),
         F.count(F.lit(1)).cast("long").alias("frequency"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+        F.sum(cents("o_totalprice"))
         .cast("long")
         .alias("monetary_cents"),
     ).transform(pin)  # customer-dim-sized; the count()

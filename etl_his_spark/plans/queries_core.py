@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..functions.text import (
     limpiar_nombres,
     nonempty,
@@ -27,11 +28,6 @@ from ..operators.surrogate import dense_ids_small, resolve_fk
 from ..operators.unpivot import unpivot_slots
 from ..registry import register
 from ..sources.readers import read_table
-
-
-def _cents(col: str | F.Column) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -474,8 +470,8 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle on the group keys; AQE coalesces post-shuffle)."""
     l = read_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag", "l_linestatus").agg(
-        (F.sum(_cents("l_quantity")).cast("double") / 100).alias("sum_qty"),
-        (F.sum(_cents("l_extendedprice")).cast("double") / 100).alias(
+        (F.sum(cents("l_quantity")).cast("double") / 100).alias("sum_qty"),
+        (F.sum(cents("l_extendedprice")).cast("double") / 100).alias(
             "sum_base_price"
         ),
         F.count(F.lit(1)).alias("count_order"),
@@ -503,7 +499,7 @@ def topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     spent = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("__cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("__cents"))
     )
     return (
         spent.orderBy(F.desc("__cents"), F.asc("c_custkey"))
@@ -538,7 +534,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") % 2 == 0)
         .groupBy("o_custkey")
-        .agg((F.sum(_cents("o_totalprice")).cast("double") / 100).alias("orden_total"))
+        .agg((F.sum(cents("o_totalprice")).cast("double") / 100).alias("orden_total"))
     )
     return c.join(o, c.c_custkey == o.o_custkey, "full_outer").select(
         F.col("c_custkey").alias("cliente_key"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import token_rows, word_tokens
 from ..operators.dedup_approx import (
     MINHASH_A,
     MINHASH_B,
@@ -32,7 +33,11 @@ from ..operators.dedup_approx import (
     weighted_minhash_signatures,
     word_shingles,
 )
-from ..operators.exact_substring import exact_substring_cut
+from ..operators.exact_substring import (
+    duplicated_islands,
+    exact_substring_cut,
+    shingle_fingerprints,
+)
 from ..operators.pin import pin
 from ..operators.similarity import (
     banded_neardup_pairs,
@@ -1204,12 +1209,10 @@ def corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc's own line list. Nothing is quadratic; the heavy shuffle
     carries one row per line, exactly like the C4 reference
     implementation's sharded groupby."""
-    from ..operators.curation import words
-
     docs = read_table(spark, sf_dir, "documents")
     lines = (
         docs.filter(F.col("text").isNotNull())
-        .select("doc_id", words(F.col("text")).alias("ts"))
+        .select("doc_id", word_tokens("text").alias("ts"))
         .select(
             "doc_id",
             F.posexplode(
@@ -1541,67 +1544,10 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the property that distinguishes ExactSubstr-via-shingles from
     suffix-array sorts at 100 TB."""
     K = 8
-    sh = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
-        )
-        .withColumn("n_tokens", F.size("w").cast("long"))
-        .filter(F.col("n_tokens") >= K)
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("n_tokens") - (K - 1)),
-                    lambda i: seeded_hash60(
-                        F.concat_ws(" ", F.slice("w", i, K))
-                    ),
-                )
-            ).alias("pos0", "fp"),
-        )
-        .select(
-            "doc_id", "n_tokens", (F.col("pos0") + 1).alias("pos"), "fp"
-        )
-        .transform(pin)
-    )
-    dup_fps = (
-        sh.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .filter(F.col("n_occ") >= 2)
-        .select("fp")
-    )
-    spans = sh.join(dup_fps, "fp").select(
-        "doc_id",
-        F.col("pos").alias("span_start"),
-        (F.col("pos") + (K - 1)).alias("span_end"),
-    )
-    worder = Window.partitionBy("doc_id").orderBy("span_start")
-    prev_max = F.max("span_end").over(
-        worder.rowsBetween(Window.unboundedPreceding, -1)
-    )
+    docs = read_table(spark, sf_dir, "documents")
+    sh = pin(shingle_fingerprints(docs, K))
     perdoc = (
-        spans.withColumn(
-            "is_new",
-            F.when(
-                prev_max.isNull() | (F.col("span_start") > prev_max), 1
-            ).otherwise(0),
-        )
-        .withColumn(
-            "island",
-            F.sum("is_new").over(
-                worder.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .groupBy("doc_id", "island")
-        .agg(
-            F.min("span_start").alias("m_start"),
-            F.max("span_end").alias("m_end"),
-        )
+        duplicated_islands(sh, K)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_dup_spans"),
@@ -2228,17 +2174,8 @@ def corpus_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab·tokens per source must stay ≲ 9e12·1e6/2 — beyond that,
     publish milli instead (scale note, not reachable at gate scale).
     """
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "source",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token"),
-        )
+    toks = token_rows(
+        read_table(spark, sf_dir, "documents"), keys=("source",)
     )
     counts = toks.groupBy("source", "token").agg(
         F.count(F.lit(1)).cast("long").alias("c")

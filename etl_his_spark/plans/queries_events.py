@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..operators.event_time import (
     asof_join,
     range_join_count_linear,
@@ -19,10 +20,6 @@ from ..operators.event_time import (
 )
 from ..registry import register
 from ..sources.readers import read_table
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("long")
 
 
 @register(
@@ -50,7 +47,7 @@ def events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         [
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents("value")).cast("double") / 100).alias("sum_value"),
+            (F.sum(cents("value")).cast("double") / 100).alias("sum_value"),
         ],
     )
     return out.select("window_start", "event_type", "n_events", "sum_value")
@@ -217,9 +214,9 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events")
     s = assign_sessions(e, "user_id", "ts", 30, order_tiebreak=["event_id"])
     is_purchase = (F.col("event_type") == "purchase").cast("long")
-    cents = F.when(
+    purchase_cents = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 100).cast("long"),
+        cents("value"),
     ).otherwise(F.lit(0))
     return (
         s.groupBy("user_id", "session_id")
@@ -228,7 +225,9 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type", F.struct(F.col("ts"), F.col("event_id"))
             ).alias("first_touch"),
             F.sum(is_purchase).alias("n_purchases"),
-            F.coalesce(F.sum(cents), F.lit(0)).alias("purchase_cents"),
+            F.coalesce(F.sum(purchase_cents), F.lit(0)).alias(
+                "purchase_cents"
+            ),
         )
         .filter(F.col("n_purchases") > 0)
     )
@@ -333,7 +332,7 @@ def events_decayed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_us = e.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
         # exact epoch-MICROS integer floor-div (a seconds cast would
         # truncate each timestamp before subtracting — off-by-one
         # weeks near boundaries)

@@ -6,15 +6,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
+from ..functions.text import word_tokens
 from ..operators.dedup_approx import seeded_hash60
 from ..operators.pin import pin
 from ..operators.sketches import hll_registers
 from ..registry import register
 from ..sources.readers import read_table
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("long")
 
 
 @register(
@@ -44,7 +42,7 @@ def events_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents("value")).cast("double") / 100).alias("sum_value"),
+            (F.sum(cents("value")).cast("double") / 100).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -81,7 +79,7 @@ def events_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.window("ts", "1 hour").alias("w"), "user_id"
-    ).agg(F.sum(_cents("value")).alias("cents"))
+    ).agg(F.sum(cents("value")).alias("cents"))
     w = Window.partitionBy("w").orderBy(F.desc("cents"), F.asc("user_id"))
     return (
         hourly.withColumn("rnk", F.row_number().over(w))
@@ -263,8 +261,7 @@ def stats_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     extreme values poison the mean. Two window passes + one broadcast
     of the 5-row per-type medians."""
     e = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = F.round(F.col("value") * 100).cast("long")
-    vals = e.select("event_type", "event_id", cents.alias("cents"))
+    vals = e.select("event_type", "event_id", cents("value").alias("cents"))
     w = Window.partitionBy("event_type").orderBy("cents", "event_id")
     wc = Window.partitionBy("event_type")
     ranked = vals.select(
@@ -442,7 +439,7 @@ def orders_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("long").alias("yr"),
         F.month("o_orderdate").cast("long").alias("mo"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+        F.sum(cents("o_totalprice"))
         .cast("long")
         .alias("revenue_cents")
     )
@@ -504,8 +501,7 @@ def events_churn_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         F.col("event_type") == "purchase",
-                        F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
-                        .cast("long"),
+                        cents(F.coalesce(F.col("value"), F.lit(0.0))),
                     ).otherwise(0)
                 ),
                 F.lit(0),
@@ -637,9 +633,7 @@ def events_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.filter(F.col("value").isNotNull())
         .groupBy("user_id", F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.max(F.round(F.col("value") * 100).cast("long")).alias("cents")
-        )
+        .agg(F.max(cents("value")).alias("cents"))
     )
     bounds = e.agg(
         F.min(F.col("ts").cast("date")).alias("mn"),
@@ -1228,9 +1222,7 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = read_table(spark, sf_dir, "documents")
     side = F.substring("source", 4, 10).cast("long")
-    tok = F.explode(
-        F.filter(F.split(F.trim("text"), " "), lambda x: x != "")
-    ).alias("token")
+    tok = F.explode(word_tokens("text")).alias("token")
     # Both vocab dims feed two consumers each (atoks: bit build + the
     # truth join; btoks: probe + the count base). They are BOUNDED
     # (distinct tokens — Heaps-law sublinear), so pin them lazily per

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..operators.merge import merge_delete, merge_upsert, scd2_from_events
 from ..operators.pin import pin
 from ..registry import register
@@ -212,7 +213,7 @@ def table_diff_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey"),
         F.col("o_orderstatus").alias("estado"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     k = F.col("o_orderkey")
     new = old.filter(k % 97 != 0).withColumn(
@@ -275,7 +276,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v2 = orders.filter(k % 2 == 1).select(
         F.col("o_orderpriority").alias("prioridad"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     v1.write.mode("overwrite").parquet(os.path.join(root, "batch=1"))
     v2.write.mode("overwrite").parquet(os.path.join(root, "batch=2"))
@@ -323,7 +324,7 @@ def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey"),
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     k = F.col("o_orderkey")
     new = old.filter(k % 97 != 0).withColumn(

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import token_rows, word_tokens
 from ..operators.dedup_approx import seeded_hash60
 from ..operators.pin import pin
 from ..registry import register
@@ -58,22 +59,11 @@ _TOKS_CTE = """
 """
 
 
-def _tokens(docs: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
-    """(keys..., token) — the corpus-wide tokenization rule, ONE
-    definition for every consumer; ``keys`` lets per-source consumers
-    (curation_lm_report) ride the same explode without re-stating it."""
-    arr = F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select(*keys, F.explode(arr).alias("token"))
-    )
-
-
 def _token_counts(docs: DataFrame):
     """(toks, cnt, tot) — the unigram-LM building blocks shared by
     quality_unigram_likelihood and curation_lm_report (one definition;
     a change to tokenization or totals moves both queries together)."""
-    toks = _tokens(docs)
+    toks = token_rows(docs)
     # cnt feeds two branches in both consumers (the per-token join and
     # the totals row); the lazy checkpoint pins the vocab-bounded frame
     # so the corpus-sized explode+count runs once, not per branch.
@@ -95,11 +85,10 @@ def _bigram_rows(
     """(keys..., bg) — adjacent-token bigrams as 60-bit md5 longs, the
     shared pipeline of quality_novel_ngrams and curation_lm_report
     (which passes ``keys=("source",)`` for its per-source roll-up —
-    same one-definition rule as _tokens)."""
-    arr = F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
+    same one-definition rule as token_rows)."""
     return (
         docs.filter(F.col("text").isNotNull())
-        .select(*keys, arr.alias("ts"))
+        .select(*keys, word_tokens("text").alias("ts"))
         .filter(F.size("ts") >= 2)
         .select(
             *keys,
@@ -526,7 +515,7 @@ def curation_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and joined every token INSTANCE against the count dim, then
     # against src by doc_id — two fact-sized joins. The per-source
     # decision needs only (source, token) multiplicities, so carry
-    # ``source`` through ONE explode (_tokens with keys= — the shared
+    # ``source`` through ONE explode (token_rows with keys= — the shared
     # definition, not a re-statement), aggregate to the
     # (sources × vocab)-bounded ``stok`` first (map-side partial agg),
     # and derive cnt / tot / tok_src from it: the instance⋈cnt and
@@ -534,7 +523,7 @@ def curation_lm_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab-sized. Same exact integer sums, value-identical output
     # (n_tokens = Σk, sum_freq = Σ k·c — each term ≤ the old total).
     stok = (
-        _tokens(docs, keys=("source",))
+        token_rows(docs, keys=("source",))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("k"))
         .transform(pin)
@@ -676,8 +665,9 @@ def curation_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    ws = F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
-    base = d.select("doc_id", ws.alias("ws")).filter(F.size("ws") > 0)
+    base = d.select("doc_id", word_tokens("text").alias("ws")).filter(
+        F.size("ws") > 0
+    )
     sum_len = F.aggregate(
         F.transform("ws", lambda w: F.length(w)),
         F.lit(0),
@@ -749,9 +739,8 @@ def curation_boilerplate_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame
     d = read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    ws = F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
     pfx = (
-        d.select("doc_id", ws.alias("ws"))
+        d.select("doc_id", word_tokens("text").alias("ws"))
         .filter(F.size("ws") >= PREFIX_TOKENS)
         .select(
             "doc_id",
@@ -856,10 +845,9 @@ def quality_bigram_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup_approx import seeded_hash60
 
     docs = read_table(spark, sf_dir, "documents")
-    arr = F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
     big_prev = (
         docs.filter(F.col("text").isNotNull())
-        .select("doc_id", arr.alias("ts"))
+        .select("doc_id", word_tokens("text").alias("ts"))
         .filter(F.size("ts") >= 2)
         .select(
             "doc_id",
@@ -880,7 +868,7 @@ def quality_bigram_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
             seeded_hash60(F.col("p.bg_s")).alias("bg"),
         )
     )
-    toks = _tokens(docs)
+    toks = token_rows(docs)
     # Both count dimensions are bounded (Heaps law) and each feeds two
     # branches; lazy checkpoints pin them so the corpus-sized explodes
     # run once per dimension (the curation_lm_report treatment).
@@ -979,9 +967,7 @@ def curation_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
+            word_tokens("text").alias("w"),
         )
     )
     scored = words.select(
@@ -1122,9 +1108,7 @@ def quality_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
+            word_tokens("text").alias("w"),
         )
         .withColumn("n", F.size("w"))
     )

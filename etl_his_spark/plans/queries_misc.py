@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
@@ -342,7 +343,7 @@ def skew_salted_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_agg
 
     o = read_table(spark, sf_dir, "orders").withColumn(
-        "cents", F.round(F.col("o_totalprice") * 100).cast("long")
+        "cents", cents("o_totalprice")
     )
     return salted_agg(
         o,
@@ -412,7 +413,7 @@ def publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(cents("o_totalprice"))
             .cast("long").alias("total_cents"),
         )
     )
@@ -502,7 +503,7 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_orderpriority").alias("prioridad"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(cents("l_extendedprice"))
             .cast("long")
             .alias("revenue_cents"),
         )
@@ -550,7 +551,7 @@ def bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_orderpriority").alias("prioridad"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("total_cents"),
         )

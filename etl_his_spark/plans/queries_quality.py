@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..operators.quality import with_violations
 from ..registry import register
 from ..sources.readers import read_table
@@ -79,15 +80,15 @@ def stats_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of order totals (bin = floor(x/50k)) —
     one pass, one shuffle on the bin id."""
     o = read_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    price = cents("o_totalprice")
     return (
         o.groupBy(
             F.floor(F.col("o_totalprice") / 50000).cast("long").alias("bin")
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.min(cents).cast("double") / 100).alias("bin_min"),
-            (F.max(cents).cast("double") / 100).alias("bin_max"),
+            (F.min(price).cast("double") / 100).alias("bin_min"),
+            (F.max(price).cast("double") / 100).alias("bin_max"),
         )
     )
 
@@ -460,7 +461,7 @@ def table_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
         "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
     )
     cols = [
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",

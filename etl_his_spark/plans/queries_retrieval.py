@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import token_rows, word_tokens
 from ..operators.dedup_approx import seeded_hash60, shingle_rows
 from ..operators.pin import pin
 from ..operators.similarity import brute_force_topk, ivf_topk
@@ -94,18 +95,7 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on the doc_id shuffle, fixed-order pivot sum, and a global
     top-k via orderBy+limit — TakeOrdered, per-partition heaps, no
     single-partition exchange at any corpus size."""
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token"),
-        )
-    )
+    toks = token_rows(read_table(spark, sf_dir, "documents"))
     # dl feeds the corpus totals AND the scoring join; tf feeds the
     # df dimension AND the scoring join. Lazy checkpoints pin both (dl
     # is one row per doc, tf is term-filtered — each far smaller than
@@ -956,17 +946,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import dot, norm, to_double_array
 
     docs = read_table(spark, sf_dir, "documents")
-    toks = (
-        docs.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token"),
-        )
-    )
+    toks = token_rows(docs)
     # dl feeds the corpus totals AND the scoring join; tf feeds the
     # df dimension AND the scoring join. Lazy checkpoints pin both (dl
     # is one row per doc, tf is term-filtered — each far smaller than
@@ -1123,18 +1103,7 @@ def retrieval_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCASTS into the expansion join (no full-corpus second pass:
     the join prunes to feedback docs before the expansion agg), one
     final {_PRF_EXPANSION_K}-row top-k."""
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token"),
-        )
-    )
+    toks = token_rows(read_table(spark, sf_dir, "documents"))
     # toks feeds both the scoring and expansion subtrees — one
     # materialization (lazy; the TakeOrdered feedback job is the
     # first consumer)
@@ -2002,11 +1971,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("t"),
+            F.explode(word_tokens("text")).alias("t"),
         )
         .select("doc_id", seeded_hash60(F.col("t")).alias("tok"))
         .distinct()

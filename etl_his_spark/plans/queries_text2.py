@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import _STOPWORDS_EN
+from ..functions.money import cents
+from ..functions.text import _STOPWORDS_EN, token_rows, word_tokens
 from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
@@ -270,12 +271,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); the probe broadcasts the counter table."""
     from ..operators.sketches import count_min_build, count_min_probe
 
-    docs = read_table(spark, sf_dir, "documents")
-    from ..functions.text import word_tokens
-
-    toks = docs.filter(F.col("text").isNotNull()).select(
-        F.explode(word_tokens("text")).alias("token")
-    )
+    toks = token_rows(read_table(spark, sf_dir, "documents"), keys=())
     counters = count_min_build(toks, "token")
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("true_n"))
     # orderBy+limit compiles to TakeOrderedAndProject — a distributed
@@ -340,8 +336,6 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join); both count dimensions are Heaps-law vocab-sized joins
     AQE can broadcast; the two totals are 1-row broadcasts; the top-50
     is TakeOrderedAndProject, never a single-partition sort."""
-    from ..functions.text import word_tokens
-
     d = read_table(spark, sf_dir, "documents")
     toked = (
         d.filter(F.col("text").isNotNull())
@@ -451,8 +445,6 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     between shuffling two term posting lists and shuffling the whole
     corpus); the adjacency join is keyed on (doc_id, position) and the
     3-row phrase table rides a broadcast equi-join."""
-    from ..functions.text import word_tokens
-
     firsts = sorted({p[0] for p in PHRASES})
     seconds = sorted({p[1] for p in PHRASES})
     phr = spark.createDataFrame(PHRASES, ["p1", "p2", "phrase"])
@@ -546,7 +538,7 @@ def stats_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     wn = Window.partitionBy("o_orderpriority")
     ranked = o.select(
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(wn).alias("n"),
     )
@@ -631,18 +623,7 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: explode → (doc, token) counting agg → doc agg; both
     shuffles are map-side-combining hash aggs keyed on doc, linear at
     corpus scale."""
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token"),
-        )
-    )
+    toks = token_rows(read_table(spark, sf_dir, "documents"))
     tf = toks.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -715,9 +696,7 @@ def inference_prefix_cache_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select(
             "doc_id",
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-            ).alias("w"),
+            word_tokens("text").alias("w"),
         )
     )
     prefixed = words.select(
@@ -821,17 +800,7 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_min_probe,
     )
 
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token")
-        )
-    )
+    toks = token_rows(read_table(spark, sf_dir, "documents"), keys=())
     tf = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
@@ -908,16 +877,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters either engine. One groupBy(source, token) + one per-source
     rank window; everything after is 20 rows.
     """
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull()
-    )
-    toks = docs.select(
-        "source",
-        F.explode(
-            F.filter(
-                F.split(F.trim("text"), " "), lambda x: x != ""
-            )
-        ).alias("token"),
+    toks = token_rows(
+        read_table(spark, sf_dir, "documents"), keys=("source",)
     )
     freqs = toks.groupBy("source", "token").agg(
         F.count(F.lit(1)).cast("long").alias("f")
@@ -1004,9 +965,7 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    w = F.size(
-        F.filter(F.split(F.trim("text"), " "), lambda x: x != F.lit(""))
-    ).cast("long")
+    w = F.size(word_tokens("text")).cast("long")
     syl = F.expr("size(regexp_extract_all(text, '[aeiou]+', 0))").cast(
         "long"
     )
@@ -1305,18 +1264,7 @@ def text_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom); the rank window partitions by category over the
     vocab-bounded classed dim.
     """
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("token"),
-        )
-    )
+    toks = token_rows(read_table(spark, sf_dir, "documents"))
     toks = pin(toks)
     oldc = (
         toks.filter(F.col("doc_id") % 2 == 0)

@@ -12,13 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..registry import register
 from ..sources.readers import read_table
-
-
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100).cast("long")
 
 
 @register(
@@ -48,26 +44,26 @@ def tpch_q1_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     the map-side-combine benchmark shape. Averages derived from exact
     sums so cross-engine floats agree bit-for-bit."""
     l = read_table(spark, sf_dir, "lineitem")
-    disc_price = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    charge = _cents(
+    disc_price = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    charge = cents(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
     )
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.sum(_cents("l_quantity")).cast("double") / 100).alias("sum_qty"),
-            (F.sum(_cents("l_extendedprice")).cast("double") / 100).alias(
+            (F.sum(cents("l_quantity")).cast("double") / 100).alias("sum_qty"),
+            (F.sum(cents("l_extendedprice")).cast("double") / 100).alias(
                 "sum_base_price"
             ),
             (F.sum(disc_price).cast("double") / 100).alias("sum_disc_price"),
             (F.sum(charge).cast("double") / 100).alias("sum_charge"),
             (
-                F.sum(_cents("l_quantity")).cast("double")
+                F.sum(cents("l_quantity")).cast("double")
                 / (F.lit(100) * F.count(F.lit(1)))
             ).alias("avg_qty"),
             (
-                F.sum(_cents("l_discount")).cast("double")
+                F.sum(cents("l_discount")).cast("double")
                 / (F.lit(100) * F.count(F.lit(1)))
             ).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
@@ -125,7 +121,7 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute (single-row result; exact-cents numerator/denominator)."""
     l = read_table(spark, sf_dir, "lineitem")
     p = read_table(spark, sf_dir, "part")
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0))
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)

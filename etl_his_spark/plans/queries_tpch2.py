@@ -40,17 +40,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..registry import register
 from ..sources.readers import read_table
 
 
-def _cents(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100).cast("long")
-
-
 def _rev_cents() -> F.Column:
-    return _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    return cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
 
 
 _TS = lambda s: F.lit(s).cast("timestamp")  # noqa: E731
@@ -141,12 +137,12 @@ def tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.filter(
             (F.col("l_shipdate") >= _TS("1996-01-01 00:00:00"))
             & (F.col("l_shipdate") < _TS("1997-01-01 00:00:00"))
-            & _cents("l_discount").between(2, 4)
+            & cents("l_discount").between(2, 4)
             & (F.col("l_quantity") < 24)
         )
         .agg(
             (
-                F.sum(_cents(F.col("l_extendedprice") * F.col("l_discount")))
+                F.sum(cents(F.col("l_extendedprice") * F.col("l_discount")))
                 .cast("double") / 100
             ).alias("revenue")
         )
@@ -297,7 +293,7 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = read_table(spark, sf_dir, "supplier")
     n = read_table(spark, sf_dir, "nation")
     o = read_table(spark, sf_dir, "orders")
-    profit = _rev_cents() - _cents(F.col("p_retailprice") * F.col("l_quantity"))
+    profit = _rev_cents() - cents(F.col("p_retailprice") * F.col("l_quantity"))
     return (
         l.join(F.broadcast(p.select("p_partkey", "p_retailprice")),
                l.l_partkey == F.col("p_partkey"))
@@ -352,7 +348,7 @@ def tpch_q11_important(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n.select("n_nationkey")),
               F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(_cents("l_extendedprice")).alias("val_cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("val_cents"))
     )
     total = natl.agg(F.sum("val_cents").cast("double").alias("total_cents"))
     return (
@@ -522,7 +518,7 @@ def tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     per_part = l.groupBy(F.col("l_partkey").alias("pk")).agg(
         (
-            F.sum(_cents("l_quantity")).cast("double")
+            F.sum(cents("l_quantity")).cast("double")
             / (F.lit(100) * F.count(F.lit(1)))
         ).alias("avg_qty")
     )
@@ -531,7 +527,7 @@ def tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_part, F.col("l_partkey") == F.col("pk"))
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
-            (F.sum(_cents("l_extendedprice")).cast("double") / 700).alias(
+            (F.sum(cents("l_extendedprice")).cast("double") / 700).alias(
                 "avg_yearly"
             )
         )
@@ -567,7 +563,7 @@ def tpch_q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = read_table(spark, sf_dir, "customer")
     big = (
         l.groupBy("l_orderkey")
-        .agg(F.sum(_cents("l_quantity")).alias("qty_cents"))
+        .agg(F.sum(cents("l_quantity")).alias("qty_cents"))
         .filter(F.col("qty_cents") > 25000)
     )
     return (
@@ -654,7 +650,7 @@ def tpch_q20_promo_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(F.broadcast(p.select("p_partkey")),
                l.l_partkey == F.col("p_partkey"), "leftsemi")
         .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(_cents("l_quantity")).alias("qty_cents"))
+        .agg(F.sum(cents("l_quantity")).alias("qty_cents"))
         .filter(F.col("qty_cents") > 9000)
         .select("l_suppkey")
     )
@@ -753,7 +749,7 @@ def tpch_q22_dormant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
         (
-            F.sum(_cents("c_acctbal")).cast("double")
+            F.sum(cents("c_acctbal")).cast("double")
             / (F.lit(100) * F.count(F.lit(1)))
         ).alias("avg_bal")
     )
@@ -764,6 +760,6 @@ def tpch_q22_dormant(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            (F.sum(_cents("c_acctbal")).cast("double") / 100).alias("totacctbal"),
+            (F.sum(cents("c_acctbal")).cast("double") / 100).alias("totacctbal"),
         )
     )

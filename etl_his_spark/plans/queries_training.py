@@ -10,7 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import token_count, word_token_count
+from ..functions.text import (
+    token_count,
+    token_positions,
+    word_token_count,
+    word_tokens,
+)
 from ..operators.packing import mixture_sample, pack_sequences
 from ..operators.pin import pin
 from ..registry import register
@@ -133,8 +138,6 @@ def inference_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why serving stacks length-sort before batching: batching
     uniformly at random pads every sequence to the batch max. The
     per-bucket window parallelizes by bucket; nothing global."""
-    from ..functions.text import word_tokens
-
     docs = read_table(spark, sf_dir, "documents")
     sized = (
         docs.filter(F.col("text").isNotNull())
@@ -428,8 +431,6 @@ def training_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose key domain is vocab² (Heaps-law bounded) and whose partial
     aggregation collapses each partition to distinct pairs before the
     exchange. min-support 5 keeps the gate output report-sized."""
-    from ..functions.text import word_tokens
-
     d = read_table(spark, sf_dir, "documents")
     ts = F.col("ts")
     n = F.size("ts")
@@ -514,8 +515,6 @@ def training_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     its cumulative window are vocab-bounded (the stats_ks_drift
     bounded-global-window argument — ≤ |V| rows at any corpus size)
     and the 1-row total rides the documented broadcast allowlist."""
-    from ..functions.text import word_tokens
-
     d = read_table(spark, sf_dir, "documents")
     uni = (
         d.filter(F.col("text").isNotNull())
@@ -709,18 +708,8 @@ def training_span_mask_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     two doc-keyed aggs. Integer micro-units; no doubles."""
     from ..operators.dedup_approx import seeded_hash60
 
-    toks = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.filter(
-                    F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-                )
-            ).alias("pos0", "token"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"))
+    toks = token_positions(read_table(spark, sf_dir, "documents")).select(
+        "doc_id", "pos"
     )
     wdoc = Window.partitionBy("doc_id")
     sized = toks.withColumn(

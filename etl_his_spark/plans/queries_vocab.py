@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import token_positions
 from ..operators.surrogate import dense_ids
 from ..registry import register
 from ..sources.readers import read_table
@@ -61,17 +62,6 @@ def _maybe_broadcast_vocab(vocab: DataFrame, docs: DataFrame) -> DataFrame:
     return vocab
 
 
-def _tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, token) — 1-based positions over the single-space
-    split with empties dropped (the corpus-wide tokenization rule)."""
-    arr = F.filter(
-        F.split(F.trim("text"), " "), lambda x: x != F.lit("")
-    )
-    return docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", F.posexplode(arr).alias("pos0", "token")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
-
-
 _TOKS_CTE = """
     toks AS (
         SELECT doc_id, i AS pos, ts[i] AS token
@@ -104,7 +94,7 @@ def training_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, dense vocab id (most frequent = 1, ties lexical)."""
     docs = read_table(spark, sf_dir, "documents")
     cnt = (
-        _tokens(docs)
+        token_positions(docs)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= MIN_FREQ)
@@ -148,7 +138,7 @@ def training_tokenize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_maybe_broadcast_vocab``): broadcast below the Heaps'-law corpus
     threshold, shuffle join above it. SCALE.md "vocab joins"."""
     docs = read_table(spark, sf_dir, "documents")
-    toks = _tokens(docs)
+    toks = token_positions(docs)
     vocab = training_vocab_build(spark, sf_dir).select("token", "vocab_id")
     return (
         toks.join(_maybe_broadcast_vocab(vocab, docs), "token", "left")
@@ -254,7 +244,7 @@ def training_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a left probe join, broadcast only below the size gate (see
     ``_maybe_broadcast_vocab``); one groupBy on source."""
     docs = read_table(spark, sf_dir, "documents")
-    toks = _tokens(docs)
+    toks = token_positions(docs)
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -427,7 +417,9 @@ def training_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping = bpe_encode_words(docs, k=BPE_STEPS).select(
         "word", nsub.alias("n_sub")
     )
-    toks = _tokens(docs).select("doc_id", F.col("token").alias("word"))
+    toks = token_positions(docs).select(
+        "doc_id", F.col("token").alias("word")
+    )
     return (
         toks.join(mapping, "word")
         .groupBy("doc_id")

@@ -42,7 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import cents
 from ..operators.merge import merge_upsert
+from ..operators.pin import pin
 from ..sources.writers import publish_atomic, read_published, resolve_manifest
 
 STATE_TABLE = "user_state"
@@ -62,9 +64,7 @@ def latest_per_key(batch: DataFrame) -> DataFrame:
             "user_id",
             F.unix_micros("ts").alias("last_ts_us"),
             F.col("event_type").alias("last_event_type"),
-            F.round(F.col("value") * 100)
-            .cast("long")
-            .alias("last_value_cents"),
+            cents("value").alias("last_value_cents"),
         )
     )
 
@@ -73,8 +73,13 @@ def apply_cdc_batch(
     spark: SparkSession, batch: DataFrame, root: str
 ) -> None:
     """One foreachBatch application: MERGE the batch's latest rows
-    into the current publish and atomically re-publish."""
-    latest = latest_per_key(batch)
+    into the current publish and atomically re-publish.
+
+    ``latest`` feeds both sides of ``merge_upsert`` (the anti-join and
+    the union), so it is pinned eagerly, the rule ``publish_atomic``
+    states for shared upstreams: unpinned, each side re-read the
+    micro-batch (``numInputRows`` 1000 for a 500-row batch)."""
+    latest = pin(latest_per_key(batch), eager=True)
     if resolve_manifest(root):
         target = read_published(spark, root, STATE_TABLE)
     else:

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.money import cents
+
 # Streaming-side schema: ts arrives as nanos-since-epoch (see
 # sources.readers on the nanosecond parquet issue) and is converted.
 EVENTS_RAW_SCHEMA = T.StructType(
@@ -62,8 +64,7 @@ def windowed_counts(
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")).cast("double") / 100)
-            .alias("sum_value"),
+            (F.sum(cents("value")).cast("double") / 100).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"), "event_type", "n_events",
@@ -244,9 +245,9 @@ def attribution_stream(
     session as the watermark passes it.
     """
     is_purchase = (F.col("event_type") == "purchase").cast("long")
-    cents = F.when(
+    purchase_cents = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 100).cast("long"),
+        cents("value"),
     ).otherwise(F.lit(0))
     return (
         events.withWatermark("ts", watermark)
@@ -259,7 +260,7 @@ def attribution_stream(
                 "event_type", F.struct(F.col("ts"), F.col("event_id"))
             ).alias("first_touch"),
             F.sum(is_purchase).alias("n_purchases"),
-            F.sum(cents).alias("purchase_cents"),
+            F.sum(purchase_cents).alias("purchase_cents"),
         )
         .filter(F.col("n_purchases") > 0)
         .select(

@@ -3,40 +3,38 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from etl_his_spark.sources.bucketing import (
-    plan_has_exchange,
-    read_bucketed,
-    write_bucketed,
-)
 from etl_his_spark.sources.readers import read_table
+from etl_his_spark.sources.writers import write_bucketed
+
+
+def plan_has_exchange(df) -> bool:
+    """True if the physical plan contains a shuffle Exchange — the
+    thing bucketed joins exist to eliminate."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "Exchange hashpartitioning" in plan
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    # orphaned warehouse dirs (location without metastore entry) block
-    # saveAsTable with LOCATION_ALREADY_EXISTS — clear both defensively
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+def bucketed_tables(spark, sf_dir, tmp_path_factory):
+    root = tmp_path_factory.mktemp("bucketing")
     orders = read_table(spark, sf_dir, "orders")
     lineitem = read_table(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], n_buckets=8,
-                   sort_by=["o_orderkey"])
+    write_bucketed(orders, "b_orders", str(root / "b_orders"),
+                   ["o_orderkey"], 8, sort_cols=["o_orderkey"])
     write_bucketed(
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem", ["o_orderkey"], n_buckets=8, sort_by=["o_orderkey"],
+        "b_lineitem", str(root / "b_lineitem"),
+        ["o_orderkey"], 8, sort_cols=["o_orderkey"],
     )
-    return "b_orders", "b_lineitem"
+    yield "b_orders", "b_lineitem"
+    spark.sql("DROP TABLE IF EXISTS b_orders")
+    spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_bucketed_join_no_shuffle(spark, bucketed_tables):
     bo, bl = bucketed_tables
-    joined = read_bucketed(spark, bo).join(read_bucketed(spark, bl), "o_orderkey")
+    joined = spark.table(bo).join(spark.table(bl), "o_orderkey")
     # co-located: neither side needs an Exchange
     assert not plan_has_exchange(joined)
     assert joined.count() > 0
@@ -54,7 +52,7 @@ def test_unbucketed_join_has_shuffle_for_contrast(spark, sf_dir):
 def test_bucketed_join_correctness(spark, sf_dir, bucketed_tables):
     bo, bl = bucketed_tables
     bucketed_count = (
-        read_bucketed(spark, bo).join(read_bucketed(spark, bl), "o_orderkey").count()
+        spark.table(bo).join(spark.table(bl), "o_orderkey").count()
     )
     o = read_table(spark, sf_dir, "orders")
     l = read_table(spark, sf_dir, "lineitem")

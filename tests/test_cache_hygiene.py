@@ -7,10 +7,14 @@ long-lived session every operator call would pin another copy of its
 input. The repo's rule (SCALE.md "localCheckpoint discipline") is a
 localCheckpoint instead, whose blocks are reclaimed with the frame.
 This test calls every formerly-leaking operator and asserts the
-CacheManager is empty afterwards. The last two tests fail on any engine
-localCheckpoint that bypasses ``operators/pin.pin``, the audits' hook,
-and on any engine ``writeStream`` outside
-``streaming/events.run_available_now``, the one stream run path.
+CacheManager is empty afterwards. The last four tests are ``ast`` scans
+of ``etl_his_spark/`` that give each construct one owner and fail on
+any copy outside it: a ``localCheckpoint`` outside ``operators/pin.pin``
+(the audits' hook), a ``writeStream`` outside
+``streaming/events.run_available_now`` (the one stream run path), and
+the two rules the DuckDB oracles mirror, the corpus tokenizer outside
+``functions/text.word_tokens`` and the cents rule outside
+``functions/money.cents``.
 """
 
 from __future__ import annotations
@@ -53,38 +57,102 @@ def test_his_pipeline_leaves_no_cache(spark):
     assert _cache_empty(spark)
 
 
-def test_every_engine_pin_goes_through_pin():
-    pkg = Path(etl_his_spark.__file__).parent
-    direct = [
-        f"{path.relative_to(pkg)}:{node.lineno}"
-        for path in sorted(pkg.rglob("*.py"))
-        if path != pkg / "operators" / "pin.py"
-        for node in ast.walk(ast.parse(path.read_text()))
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "localCheckpoint"
-    ]
-    assert direct == [], f"pin through operators.pin.pin: {direct}"
-
-
-def test_every_engine_stream_runs_through_run_available_now():
+def _engine_sites(match, allowed_fn: tuple[str, str]) -> list[str]:
+    """``path:line`` of every ast node in ``etl_his_spark/`` that
+    ``match`` accepts, outside the one function ``allowed_fn`` =
+    (module path, function name) that owns the construct."""
     pkg = Path(etl_his_spark.__file__).parent
     sites = []
     for path in sorted(pkg.rglob("*.py")):
         tree = ast.parse(path.read_text())
         allowed = set()
-        if path == pkg / "streaming" / "events.py":
-            run = next(
+        if path == pkg / allowed_fn[0]:
+            owner = next(
                 n for n in tree.body
-                if isinstance(n, ast.FunctionDef)
-                and n.name == "run_available_now"
+                if isinstance(n, ast.FunctionDef) and n.name == allowed_fn[1]
             )
-            allowed = {id(node) for node in ast.walk(run)}
+            allowed = {id(node) for node in ast.walk(owner)}
         sites += [
             f"{path.relative_to(pkg)}:{node.lineno}"
             for node in ast.walk(tree)
-            if isinstance(node, ast.Attribute)
-            and node.attr == "writeStream"
-            and id(node) not in allowed
+            if match(node) and id(node) not in allowed
         ]
+    return sites
+
+
+def _call_of(node, name: str) -> bool:
+    """``node`` is a call of ``name`` (``F.name(...)``, ``x.name(...)``
+    or ``name(...)``)."""
+    return isinstance(node, ast.Call) and name in (
+        getattr(node.func, "attr", None),
+        getattr(node.func, "id", None),
+    )
+
+
+def _is_str(node, value: str) -> bool:
+    return isinstance(node, ast.Constant) and node.value == value
+
+
+def test_every_engine_pin_goes_through_pin():
+    sites = _engine_sites(
+        lambda node: isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint",
+        ("operators/pin.py", "pin"),
+    )
+    assert sites == [], f"pin through operators.pin.pin: {sites}"
+
+
+def test_every_engine_stream_runs_through_run_available_now():
+    sites = _engine_sites(
+        lambda node: isinstance(node, ast.Attribute)
+        and node.attr == "writeStream",
+        ("streaming/events.py", "run_available_now"),
+    )
     assert sites == [], f"run streams through run_available_now: {sites}"
+
+
+def _is_word_tokens_copy(node) -> bool:
+    # filter(split(trim(<text>), " "), <lambda>); word_token_count's
+    # regex split is a different rule and passes.
+    if not (_call_of(node, "filter") and node.args):
+        return False
+    split = node.args[0]
+    return (
+        _call_of(split, "split")
+        and len(split.args) >= 2
+        and _call_of(split.args[0], "trim")
+        and _is_str(split.args[1], " ")
+    )
+
+
+def _is_cents_copy(node) -> bool:
+    # round(<x> * 100).cast("long")
+    if not (
+        _call_of(node, "cast")
+        and isinstance(node.func, ast.Attribute)
+        and node.args
+        and _is_str(node.args[0], "long")
+    ):
+        return False
+    rnd = node.func.value
+    return (
+        _call_of(rnd, "round")
+        and len(rnd.args) == 1
+        and isinstance(rnd.args[0], ast.BinOp)
+        and isinstance(rnd.args[0].op, ast.Mult)
+        and isinstance(rnd.args[0].right, ast.Constant)
+        and rnd.args[0].right.value == 100
+    )
+
+
+def test_every_engine_tokenizer_is_word_tokens():
+    sites = _engine_sites(
+        _is_word_tokens_copy, ("functions/text.py", "word_tokens")
+    )
+    assert sites == [], f"tokenize through functions.text.word_tokens: {sites}"
+
+
+def test_every_engine_cents_is_cents():
+    sites = _engine_sites(_is_cents_copy, ("functions/money.py", "cents"))
+    assert sites == [], f"build cents through functions.money.cents: {sites}"

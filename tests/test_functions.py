@@ -123,3 +123,33 @@ def test_winnow_fingerprints_degenerate_docs(spark):
     assert 1 not in by_doc and 2 not in by_doc and 3 not in by_doc
     assert len(by_doc[4]) == 1          # single gram -> single fp
     assert all(fp is not None for fps in by_doc.values() for fp in fps)
+
+
+def test_rules_match_their_oracle_sql(spark, duck):
+    """``word_tokens`` and ``cents`` give what the oracles' own SQL gives
+    on edge values: leading, trailing and repeated spaces, ``''``, a
+    tab and NULL for the tokenizer; half-cent ties of both signs, a
+    product that lands just below a tie, 1e12 and NULL for cents."""
+    from etl_his_spark.functions.money import cents
+    from etl_his_spark.functions.text import word_tokens
+
+    texts = [" lead", "trail ", "a   b", "  a b  ", "", "   ", "\t",
+             "a\tb", " \t ", None]
+    amounts = [0.125, -0.125, 2.675, 1.005, 1e12, None]
+    cases = [
+        (texts, "string", word_tokens,
+         "list_filter(string_split(trim(CAST(? AS VARCHAR)), ' '),"
+         " t -> t <> '')"),
+        (amounts, "double", cents,
+         "CAST(ROUND(CAST(? AS DOUBLE) * 100) AS BIGINT)"),
+    ]
+    for values, dtype, rule, oracle_sql in cases:
+        df = spark.createDataFrame(
+            list(enumerate(values)), f"i int, v {dtype}"
+        )
+        got = [r[0] for r in df.orderBy("i").select(rule("v")).collect()]
+        want = [
+            duck.execute(f"SELECT {oracle_sql}", [v]).fetchone()[0]
+            for v in values
+        ]
+        assert got == want, (rule.__name__, values, got, want)
