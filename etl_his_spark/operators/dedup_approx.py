@@ -377,6 +377,20 @@ def jaccard_pairs_prefix(
 # ---------------------------------------------------------------------------
 
 
+def _minhash_mins(hashed: DataFrame, id_col: str) -> DataFrame:
+    """Wide signature from an (id, h30) frame: the N_MINHASH affine
+    min-aggregates over ONE id-keyed groupBy (one shuffle)."""
+    return hashed.groupBy(id_col).agg(
+        *[
+            F.min(
+                (F.lit(MINHASH_A[i]) * F.col("h30") + F.lit(MINHASH_B[i]))
+                % F.lit(MINHASH_P)
+            ).alias(f"mh{i}")
+            for i in range(N_MINHASH)
+        ]
+    )
+
+
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -391,24 +405,20 @@ def minhash_signatures(
     sh = shingle_rows(docs, id_col, text_col).withColumn(
         "h30", F.col("shingle") % MINHASH_FOLD
     )
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_A[i]) * F.col("h30") + F.lit(MINHASH_B[i]))
-            % F.lit(MINHASH_P)
-        ).alias(f"mh{i}")
-        for i in range(N_MINHASH)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return _minhash_mins(sh, id_col)
 
 
-def _banded_sig_rows(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc, sig array, band, band_sig) rows — the LSH bucket index
-    with the full signature riding along (projection + explode over
-    the wide signatures; no extra shuffle)."""
-    n_bands = N_MINHASH // BAND_SIZE
-    sig = minhash_signatures(docs, id_col, text_col).select(
+LSH_BUCKET = ("band", "band_sig")
+
+
+def minhash_bands(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, sig array, band, band_sig) rows — the LSH bucket index of
+    any wide mh0..mh{N-1} signature frame (``minhash_signatures``,
+    ``weighted_minhash_signatures``, or a signature store read back
+    from parquet), with the full signature riding along (projection +
+    explode; no shuffle). ``band_sig`` is the md5 of the band's
+    BAND_SIZE minhashes joined with ``,`` — the oracles' band rule."""
+    arr = sig.select(
         F.col(id_col),
         F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("sig"),
     )
@@ -425,9 +435,9 @@ def _banded_sig_rows(
                 )
             ).alias("band_sig"),
         )
-        for b in range(n_bands)
+        for b in range(N_MINHASH // BAND_SIZE)
     ]
-    return sig.select(
+    return arr.select(
         F.col(id_col), F.col("sig"), F.explode(F.array(*band_structs)).alias("bs")
     ).select(
         id_col,
@@ -437,9 +447,62 @@ def _banded_sig_rows(
     )
 
 
-def _est_sim() -> Column:
-    """Fraction of agreeing minhashes between ``sig_a`` and ``sig_b``."""
-    matches = F.aggregate(
+def bucket_sizes(
+    rows: DataFrame, keys: tuple[str, ...], id_col: str = "doc_id"
+) -> DataFrame:
+    """Bucket rows plus ``n_bucket`` (members of the row's bucket) and
+    ``keeper`` (min id in it), by one window over the bucket keys — the
+    same hash partitioning the bucket join shuffles on, so the hot-
+    bucket guard adds no new shuffle pattern. Catalyst drops whichever
+    of the two a caller does not read."""
+    w = Window.partitionBy(*keys)
+    return rows.withColumn("n_bucket", F.count(F.lit(1)).over(w)).withColumn(
+        "keeper", F.min(id_col).over(w)
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    keys: tuple[str, ...],
+    id_col: str = "doc_id",
+    payload: tuple[str, ...] = (),
+    other: DataFrame | None = None,
+    cap: int | None = None,
+    ids: tuple[str, str] = ("a_id", "b_id"),
+) -> DataFrame:
+    """Same-bucket pairs: the one equi-join of banded blocking.
+
+    ``rows`` holds (id, payload..., keys...) bucket rows; each side
+    keeps its id as ``ids`` and its payload columns suffixed ``_a`` /
+    ``_b`` (payload rides along, so scoring needs no join back). A
+    self-join keeps ``a < b``; with ``other`` the pairs run from
+    ``rows`` to ``other`` and keep every match. ``cap`` is the hot-
+    bucket guard: buckets of ``rows`` with more than ``cap`` members
+    (``bucket_sizes``) are left out, so per-bucket work is bounded by
+    cap² whatever the skew. The caller scores and collapses multi-
+    bucket hits (one pair can share several buckets).
+    """
+    if cap is not None:
+        rows = bucket_sizes(rows, keys, id_col).filter(F.col("n_bucket") <= cap)
+
+    def side(df: DataFrame, sfx: str, pair_id: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(pair_id),
+            *[F.col(p).alias(f"{p}_{sfx}") for p in payload],
+            *keys,
+        )
+
+    pairs = side(rows, "a", ids[0]).join(
+        side(rows if other is None else other, "b", ids[1]), list(keys)
+    )
+    if other is None:
+        pairs = pairs.filter(F.col(ids[0]) < F.col(ids[1]))
+    return pairs
+
+
+def n_match() -> Column:
+    """Number of agreeing minhashes between ``sig_a`` and ``sig_b``."""
+    return F.aggregate(
         F.zip_with(
             "sig_a",
             "sig_b",
@@ -448,11 +511,18 @@ def _est_sim() -> Column:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    return matches.cast("double") / N_MINHASH
+
+
+def est_sim() -> Column:
+    """Fraction of agreeing minhashes between ``sig_a`` and ``sig_b``."""
+    return n_match().cast("double") / N_MINHASH
 
 
 def minhash_lsh_candidates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame,
+    cap: int | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
     """Candidate near-dup pairs + estimated similarity.
 
@@ -474,68 +544,27 @@ def minhash_lsh_candidates(
     every scale we measured, and keeps the whole plan visible to
     Catalyst/AQE. Shuffle payload is n_bands × 128 B per doc — the
     same order as shuffling the signature once.
+
+    ``cap`` is the HOT-BUCKET GUARD — set it on a real skewed corpus.
+    Uncapped, one degenerate bucket (boilerplate pages, empty docs —
+    any band signature shared by m documents) contributes m·(m−1)/2
+    join rows and its task dominates the stage: the skew class
+    ``operators/skew.py`` guards aggregations against. With a cap,
+    buckets of more than ``cap`` members are left out of the join
+    (``bucket_pairs``) and reported by ``minhash_lsh_giant_buckets`` —
+    their members agree on an entire band of minhashes, so they are
+    one near-dup cluster by construction and feed
+    ``graph.connected_components`` WITHOUT pairwise expansion (see
+    ``minhash_lsh_guarded_edges``). A pair sharing both a small and a
+    giant bucket still surfaces via the small one.
     """
-    exploded = _banded_sig_rows(docs, id_col, text_col)
-    a = exploded.select(
-        F.col(id_col).alias("a_id"), F.col("sig").alias("sig_a"), "band", "band_sig"
-    )
-    b = exploded.select(
-        F.col(id_col).alias("b_id"), F.col("sig").alias("sig_b"), "band", "band_sig"
-    )
+    bands = minhash_bands(minhash_signatures(docs, id_col, text_col), id_col)
     # est_sim is a pure function of the pair, so distinct over
     # (a_id, b_id, est_sim) collapses multi-band hits identically to
     # a distinct on the ids alone.
     return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", _est_sim().alias("est_sim"))
-        .distinct()
-    )
-
-
-def minhash_lsh_candidates_capped(
-    docs: DataFrame,
-    cap: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """LSH candidate pairs with a HOT-BUCKET GUARD — the form to run
-    on a real skewed corpus.
-
-    ``minhash_lsh_candidates`` joins same-bucket rows with no cap on
-    bucket size, so one degenerate bucket (boilerplate pages, empty
-    docs — any band signature shared by m documents) contributes
-    m·(m−1)/2 join rows and its task dominates the stage: the same
-    skew class ``operators/skew.py`` guards aggregations against.
-    This variant counts each (band, band_sig) bucket with a window
-    over the SAME hash partitioning the join needs (no extra shuffle
-    pattern) and joins only buckets with ≤ ``cap`` members. Oversized
-    buckets are excluded here and reported by
-    ``minhash_lsh_giant_buckets`` — their members agree on an entire
-    band of minhashes, so they are one near-dup cluster by
-    construction and feed ``graph.connected_components`` (or a direct
-    collapse) WITHOUT pairwise expansion.
-
-    A pair sharing both a small and a giant bucket still surfaces via
-    the small one; per-bucket work is bounded by cap² regardless of
-    corpus skew.
-    """
-    w = Window.partitionBy("band", "band_sig")
-    sized = (
-        _banded_sig_rows(docs, id_col, text_col)
-        .withColumn("n_bucket", F.count(F.lit(1)).over(w))
-        .filter(F.col("n_bucket") <= cap)
-    )
-    a = sized.select(
-        F.col(id_col).alias("a_id"), F.col("sig").alias("sig_a"), "band", "band_sig"
-    )
-    b = sized.select(
-        F.col(id_col).alias("b_id"), F.col("sig").alias("sig_b"), "band", "band_sig"
-    )
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", _est_sim().alias("est_sim"))
+        bucket_pairs(bands, LSH_BUCKET, id_col, payload=("sig",), cap=cap)
+        .select("a_id", "b_id", est_sim().alias("est_sim"))
         .distinct()
     )
 
@@ -553,24 +582,25 @@ def minhash_lsh_incremental(
 
     Same banded equi-join as ``minhash_lsh_candidates`` but across two
     inputs: pair work is |new ∩ bucket| × |existing ∩ bucket| per
-    bucket, so a small batch against a huge corpus does tiny joins —
-    and at steady state the existing side's signatures would be read
-    from a signature store (written once per batch by
-    ``minhash_signatures``), not recomputed. Output keeps the sides
-    apart: (new_id, existing_id, est_sim).
+    bucket, so a small batch against a huge corpus does tiny joins.
+    At steady state the existing side comes from a signature store
+    (``minhash_signatures`` written once per batch, banded on read by
+    ``minhash_bands``), not recomputed. Output keeps the sides apart:
+    (new_id, existing_id, est_sim).
     """
-    a = _banded_sig_rows(new_docs, id_col, text_col).select(
-        F.col(id_col).alias("new_id"), F.col("sig").alias("sig_a"), "band", "band_sig"
-    )
-    b = _banded_sig_rows(existing_docs, id_col, text_col).select(
-        F.col(id_col).alias("existing_id"),
-        F.col("sig").alias("sig_b"),
-        "band",
-        "band_sig",
-    )
+    def bands(docs: DataFrame) -> DataFrame:
+        return minhash_bands(minhash_signatures(docs, id_col, text_col), id_col)
+
     return (
-        a.join(b, ["band", "band_sig"])
-        .select("new_id", "existing_id", _est_sim().alias("est_sim"))
+        bucket_pairs(
+            bands(new_docs),
+            LSH_BUCKET,
+            id_col,
+            payload=("sig",),
+            other=bands(existing_docs),
+            ids=("new_id", "existing_id"),
+        )
+        .select("new_id", "existing_id", est_sim().alias("est_sim"))
         .distinct()
     )
 
@@ -581,7 +611,7 @@ def minhash_lsh_giant_buckets(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """The flagged side-channel of ``minhash_lsh_candidates_capped``:
+    """The flagged side-channel of ``minhash_lsh_candidates(cap=...)``:
     one row per oversized (band, band_sig) bucket with its size and
     canonical member (min doc id).
 
@@ -591,8 +621,8 @@ def minhash_lsh_giant_buckets(
     step: linear in bucket size, never |bucket|² pairs.
     """
     return (
-        _banded_sig_rows(docs, id_col, text_col)
-        .groupBy("band", "band_sig")
+        minhash_bands(minhash_signatures(docs, id_col, text_col), id_col)
+        .groupBy(*LSH_BUCKET)
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min(id_col).alias("keep_doc_id"),
@@ -607,40 +637,36 @@ def minhash_lsh_guarded_edges(
     min_matches: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    dedupe: bool = True,
 ) -> DataFrame:
     """One-pass edge list for the GUARDED collapse: capped LSH pairs
-    (est_sim ≥ min_matches/16) unioned with giant-bucket star edges.
+    (est_sim ≥ min_matches/16) unioned with giant-bucket star edges
+    (keeper = min id of each oversized bucket → every other member:
+    O(|bucket|), never |bucket|² pairs).
 
-    ``minhash_lsh_candidates_capped`` + ``minhash_lsh_giant_bucket_edges``
-    each rebuild the banded-signature frame and its bucket window; the
-    composition computes the windowed frame ONCE (eager localCheckpoint
-    — both the small-bucket join sides and the giant filter consume it
-    from concurrent stages, see jaccard_pairs_prefix for the eager
-    rationale) and derives both edge kinds from the blocks.
+    The sized band frame is computed ONCE (eager pin — both the
+    small-bucket join sides and the giant filter consume it from
+    concurrent stages, see jaccard_pairs_prefix for the eager
+    rationale) and both edge kinds derive from its blocks.
 
-    ``dedupe=False`` skips the final cross-branch distinct (one edge
-    shuffle) for consumers that are duplicate-insensitive —
-    ``graph.connected_components`` being the one that matters.
+    The edge list may repeat an edge: a doc pair that co-occurs in
+    buckets on both sides of the cap is a capped pair AND a star edge,
+    and the union keeps both (no cross-branch distinct, which would
+    cost an edge shuffle). Its consumers are duplicate-insensitive —
+    ``graph.connected_components`` is the one that matters.
     """
-    w = Window.partitionBy("band", "band_sig")
-    sized = (
-        _banded_sig_rows(docs, id_col, text_col)
-        .withColumn("n_bucket", F.count(F.lit(1)).over(w))
-        .withColumn("keeper", F.min(id_col).over(w))
-        .transform(pin, eager=True)
-    )
-    small = sized.filter(F.col("n_bucket") <= cap)
-    a = small.select(
-        F.col(id_col).alias("a_id"), F.col("sig").alias("sig_a"), "band", "band_sig"
-    )
-    b = small.select(
-        F.col(id_col).alias("b_id"), F.col("sig").alias("sig_b"), "band", "band_sig"
-    )
+    sized = bucket_sizes(
+        minhash_bands(minhash_signatures(docs, id_col, text_col), id_col),
+        LSH_BUCKET,
+        id_col,
+    ).transform(pin, eager=True)
     pairs = (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(_est_sim() * N_MINHASH >= min_matches)
+        bucket_pairs(
+            sized.filter(F.col("n_bucket") <= cap),
+            LSH_BUCKET,
+            id_col,
+            payload=("sig",),
+        )
+        .filter(est_sim() * N_MINHASH >= min_matches)
         .select("a_id", "b_id")
         .distinct()
     )
@@ -651,47 +677,7 @@ def minhash_lsh_guarded_edges(
         .select(F.col("keeper").alias("a_id"), F.col(id_col).alias("b_id"))
         .distinct()
     )
-    # distinct(): an edge can qualify both as a capped small-bucket
-    # pair and as a giant-bucket star edge (keeper = a_id) when the
-    # same doc pair co-occurs in buckets on both sides of the cap;
-    # the public edge-list contract is SET semantics (UNION, not
-    # UNION ALL), matching the oracle.
-    out = pairs.union(giant)
-    return out.distinct() if dedupe else out
-
-
-def minhash_lsh_giant_bucket_edges(
-    docs: DataFrame,
-    cap: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(keeper, member) star edges for every oversized bucket — the
-    O(|bucket|) wholesale-collapse form of the giant-bucket side
-    channel, ready to union with capped pairs ahead of
-    ``graph.connected_components``. One window over the same
-    (band, band_sig) partitioning the cap check uses: keeper = min doc
-    id in the bucket; self-edges dropped; multi-band duplicates
-    collapse in the distinct.
-    """
-    w = Window.partitionBy("band", "band_sig")
-    sized = (
-        _banded_sig_rows(docs, id_col, text_col)
-        .select(
-            F.col(id_col),
-            "band",
-            "band_sig",
-        )
-        .withColumn("n_bucket", F.count(F.lit(1)).over(w))
-        .withColumn("keeper", F.min(id_col).over(w))
-    )
-    return (
-        sized.filter(
-            (F.col("n_bucket") > cap) & (F.col(id_col) != F.col("keeper"))
-        )
-        .select(F.col("keeper").alias("a_id"), F.col(id_col).alias("b_id"))
-        .distinct()
-    )
+    return pairs.union(giant)
 
 
 # ---------------------------------------------------------------------------
@@ -893,16 +879,8 @@ def hamming_pairs_blocked(
         ]
     )
     exploded = sig.select(
-        F.col(id_col), F.col(sig_col), F.explode(chunks).alias("ch")
-    ).select(
-        id_col, sig_col, F.col("ch.c").alias("c"), F.col("ch.v").alias("v")
-    )
-    a = exploded.select(
-        F.col(id_col).alias("a_id"), F.col(sig_col).alias("sig_a"), "c", "v"
-    )
-    b = exploded.select(
-        F.col(id_col).alias("b_id"), F.col(sig_col).alias("sig_b"), "c", "v"
-    )
+        F.col(id_col), F.col(sig_col).alias("sig"), F.explode(chunks).alias("ch")
+    ).select(id_col, "sig", F.col("ch.c").alias("c"), F.col("ch.v").alias("v"))
     # Signatures ride along the explode (8 bytes/row) so candidates
     # need no join back to sig. The exact Hamming filter runs BEFORE
     # the multi-chunk-hit distinct: hamming is a pure function of the
@@ -913,8 +891,7 @@ def hamming_pairs_blocked(
     # map-side bit_count in the join stage (r7; pure shuffle-volume
     # reduction, so the factor holds on any cluster).
     return (
-        a.join(b, ["c", "v"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        bucket_pairs(exploded, ("c", "v"), id_col, payload=("sig",))
         .withColumn(
             "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
         )
@@ -1064,11 +1041,4 @@ def weighted_minhash_signatures(
             ).alias("h30"),
         )
     )
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_A[i]) * F.col("h30") + F.lit(MINHASH_B[i]))
-            % F.lit(MINHASH_P)
-        ).alias(f"mh{i}")
-        for i in range(N_MINHASH)
-    ]
-    return variants.groupBy(id_col).agg(*aggs)
+    return _minhash_mins(variants, id_col)

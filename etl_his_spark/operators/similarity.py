@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window  # noqa: F401
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine, dot, norm, sign_bucket, to_double_array
+from .dedup_approx import bucket_pairs
 
 
 def _prep(vectors: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
@@ -301,9 +302,10 @@ def banded_neardup_pairs(
     repeated boilerplate embeddings collapse into one (band, pattern)
     cell whose |bucket|² join work dominates the stage). When set,
     buckets with more than ``bucket_cap`` members are excluded from
-    the pair join — counted by a window over the same (band, pattern)
-    partitioning the join shuffles on. Such a bucket's members agree
-    on a whole sign band and should be collapsed as one cluster (see
+    the pair join (``dedup_approx.bucket_pairs``' cap: a window over
+    the same (band, pattern) partitioning the join shuffles on). Such
+    a bucket's members agree on a whole sign band and should be
+    collapsed as one cluster (see
     ``dedup_approx.minhash_lsh_giant_buckets`` for the side-channel
     pattern). None = uncapped (the oracle-mirrored default).
     """
@@ -329,16 +331,8 @@ def banded_neardup_pairs(
     exploded = v.select("v_id", F.explode(bands).alias("b")).select(
         "v_id", F.col("b.band").alias("band"), F.col("b.pat").alias("pat")
     )
-    if bucket_cap is not None:
-        wb = Window.partitionBy("band", "pat")
-        exploded = exploded.withColumn(
-            "__n_bucket", F.count(F.lit(1)).over(wb)
-        ).filter(F.col("__n_bucket") <= bucket_cap).drop("__n_bucket")
     cand = (
-        exploded.select(F.col("v_id").alias("a_id"), "band", "pat")
-        .join(exploded.select(F.col("v_id").alias("b_id"), "band", "pat"),
-              ["band", "pat"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        bucket_pairs(exploded, ("band", "pat"), "v_id", cap=bucket_cap)
         .select("a_id", "b_id")
         .distinct()
     )

@@ -14,18 +14,21 @@ from pyspark.sql import functions as F
 
 from ..functions.text import token_rows, word_tokens
 from ..operators.dedup_approx import (
+    LSH_BUCKET,
     MINHASH_A,
     MINHASH_B,
     MINHASH_FOLD,
     MINHASH_P,
     N_MINHASH,
+    bucket_pairs,
     exact_dedup_groups,
     jaccard_pairs_prefix,
+    minhash_bands,
     minhash_lsh_candidates,
-    minhash_lsh_candidates_capped,
     minhash_lsh_giant_buckets,
     minhash_lsh_guarded_edges,
     minhash_lsh_incremental,
+    n_match,
     seeded_hash60,
     simhash_pairs_blocked,
     simhash_signatures,
@@ -52,18 +55,24 @@ _MINHASH_MIN_COLS = ",\n               ".join(
     f"min(({MINHASH_A[i]} * h30 + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}"
     for i in range(N_MINHASH)
 )
-_MINHASH_BAND_UNION = "\n        UNION ALL\n        ".join(
-    "SELECT doc_id, {b} AS band, md5({concat}) AS band_sig FROM sig".format(
-        b=b,
-        concat=" || ',' || ".join(
-            f"mh{b * 4 + j}::VARCHAR" for j in range(4)
-        ),
-    )
-    for b in range(N_MINHASH // 4)
-)
 _MINHASH_MATCH_SUM = " + ".join(
     f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH)
 )
+
+
+def _band_union(src: str) -> str:
+    """The oracles' LSH band rows over signature table ``src``."""
+    return "\n        UNION ALL\n        ".join(
+        "SELECT doc_id, {b} AS band, md5({concat}) AS band_sig FROM {src}".format(
+            b=b,
+            concat=" || ',' || ".join(
+                f"mh{b * 4 + j}::VARCHAR" for j in range(4)
+            ),
+            src=src,
+        )
+        for b in range(N_MINHASH // 4)
+    )
+
 
 # Shared SQL fragments (mirror the Spark operators exactly)
 
@@ -172,7 +181,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM based GROUP BY doc_id
     ),
     bands AS (
-        {_MINHASH_BAND_UNION}
+        {_band_union("sig")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -205,7 +214,7 @@ _MINHASH_BANDS_CTE = f"""
         FROM based GROUP BY doc_id
     ),
     bands AS (
-        {_MINHASH_BAND_UNION}
+        {_band_union("sig")}
     )
 """
 
@@ -242,7 +251,7 @@ def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged wholesale by ``dedup_lsh_giant_buckets``. This is the
     skew-safe form for a real corpus, where one boilerplate band
     signature shared by 10^5 docs would otherwise own the stage."""
-    return minhash_lsh_candidates_capped(
+    return minhash_lsh_candidates(
         read_table(spark, sf_dir, "documents"), cap=_LSH_CAP
     )
 
@@ -625,6 +634,16 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COLLAPSE_MIN_MATCHES = 12
 
 
+def _collapse_pairs(docs: DataFrame) -> DataFrame:
+    """(a_id, b_id) LSH candidates with ≥ 12/16 agreeing minhashes —
+    the near-dup edges the uncapped collapse queries close over."""
+    return (
+        minhash_lsh_candidates(docs)
+        .filter(F.col("est_sim") * N_MINHASH >= _COLLAPSE_MIN_MATCHES)
+        .select("a_id", "b_id")
+    )
+
+
 @register(
     "corpus_dedup_collapse_guarded",
     f"""
@@ -638,7 +657,7 @@ _COLLAPSE_MIN_MATCHES = 12
         FROM based GROUP BY doc_id
     ),
     bands AS (
-        {_MINHASH_BAND_UNION}
+        {_band_union("sig")}
     ),
     sized AS (
         SELECT doc_id, band, band_sig,
@@ -694,10 +713,7 @@ def corpus_dedup_collapse_guarded(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = read_table(spark, sf_dir, "documents")
     edges = minhash_lsh_guarded_edges(
-        docs, cap=_LSH_CAP, min_matches=_COLLAPSE_MIN_MATCHES,
-        # connected_components is duplicate-insensitive — skip the
-        # cross-branch distinct's edge shuffle
-        dedupe=False,
+        docs, cap=_LSH_CAP, min_matches=_COLLAPSE_MIN_MATCHES
     )
     comp = connected_components(docs.select("doc_id"), edges)
     wc = Window.partitionBy("component")
@@ -722,7 +738,7 @@ def corpus_dedup_collapse_guarded(spark: SparkSession, sf_dir: str) -> DataFrame
         FROM based GROUP BY doc_id
     ),
     bands AS (
-        {_MINHASH_BAND_UNION}
+        {_band_union("sig")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -770,11 +786,7 @@ def corpus_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_candidates(docs)
-        .filter(F.col("est_sim") * N_MINHASH >= _COLLAPSE_MIN_MATCHES)
-        .select("a_id", "b_id")
-    )
+    pairs = _collapse_pairs(docs)
     comp = connected_components(docs.select("doc_id"), pairs)
     wc = Window.partitionBy("component")
     return comp.select(
@@ -911,7 +923,7 @@ def embedding_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM based GROUP BY doc_id
     ),
     bands AS (
-        {_MINHASH_BAND_UNION}
+        {_band_union("sig")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -979,11 +991,7 @@ def corpus_dedup_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_candidates(docs)
-        .filter(F.col("est_sim") * N_MINHASH >= _COLLAPSE_MIN_MATCHES)
-        .select("a_id", "b_id")
-    )
+    pairs = _collapse_pairs(docs)
     comp = connected_components(docs.select("doc_id"), pairs)
     scored = docs.select("doc_id", quality_score("text").alias("quality"))
     wc = Window.partitionBy("component")
@@ -1728,12 +1736,6 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WMH_MIN_COLS = ",\n               ".join(
-    f"min(({MINHASH_A[i]} * h30 + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}"
-    for i in range(N_MINHASH)
-)
-
-
 WEIGHTED_MINHASH_ORACLE = f"""
     WITH words AS (
         SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents
@@ -1767,7 +1769,7 @@ WEIGHTED_MINHASH_ORACLE = f"""
         WHERE r < w
     )
     SELECT doc_id,
-               {_WMH_MIN_COLS}
+               {_MINHASH_MIN_COLS}
     FROM variants GROUP BY doc_id
 """
 
@@ -1781,18 +1783,6 @@ def dedup_weighted_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_minhash_signatures(
         read_table(spark, sf_dir, "documents")
     )
-
-
-# _MINHASH_BAND_UNION over the weighted signatures (``wsig``)
-_WMH_BAND_UNION = "\n        UNION ALL\n        ".join(
-    "SELECT doc_id, {b} AS band, md5({concat}) AS band_sig FROM wsig".format(
-        b=b,
-        concat=" || ',' || ".join(
-            f"mh{b * 4 + j}::VARCHAR" for j in range(4)
-        ),
-    )
-    for b in range(N_MINHASH // 4)
-)
 
 
 WEIGHTED_LSH_ORACLE = f"""
@@ -1829,11 +1819,11 @@ WEIGHTED_LSH_ORACLE = f"""
     ),
     wsig AS (
         SELECT doc_id,
-               {_WMH_MIN_COLS}
+               {_MINHASH_MIN_COLS}
         FROM variants GROUP BY doc_id
     ),
     bands AS (
-        {_WMH_BAND_UNION}
+        {_band_union("wsig")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -1864,56 +1854,9 @@ def dedup_weighted_lsh_candidates(
     sigs = weighted_minhash_signatures(
         read_table(spark, sf_dir, "documents")
     ).transform(pin)
-    sig_arr = sigs.select(
-        "doc_id",
-        F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("sig"),
-    )
-    bands = sig_arr.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at("sig", b * 4 + j + 1).cast(
-                                    "string"
-                                )
-                                for j in range(4)
-                            ],
-                        )
-                    ).alias("band_sig"),
-                )
-                for b in range(N_MINHASH // 4)
-            ])
-        ).alias("bs"),
-    ).select("doc_id", "sig", F.col("bs.band").alias("band"),
-             F.col("bs.band_sig").alias("band_sig"))
-    a = bands.select(
-        F.col("doc_id").alias("a_id"), F.col("sig").alias("sig_a"),
-        "band", "band_sig",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"), F.col("sig").alias("sig_b"),
-        "band", "band_sig",
-    )
     return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id", "b_id",
-            F.aggregate(
-                F.zip_with(
-                    "sig_a", "sig_b",
-                    lambda x, y: F.when(x == y, 1).otherwise(0),
-                ),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            ).alias("n_match"),
-        )
+        bucket_pairs(minhash_bands(sigs), LSH_BUCKET, payload=("sig",))
+        .select("a_id", "b_id", n_match().alias("n_match"))
         .distinct()
         .select(
             "a_id", "b_id",
@@ -1953,7 +1896,7 @@ LSH_EVAL_ORACLE = f"""
         FROM based GROUP BY doc_id
     ),
     bands AS (
-        {_MINHASH_BAND_UNION}
+        {_band_union("sig")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id

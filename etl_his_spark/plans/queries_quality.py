@@ -450,13 +450,16 @@ def table_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max over orders — the statistics a cost-based optimizer (or a
     data-quality monitor) collects before planning against a table.
 
-    One pass, one aggregation: all six columns' stats compute in a
-    single grouped-by-nothing agg (partial aggregation does the work
-    map-side; exact distincts expand to one shuffle per distinct
-    column under Spark's expand-operator rewrite — the documented
-    at-scale swap is approx_count_distinct/HLL, `sketch_approx_
-    distinct`), then unpivot to the per-column report rows via stack.
-    Doubles ride as integer cents and dates as ISO strings so min/max
+    Two aggregations, no ``Expand``: the typed stats (nulls, min, max)
+    of all six columns compute in one grouped-by-nothing agg, unpivoted
+    to the per-column report rows via stack; the distinct counts come
+    from ONE distinct key over the unpivoted (column_name, value) rows,
+    the value cast to string (injective for the long, string and
+    timestamp columns). Six ``countDistinct`` arms in one agg would
+    expand to one projection per column, in an order that varies
+    between sessions. The documented at-scale swap for exact distincts
+    is approx_count_distinct/HLL (`sketch_approx_distinct`). Doubles
+    ride as integer cents and dates as ISO strings so min/max
     stringification is engine-identical."""
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
@@ -480,19 +483,27 @@ def table_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         aggs += [
             (F.count(F.lit(1)) - F.count(c)).cast("long").alias(f"nn_{c}"),
-            F.countDistinct(c).cast("long").alias(f"nd_{c}"),
             s(F.min(c)).alias(f"mn_{c}"),
             s(F.max(c)).alias(f"mx_{c}"),
         ]
-    one = o.agg(*aggs)
-    stack_args = ", ".join(
-        f"'{c}', nn_{c}, nd_{c}, mn_{c}, mx_{c}" for c in cols
-    )
-    return one.selectExpr(
-        f"stack({len(cols)}, {stack_args}) AS "
-        "(column_name, n_nulls, n_distinct, min_val, max_val)",
+    stack_args = ", ".join(f"'{c}', nn_{c}, mn_{c}, mx_{c}" for c in cols)
+    typed = o.agg(*aggs).selectExpr(
+        f"stack({len(cols)}, {stack_args}) AS"
+        " (column_name, n_nulls, min_val, max_val)",
         "n_rows",
-    ).select("column_name", "n_rows", "n_nulls", "n_distinct", "min_val", "max_val")
+    )
+    values = ", ".join(f"'{c}', CAST({c} AS STRING)" for c in cols)
+    distinct = (
+        o.selectExpr(f"stack({len(cols)}, {values}) AS (column_name, value)")
+        .groupBy("column_name")
+        .agg(F.countDistinct("value").cast("long").alias("n_distinct"))
+    )
+    # left join + 0: an empty table still reports its six columns
+    return typed.join(distinct, "column_name", "left").select(
+        "column_name", "n_rows", "n_nulls",
+        F.coalesce("n_distinct", F.lit(0).cast("long")).alias("n_distinct"),
+        "min_val", "max_val",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -53,11 +53,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim is broadcast back) → per-doc top-k window. The window
     partitions by doc_id, so parallelism holds at corpus scale."""
     d = read_table(spark, sf_dir, "documents")
-    toks = (
-        d.filter(F.col("text").isNotNull())
-        .select("doc_id", F.explode(F.split(F.trim("text"), " ")).alias("token"))
-        .filter(F.col("token") != "")
-    )
+    toks = token_rows(d)
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("token"))

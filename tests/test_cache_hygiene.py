@@ -7,14 +7,17 @@ long-lived session every operator call would pin another copy of its
 input. The repo's rule (SCALE.md "localCheckpoint discipline") is a
 localCheckpoint instead, whose blocks are reclaimed with the frame.
 This test calls every formerly-leaking operator and asserts the
-CacheManager is empty afterwards. The last four tests are ``ast`` scans
+CacheManager is empty afterwards. The last six tests are ``ast`` scans
 of ``etl_his_spark/`` that give each construct one owner and fail on
 any copy outside it: a ``localCheckpoint`` outside ``operators/pin.pin``
 (the audits' hook), a ``writeStream`` outside
-``streaming/events.run_available_now`` (the one stream run path), and
-the two rules the DuckDB oracles mirror, the corpus tokenizer outside
+``streaming/events.run_available_now`` (the one stream run path), the
+two rules the DuckDB oracles mirror, the corpus tokenizer outside
 ``functions/text.word_tokens`` and the cents rule outside
-``functions/money.cents``.
+``functions/money.cents``, and the two MinHash steps whose copies
+would drift from their oracles, the band signature outside
+``operators/dedup_approx.minhash_bands`` and the affine min-hash
+outside ``operators/dedup_approx._minhash_mins``.
 """
 
 from __future__ import annotations
@@ -156,3 +159,38 @@ def test_every_engine_tokenizer_is_word_tokens():
 def test_every_engine_cents_is_cents():
     sites = _engine_sites(_is_cents_copy, ("functions/money.py", "cents"))
     assert sites == [], f"build cents through functions.money.cents: {sites}"
+
+
+def _is_band_sig_copy(node) -> bool:
+    # md5(concat_ws(",", ...))
+    return (
+        _call_of(node, "md5")
+        and bool(node.args)
+        and _call_of(node.args[0], "concat_ws")
+        and bool(node.args[0].args)
+        and _is_str(node.args[0].args[0], ",")
+    )
+
+
+def _is_affine_minhash_copy(node) -> bool:
+    # (<A[i]> * h30 + <B[i]>) % <MINHASH_P>, the prime bare or lit()-wrapped
+    if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Mod)):
+        return False
+    return any(
+        isinstance(n, ast.Name) and n.id == "MINHASH_P"
+        for n in ast.walk(node.right)
+    )
+
+
+def test_every_engine_band_signature_is_minhash_bands():
+    sites = _engine_sites(
+        _is_band_sig_copy, ("operators/dedup_approx.py", "minhash_bands")
+    )
+    assert sites == [], f"band through dedup_approx.minhash_bands: {sites}"
+
+
+def test_every_engine_affine_minhash_is_minhash_mins():
+    sites = _engine_sites(
+        _is_affine_minhash_copy, ("operators/dedup_approx.py", "_minhash_mins")
+    )
+    assert sites == [], f"min-hash through dedup_approx._minhash_mins: {sites}"

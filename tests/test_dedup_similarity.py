@@ -223,8 +223,9 @@ def test_lsh_hot_bucket_guard_planted_cluster(spark):
     giant-bucket side channel reports the whole cluster per band; the
     ordinary near-dups around it still surface as pairs."""
     from etl_his_spark.operators.dedup_approx import (
-        minhash_lsh_candidates_capped,
+        minhash_lsh_candidates,
         minhash_lsh_giant_buckets,
+        minhash_lsh_guarded_edges,
     )
 
     boiler = [(i, "same boilerplate page repeated verbatim across the crawl")
@@ -236,7 +237,7 @@ def test_lsh_hot_bucket_guard_planted_cluster(spark):
     ]
     docs = spark.createDataFrame(boiler + normal, "doc_id long, text string")
 
-    pairs = minhash_lsh_candidates_capped(docs, cap=64).collect()
+    pairs = minhash_lsh_candidates(docs, cap=64).collect()
     pair_ids = {(r["a_id"], r["b_id"]) for r in pairs}
     # the planted cluster contributes no pairs at all — bounded work
     assert all(a > 1000 and b > 1000 for a, b in pair_ids)
@@ -247,15 +248,14 @@ def test_lsh_hot_bucket_guard_planted_cluster(spark):
     assert len(giants) == 4
     assert all(r["n_docs"] == 1000 and r["keep_doc_id"] == 0 for r in giants)
 
-    # the star-edge form collapses the cluster in O(|bucket|): every
-    # member links to keeper 0, nothing pairwise
-    from etl_his_spark.operators.dedup_approx import (
-        minhash_lsh_giant_bucket_edges,
-    )
+    # the guarded edges' giant-bucket branch collapses the cluster in
+    # O(|bucket|): every member links to keeper 0, nothing pairwise
     from etl_his_spark.operators.graph import connected_components
 
-    edges = minhash_lsh_giant_bucket_edges(docs, cap=64)
-    assert edges.count() == 999  # keeper → each other member, deduped
+    edges = minhash_lsh_guarded_edges(docs, cap=64, min_matches=12)
+    stars = edges.filter(F.col("a_id") <= 1000).distinct()
+    assert stars.count() == 999  # keeper → each other member, deduped
+    assert stars.filter(F.col("a_id") != 0).count() == 0
     comp = {
         r["doc_id"]: r["component"]
         for r in connected_components(
@@ -269,15 +269,12 @@ def test_lsh_hot_bucket_guard_planted_cluster(spark):
 def test_lsh_capped_equals_uncapped_when_cap_is_loose(spark):
     """With a cap above every bucket size, the guard is a no-op: capped
     output == uncapped output (same pairs, same est_sim)."""
-    from etl_his_spark.operators.dedup_approx import (
-        minhash_lsh_candidates,
-        minhash_lsh_candidates_capped,
-    )
+    from etl_his_spark.operators.dedup_approx import minhash_lsh_candidates
 
     docs = _docs(spark)
     uncapped = sorted(map(tuple, minhash_lsh_candidates(docs).collect()))
     capped = sorted(
-        map(tuple, minhash_lsh_candidates_capped(docs, cap=10_000).collect())
+        map(tuple, minhash_lsh_candidates(docs, cap=10_000).collect())
     )
     assert capped == uncapped
 
@@ -330,51 +327,24 @@ def test_incremental_lsh_against_parquet_signature_store(spark, sf_dir, tmp_path
     store = str(tmp_path / "sig_store.parquet")
     minhash_signatures(existing).write.parquet(store)
 
-    # Rebuild the banded join from stored signatures for the existing
-    # side: same band derivation applied to the stored wide columns.
+    # Band the stored wide columns for the existing side; only the new
+    # batch is signed.
     from etl_his_spark.operators.dedup_approx import (
-        _banded_sig_rows,
-        _est_sim,
-        BAND_SIZE,
-        N_MINHASH,
+        LSH_BUCKET,
+        bucket_pairs,
+        est_sim,
+        minhash_bands,
     )
 
-    stored = spark.read.parquet(store).select(
-        "doc_id",
-        F2.array(*[F2.col(f"mh{i}") for i in range(N_MINHASH)]).alias("sig"),
-    )
-    band_structs = [
-        F2.struct(
-            F2.lit(b).alias("band"),
-            F2.md5(
-                F2.concat_ws(
-                    ",",
-                    *[
-                        F2.element_at("sig", b * BAND_SIZE + j + 1).cast("string")
-                        for j in range(BAND_SIZE)
-                    ],
-                )
-            ).alias("band_sig"),
-        )
-        for b in range(N_MINHASH // BAND_SIZE)
-    ]
-    stored_bands = stored.select(
-        "doc_id", "sig", F2.explode(F2.array(*band_structs)).alias("bs")
-    ).select(
-        F2.col("doc_id").alias("existing_id"),
-        F2.col("sig").alias("sig_b"),
-        F2.col("bs.band").alias("band"),
-        F2.col("bs.band_sig").alias("band_sig"),
-    )
-    new_bands = _banded_sig_rows(new).select(
-        F2.col("doc_id").alias("new_id"),
-        F2.col("sig").alias("sig_a"),
-        "band",
-        "band_sig",
-    )
     from_store = (
-        new_bands.join(stored_bands, ["band", "band_sig"])
-        .select("new_id", "existing_id", _est_sim().alias("est_sim"))
+        bucket_pairs(
+            minhash_bands(minhash_signatures(new)),
+            LSH_BUCKET,
+            payload=("sig",),
+            other=minhash_bands(spark.read.parquet(store)),
+            ids=("new_id", "existing_id"),
+        )
+        .select("new_id", "existing_id", est_sim().alias("est_sim"))
         .distinct()
     )
     recomputed = minhash_lsh_incremental(new, existing)
