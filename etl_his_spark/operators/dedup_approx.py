@@ -15,6 +15,13 @@ reproducible in ANSI SQL, so each gets a DuckDB oracle:
 - embedding cosine — near-dup by vector similarity (see similarity.py
                    for the bucketed scale path).
 
+Pairing: ``bucket_pairs`` is the one join of rows that share a key,
+here and in every other module — banded-LSH buckets, posting lists,
+vector cells. Only the exact baselines ``jaccard_pairs``,
+``simhash_pairs`` and ``similarity.embedding_neardup_pairs`` write
+their pair joins out: tests compare the scale paths against them, so
+they share no pairing code with what they check.
+
 Hashing discipline: every hash is ``md5`` of a seeded string, with the
 first 15 hex chars parsed as a 60-bit integer — identical in Spark
 (``conv(substr(md5(x),1,15),16,10)``) and DuckDB
@@ -287,8 +294,6 @@ def jaccard_pairs_prefix(
         <= F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1
     ).select(id_col, "shingle", "pos", "size")
 
-    a = prefix.alias("a")
-    b = prefix.alias("b")
     # PPJoin positional prune (Xiao, Wang, Lin, Yu 2008), lossless:
     # both docs list shingles in the same global (df, shingle) order,
     # so a shared prefix shingle at 1-based ranks (pa, pb) bounds the
@@ -302,30 +307,26 @@ def jaccard_pairs_prefix(
     # distributions (every df high, prefix selectivity gone) this is
     # what keeps the candidate set from going quadratic.
     ub = (
-        F.least(F.col("a.pos"), F.col("b.pos"))
+        F.least(F.col("pos_a"), F.col("pos_b"))
         - 1
         + F.least(
-            F.col("a.size") - F.col("a.pos"),
-            F.col("b.size") - F.col("b.pos"),
+            F.col("size_a") - F.col("pos_a"),
+            F.col("size_b") - F.col("pos_b"),
         )
         + 1
     )
     cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        bucket_pairs(prefix, ("shingle",), id_col, payload=("pos", "size"))
         .filter(
             ub.cast("double")
-            / (F.col("a.size") + F.col("b.size") - ub)
+            / (F.col("size_a") + F.col("size_b") - ub)
             >= threshold
         )
         .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
-            F.col("a.size").alias("na"),
-            F.col("b.size").alias("nb"),
+            "a_id",
+            "b_id",
+            F.col("size_a").alias("na"),
+            F.col("size_b").alias("nb"),
         )
         .distinct()
     )
@@ -470,17 +471,21 @@ def bucket_pairs(
     cap: int | None = None,
     ids: tuple[str, str] = ("a_id", "b_id"),
 ) -> DataFrame:
-    """Same-bucket pairs: the one equi-join of banded blocking.
+    """Pairs of rows that share a key: the engine's one same-key pair
+    join — LSH buckets, shingle and fingerprint posting lists, vector
+    cells, grouped series alike.
 
-    ``rows`` holds (id, payload..., keys...) bucket rows; each side
-    keeps its id as ``ids`` and its payload columns suffixed ``_a`` /
-    ``_b`` (payload rides along, so scoring needs no join back). A
-    self-join keeps ``a < b``; with ``other`` the pairs run from
-    ``rows`` to ``other`` and keep every match. ``cap`` is the hot-
-    bucket guard: buckets of ``rows`` with more than ``cap`` members
+    ``rows`` holds (id, payload..., keys...) rows; each side keeps its
+    id as ``ids`` and its payload columns suffixed ``_a`` / ``_b``
+    (payload rides along, so scoring needs no join back). A self-join
+    keeps ``a < b``: each unordered pair once. With ``other`` the pairs
+    run from ``rows`` to ``other`` and keep every match, so
+    ``other=rows`` gives both orders plus the ``a == b`` rows, which
+    the caller filters out itself. ``cap`` is the hot-bucket guard:
+    buckets of ``rows`` with more than ``cap`` members
     (``bucket_sizes``) are left out, so per-bucket work is bounded by
-    cap² whatever the skew. The caller scores and collapses multi-
-    bucket hits (one pair can share several buckets).
+    cap² whatever the skew. The caller scores and collapses multi-key
+    hits (one pair can share several keys).
     """
     if cap is not None:
         rows = bucket_sizes(rows, keys, id_col).filter(F.col("n_bucket") <= cap)
@@ -976,15 +981,10 @@ def weighted_jaccard_pairs(
         .select("shingle"),
         "shingle",
     )
-    a = posting.select(
-        F.col(id_col).alias("a_id"), "shingle", F.col("w").alias("w_s")
-    )
-    b = posting.select(F.col(id_col).alias("b_id"), "shingle")
     shared = (
-        a.join(b, "shingle")
-        .filter(F.col("a_id") < F.col("b_id"))
+        bucket_pairs(posting, ("shingle",), id_col, payload=("w",))
         .groupBy("a_id", "b_id")
-        .agg(F.sum("w_s").cast("long").alias("shared_w"))
+        .agg(F.sum("w_a").cast("long").alias("shared_w"))
     )
     ta = totals.select(
         F.col(id_col).alias("a_id"), F.col("w_total").alias("wa")

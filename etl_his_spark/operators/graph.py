@@ -265,7 +265,7 @@ def bottomk_neighbor_topk(
     """
     from pyspark.sql import Window
 
-    from .dedup_approx import seeded_hash60
+    from .dedup_approx import bucket_pairs, seeded_hash60
 
     sizes = base.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -279,9 +279,7 @@ def bottomk_neighbor_topk(
         .transform(pin)
     )
     cand = (
-        sk.select(F.col("s").alias("s_a"), "h")
-        .join(sk.select(F.col("s").alias("s_b"), "h"), "h")
-        .filter(F.col("s_a") < F.col("s_b"))
+        bucket_pairs(sk, ("h",), "s", ids=("s_a", "s_b"))
         .groupBy("s_a", "s_b")
         .agg(F.count(F.lit(1)).alias("cc"))
         .filter(F.col("cc") >= cand_min)

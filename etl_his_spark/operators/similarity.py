@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window  # noqa: F401
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine, dot, norm, sign_bucket, to_double_array
+from ..functions.vector import dot, norm, sign_bucket, to_double_array
 from .dedup_approx import bucket_pairs
 
 

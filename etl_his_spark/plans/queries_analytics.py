@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import cents
+from ..operators.dedup_approx import bucket_pairs
 from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
@@ -454,18 +455,9 @@ def basket_brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders_n = items.agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_orders")
     )
-    a = items.alias("a")
-    b = items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.p_brand") < F.col("b.p_brand")),
-        )
-        .groupBy(
-            F.col("a.p_brand").alias("brand_a"),
-            F.col("b.p_brand").alias("brand_b"),
-        )
+        bucket_pairs(items, ("l_orderkey",), "p_brand", ids=("brand_a", "brand_b"))
+        .groupBy("brand_a", "brand_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
         .filter(F.col("n_ab") >= 5)
     )

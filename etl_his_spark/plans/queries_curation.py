@@ -18,7 +18,7 @@ from ..operators.curation import (
     pii_scan,
     repetition_stats,
 )
-from ..operators.dedup_approx import seeded_hash60, word_shingles
+from ..operators.dedup_approx import bucket_pairs, seeded_hash60, word_shingles
 from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
@@ -390,31 +390,21 @@ def curation_diversity_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "cell", "q", "spread")
     )
-    a = scored.select(
-        F.col("cell").alias("cell"),
-        F.col("vec_id").alias("a_id"),
-        F.col("q").alias("a_q"),
-        F.col("spread").alias("a_spread"),
-    )
-    b = scored.select(
-        F.col("cell").alias("cell"),
-        F.col("vec_id").alias("b_id"),
-        F.col("q").alias("b_q"),
-        F.col("spread").alias("b_spread"),
-    )
     dropped = (
-        a.join(b, "cell")
+        bucket_pairs(
+            scored, ("cell",), "vec_id", payload=("q", "spread"), other=scored
+        )
         .filter(F.col("a_id") != F.col("b_id"))
         .filter(
-            (F.col("a_spread") > F.col("b_spread"))
+            (F.col("spread_a") > F.col("spread_b"))
             | (
-                (F.col("a_spread") == F.col("b_spread"))
+                (F.col("spread_a") == F.col("spread_b"))
                 & (F.col("a_id") < F.col("b_id"))
             )
         )
         .filter(
             F.aggregate(
-                F.zip_with("a_q", "b_q", lambda x, y: x * y),
+                F.zip_with("q_a", "q_b", lambda x, y: x * y),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             )

@@ -1140,28 +1140,20 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = vecs.select("vec_id", to_double_array("embedding").alias("e"))
     cells = (
         assigned.join(v, "vec_id")
-        .select("vec_id", "cluster_id", "e", norm(F.col("e")).alias("nrm"))
+        .select(
+            "vec_id",
+            F.col("cluster_id").alias("cell"),
+            "e",
+            norm(F.col("e")).alias("nrm"),
+        )
         .transform(pin)
     )
-    a = cells.select(
-        F.col("cluster_id").alias("cell"),
-        F.col("vec_id").alias("a_id"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = cells.select(
-        F.col("cluster_id").alias("cell"),
-        F.col("vec_id").alias("b_id"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    sim = dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    sim = dot(F.col("e_a"), F.col("e_b")) / (F.col("nrm_a") * F.col("nrm_b"))
     # Threshold on the ROUNDED similarity in both engines (r7 advisor):
     # Spark and DuckDB may disagree by ~1 ulp on the raw float, so a
     # pair sitting exactly at 0.4 could otherwise flip the gate.
     return (
-        a.join(b, "cell")
-        .filter(F.col("a_id") < F.col("b_id"))
+        bucket_pairs(cells, ("cell",), "vec_id", payload=("e", "nrm"))
         .filter(F.round(sim, 6) >= 0.4)
         .select("cell", "a_id", "b_id", F.round(sim, 6).alias("sim"))
     )
@@ -2272,11 +2264,11 @@ def snapshot_capped_intersection(
         .select("shingle")
     )
     return (
-        sh_new.select(F.col("doc_id").alias("n_id"), "shingle")
-        .join(keep, "shingle")
-        .join(
-            sh_old.select(F.col("doc_id").alias("o_id"), "shingle"),
-            "shingle",
+        bucket_pairs(
+            sh_new.join(keep, "shingle"),
+            ("shingle",),
+            other=sh_old,
+            ids=("n_id", "o_id"),
         )
         .groupBy("n_id", "o_id")
         .agg(F.count(F.lit(1)).alias("i"))

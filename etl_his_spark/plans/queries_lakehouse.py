@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import cents
+from ..operators.dedup_approx import bucket_pairs
 from ..operators.merge import merge_delete, merge_upsert, scd2_from_events
 from ..operators.pin import pin
 from ..registry import register
@@ -634,20 +635,12 @@ def lakehouse_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("event_id").cast("long").alias("mx"),
     )
     manifest = pin(manifest)
-    a = manifest.select(
-        "day", F.col("bucket").alias("b_a"),
-        F.col("mn").alias("mn_a"), F.col("mx").alias("mx_a"),
-    )
-    b = manifest.select(
-        "day", F.col("bucket").alias("b_b"),
-        F.col("mn").alias("mn_b"), F.col("mx").alias("mx_b"),
-    )
     ov = (
-        a.join(b, "day")
+        bucket_pairs(
+            manifest, ("day",), "bucket", payload=("mn", "mx"), ids=("b_a", "b_b")
+        )
         .filter(
-            (F.col("b_a") < F.col("b_b"))
-            & (F.col("mn_a") <= F.col("mx_b"))
-            & (F.col("mn_b") <= F.col("mx_a"))
+            (F.col("mn_a") <= F.col("mx_b")) & (F.col("mn_b") <= F.col("mx_a"))
         )
         .groupBy("day")
         .agg(F.count(F.lit(1)).cast("long").alias("n_overlapping"))

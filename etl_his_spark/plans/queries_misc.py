@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import cents
+from ..operators.dedup_approx import bucket_pairs
 from ..operators.pin import pin
 from ..registry import register
 from ..sources.readers import read_table
@@ -294,14 +295,9 @@ def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fan-out back to keys. dist-0 lane: keys sharing one name — a
     # plain self equi-join on p_name (disjoint from the dist ≥ 1 lane,
     # where names differ, so the union is duplicate-free).
-    same = (
-        p.select(F.col("p_partkey").alias("a_key"), "p_name")
-        .join(
-            p.select(F.col("p_partkey").alias("b_key"), "p_name"), "p_name"
-        )
-        .filter(F.col("a_key") < F.col("b_key"))
-        .select("a_key", "b_key", F.lit(0).cast("int").alias("dist"))
-    )
+    same = bucket_pairs(
+        p, ("p_name",), "p_partkey", ids=("a_key", "b_key")
+    ).select("a_key", "b_key", F.lit(0).cast("int").alias("dist"))
     diff = (
         name_pairs.join(
             p.select(F.col("p_partkey").alias("ka"), F.col("p_name").alias("n_a")),

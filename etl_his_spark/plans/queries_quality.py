@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import cents
+from ..operators.dedup_approx import bucket_pairs
 from ..operators.quality import with_violations
 from ..registry import register
 from ..sources.readers import read_table
@@ -568,24 +569,16 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("grp"),
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("m"),
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    a = monthly.select(
-        "grp", F.col("m").alias("m_i"), F.col("c").alias("c_i")
-    )
-    b = monthly.select(
-        "grp", F.col("m").alias("m_j"), F.col("c").alias("c_j")
-    )
-    slopes = (
-        a.join(b, "grp")
-        .filter(F.col("m_i") < F.col("m_j"))
-        .select(
-            "grp",
-            "m_i",
-            "m_j",
-            F.expr(
-                f"(1000000 * (c_j - c_i) + {TS_OFFSET}L * (m_j - m_i))"
-                " div (m_j - m_i)"
-            ).alias("slope_off"),
-        )
+    slopes = bucket_pairs(
+        monthly, ("grp",), "m", payload=("c",), ids=("m_i", "m_j")
+    ).select(
+        "grp",
+        "m_i",
+        "m_j",
+        F.expr(
+            f"(1000000 * (c_b - c_a) + {TS_OFFSET}L * (m_j - m_i))"
+            " div (m_j - m_i)"
+        ).alias("slope_off"),
     )
     wr = Window.partitionBy("grp").orderBy("slope_off", "m_i", "m_j")
     wn = Window.partitionBy("grp")

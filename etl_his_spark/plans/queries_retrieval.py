@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import token_rows, word_tokens
-from ..operators.dedup_approx import seeded_hash60, shingle_rows
+from ..operators.dedup_approx import bucket_pairs, seeded_hash60, shingle_rows
 from ..operators.pin import pin
 from ..operators.similarity import brute_force_topk, ivf_topk
 from ..registry import register
@@ -206,10 +206,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers. Scale path beyond the cap: one-sided minhash
     (bottom-k of a only) — same banding machinery as
     minhash_lsh_candidates."""
-    from pyspark.sql import Window
-
-    from ..operators.dedup_approx import shingle_rows
-
     d = read_table(spark, sf_dir, "documents")
     sh = pin(shingle_rows(d), eager=True)
     # df AND |doc| as count windows on the one checkpointed frame (the
@@ -230,17 +226,13 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= CONTAIN_DF_CAP)
         .select("doc_id", "shingle", "n_sh")
     )
-    a = stats.alias("a")
-    b = stats.alias("b")
     inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
+        bucket_pairs(stats, ("shingle",), payload=("n_sh",), other=stats)
+        .filter(F.col("a_id") != F.col("b_id"))
+        .groupBy("a_id", "b_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_common"),
-            F.max("a.n_sh").alias("n_a"),  # constant per a_id
+            F.max("n_sh_a").alias("n_a"),  # constant per a_id
         )
     )
     contain = F.col("n_common").cast("double") / F.col("n_a")
@@ -1199,8 +1191,6 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     (score DESC, neg_id) tiebreak); the per-anchor ranking window
     partitions on the 1% sample. Anchor x posting join is df-capped
     and source-filtered — linear in corpus, never corpus x corpus."""
-    from ..operators.dedup_approx import shingle_rows
-
     docs = read_table(spark, sf_dir, "documents")
     src_map = docs.select("doc_id", "source")
     sh = (
@@ -1215,21 +1205,18 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shingle")
     )
     posting = sh.join(keep, "shingle")
-    anchors = posting.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("anchor_id"),
-        F.col("source").alias("a_source"),
-        "shingle",
-    )
-    cands = posting.select(
-        F.col("doc_id").alias("neg_id"),
-        F.col("source").alias("c_source"),
-        "shingle",
-    )
+    anchors = posting.filter(F.col("doc_id") % 97 == 0)
     pairs = (
-        anchors.join(cands, "shingle")
+        bucket_pairs(
+            anchors,
+            ("shingle",),
+            payload=("source",),
+            other=posting,
+            ids=("anchor_id", "neg_id"),
+        )
         .filter(
             (F.col("neg_id") != F.col("anchor_id"))
-            & (F.col("c_source") != F.col("a_source"))
+            & (F.col("source_b") != F.col("source_a"))
         )
         .groupBy("anchor_id", "neg_id")
         .agg(F.count(F.lit(1)).cast("long").alias("shared_shingles"))
@@ -1537,22 +1524,21 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(0))
         cell = bit if cell is None else cell + bit
     cells = vi.select("vec_id", "q", cell.alias("cell"))
-    a = cells.select(
-        "cell", F.col("vec_id").alias("vec_id"), F.col("q").alias("a_q")
-    )
-    b = cells.select(
-        "cell",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q").alias("b_q"),
-    )
     pairs = (
-        a.join(b, "cell")
+        bucket_pairs(
+            cells,
+            ("cell",),
+            "vec_id",
+            payload=("q",),
+            other=cells,
+            ids=("vec_id", "neighbor_id"),
+        )
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select(
             "vec_id",
             "neighbor_id",
             F.aggregate(
-                F.zip_with("a_q", "b_q", lambda x, y: x * y),
+                F.zip_with("q_a", "q_b", lambda x, y: x * y),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             ).alias("dot_q"),
@@ -1637,28 +1623,15 @@ MRR_ORACLE = f"""
 """
 
 
-@register("retrieval_mrr_eval", MRR_ORACLE)
-def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Known-item retrieval eval: for every doc with a Jaccard-
-    verified near-dup (the truth set the dedup gates pin), rank ALL
-    docs by shared-distinct-shingle count (the cheap first-stage
-    retrieval scorer) and report the best target's rank and its
-    reciprocal rank in integer micro (1e6 div rank, 0 beyond @10).
-
-    Like ann_recall_eval / dedup_lsh_eval, this measures a cheap
-    stage against verified truth before trusting it at 100 TB. The
-    query panel is the near-dup doc set (bounded, ≪ corpus); scoring
-    is a posting-list equi-join keyed on the query panel's shingles —
-    never corpus². MRR stays integer-exact (no log-discounted DCG,
-    which would need irrational arithmetic).
-    """
-    from ..operators.dedup_approx import shingle_rows
-
-    docs = read_table(spark, sf_dir, "documents")
+def _near_dup_panel(docs: DataFrame, score: str) -> tuple[DataFrame, DataFrame]:
+    """The Jaccard-verified near-dup panel of ``retrieval_mrr_eval`` and
+    ``retrieval_rerank_eval``: ``truth`` holds (query_id, target_id) in
+    both directions for every pair with 3-gram Jaccard ≥ 0.7, and
+    ``scored`` holds (query_id, cand_id, ``score``) — the shared-
+    distinct-shingle count of every doc sharing a shingle with a
+    panel query, the cheap first-stage retrieval scorer."""
     sh = pin(shingle_rows(docs), eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
     # inter feeds the truth derivation AND (symmetrized, below) the
     # retrieval scoring itself — pin it so the posting-list self-join
     # runs once (r13; pair-count-sized, ≪ the posting join's input).
@@ -1674,8 +1647,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (SNAPSHOT_DF_CAP pattern) before this eval shape is run at
     # 100 TB.
     inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a_id") < F.col("b_id"))
+        bucket_pairs(sh, ("shingle",))
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("i"))
         .transform(pin)
@@ -1726,15 +1698,35 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = inter.select(
         F.col("a_id").alias("query_id"),
         F.col("b_id").alias("cand_id"),
-        F.col("i").alias("score"),
+        F.col("i").alias(score),
     ).unionAll(
         inter.select(
             F.col("b_id").alias("query_id"),
             F.col("a_id").alias("cand_id"),
-            F.col("i").alias("score"),
+            F.col("i").alias(score),
         )
     )
-    scored = sym.join(queries, "query_id")
+    return truth, sym.join(queries, "query_id")
+
+
+@register("retrieval_mrr_eval", MRR_ORACLE)
+def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Known-item retrieval eval: for every doc with a Jaccard-
+    verified near-dup (the truth set the dedup gates pin), rank ALL
+    docs by shared-distinct-shingle count (the cheap first-stage
+    retrieval scorer) and report the best target's rank and its
+    reciprocal rank in integer micro (1e6 div rank, 0 beyond @10).
+
+    Like ann_recall_eval / dedup_lsh_eval, this measures a cheap
+    stage against verified truth before trusting it at 100 TB. The
+    query panel is the near-dup doc set (bounded, ≪ corpus); scoring
+    is a posting-list equi-join keyed on the query panel's shingles —
+    never corpus². MRR stays integer-exact (no log-discounted DCG,
+    which would need irrational arithmetic).
+    """
+    truth, scored = _near_dup_panel(
+        read_table(spark, sf_dir, "documents"), "score"
+    )
     wrk = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("cand_id")
     )
@@ -1886,77 +1878,7 @@ def retrieval_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension is vocab-bounded.
     """
     docs = read_table(spark, sf_dir, "documents")
-    sh = pin(shingle_rows(docs), eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
-    # inter feeds the truth derivation AND (symmetrized, below) the
-    # stage-1 scoring — pin it so the posting-list self-join runs once
-    # (r13; the same rewrite as retrieval_mrr_eval). SIZE ASSUMPTION
-    # (ADVICE r13): pair-count-sized = every doc pair sharing ≥1
-    # shingle — the full rationale and the 100 TB posting-cap caveat
-    # are at retrieval_mrr_eval's identical pin.
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("i"))
-        .transform(pin)
-    )
-    verified = (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed(
-                "n", "n_a"
-            ),
-            "a_id",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed(
-                "n", "n_b"
-            ),
-            "b_id",
-        )
-        .filter(
-            1000 * F.col("i")
-            >= 700 * (F.col("n_a") + F.col("n_b") - F.col("i"))
-        )
-        .select("a_id", "b_id")
-        # verified feeds BOTH symmetrization arms of truth: pin it so
-        # the size joins run once, not once per direction (r13).
-        .transform(pin)
-    )
-    truth = (
-        verified.select(
-            F.col("a_id").alias("query_id"),
-            F.col("b_id").alias("target_id"),
-        )
-        .unionAll(
-            verified.select(
-                F.col("b_id").alias("query_id"),
-                F.col("a_id").alias("target_id"),
-            )
-        )
-        .transform(pin)
-    )
-    queries = truth.select("query_id").distinct()
-    # Stage-1 score of (query, cand) — shared-distinct-shingle count —
-    # is exactly inter's i for the unordered pair (both count over the
-    # same distinct (doc_id, shingle) frame), so stage 1 needs NO
-    # second posting-list join (r13: the previous qsh⋈sh join
-    # recomputed every intersection the pair stage already counted).
-    # queries is distinct, so the inner join is a pure filter.
-    sym = inter.select(
-        F.col("a_id").alias("query_id"),
-        F.col("b_id").alias("cand_id"),
-        F.col("i").alias("score1"),
-    ).unionAll(
-        inter.select(
-            F.col("b_id").alias("query_id"),
-            F.col("a_id").alias("cand_id"),
-            F.col("i").alias("score1"),
-        )
-    )
-    scored = sym.join(queries, "query_id")
+    truth, scored = _near_dup_panel(docs, "score1")
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("score1"), F.asc("cand_id")
     )
@@ -2254,28 +2176,29 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(0))
         cell = bit if cell is None else cell + bit
     cells = vi.select("vec_id", "q", cell.alias("cell"))
-    a = cells.select(
-        "cell", "vec_id", F.col("q").alias("a_q")
-    )
-    b = cells.select(
-        "cell", F.col("vec_id").alias("nb"), F.col("q").alias("b_q")
-    )
     dot = lambda l, r: F.aggregate(  # noqa: E731
         F.zip_with(l, r, lambda x, y: x * y),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
     pairs = (
-        a.join(b, "cell")
+        bucket_pairs(
+            cells,
+            ("cell",),
+            "vec_id",
+            payload=("q",),
+            other=cells,
+            ids=("vec_id", "nb"),
+        )
         .filter(F.col("vec_id") != F.col("nb"))
         .select(
             "cell",
             "vec_id",
             "nb",
-            dot(F.col("a_q"), F.col("b_q")).alias("dot_full"),
+            dot(F.col("q_a"), F.col("q_b")).alias("dot_full"),
             dot(
-                F.slice("a_q", 1, MATRYOSHKA_PREFIX),
-                F.slice("b_q", 1, MATRYOSHKA_PREFIX),
+                F.slice("q_a", 1, MATRYOSHKA_PREFIX),
+                F.slice("q_b", 1, MATRYOSHKA_PREFIX),
             ).alias("dot_pre"),
         )
         .transform(pin)
@@ -2440,27 +2363,28 @@ def embedding_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         bitsum(0, 32).cast("long").alias("lo"),
         bitsum(32, 32).cast("long").alias("hi"),
     )
-    a = cells.select("cell", "vec_id", F.col("q").alias("a_q"),
-                     F.col("lo").alias("a_lo"), F.col("hi").alias("a_hi"))
-    b = cells.select(
-        "cell", F.col("vec_id").alias("nb"), F.col("q").alias("b_q"),
-        F.col("lo").alias("b_lo"), F.col("hi").alias("b_hi"),
-    )
     pairs = (
-        a.join(b, "cell")
+        bucket_pairs(
+            cells,
+            ("cell",),
+            "vec_id",
+            payload=("q", "lo", "hi"),
+            other=cells,
+            ids=("vec_id", "nb"),
+        )
         .filter(F.col("vec_id") != F.col("nb"))
         .select(
             "cell",
             "vec_id",
             "nb",
             F.aggregate(
-                F.zip_with("a_q", "b_q", lambda x, y: x * y),
+                F.zip_with("q_a", "q_b", lambda x, y: x * y),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             ).alias("dot_full"),
             (
-                F.bit_count(F.col("a_lo").bitwiseXOR(F.col("b_lo")))
-                + F.bit_count(F.col("a_hi").bitwiseXOR(F.col("b_hi")))
+                F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
+                + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
             )
             .cast("long")
             .alias("ham"),

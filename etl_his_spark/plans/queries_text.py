@@ -9,7 +9,7 @@ no shuffle at all (verify: the physical plan is scan → project).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -259,7 +259,7 @@ def overlap_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins; detects copied passages between documents whose overall
     Jaccard similarity is far below any dedup threshold."""
     from ..functions.text import winnow_hashes, winnow_select
-    from ..operators.dedup_approx import spread_small_input
+    from ..operators.dedup_approx import bucket_pairs, spread_small_input
 
     d = spread_small_input(read_table(spark, sf_dir, "documents"))
     fps = (
@@ -269,17 +269,8 @@ def overlap_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fps feeds the rarity window and both join sides — materialize
     # once (eager: concurrent consumer stages, see jaccard_pairs_prefix)
     fps = pin(fps, eager=True)
-    from pyspark.sql import Window
-
-    wfp = Window.partitionBy("fp")
-    kept = fps.withColumn("df", F.count(F.lit(1)).over(wfp)).filter(
-        F.col("df") <= 50
-    ).select("doc_id", "fp")
-    a = kept.select(F.col("doc_id").alias("a_id"), "fp")
-    b = kept.select(F.col("doc_id").alias("b_id"), "fp")
     return (
-        a.join(b, "fp")
-        .filter(F.col("a_id") < F.col("b_id"))
+        bucket_pairs(fps, ("fp",), cap=50)
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 3)
@@ -337,7 +328,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents share it, and the boilerplate cap (> 50 docs) is
     inherited from the pair detector — same index, coarser rollup."""
     from ..functions.text import winnow_hashes, winnow_select
-    from ..operators.dedup_approx import spread_small_input
+    from ..operators.dedup_approx import bucket_pairs, spread_small_input
 
     d = spread_small_input(read_table(spark, sf_dir, "documents"))
     # r14 (guide §2.3): the r13 form counted per-fp docs with a window
@@ -364,11 +355,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("fp")
     )
     srcfp = spf.join(rare, "fp").select("source", "fp")
-    a = srcfp.select(F.col("source").alias("source_a"), "fp")
-    b = srcfp.select(F.col("source").alias("source_b"), "fp")
     return (
-        a.join(b, "fp")
-        .filter(F.col("source_a") < F.col("source_b"))
+        bucket_pairs(srcfp, ("fp",), "source", ids=("source_a", "source_b"))
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_shared_fps"))
     )

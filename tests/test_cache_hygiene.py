@@ -7,17 +7,18 @@ long-lived session every operator call would pin another copy of its
 input. The repo's rule (SCALE.md "localCheckpoint discipline") is a
 localCheckpoint instead, whose blocks are reclaimed with the frame.
 This test calls every formerly-leaking operator and asserts the
-CacheManager is empty afterwards. The last six tests are ``ast`` scans
-of ``etl_his_spark/`` that give each construct one owner and fail on
-any copy outside it: a ``localCheckpoint`` outside ``operators/pin.pin``
-(the audits' hook), a ``writeStream`` outside
+CacheManager is empty afterwards. The last seven tests are ``ast``
+scans of ``etl_his_spark/`` that give each construct one owner and
+fail on any copy outside it: a ``localCheckpoint`` outside
+``operators/pin.pin`` (the audits' hook), a ``writeStream`` outside
 ``streaming/events.run_available_now`` (the one stream run path), the
 two rules the DuckDB oracles mirror, the corpus tokenizer outside
 ``functions/text.word_tokens`` and the cents rule outside
-``functions/money.cents``, and the two MinHash steps whose copies
-would drift from their oracles, the band signature outside
+``functions/money.cents``, the two MinHash steps whose copies would
+drift from their oracles, the band signature outside
 ``operators/dedup_approx.minhash_bands`` and the affine min-hash
-outside ``operators/dedup_approx._minhash_mins``.
+outside ``operators/dedup_approx._minhash_mins``, and a written-out
+same-key pair join outside ``operators/dedup_approx.bucket_pairs``.
 """
 
 from __future__ import annotations
@@ -194,3 +195,68 @@ def test_every_engine_affine_minhash_is_minhash_mins():
         _is_affine_minhash_copy, ("operators/dedup_approx.py", "_minhash_mins")
     )
     assert sites == [], f"min-hash through dedup_approx._minhash_mins: {sites}"
+
+
+_PROJECTIONS = ("select", "alias", "filter")
+
+
+def _projected_frame(node, env: dict) -> str | None:
+    """The local name that ``node`` projects: follow ``select`` /
+    ``alias`` / ``filter`` calls down their receivers, and local names
+    through their assignments, to the deepest name reached."""
+    name = None
+    while True:
+        if isinstance(node, ast.Call) and getattr(
+            node.func, "attr", None
+        ) in _PROJECTIONS:
+            node = node.func.value
+        elif isinstance(node, ast.Name) and node.id != name:
+            name = node.id
+            if name not in env:
+                return name
+            node = env[name]
+        else:
+            return name
+
+
+def _keyed_by_name(join: ast.Call) -> bool:
+    on = join.args[1] if len(join.args) > 1 else next(
+        (k.value for k in join.keywords if k.arg == "on"), None
+    )
+    keys = on.elts if isinstance(on, (ast.List, ast.Tuple)) else [on]
+    return bool(keys) and all(
+        isinstance(k, ast.Constant) and isinstance(k.value, str) for k in keys
+    )
+
+
+def _has_pair_join(node) -> bool:
+    # A function holding x.join(y, "key" | ["key", ...]) where x and y
+    # are select/alias/filter projections of one local frame.
+    if not isinstance(node, ast.FunctionDef):
+        return False
+    env = {
+        t.id: n.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Assign)
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+    for n in ast.walk(node):
+        if not (
+            _call_of(n, "join")
+            and isinstance(n.func, ast.Attribute)
+            and n.args
+            and _keyed_by_name(n)
+        ):
+            continue
+        left = _projected_frame(n.func.value, env)
+        if left is not None and left == _projected_frame(n.args[0], env):
+            return True
+    return False
+
+
+def test_every_engine_pair_join_is_bucket_pairs():
+    sites = _engine_sites(
+        _has_pair_join, ("operators/dedup_approx.py", "bucket_pairs")
+    )
+    assert sites == [], f"pair rows through dedup_approx.bucket_pairs: {sites}"

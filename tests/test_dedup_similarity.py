@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_his_spark.operators.dedup_approx import (
+    bucket_pairs,
     exact_dedup_groups,
     jaccard_pairs,
     minhash_lsh_candidates,
@@ -23,6 +25,37 @@ def _docs(spark):
         (5, "the quick brown fox jumps over the lazy dog"),    # exact dup of 1
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize(
+    "mode, expected",
+    [
+        # self-join: each unordered pair of a key once
+        ("self", [(1, 2), (1, 3), (2, 3), (4, 5)]),
+        # other=rows: both orders, plus every row paired with itself
+        (
+            "other=rows",
+            [
+                (1, 1), (1, 2), (1, 3), (2, 1), (2, 2), (2, 3),
+                (3, 1), (3, 2), (3, 3), (4, 4), (4, 5), (5, 4),
+                (5, 5), (6, 6),
+            ],
+        ),
+        # cap=2: every member of the 3-row key "x" is left out
+        ("cap=2", [(4, 5)]),
+    ],
+)
+def test_bucket_pairs_table(spark, mode, expected):
+    rows = spark.createDataFrame(
+        [(1, "x"), (2, "x"), (3, "x"), (4, "y"), (5, "y"), (6, "z")],
+        "doc_id long, k string",
+    ).withColumn("v", F.col("doc_id") * 10)
+    kwargs = {"self": {}, "other=rows": {"other": rows}, "cap=2": {"cap": 2}}
+    got = bucket_pairs(rows, ("k",), payload=("v",), **kwargs[mode]).collect()
+    assert sorted((r["a_id"], r["b_id"]) for r in got) == expected
+    assert all(
+        (r["v_a"], r["v_b"]) == (10 * r["a_id"], 10 * r["b_id"]) for r in got
+    )
 
 
 def test_word_shingles_count(spark):
