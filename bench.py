@@ -604,7 +604,7 @@ def main() -> int:
         return 0
 
     # Full HIS reference-parity pipeline (extract → transform → atomic
-    # 4-table publish with the fecha-partitioned fact) on HIS-shaped
+    # 4-table publish with the fecha-ordered fact) on HIS-shaped
     # tables derived from this sf's testdata — tracked as its OWN key,
     # not summed into the headline total (r7 verdict item 7: the
     # flagship path needs a perf number; totals stay comparable).

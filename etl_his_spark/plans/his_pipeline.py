@@ -209,27 +209,23 @@ def run_pipeline(
         "prestacion_x_turno": bridge,
     }
     if output_root is not None:
-        # The turno(fecha) index analog (PostgresSchemaBuilder.php:90)
-        # at MONTH grain: date-grain dirs put one directory per date on
-        # the filesystem/metastore (2,405 at sf0.1; tens of thousands
-        # at 100 TB — the partition-explosion anti-pattern, and 12-17 s
-        # of pure directory traffic in the r11 write profile, width-
-        # insensitive). Month dirs (~80) plus fecha-sorted row groups
-        # give the same day-grain pruning — directory pruning to the
-        # month, then parquet min/max skips to the date — at 2.2 s
-        # (measured r11, same box, same data). fecha_mes is a
-        # write-layout column, added only on the publish path; the
-        # returned frames keep the DDL schema.
+        # The turno(fecha) index analog (PostgresSchemaBuilder.php:90):
+        # a global sort on fecha. Its range exchange gives files whose
+        # fecha ranges are disjoint and each sorted, so a date
+        # predicate skips files and row groups on the parquet footer
+        # min/max stats; AQE sets the file count from data size. No
+        # directory per month or date: a fecha predicate never prunes
+        # a derived partition column, so such dirs only add small
+        # files. fecha_mes is a stored column of the published turno
+        # only (the per-month reports group by it); the returned
+        # frames keep the DDL schema.
         publish = dict(outputs)
-        publish["turno"] = outputs["turno"].withColumn(
-            "fecha_mes", F.date_format("fecha", "yyyy-MM")
+        publish["turno"] = (
+            outputs["turno"]
+            .withColumn("fecha_mes", F.date_format("fecha", "yyyy-MM"))
+            .orderBy("fecha")
         )
-        publish_atomic(
-            publish,
-            output_root,
-            partition_by={"turno": ["fecha_mes"]},
-            sort_within={"turno": ["fecha"]},
-        )
+        publish_atomic(publish, output_root)
     return outputs
 
 

@@ -199,9 +199,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard (the union is dominated by b).
 
     Inverted-index join over 3-word shingles carried as 60-bit md5
-    longs, with posting lists df-capped at {50} BEFORE the self-join
-    (the quadratic-blowup guard; the cap is part of the operator's
-    spec and mirrored in the oracle — an ultra-common shingle
+    longs, with posting lists df-capped at ``CONTAIN_DF_CAP`` BEFORE
+    the self-join (the quadratic-blowup guard; the cap is part of the
+    operator's spec and mirrored in the oracle — an ultra-common shingle
     identifies nothing). Containment n_common/|a| is one division of
     exact integers. Scale path beyond the cap: one-sided minhash
     (bottom-k of a only) — same banding machinery as

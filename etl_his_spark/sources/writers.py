@@ -115,14 +115,18 @@ def write_table(
     path: str,
     *,
     partition_by: list[str] | None = None,
-    sort_within: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Parquet overwrite write; optional partition columns.
 
-    ``partition_by`` is the Spark analog of the reference's secondary
-    indexes (PostgresSchemaBuilder.php:88-91 indexes turno(fecha) etc.):
-    partition pruning serves the same frequent-query access paths.
+    ``partition_by`` writes one Hive directory per value, pruned only
+    by predicates on the partition columns themselves; a predicate on
+    any other column (even one the partition column derives from)
+    reads every directory. Row ordering is the caller's: a globally
+    sorted frame (``orderBy``) writes files with disjoint, sorted
+    ranges that parquet footer min/max stats skip — how the HIS
+    publish serves the reference's turno(fecha) index
+    (PostgresSchemaBuilder.php:88-91).
 
     Partitioned writes first hash-repartition on the partition columns
     — the standard dynamic-partition write discipline. Without it
@@ -144,13 +148,6 @@ def write_table(
     32 tasks → 5.8 s at 256. More tasks than values costs only empty
     tasks; each value still lands in exactly one task (one file per
     partition either way).
-
-    ``sort_within`` sorts rows inside each writing task before the
-    write: with one task (hence one file) per partition value, the
-    file's row groups carry tight min/max stats on the sort columns,
-    so sub-partition predicates (e.g. a single date inside a month
-    partition) prune at the row-group level without needing a
-    directory per value.
     """
     if partition_by:
         n_tasks = max(
@@ -158,8 +155,6 @@ def write_table(
             df.sparkSession.sparkContext.defaultParallelism * 8,
         )
         df = df.repartition(n_tasks, *[F.col(c) for c in partition_by])
-    if sort_within:
-        df = df.sortWithinPartitions(*sort_within)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -220,7 +215,6 @@ def publish_atomic(
     root: str,
     *,
     partition_by: dict[str, list[str]] | None = None,
-    sort_within: dict[str, list[str]] | None = None,
 ) -> str:
     """Write all tables to a staging dir, then atomically publish.
 
@@ -230,20 +224,19 @@ def publish_atomic(
     reference's rollback-on-error, Command.php:213-216) — and the
     failed publish's staging dir is removed.
 
-    Publish-schema contract (ADVICE r11): any ``partition_by`` column
-    becomes part of the PUBLISHED table's read schema — parquet
-    partition columns reappear on read. Concretely, the HIS pipeline's
-    turno publish carries the derived ``fecha_mes`` write-layout
-    column in addition to the DDL columns; it is pure layout
-    (``date_format(fecha, 'yyyy-MM')``), derivable from ``fecha``,
-    and strict-schema consumers should select the DDL columns
-    explicitly (the in-repo gates do). The in-memory frames returned
-    by ``run_pipeline`` keep the exact DDL schema.
+    Publish-schema contract: a published table's read schema is the
+    frame's columns plus any ``partition_by`` columns (parquet
+    partition columns reappear on read). The HIS pipeline's turno
+    publish carries the derived ``fecha_mes`` as a stored column in
+    addition to the DDL columns — ``date_format(fecha, 'yyyy-MM')``,
+    the key the per-month reports group by — so strict-schema
+    consumers should select the DDL columns explicitly (the in-repo
+    gates do). The in-memory frames returned by ``run_pipeline`` keep
+    the exact DDL schema.
     """
     token = uuid.uuid4().hex[:12]
     staging = os.path.join(root, f"_staging_{token}")
     partition_by = partition_by or {}
-    sort_within = sort_within or {}
     paths = {name: os.path.join(staging, name) for name in tables}
 
     # Overlap the independent table writes (guide §2.6): each write's
@@ -261,12 +254,7 @@ def publish_atomic(
     from concurrent.futures import ThreadPoolExecutor
 
     def _write(name: str) -> None:
-        write_table(
-            tables[name],
-            paths[name],
-            partition_by=partition_by.get(name),
-            sort_within=sort_within.get(name),
-        )
+        write_table(tables[name], paths[name], partition_by=partition_by.get(name))
 
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:

@@ -260,6 +260,23 @@ def test_atomic_publish_and_read_back(spark, tables, tmp_path_factory):
     assert read_published(spark, root, "turno").count() == 8
 
 
+def test_publish_round_trip_content(spark, tables, tmp_path_factory):
+    """Each published table holds exactly its in-memory frame's rows on
+    the DDL columns, and the published turno's stored fecha_mes is the
+    month of its fecha on every row."""
+    root = str(tmp_path_factory.mktemp("round_trip"))
+    outs = run_pipeline(tables, output_root=root)
+    for name, frame in outs.items():
+        published = read_published(spark, root, name).select(*frame.columns)
+        assert published.exceptAll(frame).count() == 0, name
+        assert frame.exceptAll(published).count() == 0, name
+    turno = read_published(spark, root, "turno")
+    off = turno.filter(
+        ~F.col("fecha_mes").eqNullSafe(F.date_format("fecha", "yyyy-MM"))
+    )
+    assert off.count() == 0
+
+
 def test_prune_keeps_current_publish(spark, tables, tmp_path_factory):
     from etl_his_spark.sources.writers import prune_old_publishes
 

@@ -1,6 +1,6 @@
 """Scale-shaped HIS inputs (sources.his_synth) through the full
 pipeline: schema conformance, non-empty outputs, referential integrity
-by construction, and the parallel fecha-partitioned publish layout.
+by construction, and the fecha-ordered turno publish layout.
 
 The hand-written fixtures in his_fixtures.py pin SEMANTICS; this file
 pins that the same pipeline runs on testdata-scale derived inputs (the
@@ -16,7 +16,7 @@ import pytest
 from etl_his_spark import schemas
 from etl_his_spark.plans.his_pipeline import run_pipeline
 from etl_his_spark.sources.his_synth import his_tables_from_testdata
-from etl_his_spark.sources.writers import resolve_current
+from etl_his_spark.sources.writers import read_published, resolve_current
 
 
 @pytest.fixture(scope="module")
@@ -72,17 +72,50 @@ def test_fk_integrity_by_construction(outputs):
     assert orphans == 0
 
 
-def test_publish_partitioned_one_file_per_mes(synth_tables, tmp_path):
+# Several range partitions survive AQE coalescing at sf0.001: more
+# shuffle partitions than the session default, and a 1 KB advisory size
+# (with a minimum partition size below it) so the turno sort's range
+# exchange is merged into several partitions, not one.
+_SEVERAL_FILES = {
+    "spark.sql.shuffle.partitions": "16",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64b",
+}
+
+
+def test_publish_turno_fecha_ordered_files(spark, synth_tables, tmp_path):
+    """The published turno is one fecha-ordered file set: no month
+    directories, each file sorted on fecha, and the files' fecha
+    ranges disjoint and ascending in part order — what lets a date
+    predicate skip files and row groups on footer min/max stats."""
+    import pyarrow.parquet as pq
+
     root = str(tmp_path / "pub")
-    run_pipeline(synth_tables, output_root=root)
-    current = resolve_current(root)
-    # month-grain partition dirs (r11: date-grain exploded into one
-    # directory per date — the metastore anti-pattern at 100 TB; month
-    # dirs + fecha-sorted row groups give the same day-grain pruning)
-    part_dirs = glob.glob(os.path.join(current, "turno", "fecha_mes=*"))
-    assert part_dirs, "no fecha_mes partitions written"
-    for d in part_dirs:
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        # the dynamic-partition repartition guarantees one writer task
-        # per month → exactly one file per partition at this volume
-        assert len(files) == 1, (d, files)
+    saved = {k: spark.conf.get(k, None) for k in _SEVERAL_FILES}
+    try:
+        for k, v in _SEVERAL_FILES.items():
+            spark.conf.set(k, v)
+        run_pipeline(synth_tables, output_root=root)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    turno_dir = os.path.join(resolve_current(root), "turno")
+    assert not glob.glob(os.path.join(turno_dir, "fecha_mes=*"))
+    files = sorted(glob.glob(os.path.join(turno_dir, "part-*.parquet")))
+    assert len(files) > 1, files
+    ranges = []
+    for path in files:
+        fechas = pq.read_table(path, columns=["fecha"]).column(0).to_pylist()
+        assert None not in fechas, path
+        assert fechas == sorted(fechas), path
+        if fechas:
+            ranges.append((fechas[0], fechas[-1]))
+    assert len(ranges) > 1, ranges
+    for (_, prev_max), (next_min, _) in zip(ranges, ranges[1:]):
+        assert prev_max < next_min, ranges
+    published = read_published(spark, root, "turno")
+    assert published.columns == schemas.TURNO.fieldNames() + ["fecha_mes"]
